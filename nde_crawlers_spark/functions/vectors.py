@@ -77,7 +77,8 @@ def dot_fixed_sql(a: str, b: str, dim: int = 64) -> Column:
     IDENTICAL analyzed tree — left-associative ``+``, the exact 0.0D
     init, per-element double casts — so every double is bit-equal to the
     ``dot_fixed`` form (parity-asserted per query, plus the explicit
-    equivalence test in tests/test_operators.py)."""
+    equivalence test
+    tests/test_r09_optim.py::test_dot_fixed_sql_bit_equals_column_form)."""
     if dim > UNROLL_MAX_DIM:
         return dot(F.col(a), F.col(b))
     terms = " + ".join(

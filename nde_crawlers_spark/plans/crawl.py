@@ -10,8 +10,11 @@ tmp+rename atomic NDJSON commit, zenodo/files/ndjson.py:50-72).
 Model: bulk-synchronous rounds. Each round
     candidates -> canonicalize -> dedupe -> unseen-filter -> robots ->
     politeness top-k per host -> fetch (Arrow batches) -> parse to spans
-    -> commit {selected, documents, new_seen, frontier, outlinks,
-               robots_cache, lineage} + _COMMIT marker
+    -> commit {fetched, new_seen, robots_cache, host_state, seen-filter
+               segments, frontier} + _COMMIT marker
+Crawl order, documents, lineage and the next round's candidates are not
+tables of their own: they are read-time projections of ``fetched``, the
+round's fetch_parse rows.
 The marker is written last via tmp+rename — the same
 data-before-release ordering the reference uses so bad data never
 propagates (README.md:88-97). A killed run resumes from the last round
@@ -38,7 +41,7 @@ import json
 import os
 import shutil
 import time
-from collections.abc import Callable, Iterator
+from collections.abc import Callable, Iterable, Iterator
 from dataclasses import dataclass, field
 
 import pandas as pd
@@ -140,10 +143,10 @@ class CrawlConfig:
     # exactly.
     at_start_delay_ms: float | None = 5000.0
     # frontier persistence: False = full snapshot per round (simple,
-    # sandbox default); True = O(delta) writes per round (frontier_add +
-    # frontier_remove) with a full compaction snapshot every
-    # ``compact_every`` rounds — the Iceberg-MERGE-shaped scale path
-    # (PLANS.md shuffle inventory).
+    # sandbox default); True = O(delta) writes per round (frontier_add;
+    # the removes are the round's fetched keys) with a full compaction
+    # snapshot every ``compact_every`` rounds — the Iceberg-MERGE-shaped
+    # scale path (PLANS.md shuffle inventory).
     frontier_deltas: bool = False
     compact_every: int = 4
     # injectable fetch body (operators/fetch.py contract): None = the
@@ -368,11 +371,6 @@ class CrawlRun:
             os.path.join(self._rdir(r - 1), seg_table)
         ):
             prev_segments = self._read(r - 1, seg_table)
-            # a table from before the self-describing schema (no nseg
-            # column) cannot be probed safely — its routing geometry is
-            # unknown; drop it and probe/rebuild from the full seen set
-            if "nseg" not in prev_segments.columns:
-                prev_segments = None
         ttl_deleted_segments = None
         if mode == "cuckoo" and prev_segments is not None and expired_new is not None:
             # evict this round's newly-expired fingerprints BEFORE the
@@ -402,20 +400,17 @@ class CrawlRun:
         new_seen = unseen.select("url_hash").withColumn("first_seen_round", F.lit(r))
 
         allowed = FR.robots_filter(unseen, robots)
+        if cfg.recrawl_ttl_rounds is not None:
+            # a key that expired while still queued reads as unseen when
+            # rediscovered: queueing it again would fetch it twice in one
+            # round and break the unique url_hash the counts below rely on
+            allowed = allowed.join(frontier.select("url_hash"), "url_hash", "left_anti")
         frontier_all = frontier.unionByName(allowed.select(*FRONTIER_COLS)).cache()
 
         # Retry-After feedback: the prior round's host_state carries
         # next_allowed_round for hosts that 429'd — their budget is 0
         # until the cooldown passes (rows stay in the frontier)
-        prev_state = (
-            self._read(r - 1, "host_state")
-            if r > 0 and os.path.isdir(os.path.join(self._rdir(r - 1), "host_state"))
-            else self._empty_host_state()
-        )
-        if "at_delay_ms" not in prev_state.columns:
-            # resume across the pre-autothrottle layout: hosts start at
-            # the base delay (NULL -> base in the fold / budget floor)
-            prev_state = prev_state.withColumn("at_delay_ms", F.lit(None).cast("double"))
+        prev_state = self._read(r - 1, "host_state") if r > 0 else self._empty_host_state()
         budgeted = FR.with_host_budget(
             frontier_all, robots, cfg.round_seconds,
             host_state=(
@@ -423,35 +418,14 @@ class CrawlRun:
             ),
             current_round=r,
         )
-        selected = FR.topk_per_host(budgeted, salt_factor=cfg.salt_factor).drop("host_budget").cache()
+        selected = FR.topk_per_host(budgeted, salt_factor=cfg.salt_factor).drop("host_budget")
 
         # fused fetch+parse: bodies never cross the JVM<->Python boundary
         fetched = fetch_parse(selected, cfg.num_hosts, cfg.max_attempts,
                               fetcher=cfg.fetcher).cache()
 
-        # 1->N fan-out: the dataset doc (doc_id = url_hash) plus one doc
-        # per embedded sample (doc_id = url_hash#role) — the SRA
-        # study -> dataset + samples shape (ncbi_sra.py:381+)
-        ok = fetched.filter(F.col("status") == 200)
-        dataset_docs = ok.select(
-            F.col("url_hash").alias("doc_id"), F.col("canonical_url"), F.col("spans")
-        )
-        sample_docs = ok.select(
-            "url_hash", "canonical_url", F.explode("subdocs").alias("sd")
-        ).select(
-            F.concat(F.col("url_hash"), F.lit("#"), F.col("sd.role")).alias("doc_id"),
-            F.col("canonical_url"),
-            F.col("sd.spans").alias("spans"),
-        )
-        documents = dataset_docs.unionByName(sample_docs).withColumn("round", F.lit(r))
-
-        outlinks = (
-            fetched.select(F.explode("outlinks").alias("url"))
-            .withColumn("priority", F.lit(cfg.discovered_priority))
-        )
-
         frontier_next = frontier_all.join(
-            selected.select("url_hash"), "url_hash", "left_anti"
+            fetched.select("url_hash"), "url_hash", "left_anti"
         ).select(*FRONTIER_COLS)
 
         # host_state (FIXTURES F6): cumulative per-host politeness ledger —
@@ -522,28 +496,16 @@ class CrawlRun:
             )
         )
 
-        lineage = (
-            fetched.withColumn("partition_id", F.spark_partition_id())
-            .groupBy("partition_id", "host_bucket")
-            .agg(
-                F.count("*").alias("urls_fetched"),
-                F.sum(F.when(F.col("status") == 200, 1).otherwise(0)).alias("ok"),
-                F.sum("bytes").alias("bytes"),
-                F.max("fetch_wall_ms").alias("wall_ms"),
-                F.sum("attempts").alias("attempts"),
-            )
-            .withColumn("round", F.lit(r))
-        )
-
         # round stats FIRST: the aggregation materializes the cached
         # fetch result (and its cached parents) exactly once, so the
         # parallel write jobs below all hit warm caches instead of racing
         # to fill them. Never a parquet re-read or a frontier
         # reconstruction (each would be an extra full Spark job; at
         # sandbox scale job latency dominates round wall time).
-        # frontier_next = frontier_all minus selected, and both sides have
-        # unique url_hash (dedupe_candidates + the seen invariant), so its
-        # count is exact arithmetic on counts already in hand.
+        # frontier_next = frontier_all minus fetched, and both sides have
+        # unique url_hash (dedupe_candidates, the seen invariant and, under
+        # TTL, the anti-join against the queue), so its count is exact
+        # arithmetic on counts already in hand.
         fstats = fetched.agg(
             F.count("*").alias("sel"),
             F.sum(F.when(F.col("status") == 200, 1).otherwise(0)).alias("docs"),
@@ -553,30 +515,21 @@ class CrawlRun:
         n_frontier = frontier_all.count()
 
         # ---- commit: data first, marker last ----
-        # The per-round state tables are INDEPENDENT outputs of already-
-        # cached frames, so their write jobs run CONCURRENTLY (Spark's
-        # scheduler interleaves jobs; each small job alone cannot fill
-        # the executor). This collapses ~8 sequential job latencies into
-        # ~max-of-them per round — round latency is the politeness-bound
-        # crawl's rate limiter, at any cluster size. The marker still
-        # goes last, only after every write returned.
+        # The round's tables are INDEPENDENT outputs of already-cached
+        # frames, so their write jobs run CONCURRENTLY (Spark's scheduler
+        # interleaves jobs; each small job alone cannot fill the
+        # executor). The marker goes last, only after every write returned.
         writes: list[tuple[DataFrame, str]] = [
-            (
-                fetched.select(
-                    "url_hash", "canonical_url", "host", "priority", "seq", "status",
-                    "attempts", "bytes",
-                ).withColumn("round", F.lit(r)),
-                "selected",
-            ),
-            (documents, "documents"),
+            # the fetch partition is taken here, on the cached frame the
+            # fetch ran in, so lineage() can group by it at read time
+            (fetched.withColumn("round", F.lit(r))
+             .withColumn("partition_id", F.spark_partition_id()), "fetched"),
             (new_seen, "new_seen"),
-            (outlinks, "outlinks"),
             # host-bounded state tables: coalesce to a few files (a 10^6-
             # host table is still small; corpus-scale tables above keep
             # their natural partitioning)
             (robots.coalesce(8), "robots_cache"),
             (host_state.coalesce(8), "host_state"),
-            (lineage.coalesce(8), "lineage"),
         ]
         if mode == "cuckoo":
             # incremental maintenance, cuckoo form: insert the round's
@@ -644,11 +597,12 @@ class CrawlRun:
                 )
             writes.append((new_segments.coalesce(8), "bloom_segments"))
         if cfg.frontier_deltas:
-            # O(delta) persistence: what entered and what left the
-            # frontier this round; periodic compaction bounds the
-            # reconstruction chain
-            writes.append((allowed.select(*FRONTIER_COLS), "frontier_add"))
-            writes.append((selected.select("url_hash"), "frontier_remove"))
+            # O(delta) persistence: what entered the frontier this round
+            # (what left it is this round's fetched keys); periodic
+            # compaction bounds the reconstruction chain
+            writes.append(
+                (allowed.select(*FRONTIER_COLS).withColumn("round", F.lit(r)), "frontier_add")
+            )
             if (r + 1) % cfg.compact_every == 0:
                 writes.append((frontier_next, "frontier_compact"))
         else:
@@ -674,7 +628,7 @@ class CrawlRun:
             meta["cuckoo_rebuilds_total"] = self.cuckoo_rebuilds.value
         self._commit(r, meta)
         self._seen_total += n_unseen
-        for df in (robots, frontier_all, selected, fetched, unseen):
+        for df in (robots, frontier_all, fetched, unseen):
             df.unpersist()
         if ttl_deleted_segments is not None:
             ttl_deleted_segments.unpersist()
@@ -684,8 +638,10 @@ class CrawlRun:
     def _frontier_through(self, r: int) -> DataFrame:
         """Frontier state after round r. Snapshot mode reads the round's
         snapshot; delta mode reconstructs lazily from the latest
-        compaction + subsequent add/remove deltas — no materialized
-        rewrite of the full frontier ever happens."""
+        compaction + the later rounds' adds, less their fetched keys — no
+        materialized rewrite of the full frontier ever happens. An added
+        row is dropped by a fetch in its own round or later, not by an
+        earlier one: under recrawl TTL a fetched key is queued again."""
         if not self.cfg.frontier_deltas:
             return self._read(r, "frontier_next")
         base_round = None
@@ -704,11 +660,14 @@ class CrawlRun:
         adds = self.spark.read.parquet(
             *[os.path.join(self._rdir(i), "frontier_add") for i in range(lo, r + 1)]
         )
-        removes = self.spark.read.parquet(
-            *[os.path.join(self._rdir(i), "frontier_remove") for i in range(lo, r + 1)]
+        removed = self._fetched(range(lo, r + 1)).groupBy("url_hash").agg(
+            F.max("round").alias("removed_round")
         )
-        return base.unionByName(adds).join(
-            removes.select("url_hash").distinct(), "url_hash", "left_anti"
+        return (
+            base.withColumn("round", F.lit(lo - 1)).unionByName(adds)
+            .join(removed, "url_hash", "left")
+            .filter(F.col("removed_round").isNull() | (F.col("round") > F.col("removed_round")))
+            .select(*FRONTIER_COLS)
         )
 
     def _seen_through(self, r: int) -> DataFrame:
@@ -765,7 +724,7 @@ class CrawlRun:
             frontier = self._frontier_through(last)
             seen = self._seen_through(last)
             robots = self._read(last, "robots_cache")
-            candidates = self._read(last, "outlinks")
+            candidates = self._outlinks(last)
         else:
             if seeds is None:
                 raise ValueError("seeds required for a fresh run")
@@ -783,30 +742,61 @@ class CrawlRun:
             frontier = self._frontier_through(r)
             seen = self._seen_through(r)
             robots = self._read(r, "robots_cache")
-            candidates = self._read(r, "outlinks")
+            candidates = self._outlinks(r)
         return metas
 
     # ---------- result accessors ----------
+    # crawl order, documents, lineage and outlinks are projections of the
+    # committed rounds' ``fetched`` tables
+    def _fetched(self, rounds: Iterable[int]) -> DataFrame:
+        return self.spark.read.parquet(*[os.path.join(self._rdir(i), "fetched") for i in rounds])
+
+    def _outlinks(self, r: int) -> DataFrame:
+        """Round r's discovered URLs: the next round's candidates."""
+        return self._read(r, "fetched").select(
+            F.explode("outlinks").alias("url"), F.lit(self.cfg.discovered_priority).alias("priority")
+        )
+
     def crawl_order(self) -> DataFrame:
         """Fetched URLs in canonical crawl order (round, priority, seq,
         url_hash) — the north-rule ordering invariant."""
-        rounds = self.committed_rounds()
-        paths = [os.path.join(self._rdir(i), "selected") for i in rounds]
-        return self.spark.read.parquet(*paths).orderBy("round", "priority", "seq", "url_hash")
+        return self._fetched(self.committed_rounds()).select(
+            "url_hash", "canonical_url", "host", "priority", "seq", "status", "attempts",
+            "bytes", "round",
+        ).orderBy("round", "priority", "seq", "url_hash")
 
     def documents(self) -> DataFrame:
-        rounds = self.committed_rounds()
-        paths = [os.path.join(self._rdir(i), "documents") for i in rounds]
-        return self.spark.read.parquet(*paths)
+        """1->N fan-out of the 200s: the dataset doc (doc_id = url_hash)
+        plus one doc per embedded sample (doc_id = url_hash#role) — the
+        SRA study -> dataset + samples shape (ncbi_sra.py:381+)."""
+        ok = self._fetched(self.committed_rounds()).filter(F.col("status") == 200)
+        samples = ok.select("url_hash", "canonical_url", "round", F.explode("subdocs").alias("sd"))
+        return ok.select(
+            F.col("url_hash").alias("doc_id"), "canonical_url", "spans", "round"
+        ).unionByName(samples.select(
+            F.concat("url_hash", F.lit("#"), "sd.role").alias("doc_id"), "canonical_url",
+            F.col("sd.spans").alias("spans"), "round",
+        ))
 
     def seen(self) -> DataFrame:
         rounds = self.committed_rounds()
         return self._seen_through(rounds[-1]) if rounds else self._empty_seen()
 
     def lineage(self) -> DataFrame:
-        rounds = self.committed_rounds()
-        paths = [os.path.join(self._rdir(i), "lineage") for i in rounds]
-        return self.spark.read.parquet(*paths)
+        """Per (round, fetch partition, host bucket) fetch counters."""
+        return (
+            self._fetched(self.committed_rounds())
+            .groupBy("partition_id", "host_bucket", "round")
+            .agg(
+                F.count("*").alias("urls_fetched"),
+                F.sum(F.when(F.col("status") == 200, 1).otherwise(0)).alias("ok"),
+                F.sum("bytes").alias("bytes"),
+                F.max("fetch_wall_ms").alias("wall_ms"),
+                F.sum("attempts").alias("attempts"),
+            )
+            .select("partition_id", "host_bucket", "urls_fetched", "ok", "bytes", "wall_ms",
+                    "attempts", "round")
+        )
 
     def host_state(self) -> DataFrame:
         """Cumulative per-host politeness ledger as of the last round."""

@@ -23,7 +23,8 @@ def get_spark(
     """Build (or get) a SparkSession.
 
     ``cores=None`` uses ``local[*]``; tests pass explicit core counts to
-    evidence N-vs-4N scaling (BASELINE.md sandbox protocol).
+    check N-vs-4N determinism (tests/test_crawl_oracle.py runs the same
+    crawl at local[16] and local[1]).
     """
     cpus = cores if cores is not None else os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = f"local[{cpus}]"

@@ -117,10 +117,14 @@ class StreamingVectorIngest:
         replay guard)."""
         if before_batch is None:
             last = self.last_committed_batch()
-            # no commits log (e.g. a store populated out-of-band, or a
-            # pre-first-commit crash): fall back to every delta dir —
-            # deterministic content either way, per the encode contract
-            before_batch = None if last is None else last + 1
+            if last is not None:
+                before_batch = last + 1
+            elif os.path.isdir(self._dir("checkpoint/commits")):
+                # commits log still empty (a crash before the first
+                # commit): every delta on disk is uncommitted
+                before_batch = 0
+            # else no checkpoint at all (a store populated out-of-band):
+            # read every delta dir
         base = self._dir("codes")
         parts = []
         for d in sorted(os.listdir(base)):

@@ -35,7 +35,7 @@ def test_documents_table_matches_input_hint_schema(spark):
 def test_politeness_budget_never_exceeded(spark):
     """Per round, no host is fetched more than round_ms/crawl_delay_ms
     times — the DOWNLOAD_DELAY budget contract, asserted directly
-    against the committed selected tables."""
+    against the committed crawl order."""
     round_seconds = 2
     run = _run(spark, rounds=3, seeds=120, hosts=6, round_seconds=round_seconds)
     per = (

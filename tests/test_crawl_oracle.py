@@ -5,9 +5,14 @@ partitioning configurations."""
 
 from __future__ import annotations
 
+import json
+import os
+import subprocess
+import sys
 import tempfile
 
 import pytest
+from pyspark.sql import functions as F
 
 from nde_crawlers_spark.plans.crawl import CrawlConfig, CrawlRun
 from nde_crawlers_spark.plans.oracle import crawl_oracle
@@ -19,6 +24,30 @@ N_SEEDS, N_HOSTS, ROUNDS = 80, 10, 3
 @pytest.fixture(scope="module")
 def oracle():
     return crawl_oracle(make_seeds(N_SEEDS, N_HOSTS), N_HOSTS, round_seconds=2, max_rounds=ROUNDS)
+
+
+@pytest.fixture(scope="module")
+def one_core_crawl(tmp_path_factory):
+    """The oracle scenario crawled by a separate local[1] process. It
+    starts with the module's first test and runs alongside the others;
+    test_crawl_at_one_core_matches_oracle waits for it."""
+    d = tmp_path_factory.mktemp("local1")
+    out, log = d / "invariants.json", d / "stderr.log"
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    with open(log, "w") as err:
+        proc = subprocess.Popen(
+            [sys.executable, "-m", "tests.test_crawl_oracle", str(out)],
+            cwd=repo, env={**os.environ, "SPARK_DRIVER_MEM": "1g"},
+            stdout=subprocess.DEVNULL, stderr=err,
+        )
+    yield proc, out, log
+    if proc.poll() is None:
+        proc.kill()
+        proc.wait()
+
+
+# start the local[1] crawl first, so it overlaps the module's other tests
+pytestmark = pytest.mark.usefixtures("one_core_crawl")
 
 
 def _seed_df(spark):
@@ -54,6 +83,31 @@ def _check_against_oracle(run: CrawlRun, oracle):
         assert {s[0] for s in spans} <= {"title", "description", "author", "date", "keyword", "media"}
 
 
+def _check_round_layout(run: CrawlRun):
+    """Each committed round holds one data table, ``fetched``, beside the
+    state resume needs; crawl order, documents and lineage are read-time
+    projections of it, and lineage's totals agree with the crawl order."""
+    cfg = run.cfg
+    for r in run.committed_rounds():
+        if not cfg.frontier_deltas:
+            frontier = {"frontier_next"}
+        elif (r + 1) % cfg.compact_every == 0:
+            frontier = {"frontier_add", "frontier_compact"}
+        else:
+            frontier = {"frontier_add"}
+        assert set(os.listdir(os.path.join(run.run_dir, f"round={r:04d}"))) == {
+            "_COMMIT", "fetched", "new_seen", "robots_cache", "host_state", "bloom_segments",
+        } | frontier
+    assert run.documents().columns == ["doc_id", "canonical_url", "spans", "round"]
+    assert run.lineage().columns == [
+        "partition_id", "host_bucket", "urls_fetched", "ok", "bytes", "wall_ms", "attempts",
+        "round",
+    ]
+    lineage = run.lineage().agg(F.sum("urls_fetched"), F.sum("bytes")).first()
+    order = run.crawl_order().agg(F.count("*"), F.sum("bytes")).first()
+    assert tuple(lineage) == tuple(order)
+
+
 def test_crawl_matches_oracle(spark, oracle):
     run = CrawlRun(
         spark, tempfile.mkdtemp(prefix="crawl_t_"),
@@ -61,6 +115,7 @@ def test_crawl_matches_oracle(spark, oracle):
     )
     run.run(seeds=_seed_df(spark))
     _check_against_oracle(run, oracle)
+    _check_round_layout(run)
     # 1->N fan-out actually exercised: some fetched records emit sample
     # docs (doc_id = url_hash#sK) alongside their dataset doc, and every
     # sample doc's parent dataset doc exists
@@ -89,16 +144,15 @@ def test_resume_overwrites_uncommitted_partial_round(spark, oracle):
     resume must ignore and cleanly overwrite them (the
     delete-on-failure/invalidated-run analog,
     ncbi_geo_crawler/files/ndjson.py:17-23)."""
-    import os
-
     d = tempfile.mkdtemp(prefix="crawl_x_")
     run1 = CrawlRun(spark, d, CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=1))
     run1.run(seeds=_seed_df(spark))
-    # fabricate a partial, uncommitted round 1: stale garbage data, no marker
+    # fabricate a partial, uncommitted round 1: stale garbage data, no
+    # marker, in the table every accessor reads
     partial = os.path.join(d, "round=0001")
-    os.makedirs(os.path.join(partial, "documents"), exist_ok=True)
-    spark.createDataFrame([("junk",)], "doc_id string").write.mode("overwrite").parquet(
-        os.path.join(partial, "documents")
+    os.makedirs(os.path.join(partial, "fetched"), exist_ok=True)
+    spark.createDataFrame([("junk",)], "url_hash string").write.mode("overwrite").parquet(
+        os.path.join(partial, "fetched")
     )
     run2 = CrawlRun(spark, d, CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=ROUNDS))
     assert run2.committed_rounds() == [0]  # partial round invisible
@@ -107,9 +161,9 @@ def test_resume_overwrites_uncommitted_partial_round(spark, oracle):
 
 
 def test_crawl_frontier_delta_mode_matches_oracle(spark, oracle):
-    """O(delta) frontier persistence (frontier_add/remove + periodic
-    compaction) must be indistinguishable from snapshot mode — including
-    resume across the compaction boundary."""
+    """O(delta) frontier persistence (frontier_add, the fetched keys as
+    removes, periodic compaction) must be indistinguishable from
+    snapshot mode — including resume across the compaction boundary."""
     d = tempfile.mkdtemp(prefix="crawl_d_")
     cfg = CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=2,
                       frontier_deltas=True, compact_every=2)
@@ -121,17 +175,16 @@ def test_crawl_frontier_delta_mode_matches_oracle(spark, oracle):
     run2 = CrawlRun(spark, d, cfg3)
     run2.run(resume=True)
     _check_against_oracle(run2, oracle)
-    import os
-
+    _check_round_layout(run2)
     assert os.path.isdir(os.path.join(d, "round=0001", "frontier_compact"))
     assert not os.path.isdir(os.path.join(d, "round=0000", "frontier_next"))
 
 
 def test_crawl_order_independent_of_partitioning(spark, oracle):
     """Same crawl at a different shuffle-partition count, salt factor and
-    bloom prefilter: byte-identical ordering/seen/docs — the sandbox
-    proxy for N-vs-4N executor determinism (the full local[8]/local[32]
-    two-process evidence lives in bench.py)."""
+    bloom prefilter: byte-identical ordering/seen/docs — the in-session
+    proxy for N-vs-4N executor determinism (the two-process local[1]
+    run is test_crawl_at_one_core_matches_oracle)."""
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "5")
@@ -183,8 +236,6 @@ def test_crawl_bloom_segments_equal_full_rebuild(spark, oracle):
     rebuilding from the crawl's full seen set — the invariant that lets
     each round commit only its delta. Also pins that the e2e path runs
     bloom-ON (CrawlConfig default) and still matches the oracle."""
-    import os
-
     from nde_crawlers_spark.operators import seen as SN
 
     d = tempfile.mkdtemp(prefix="crawl_bl_")
@@ -220,8 +271,6 @@ def test_autothrottle_adapts_budgets(spark):
     host with a real crawl-delay keeps its budget unchanged. The crawl
     itself stays oracle-exact with autothrottle ON (the latencies are
     corpus data, not wall-clock)."""
-    import os
-
     from nde_crawlers_spark.operators import frontier as FR
     from nde_crawlers_spark.sources.synthetic import _frac, robots_rules
 
@@ -289,9 +338,6 @@ def test_crawl_bloom_adapts_to_seen_growth(spark, oracle):
     2x-headroom sizing) instead of OR-ing into a saturating filter. The
     final table must still equal a from-scratch build at the adaptive
     size, and the crawl itself stays oracle-exact."""
-    import json
-    import os
-
     from nde_crawlers_spark.operators import seen as SN
 
     d = tempfile.mkdtemp(prefix="crawl_grow_")
@@ -346,8 +392,6 @@ def test_crawl_bloom_nseg_change_on_resume_rebuilds(spark, oracle):
     geometry makes probes route by the table's own nseg, and the next
     commit rebuilds under the new config — crawl stays oracle-exact
     and the final table carries the new segment count."""
-    import os
-
     from nde_crawlers_spark.operators import seen as SN
 
     d = tempfile.mkdtemp(prefix="crawl_nseg_")
@@ -372,10 +416,6 @@ def test_autothrottle_fast_host_budget_grows_from_start_delay(spark):
     its with_host_budget output GROWS back to the politeness budget —
     while a slow host stays pinned near 1. The crawl remains
     oracle-exact with the same start parameter."""
-    import os
-
-    from pyspark.sql import functions as F
-
     from nde_crawlers_spark.operators import frontier as FR
     from nde_crawlers_spark.sources.synthetic import robots_rules
 
@@ -434,10 +474,6 @@ def test_crawl_cuckoo_seen_filter_matches_oracle(spark, oracle):
     the crawl stays byte-identical to the oracle. The committed table
     has NO false negatives for the full seen set (incremental inserts
     preserve membership even when eviction walks spill to the stash)."""
-    import os
-
-    from pyspark.sql import functions as F
-
     from nde_crawlers_spark.operators import cuckoo as CK
 
     d = tempfile.mkdtemp(prefix="crawl_ck_")
@@ -470,10 +506,6 @@ def test_crawl_recrawl_ttl_in_loop(spark):
     not-refreshed fingerprints absent from the committed segments while
     every active key still probes present, and the commit meta carries
     the guarded-delete rebuild counter."""
-    import os
-
-    from pyspark.sql import functions as F
-
     from nde_crawlers_spark.operators import cuckoo as CK
 
     RING, HOSTS, TTL, ROUNDS_TTL = 8, 2, 2, 8
@@ -555,3 +587,94 @@ def test_crawl_recrawl_ttl_in_loop(spark):
             ),
         )
     assert results["snapshot"] == results["delta"], "TTL crawl diverged across frontier modes"
+
+
+def test_ttl_requeue_never_fetches_twice(spark):
+    """Recrawl TTL where hosts queue more URLs than their round budget:
+    keys expire while still queued and are rediscovered, and fetched
+    keys are queued again and wait. Each must stay one frontier row — no
+    URL is fetched twice in a round, and every round's ``frontier_next``
+    equals the frontier the next round reads — and both frontier modes
+    crawl the same URLs."""
+    HOSTS, PER_HOST = 2, 10
+    N = HOSTS * PER_HOST
+
+    def url(i: int) -> str:
+        return f"https://q{i % HOSTS}.example.org/records/{i % N}"
+
+    class QueueFetcher:
+        """Closed universe of N pages; page i links to the next three.
+        Robots allow every path at a 1 s crawl delay: each host's budget
+        is 2 per 2 s round, below its queue of 10."""
+
+        def __call__(self, u: str) -> dict:
+            i = int(u.rsplit("/", 1)[1])
+            links = "".join(f'<a href="{url(i + k)}"></a>' for k in (1, 2, 3))
+            body = f"<html><body><h1>page {i}</h1><p>queued page {i}</p>{links}</body></html>"
+            return {
+                "status": 200, "attempts": 1, "kind": "html", "body": body,
+                "bytes": len(body), "retry_after_s": 0, "latency_ms": 10.0,
+            }
+
+        def robots_txt(self, host: str) -> str:
+            return "User-agent: *\nCrawl-delay: 1\n"
+
+    # seeds outrank rediscovered URLs, so a fetched key queued again
+    # after its TTL waits in the frontier behind the seeds
+    seeds = spark.createDataFrame([(url(i), 0) for i in range(N)], ["url", "priority"])
+    orders = []
+    for deltas in (False, True):
+        cfg = CrawlConfig(
+            num_hosts=HOSTS, round_seconds=2, max_rounds=2, use_bloom=False,
+            recrawl_ttl_rounds=1, autothrottle=False, frontier_deltas=deltas,
+            fetcher=QueueFetcher(),
+        )
+        run = CrawlRun(spark, tempfile.mkdtemp(prefix="crawl_ttlq_"), cfg)
+        metas = run.run(seeds=seeds)
+        assert len(metas) == cfg.max_rounds
+        assert all(m["frontier_next"] > 0 for m in metas)  # budgets below the queue
+        twice = run.crawl_order().groupBy("round", "url_hash").count().filter("count > 1")
+        assert twice.count() == 0, twice.collect()
+        for m in metas:
+            rows, keys = run._frontier_through(m["round"]).agg(
+                F.count("*"), F.countDistinct("url_hash")
+            ).first()
+            assert m["frontier_next"] == rows == keys, (m, rows, keys)
+        orders.append([tuple(x) for x in run.crawl_order().select("round", "url_hash").collect()])
+    assert orders[0] == orders[1], "TTL crawl diverged across frontier modes"
+
+
+def _crawl_invariants_at(cores: int, out_path: str) -> None:
+    """Run the oracle scenario in a new session on ``cores`` cores and
+    write its order, seen set and docs to ``out_path`` as JSON."""
+    from nde_crawlers_spark.session import get_spark
+
+    spark = get_spark(app_name="nde-tests-cores", cores=cores)
+    spark.sparkContext.setLogLevel("ERROR")
+    run = CrawlRun(
+        spark, tempfile.mkdtemp(prefix="crawl_c_"),
+        CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=ROUNDS),
+    )
+    run.run(seeds=_seed_df(spark))
+    order, seen, docs = _invariants(run)
+    with open(out_path, "w") as f:
+        json.dump({"order": order, "seen": sorted(seen), "docs": docs}, f)
+    spark.stop()
+
+
+def test_crawl_at_one_core_matches_oracle(oracle, one_core_crawl):
+    """N-vs-4N determinism across processes: the oracle scenario in a
+    separate local[1] session (one shuffle partition) gives the oracle's
+    order, seen set and docs, which the local[16] runs above also give."""
+    proc, out, log = one_core_crawl
+    assert proc.wait(timeout=900) == 0, log.read_text()[-4000:]
+    got = json.loads(out.read_text())
+    assert [tuple(o) for o in got["order"]] == sorted(oracle.order)
+    assert set(got["seen"]) == oracle.seen
+    assert {k: [tuple(s) for s in v] for k, v in got["docs"].items()} == {
+        k: [tuple(s) for s in v] for k, v in oracle.documents.items()
+    }
+
+
+if __name__ == "__main__":
+    _crawl_invariants_at(1, sys.argv[1])

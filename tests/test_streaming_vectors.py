@@ -231,3 +231,22 @@ def test_uncommitted_delta_not_served(spark, ingested):
         assert got == want
     finally:
         shutil.rmtree(fake, ignore_errors=True)
+
+
+def test_pre_first_commit_delta_not_served(spark, tmp_path):
+    """A crash after batch 0 wrote its delta but before the checkpoint's
+    first commit leaves an empty commits log: codes() and serve() must
+    see no rows (the replayed batch 0 rewrites the delta and commits)."""
+    from nde_crawlers_spark.operators.similarity import sq8_encode, sq8_stats
+    from nde_crawlers_spark.streaming.vector_ingest import StreamingVectorIngest
+
+    vi = StreamingVectorIngest(spark, str(tmp_path))
+    emb = spark.read.parquet(f"{SF01}/embeddings.parquet").filter(F.col("vec_id") < 80)
+    st = sq8_stats(emb)
+    with open(os.path.join(vi.root, "stats.json"), "w") as f:
+        json.dump({"mn": st[0], "s": st[1], "base_batch": 0}, f)
+    sq8_encode(emb, st).write.parquet(os.path.join(vi.root, "codes", "batch=000000"))
+    os.makedirs(os.path.join(vi.root, "checkpoint", "commits"))
+    assert vi.last_committed_batch() is None
+    assert vi.codes().count() == 0
+    assert vi.serve(emb.limit(3), k=5).count() == 0
