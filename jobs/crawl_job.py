@@ -2,7 +2,8 @@
 
     spark-submit --py-files nde_crawlers_spark.zip jobs/crawl_job.py \
         --run-dir /data/crawl/run1 --seeds 100000 --hosts 500 \
-        --rounds 5 --round-seconds 30 [--resume] [--bloom]
+        --rounds 5 --round-seconds 30 [--resume] \
+        [--seen-filter exact|bloom|cuckoo]
 
 On a cluster, drop --master handling and submit against YARN/K8s; the
 engine itself is agnostic — all state lives under --run-dir (parquet in
@@ -30,14 +31,13 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("--round-seconds", type=int, default=30, help="politeness budget window")
     p.add_argument("--cores", type=int, default=None, help="local[] cores; omit on a cluster")
     p.add_argument("--resume", action="store_true")
-    # segmented bloom prefilter and AutoThrottle are the SHIPPED
-    # defaults (CrawlConfig); the flags below turn them off
-    p.add_argument("--no-bloom", action="store_true",
-                   help="disable the segmented bloom prefilter (exact anti-join only)")
+    # the bloom seen filter and AutoThrottle are the SHIPPED defaults
+    # (CrawlConfig)
     p.add_argument("--no-autothrottle", action="store_true",
                    help="disable per-host AutoThrottle delay adaptation")
-    p.add_argument("--seen-filter", choices=["bloom", "cuckoo"], default="bloom",
-                   help="partitioned membership prefilter flavor")
+    p.add_argument("--seen-filter", choices=["exact", "bloom", "cuckoo"], default="bloom",
+                   help="unseen filter: the exact anti-join alone, or fronted by a "
+                        "partitioned bloom or cuckoo membership filter")
     args = p.parse_args(argv)
 
     from nde_crawlers_spark.plans.crawl import CrawlConfig, CrawlRun
@@ -50,7 +50,6 @@ def main(argv: list[str] | None = None) -> int:
         num_hosts=args.hosts,
         round_seconds=args.round_seconds,
         max_rounds=args.rounds,
-        use_bloom=not args.no_bloom,
         seen_filter=args.seen_filter,
         autothrottle=not args.no_autothrottle,
     )

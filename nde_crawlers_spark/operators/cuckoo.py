@@ -29,6 +29,9 @@ import numpy as np
 
 _FP_BITS = 16
 _EMPTY = 0  # fingerprints are 1..65535; 0 marks an empty slot
+# table slots allocated per design-capacity key: a filter built for
+# ``capacity`` keys has at least ``capacity * _HEADROOM`` slots
+_HEADROOM = 1.25
 
 
 def _hash64(arr: np.ndarray, seed: int) -> np.ndarray:
@@ -45,7 +48,7 @@ def _hash64(arr: np.ndarray, seed: int) -> np.ndarray:
 class CuckooFilter:
     def __init__(self, capacity: int, slots_per_bucket: int = 4):
         nb = 1
-        while nb * slots_per_bucket < capacity * 1.25:
+        while nb * slots_per_bucket < capacity * _HEADROOM:
             nb <<= 1  # power of two so XOR partner stays in range
         self.nbuckets = nb
         self.slots = slots_per_bucket
@@ -240,8 +243,6 @@ def build_cuckoo_segments(
 def cuckoo_segments_sizing(segments: DataFrame) -> tuple[int, int, int] | None:
     """(nseg, nbuckets, slots) recorded in the persisted table, None if
     empty — the self-describing-geometry reader (bloom-segment twin)."""
-    if "nseg" not in segments.columns:
-        return None
     row = segments.select("nseg", "nbuckets", "slots").first()
     if row is None:
         return None
@@ -296,6 +297,39 @@ def insert_into_cuckoo_segments(
     per_seg_capacity: int = 15_625, slots: int = 4,
 ) -> DataFrame:
     return _apply_keys_to_segments(segments, delta, key, "insert", per_seg_capacity, slots)
+
+
+def next_cuckoo_segments(
+    prev: DataFrame | None,
+    new_seen: DataFrame,
+    seen: DataFrame,
+    seen_total: int,
+    nseg: int,
+    expected: int,
+    key: str = "url_hash",
+) -> DataFrame:
+    """The segment table to commit with a round, cuckoo form of
+    ``seen.next_bloom_segments``: insert the delta ``new_seen`` into
+    ``prev`` (the previous round's table), each key into its own
+    segment. The table is instead REBUILT from ``seen`` plus
+    ``new_seen``, for the larger of ``expected`` and 2x ``seen_total``
+    keys, when there is no previous table or it is empty, its recorded
+    segment count differs from ``nseg``, or ``seen_total`` (the
+    committed key count) passes 80% of its design capacity — past that,
+    eviction walks degrade and spill to the stash."""
+    sizing = cuckoo_segments_sizing(prev) if prev is not None else None
+    if sizing is not None:
+        p_nseg, nbuckets, slots = sizing
+        cap_total = int(nbuckets * slots * p_nseg / _HEADROOM)
+        if p_nseg == nseg and seen_total <= 0.8 * cap_total:
+            return insert_into_cuckoo_segments(
+                prev, new_seen.select(key), key=key,
+                per_seg_capacity=max(int(nbuckets * slots / _HEADROOM), 64), slots=slots,
+            )
+    return build_cuckoo_segments(
+        seen.select(key).unionByName(new_seen.select(key)), key=key, nseg=nseg,
+        capacity=max(expected, 2 * seen_total),
+    )
 
 
 def delete_from_cuckoo_segments(

@@ -5,17 +5,12 @@ requests+retry decorators (utils/utils.py:69-100); throughput is
 politeness-bound, not CPU-bound. Here fetch is an Arrow-batch stage over
 the round's selected URLs.
 
-Two operators:
-
-- ``fetch_selected``  — fetch only; emits the wire body. Kept for the
-  staged raw-zone architecture (crawl/parse decoupled, the reference's
-  cache-then-parse split, sql_database.py:241-253).
-- ``fetch_parse``     — the FUSED hot path used by the crawl plan and
-  benchmarks: fetch + parse-to-spans inside one ``mapInArrow`` stage, so
-  page bodies never cross the JVM<->Python boundary (they are produced
-  and consumed inside the same Python worker). Span/outlink columns are
-  built as flat pyarrow ListArrays (no per-row dicts) — measured ~6x
-  faster end-to-end than the two-stage mapInPandas pipeline.
+``fetch_parse`` is the FUSED hot path used by the crawl plan and
+benchmarks: fetch + parse-to-spans inside one ``mapInArrow`` stage, so
+page bodies never cross the JVM<->Python boundary (they are produced and
+consumed inside the same Python worker). Span/outlink columns are built
+as flat pyarrow ListArrays (no per-row dicts) — measured ~6x faster
+end-to-end than a two-stage mapInPandas pipeline.
 
 Partitioning: ``colocate=True`` (crawl mode) repartitions by host_bucket
 so one task owns a host's batch — the per-host serialization that
@@ -26,7 +21,7 @@ balanced. ``colocate=False`` (bulk/backfill mode, politeness enforced
 upstream at selection time) repartitions uniformly on url_hash — maximal
 parallelism, immune to host skew.
 
-The fetch body is INJECTABLE: both operators take a ``fetcher``
+The fetch body is INJECTABLE: ``fetch_parse`` takes a ``fetcher``
 callable ``(canonical_url) -> record dict`` with keys status/attempts/
 kind/body/bytes/retry_after_s/latency_ms. The default is the
 deterministic synthetic corpus (sources/synthetic.py::synth_fetch); the
@@ -41,7 +36,6 @@ from __future__ import annotations
 import time
 from collections.abc import Callable, Iterator
 
-import pandas as pd
 import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -49,24 +43,6 @@ from pyspark.sql import types as T
 
 from ..sources.synthetic import synth_fetch
 from .parse import parse_record
-
-FETCH_SCHEMA = T.StructType(
-    [
-        T.StructField("url_hash", T.StringType()),
-        T.StructField("canonical_url", T.StringType()),
-        T.StructField("host", T.StringType()),
-        T.StructField("host_bucket", T.IntegerType()),
-        T.StructField("priority", T.IntegerType()),
-        T.StructField("seq", T.LongType()),
-        T.StructField("status", T.IntegerType()),
-        T.StructField("attempts", T.IntegerType()),
-        T.StructField("kind", T.StringType()),
-        T.StructField("body", T.StringType()),
-        T.StructField("bytes", T.LongType()),
-        T.StructField("fetch_wall_ms", T.LongType()),
-        T.StructField("retry_after_s", T.IntegerType()),
-    ]
-)
 
 SPAN_FIELDS = [("kind", pa.string()), ("text", pa.string()),
                ("media_ref", pa.string()), ("offset", pa.int32())]
@@ -142,37 +118,6 @@ def _default_fetcher(num_hosts: int, max_attempts: int) -> Callable[[str], dict]
     def _f(url: str) -> dict:
         return synth_fetch(url, num_hosts, max_attempts)
     return _f
-
-
-def fetch_selected(
-    selected: DataFrame,
-    num_hosts: int,
-    max_attempts: int = 3,
-    colocate: bool = True,
-    partitions: int | None = None,
-    fetcher: Callable[[str], dict] | None = None,
-) -> DataFrame:
-    """Fetch only (bodies emitted) — the staged raw-zone path."""
-    fetcher = fetcher or _default_fetcher(num_hosts, max_attempts)
-
-    def _fetch_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            t0 = time.monotonic()
-            recs = [fetcher(u) for u in pdf["canonical_url"]]
-            wall = int((time.monotonic() - t0) * 1000)
-            out = pdf.copy()
-            out["status"] = [r["status"] for r in recs]
-            out["attempts"] = [r["attempts"] for r in recs]
-            out["kind"] = [r["kind"] for r in recs]
-            out["body"] = [r["body"] for r in recs]
-            out["bytes"] = [r["bytes"] for r in recs]
-            out["fetch_wall_ms"] = wall
-            out["retry_after_s"] = [r["retry_after_s"] for r in recs]
-            yield out
-
-    return _partition(selected, colocate, partitions).mapInPandas(
-        _fetch_batch, schema=FETCH_SCHEMA
-    )
 
 
 def fetch_parse(

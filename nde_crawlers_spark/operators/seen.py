@@ -43,6 +43,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+# false-positive budget each bloom segment is sized for
+BLOOM_FPP = 0.01
+
 
 def _params(expected: int, fpp: float) -> tuple[int, int]:
     nbits = max(64, int(-expected * math.log(fpp) / (math.log(2) ** 2)))
@@ -110,8 +113,8 @@ def write_seen_bucketed(seen: DataFrame, table: str, buckets: int = 64, key: str
 # there the anti-join must scan + shuffle-hash the giant seen side
 # every round, while the bloom probe touches only candidate-partition-
 # sized segment slices and routes the (mostly definite-new) majority
-# around the join entirely. The crawl keeps use_bloom on because its
-# per-round candidates << seen-total matches that regime.
+# around the join entirely. The crawl's default seen_filter is "bloom"
+# because its per-round candidates << seen-total matches that regime.
 
 # `nseg` (the segment-count the table was built with) is PERSISTED in
 # every row: probe routing hashes key -> segment with it, so a probe
@@ -132,10 +135,8 @@ SEGMENT_SCHEMA = T.StructType([
 def segments_sizing(segments: DataFrame) -> tuple[int, int, int] | None:
     """The (nseg, nbits, nhashes) a persisted segment table was built
     with — read from one row (single tiny driver action). ``None`` when
-    the table is empty or predates the self-describing schema (callers
-    must then rebuild from the full seen set)."""
-    if "nseg" not in segments.columns:
-        return None
+    the table is empty (callers must then rebuild from the full seen
+    set)."""
     row = segments.select("nseg", "nbits", "nhashes").first()
     if row is None:
         return None
@@ -157,7 +158,7 @@ def build_bloom_segments(
     key: str = "url_hash",
     nseg: int = 64,
     expected: int = 1_000_000,
-    fpp: float = 0.01,
+    fpp: float = BLOOM_FPP,
     sizing: tuple[int, int] | None = None,
 ) -> DataFrame:
     """Per-segment blooms over the seen keys: one shuffle on the segment
@@ -212,6 +213,37 @@ def or_bloom_segments(a: DataFrame, b: DataFrame) -> DataFrame:
         })
 
     return a.unionByName(b).groupBy("seg").applyInPandas(_merge, schema=SEGMENT_SCHEMA)
+
+
+def next_bloom_segments(
+    prev: DataFrame | None,
+    new_seen: DataFrame,
+    seen: DataFrame,
+    seen_total: int,
+    nseg: int,
+    expected: int,
+    key: str = "url_hash",
+) -> DataFrame:
+    """The segment table to commit with a round: ``prev`` (the previous
+    round's table) OR the segments of ``new_seen``, the round's delta —
+    so a resumed run picks up exactly the filter state matching its seen
+    set. The table is instead REBUILT from ``seen`` plus ``new_seen``
+    when (a) there is no previous table or it is empty, (b) its recorded
+    segment count differs from ``nseg`` (OR-ing would mis-route keys),
+    or (c) ``seen_total``, the committed key count, has outgrown its bit
+    arrays (fpp would blow past budget). Rebuilds size for 2x the
+    current count, so growth triggers amortized-O(1) doubling rebuilds,
+    never a per-round resize."""
+    need_nbits, _ = _seg_params(max(expected, seen_total), nseg, BLOOM_FPP)
+    sizing = segments_sizing(prev) if prev is not None else None
+    if sizing is not None and sizing[0] == nseg and sizing[1] >= need_nbits:
+        # the delta carries the persisted table's exact geometry
+        delta = build_bloom_segments(new_seen, key=key, nseg=nseg, sizing=sizing[1:])
+        return or_bloom_segments(prev, delta)
+    return build_bloom_segments(
+        seen.select(key).unionByName(new_seen.select(key)), key=key, nseg=nseg,
+        expected=max(expected, 2 * seen_total),
+    )
 
 
 def probe_bloom_segmented(
@@ -271,7 +303,7 @@ def filter_unseen_bloom_segmented(
     key: str = "url_hash",
     nseg: int = 64,
     expected: int = 1_000_000,
-    fpp: float = 0.01,
+    fpp: float = BLOOM_FPP,
 ) -> DataFrame:
     """Segmented-bloom-prefiltered unseen filter — exact semantics:
 

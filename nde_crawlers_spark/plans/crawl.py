@@ -42,7 +42,7 @@ import os
 import shutil
 import time
 from collections.abc import Callable, Iterable, Iterator
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -67,6 +67,16 @@ FRONTIER_COLS = [
     "url_hash", "priority", "seq", "url", "canonical_url", "host", "host_bucket", "path",
 ]
 
+# priority of URLs discovered as outlinks (seeds carry their own)
+DISCOVERED_PRIORITY = 5
+# AutoThrottle clamp floor (the DOWNLOAD_DELAY analog), ceiling and
+# target concurrency; see CrawlConfig.autothrottle
+AT_BASE_DELAY_MS = 500.0
+AT_MAX_DELAY_MS = 60_000.0
+AT_CONCURRENCY = 1.0
+
+SEEN_FILTERS = ("exact", "bloom", "cuckoo")
+
 
 @dataclass
 class CrawlConfig:
@@ -74,20 +84,16 @@ class CrawlConfig:
     round_seconds: int = 2          # politeness budget window per round
     max_rounds: int = 5
     max_attempts: int = 3
-    discovered_priority: int = 5
-    host_buckets: int = U.DEFAULT_HOST_BUCKETS
-    # segmented bloom prefilter in front of the seen anti-join: per-
-    # url_hash-bucket bloom segments, built executor-side, persisted in
-    # each round's commit beside the seen delta and maintained
-    # INCREMENTALLY (segments(r) = segments(r-1) OR build(new_seen_r)) —
-    # the north rule's partitioned URL-seen filter; no driver-side
-    # combine anywhere (operators/seen.py)
-    use_bloom: bool = True
-    # which partitioned membership filter fronts the seen anti-join:
-    # "bloom" (append-only, OR-maintained) or "cuckoo" (deletable —
-    # the TTL-recrawl path, operators/cuckoo.py). Both share the
-    # segment-count / design-capacity knobs below; use_bloom=False
-    # disables the prefilter entirely (exact anti-join only).
+    # the unseen filter: "exact" is the seen anti-join alone; "bloom"
+    # and "cuckoo" front it with a partitioned membership filter — per-
+    # url_hash-segment tables built executor-side, committed with each
+    # round beside the seen delta and maintained incrementally, with no
+    # driver-side combine anywhere (the north rule's partitioned URL-seen
+    # filter). Bloom segments are append-only, OR-maintained
+    # (operators/seen.py); cuckoo segments also support delete, the TTL-
+    # recrawl path (operators/cuckoo.py). Both take their segment count
+    # and design capacity from bloom_segments / bloom_expected. Any
+    # other value raises ValueError.
     seen_filter: str = "bloom"
     # TTL recrawl inside the loop (figshare EXPIRE analog,
     # figshare_oai-pmh/files/sql_database.py:75): a key first seen in
@@ -102,7 +108,6 @@ class CrawlConfig:
     recrawl_ttl_rounds: int | None = None
     bloom_segments: int = 64         # segment count (10^10 design point: 4096)
     bloom_expected: int = 1_000_000  # TOTAL expected keys across segments
-    bloom_fpp: float = 0.01
     salt_factor: int = 8
     # AutoThrottle (every reference crawler ships AUTOTHROTTLE_ENABLED=
     # True, TARGET_CONCURRENCY=1.0 over DOWNLOAD_DELAY=0.5s — e.g.
@@ -117,11 +122,9 @@ class CrawlConfig:
     # latencies are deterministic corpus DATA (sources/synthetic.py::
     # synth_latency_ms), not wall-clock, so scheduling stays
     # bit-identical at any parallelism (north-rule N-vs-4N invariant);
-    # in production the same fold consumes measured latencies.
+    # in production the same fold consumes measured latencies. The
+    # clamp and C are AT_BASE_DELAY_MS, AT_MAX_DELAY_MS, AT_CONCURRENCY.
     autothrottle: bool = True
-    at_base_delay_ms: float = 500.0        # clamp FLOOR (DOWNLOAD_DELAY analog)
-    at_max_delay_ms: float = 60_000.0
-    at_concurrency: float = 1.0
     # Scrapy separates AUTOTHROTTLE_START_DELAY (5s) from the floor: a
     # new host starts throttled and earns its budget back as it proves
     # fast (delay adapts DOWN toward the floor), while slow hosts stay
@@ -155,7 +158,12 @@ class CrawlConfig:
     # the callable also exposes ``robots_txt(host) -> str``, robots
     # bodies come from it too (_update_robots).
     fetcher: Callable[[str], dict] | None = None
-    extra: dict = field(default_factory=dict)
+
+    def __post_init__(self) -> None:
+        if self.seen_filter not in SEEN_FILTERS:
+            raise ValueError(
+                f"seen_filter must be one of {SEEN_FILTERS}, got {self.seen_filter!r}"
+            )
 
 
 class ConcurrentRunError(RuntimeError):
@@ -293,7 +301,7 @@ class CrawlRun:
     # ---------- candidate preparation ----------
     def _prepare_candidates(self, raw: DataFrame) -> DataFrame:
         """raw(url, priority) -> canonicalized, deduped candidate rows."""
-        df = U.with_url_columns(raw, num_buckets=self.cfg.host_buckets)
+        df = U.with_url_columns(raw)
         df = df.filter(U.url_scheme(F.col("url")).isin("http", "https"))
         df = df.withColumn("seq", U.hash_seq(F.col("canonical_url")))
         df = df.select(*FRONTIER_COLS)
@@ -358,42 +366,43 @@ class CrawlRun:
                 expired_new = seen.filter(F.col("first_seen_round") == F.lit(horizon))
                 seen = seen.filter(F.col("first_seen_round") > F.lit(horizon))
 
-        # unseen filter: candidates never enqueued before. With
-        # use_bloom, candidates are probed against the PREVIOUS round's
-        # persisted bloom-segment table (each candidate against its own
+        # unseen filter: candidates never enqueued before. With a
+        # membership filter, candidates are probed against the PREVIOUS
+        # round's persisted segment table (each candidate against its own
         # segment only); definite-new rows skip the anti-join entirely,
         # might-contain rows are confirmed exactly — identical output
         # set either way, at any parallelism.
-        mode = cfg.seen_filter if cfg.use_bloom else "exact"
-        seg_table = {"bloom": "bloom_segments", "cuckoo": "cuckoo_segments"}.get(mode)
+        mode = cfg.seen_filter
+        seg_table = None if mode == "exact" else f"{mode}_segments"
         prev_segments = None
         if seg_table and r > 0 and os.path.isdir(
             os.path.join(self._rdir(r - 1), seg_table)
         ):
             prev_segments = self._read(r - 1, seg_table)
         ttl_deleted_segments = None
-        if mode == "cuckoo" and prev_segments is not None and expired_new is not None:
-            # evict this round's newly-expired fingerprints BEFORE the
-            # probe, under the live-key guard (live = the active seen
-            # set — the complete post-delete membership). Cached: the
-            # post-delete table feeds both the probe and the insert/
-            # commit below, and the guarded delete is the expensive step.
-            prev_segments = CK.delete_from_cuckoo_segments(
-                prev_segments, expired_new.select("url_hash"),
-                live=seen.select("url_hash"),
-                rebuild_counter=self.cuckoo_rebuilds,
-            ).cache()
-            ttl_deleted_segments = prev_segments
         if mode == "bloom":
             unseen = SN.filter_unseen_bloom_segmented(
                 cand, seen, segments=prev_segments, nseg=cfg.bloom_segments,
-                expected=cfg.bloom_expected, fpp=cfg.bloom_fpp,
+                expected=cfg.bloom_expected,
             )
+            next_segments = SN.next_bloom_segments
         elif mode == "cuckoo":
+            if prev_segments is not None and expired_new is not None:
+                # evict this round's newly-expired fingerprints BEFORE the
+                # probe, under the live-key guard (live = the active seen
+                # set — the complete post-delete membership). Cached: the
+                # post-delete table feeds both the probe and the next
+                # table below, and the guarded delete is the expensive step.
+                prev_segments = ttl_deleted_segments = CK.delete_from_cuckoo_segments(
+                    prev_segments, expired_new.select("url_hash"),
+                    live=seen.select("url_hash"),
+                    rebuild_counter=self.cuckoo_rebuilds,
+                ).cache()
             unseen = CK.filter_unseen_cuckoo_segmented(
                 cand, seen, segments=prev_segments, nseg=cfg.bloom_segments,
                 capacity=cfg.bloom_expected,
             )
+            next_segments = CK.next_cuckoo_segments
         else:
             unseen = SN.filter_unseen_exact(cand, seen)
         unseen = unseen.cache()
@@ -460,16 +469,16 @@ class CrawlRun:
         # AutoThrottle fold: seed with the host's previous adapted delay
         # (base for new hosts), fold this round's signed latencies in
         # crawl order; hosts not fetched this round keep their delay.
-        base_d = F.lit(float(cfg.at_base_delay_ms))
-        max_d = F.lit(float(cfg.at_max_delay_ms))
+        base_d = F.lit(AT_BASE_DELAY_MS)
+        max_d = F.lit(AT_MAX_DELAY_MS)
         start_d = F.lit(float(
             cfg.at_start_delay_ms if cfg.at_start_delay_ms is not None
-            else cfg.at_base_delay_ms
+            else AT_BASE_DELAY_MS
         ))
         prev_at = F.coalesce(F.col("at_delay_ms"), start_d)
 
         def _at_fold(acc, x):
-            tgt = F.abs(x) / F.lit(float(cfg.at_concurrency))
+            tgt = F.abs(x) / F.lit(AT_CONCURRENCY)
             nd = F.least(F.greatest(tgt, (acc + tgt) / 2, base_d), max_d)
             return F.when(x >= 0, nd).otherwise(F.greatest(acc, nd))
 
@@ -531,71 +540,17 @@ class CrawlRun:
             (robots.coalesce(8), "robots_cache"),
             (host_state.coalesce(8), "host_state"),
         ]
-        if mode == "cuckoo":
-            # incremental maintenance, cuckoo form: insert the round's
-            # delta fingerprints into their own segments (cogroup); a
-            # geometry change or load-factor breach (committed keys past
-            # ~80% of table capacity — eviction walks degrade and spill
-            # to the stash) rebuilds at 2x headroom like the bloom path.
-            seen_total = self._seen_total + n_unseen
-            sizing = (
-                CK.cuckoo_segments_sizing(prev_segments)
-                if prev_segments is not None else None
+        if seg_table:
+            # incremental maintenance: the previous table plus this
+            # round's delta, or a rebuild when the geometry changed or the
+            # committed keys outgrew it (next_bloom_segments /
+            # next_cuckoo_segments) — committed with the round, so a
+            # resumed run picks up exactly the filter matching its seen set
+            new_segments = next_segments(
+                prev_segments, new_seen, seen, seen_total=self._seen_total + n_unseen,
+                nseg=cfg.bloom_segments, expected=cfg.bloom_expected,
             )
-            if sizing is not None:
-                cap_total = int(sizing[1] * sizing[2] * sizing[0] / 1.25)
-                if sizing[0] != cfg.bloom_segments or seen_total > 0.8 * cap_total:
-                    prev_segments, sizing = None, None
-            if prev_segments is not None and sizing is not None:
-                new_segments = CK.insert_into_cuckoo_segments(
-                    prev_segments, new_seen.select("url_hash"),
-                    per_seg_capacity=max(int(sizing[1] * sizing[2] / 1.25), 64),
-                    slots=sizing[2],
-                )
-            else:
-                new_segments = CK.build_cuckoo_segments(
-                    seen.select("url_hash").unionByName(new_seen.select("url_hash")),
-                    nseg=cfg.bloom_segments,
-                    capacity=max(cfg.bloom_expected, 2 * seen_total),
-                )
-            writes.append((new_segments.coalesce(8), "cuckoo_segments"))
-        elif cfg.use_bloom:
-            # incremental maintenance: this round's segment table =
-            # previous table OR the delta's segments — committed with the
-            # round, so a resumed run picks up exactly the filter state
-            # matching its seen set. The table is REBUILT from the full
-            # seen-through-r set instead of OR-ed when (a) no previous
-            # table exists (round 0, resume across a layout change),
-            # (b) the configured segment count changed (the persisted
-            # nseg disagrees — OR-ing would mis-route keys), or (c) the
-            # committed key count has outgrown the persisted bit-array
-            # sizing (fpp would blow past budget). Rebuilds size for
-            # 2x the current count, so growth triggers amortized-O(1)
-            # doubling rebuilds, never a per-round resize.
-            seen_total = self._seen_total + n_unseen
-            need_nbits, _ = SN._seg_params(
-                max(cfg.bloom_expected, seen_total), cfg.bloom_segments, cfg.bloom_fpp
-            )
-            sizing = SN.segments_sizing(prev_segments) if prev_segments is not None else None
-            if sizing is not None and (
-                sizing[0] != cfg.bloom_segments or sizing[1] < need_nbits
-            ):
-                prev_segments, sizing = None, None
-            if prev_segments is not None and sizing is not None:
-                # delta carries the persisted table's exact geometry
-                delta_segments = SN.build_bloom_segments(
-                    new_seen, nseg=sizing[0], fpp=cfg.bloom_fpp,
-                    sizing=(sizing[1], sizing[2]),
-                )
-                new_segments = SN.or_bloom_segments(prev_segments, delta_segments)
-            else:
-                new_segments = SN.build_bloom_segments(
-                    seen.select("url_hash").unionByName(new_seen.select("url_hash")),
-                    nseg=cfg.bloom_segments,
-                    expected=max(cfg.bloom_expected, 2 * seen_total),
-                    fpp=cfg.bloom_fpp,
-                )
-            writes.append((new_segments.coalesce(8), "bloom_segments"))
+            writes.append((new_segments.coalesce(8), seg_table))
         if cfg.frontier_deltas:
             # O(delta) persistence: what entered the frontier this round
             # (what left it is this round's fetched keys); periodic
@@ -754,7 +709,7 @@ class CrawlRun:
     def _outlinks(self, r: int) -> DataFrame:
         """Round r's discovered URLs: the next round's candidates."""
         return self._read(r, "fetched").select(
-            F.explode("outlinks").alias("url"), F.lit(self.cfg.discovered_priority).alias("priority")
+            F.explode("outlinks").alias("url"), F.lit(DISCOVERED_PRIORITY).alias("priority")
         )
 
     def crawl_order(self) -> DataFrame:

@@ -14,6 +14,7 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from nde_crawlers_spark.operators import seen as SN
 from nde_crawlers_spark.plans.crawl import CrawlConfig, CrawlRun
 from nde_crawlers_spark.plans.oracle import crawl_oracle
 from nde_crawlers_spark.sources.synthetic import make_seeds
@@ -108,14 +109,38 @@ def _check_round_layout(run: CrawlRun):
     assert tuple(lineage) == tuple(order)
 
 
+def test_crawl_config_rejects_unknown_seen_filter():
+    for mode in ("exact", "bloom", "cuckoo"):
+        assert CrawlConfig(seen_filter=mode).seen_filter == mode
+    with pytest.raises(ValueError, match="seen_filter"):
+        CrawlConfig(seen_filter="Bloom")
+
+
 def test_crawl_matches_oracle(spark, oracle):
-    run = CrawlRun(
-        spark, tempfile.mkdtemp(prefix="crawl_t_"),
-        CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=ROUNDS),
-    )
+    cfg = CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=ROUNDS)
+    assert cfg.seen_filter == "bloom"  # bloom is the shipped default
+    run = CrawlRun(spark, tempfile.mkdtemp(prefix="crawl_t_"), cfg)
     run.run(seeds=_seed_df(spark))
     _check_against_oracle(run, oracle)
     _check_round_layout(run)
+    # the round-committed incremental bloom-segment table (segments(r)
+    # = segments(r-1) OR build(delta_r)) is BYTE-identical to a rebuild
+    # from the crawl's full seen set — the invariant that lets each
+    # round commit only its delta
+    last = run.committed_rounds()[-1]
+    committed = {
+        r["seg"]: (r["bits"], r["nbits"], r["nhashes"])
+        for r in spark.read.parquet(
+            os.path.join(run.run_dir, f"round={last:04d}", "bloom_segments")
+        ).collect()
+    }
+    rebuilt = {
+        r["seg"]: (r["bits"], r["nbits"], r["nhashes"])
+        for r in SN.build_bloom_segments(
+            run.seen().select("url_hash"), nseg=cfg.bloom_segments, expected=cfg.bloom_expected,
+        ).collect()
+    }
+    assert committed == rebuilt
     # 1->N fan-out actually exercised: some fetched records emit sample
     # docs (doc_id = url_hash#sK) alongside their dataset doc, and every
     # sample doc's parent dataset doc exists
@@ -191,7 +216,7 @@ def test_crawl_order_independent_of_partitioning(spark, oracle):
         run = CrawlRun(
             spark, tempfile.mkdtemp(prefix="crawl_p_"),
             CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=ROUNDS,
-                        salt_factor=3, use_bloom=True),
+                        salt_factor=3),
         )
         run.run(seeds=_seed_df(spark))
         _check_against_oracle(run, oracle)
@@ -228,38 +253,6 @@ def test_retry_after_cooldown_matches_oracle(spark):
     # the ledger recorded the cooldown
     hs = run.host_state()
     assert hs.filter(hs.next_allowed_round > 0).count() > 0
-
-
-def test_crawl_bloom_segments_equal_full_rebuild(spark, oracle):
-    """The round-committed incremental bloom-segment table (segments(r)
-    = segments(r-1) OR build(delta_r)) must be BYTE-identical to
-    rebuilding from the crawl's full seen set — the invariant that lets
-    each round commit only its delta. Also pins that the e2e path runs
-    bloom-ON (CrawlConfig default) and still matches the oracle."""
-    from nde_crawlers_spark.operators import seen as SN
-
-    d = tempfile.mkdtemp(prefix="crawl_bl_")
-    cfg = CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=ROUNDS)
-    assert cfg.use_bloom  # bloom is the shipped default
-    run = CrawlRun(spark, d, cfg)
-    run.run(seeds=_seed_df(spark))
-    _check_against_oracle(run, oracle)
-
-    last = run.committed_rounds()[-1]
-    seg_dir = os.path.join(d, f"round={last:04d}", "bloom_segments")
-    assert os.path.isdir(seg_dir)
-    committed = {
-        r["seg"]: (r["bits"], r["nbits"], r["nhashes"])
-        for r in spark.read.parquet(seg_dir).collect()
-    }
-    rebuilt = {
-        r["seg"]: (r["bits"], r["nbits"], r["nhashes"])
-        for r in SN.build_bloom_segments(
-            run.seen().select("url_hash"),
-            nseg=cfg.bloom_segments, expected=cfg.bloom_expected, fpp=cfg.bloom_fpp,
-        ).collect()
-    }
-    assert committed == rebuilt
 
 
 def test_autothrottle_adapts_budgets(spark):
@@ -338,8 +331,6 @@ def test_crawl_bloom_adapts_to_seen_growth(spark, oracle):
     2x-headroom sizing) instead of OR-ing into a saturating filter. The
     final table must still equal a from-scratch build at the adaptive
     size, and the crawl itself stays oracle-exact."""
-    from nde_crawlers_spark.operators import seen as SN
-
     d = tempfile.mkdtemp(prefix="crawl_grow_")
     # round 0 commits ~N_SEEDS keys, later rounds add outlink URLs.
     # nseg=2 keeps per-segment counts above _seg_params' 64-key floor,
@@ -365,7 +356,7 @@ def test_crawl_bloom_adapts_to_seen_growth(spark, oracle):
     # every committed geometry satisfies the fpp budget for its own
     # committed key count (the adaptive guarantee)
     for (nseg, nbits, _k), tot in zip(sizes, totals):
-        need_nbits, _ = SN._seg_params(max(cfg.bloom_expected, tot), nseg, cfg.bloom_fpp)
+        need_nbits, _ = SN._seg_params(max(cfg.bloom_expected, tot), nseg, SN.BLOOM_FPP)
         assert nbits >= need_nbits, (nbits, need_nbits, tot)
     # final table == full rebuild at the adaptive size it was born with
     last = rounds[-1]
@@ -379,7 +370,7 @@ def test_crawl_bloom_adapts_to_seen_growth(spark, oracle):
         r["seg"]: (r["bits"], r["nseg"], r["nbits"], r["nhashes"])
         for r in SN.build_bloom_segments(
             run.seen().select("url_hash"), nseg=cfg.bloom_segments,
-            fpp=cfg.bloom_fpp, sizing=(sizes[-1][1], sizes[-1][2]),
+            sizing=(sizes[-1][1], sizes[-1][2]),
         ).collect()
     }
     assert committed == rebuilt
@@ -392,8 +383,6 @@ def test_crawl_bloom_nseg_change_on_resume_rebuilds(spark, oracle):
     geometry makes probes route by the table's own nseg, and the next
     commit rebuilds under the new config — crawl stays oracle-exact
     and the final table carries the new segment count."""
-    from nde_crawlers_spark.operators import seen as SN
-
     d = tempfile.mkdtemp(prefix="crawl_nseg_")
     cfg1 = CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=1,
                        bloom_segments=16)
@@ -625,7 +614,7 @@ def test_ttl_requeue_never_fetches_twice(spark):
     orders = []
     for deltas in (False, True):
         cfg = CrawlConfig(
-            num_hosts=HOSTS, round_seconds=2, max_rounds=2, use_bloom=False,
+            num_hosts=HOSTS, round_seconds=2, max_rounds=2, seen_filter="exact",
             recrawl_ttl_rounds=1, autothrottle=False, frontier_deltas=deltas,
             fetcher=QueueFetcher(),
         )
@@ -633,6 +622,10 @@ def test_ttl_requeue_never_fetches_twice(spark):
         metas = run.run(seeds=seeds)
         assert len(metas) == cfg.max_rounds
         assert all(m["frontier_next"] > 0 for m in metas)  # budgets below the queue
+        # the exact filter keeps no membership-filter segments
+        for r in run.committed_rounds():
+            tables = os.listdir(os.path.join(run.run_dir, f"round={r:04d}"))
+            assert not [t for t in tables if t.endswith("_segments")], tables
         twice = run.crawl_order().groupBy("round", "url_hash").count().filter("count > 1")
         assert twice.count() == 0, twice.collect()
         for m in metas:

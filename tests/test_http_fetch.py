@@ -31,7 +31,9 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 import pytest
 
 from nde_crawlers_spark.operators.http_fetch import HttpFetcher, LoopbackProxyFetcher
-from nde_crawlers_spark.plans.crawl import CrawlConfig, CrawlRun
+from nde_crawlers_spark.plans.crawl import (
+    AT_BASE_DELAY_MS, AT_MAX_DELAY_MS, CrawlConfig, CrawlRun,
+)
 from nde_crawlers_spark.sources.synthetic import (
     _status_draw,
     make_seeds,
@@ -353,8 +355,7 @@ def test_crawl_autothrottle_on_real_sockets(spark):
         diverged = [d for d in both if docs_r[d] != docs_c[d]]
         assert not diverged, f"span sequences diverged for {diverged[:3]}"
 
-        cfg = CrawlConfig()
-        ceiling = round_seconds * 1000 // int(cfg.at_base_delay_ms)
+        ceiling = round_seconds * 1000 // int(AT_BASE_DELAY_MS)
         per_round = (
             real.crawl_order().groupBy("round", "host").count().collect())
         for r in per_round:
@@ -365,7 +366,7 @@ def test_crawl_autothrottle_on_real_sockets(spark):
         assert slow_host in delays and len(delays) >= 5
         fast = {h: d for h, d in delays.items() if h != slow_host}
         for h, d in delays.items():
-            assert cfg.at_base_delay_ms <= d <= cfg.at_max_delay_ms, (h, d)
+            assert AT_BASE_DELAY_MS <= d <= AT_MAX_DELAY_MS, (h, d)
         # 0.6 s sleep -> observed latency/target >= ~600 ms > the 500 ms
         # floor; fast loopback hosts converge onto the floor
         assert delays[slow_host] >= 550, delays[slow_host]
