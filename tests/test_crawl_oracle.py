@@ -116,23 +116,45 @@ def test_crawl_config_rejects_unknown_seen_filter():
         CrawlConfig(seen_filter="Bloom")
 
 
-def test_crawl_matches_oracle(spark, oracle):
+@pytest.fixture(scope="module")
+def default_run(spark):
+    """One crawl of the oracle scenario under the shipped CrawlConfig
+    defaults, shared by the tests that only read its committed tables."""
     cfg = CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=ROUNDS)
-    assert cfg.seen_filter == "bloom"  # bloom is the shipped default
     run = CrawlRun(spark, tempfile.mkdtemp(prefix="crawl_t_"), cfg)
     run.run(seeds=_seed_df(spark))
+    return run
+
+
+def test_crawl_matches_oracle(default_run, oracle):
+    run = default_run
     _check_against_oracle(run, oracle)
     _check_round_layout(run)
-    # the round-committed incremental bloom-segment table (segments(r)
-    # = segments(r-1) OR build(delta_r)) is BYTE-identical to a rebuild
-    # from the crawl's full seen set — the invariant that lets each
-    # round commit only its delta
+    # 1->N fan-out actually exercised: some fetched records emit sample
+    # docs (doc_id = url_hash#sK) alongside their dataset doc, and every
+    # sample doc's parent dataset doc exists
+    _, _, docs = _invariants(run)
+    sample_ids = [d for d in docs if "#s" in d]
+    assert len(sample_ids) > 0
+    assert all(d.split("#")[0] in docs for d in sample_ids)
+
+
+def test_crawl_bloom_segments_equal_full_rebuild(spark, default_run, oracle):
+    """The round-committed incremental bloom-segment table (segments(r)
+    = segments(r-1) OR build(delta_r)) must be BYTE-identical to
+    rebuilding from the crawl's full seen set — the invariant that lets
+    each round commit only its delta. Also pins that the e2e path runs
+    bloom-ON (CrawlConfig default) and still matches the oracle."""
+    run, cfg = default_run, default_run.cfg
+    assert cfg.seen_filter == "bloom"  # bloom is the shipped default
+    _check_against_oracle(run, oracle)
+
     last = run.committed_rounds()[-1]
+    seg_dir = os.path.join(run.run_dir, f"round={last:04d}", "bloom_segments")
+    assert os.path.isdir(seg_dir)
     committed = {
         r["seg"]: (r["bits"], r["nbits"], r["nhashes"])
-        for r in spark.read.parquet(
-            os.path.join(run.run_dir, f"round={last:04d}", "bloom_segments")
-        ).collect()
+        for r in spark.read.parquet(seg_dir).collect()
     }
     rebuilt = {
         r["seg"]: (r["bits"], r["nbits"], r["nhashes"])
@@ -141,13 +163,6 @@ def test_crawl_matches_oracle(spark, oracle):
         ).collect()
     }
     assert committed == rebuilt
-    # 1->N fan-out actually exercised: some fetched records emit sample
-    # docs (doc_id = url_hash#sK) alongside their dataset doc, and every
-    # sample doc's parent dataset doc exists
-    _, _, docs = _invariants(run)
-    sample_ids = [d for d in docs if "#s" in d]
-    assert len(sample_ids) > 0
-    assert all(d.split("#")[0] in docs for d in sample_ids)
 
 
 def test_crawl_resume_replays_exactly(spark, oracle):
