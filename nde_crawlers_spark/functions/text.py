@@ -37,10 +37,6 @@ def tokens(text: Column) -> Column:
     return F.filter(F.split(F.lower(text), r"\s+"), lambda t: t != "")
 
 
-def token_count(text: Column) -> Column:
-    return F.size(tokens(text))
-
-
 def word_ngrams(toks: Column, n: int) -> Column:
     """Word n-grams joined by single spaces. Empty array when < n tokens.
 
@@ -73,21 +69,6 @@ def minhash_signature(shingle_arr: Column, k: int = 8) -> Column:
         F.sequence(F.lit(0), F.lit(k - 1)),
         lambda i: F.array_min(
             F.transform(shingle_arr, lambda s: F.md5(F.concat(i.cast("string"), F.lit("|"), s)))
-        ),
-    )
-
-
-def lsh_band_keys(sig: Column, bands: int, rows_per_band: int) -> Column:
-    """Band keys for MinHash-LSH: md5 of each band's joined rows.
-    bands * rows_per_band must equal the signature length."""
-    return F.transform(
-        F.sequence(F.lit(0), F.lit(bands - 1)),
-        lambda b: F.md5(
-            F.concat(
-                b.cast("string"),
-                F.lit(":"),
-                F.array_join(F.slice(sig, b * rows_per_band + 1, rows_per_band), "|"),
-            )
         ),
     )
 

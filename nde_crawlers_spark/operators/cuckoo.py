@@ -189,6 +189,8 @@ from pyspark.sql import DataFrame  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402
 from pyspark.sql import types as T  # noqa: E402
 
+from .seen import drop_confirmed_seen, segment_of  # noqa: E402
+
 CUCKOO_SEGMENT_SCHEMA = T.StructType([
     T.StructField("seg", T.IntegerType()),
     T.StructField("nseg", T.IntegerType()),
@@ -196,11 +198,6 @@ CUCKOO_SEGMENT_SCHEMA = T.StructType([
     T.StructField("slots", T.IntegerType()),
     T.StructField("blob", T.BinaryType()),
 ])
-
-
-def _seg_of(col, nseg: int):
-    from .seen import segment_of
-    return segment_of(col, nseg)
 
 
 def _key_hash(col):
@@ -235,7 +232,7 @@ def build_cuckoo_segments(
         })
 
     hashed = seen.select(
-        _seg_of(F.col(key), nseg).alias("__seg"), _key_hash(F.col(key)).alias("__h")
+        segment_of(F.col(key), nseg).alias("__seg"), _key_hash(F.col(key)).alias("__h")
     )
     return hashed.groupBy("__seg").applyInPandas(_build, schema=CUCKOO_SEGMENT_SCHEMA)
 
@@ -283,7 +280,7 @@ def _apply_keys_to_segments(
         })
 
     hashed = keys.select(
-        _seg_of(F.col(key), nseg).alias("__seg"), _key_hash(F.col(key)).alias("__h")
+        segment_of(F.col(key), nseg).alias("__seg"), _key_hash(F.col(key)).alias("__h")
     )
     return (
         hashed.groupBy("__seg")
@@ -365,7 +362,7 @@ def delete_from_cuckoo_segments(
 
     def _tag(df: DataFrame, is_live: int) -> DataFrame:
         return df.select(
-            _seg_of(F.col(key), nseg).alias("__seg"),
+            segment_of(F.col(key), nseg).alias("__seg"),
             _key_hash(F.col(key)).alias("__h"),
             F.lit(is_live).alias("__live"),
         )
@@ -439,7 +436,7 @@ def probe_cuckoo_segmented(
         return out
 
     withh = candidates.withColumns({
-        "__seg": _seg_of(F.col(key), nseg),
+        "__seg": segment_of(F.col(key), nseg),
         "__h": _key_hash(F.col(key)),
     })
     return (
@@ -458,18 +455,16 @@ def filter_unseen_cuckoo_segmented(
     capacity: int = 1_000_000,
 ) -> DataFrame:
     """Cuckoo-prefiltered unseen filter, exact semantics (bloom twin):
-    definite-new skip the anti-join, might-contain rows are confirmed
-    against ``active_seen`` (the seen set MINUS expired keys — with TTL
-    recrawl the filter may legitimately contain nothing for an expired
-    key, and a stale might-contain is caught by the exact join)."""
+    definite-new rows are kept, might-contain rows are confirmed against
+    ``active_seen`` (the seen set MINUS expired keys — with TTL recrawl
+    the filter may legitimately contain nothing for an expired key, and
+    a stale might-contain is caught by the exact join). Both run in the
+    one conditional anti-join of ``seen.drop_confirmed_seen``, so the
+    probe runs once."""
     if segments is None:
         segments = build_cuckoo_segments(active_seen, key=key, nseg=nseg, capacity=capacity)
         probe_nseg: int | None = nseg
     else:
         probe_nseg = None
     probed = probe_cuckoo_segmented(candidates, segments, key=key, nseg=probe_nseg)
-    definite_new = probed.filter(~F.col("__maybe_seen")).drop("__maybe_seen")
-    maybe = probed.filter(F.col("__maybe_seen")).drop("__maybe_seen")
-    from .seen import filter_unseen_exact
-    confirmed_new = filter_unseen_exact(maybe, active_seen, key)
-    return definite_new.unionByName(confirmed_new)
+    return drop_confirmed_seen(probed, active_seen, key)

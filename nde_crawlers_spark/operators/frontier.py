@@ -24,10 +24,16 @@ is identical, the big sort never happens.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 ORDER_COLS = ["priority", "seq", "url_hash"]
+
+# AutoThrottle clamp floor (the DOWNLOAD_DELAY analog), ceiling and
+# target concurrency
+AT_BASE_DELAY_MS = 500.0
+AT_MAX_DELAY_MS = 60_000.0
+AT_CONCURRENCY = 1.0
 
 
 def robots_filter(candidates: DataFrame, robots: DataFrame) -> DataFrame:
@@ -67,10 +73,10 @@ def with_host_budget(
     - AutoThrottle (every reference crawler ships
       AUTOTHROTTLE_ENABLED=True, e.g. bei_crawler/files/settings.py:
       2-5): ``at_delay_ms`` is the per-host delay adapted to observed
-      latency (plans/crawl.py folds the recurrence over each round's
-      fetch latencies). Like Scrapy, the adapted delay can only RAISE
-      the effective delay above the robots/default floor, never lower
-      it: effective = greatest(crawl_delay_ms, at_delay_ms)."""
+      latency (plans/crawl.py folds ``autothrottle_step`` over each
+      round's fetch latencies). Like Scrapy, the adapted delay can only
+      RAISE the effective delay above the robots/default floor, never
+      lower it: effective = greatest(crawl_delay_ms, at_delay_ms)."""
     r = F.broadcast(robots.select("host", "crawl_delay_ms"))
     out = candidates.join(r, on="host", how="left")
     delay = F.coalesce(F.col("crawl_delay_ms"), F.lit(500))
@@ -94,6 +100,25 @@ def with_host_budget(
         )
         return out
     return out.withColumn("host_budget", budget.cast("int")).drop("crawl_delay_ms")
+
+
+def autothrottle_step(acc: Column, x: Column) -> Column:
+    """One step of the Scrapy AutoThrottle recurrence, the merge function
+    of ``F.aggregate`` over a host's signed latencies in crawl order:
+
+        target = |x| / AT_CONCURRENCY
+        next = clamp(max(target, (acc + target) / 2),
+                     AT_BASE_DELAY_MS, AT_MAX_DELAY_MS)
+
+    A negative ``x`` marks a failed fetch, which may only RAISE the
+    delay. The max(target, mean) step is Scrapy's: one very slow
+    response jumps the delay to its full target, not halfway. The
+    result is the ``at_delay_ms`` that ``with_host_budget`` reads."""
+    tgt = F.abs(x) / F.lit(AT_CONCURRENCY)
+    nd = F.least(
+        F.greatest(tgt, (acc + tgt) / 2, F.lit(AT_BASE_DELAY_MS)), F.lit(AT_MAX_DELAY_MS)
+    )
+    return F.when(x >= 0, nd).otherwise(F.greatest(acc, nd))
 
 
 def topk_per_host(

@@ -14,11 +14,12 @@ normalize into ONE canonical output — the BASELINE.json input_hint table:
 plus the extracted outlinks that feed the frontier.
 
 ``parse_body`` is the single source of truth, plain Python: the Spark
-path calls it inside an Arrow-batched ``mapInPandas`` (never row-at-a-time
-UDF), and the single-threaded Python oracle (plans/oracle.py) calls the
-very same function — so the span-sequence-equality invariant (same
-(kind, text, media_ref) in the same order) checks Spark's plumbing
-(batching, partitioning, schema) rather than two parser implementations.
+path (operators/fetch.py::fetch_parse) calls it inside an Arrow-batched
+``mapInArrow`` (never row-at-a-time UDF), and the single-threaded
+Python oracle (plans/oracle.py) calls the very same function — so the
+span-sequence-equality invariant (same (kind, text, media_ref) in the
+same order) checks Spark's plumbing (batching, partitioning, schema)
+rather than two parser implementations.
 
 Span order is canonical: title, description, author, date, keyword*,
 media* — offsets strictly increasing cumulative text positions.
@@ -29,33 +30,10 @@ from __future__ import annotations
 import json
 import re
 import xml.etree.ElementTree as ET
-from collections.abc import Iterator
 from html.parser import HTMLParser
 
-import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-SPAN_SCHEMA = T.ArrayType(
-    T.StructType(
-        [
-            T.StructField("kind", T.StringType()),
-            T.StructField("text", T.StringType()),
-            T.StructField("media_ref", T.StringType()),
-            T.StructField("offset", T.IntegerType()),
-        ]
-    )
-)
-
-PARSED_SCHEMA = T.StructType(
-    [
-        T.StructField("url_hash", T.StringType()),
-        T.StructField("canonical_url", T.StringType()),
-        T.StructField("spans", SPAN_SCHEMA),
-        T.StructField("outlinks", T.ArrayType(T.StringType())),
-    ]
-)
 
 _HTML_RX = {
     "title": re.compile(r"<title>(.*?)</title>", re.S),
@@ -237,26 +215,3 @@ def spans_to_fields(docs: DataFrame) -> DataFrame:
         all_of("keyword", "text").alias("keywords"),
         all_of("media", "media_ref").alias("media_refs"),
     )
-
-
-def parse_fetched(fetched: DataFrame) -> DataFrame:
-    """Vectorized parse of fetch results (status==200 rows) into the
-    documents-spans schema + outlinks. Arrow-batched mapInPandas; the
-    filter on status is a Catalyst predicate pushed below the UDF."""
-
-    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for url_hash, canon, kind, body in zip(
-                pdf["url_hash"], pdf["canonical_url"], pdf["kind"], pdf["body"]
-            ):
-                spans, links = parse_body(kind, body)
-                rows.append((url_hash, canon, spans, links))
-            yield pd.DataFrame(
-                rows, columns=["url_hash", "canonical_url", "spans", "outlinks"]
-            )
-
-    cols = fetched.filter(F.col("status") == 200).select(
-        "url_hash", "canonical_url", "kind", "body"
-    )
-    return cols.mapInPandas(_run, schema=PARSED_SCHEMA)

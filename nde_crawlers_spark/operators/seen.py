@@ -74,6 +74,28 @@ def filter_unseen_exact(candidates: DataFrame, seen: DataFrame, key: str = "url_
     return candidates.join(seen.select(key), on=key, how="left_anti")
 
 
+def drop_confirmed_seen(probed: DataFrame, seen: DataFrame, key: str = "url_hash") -> DataFrame:
+    """The exact confirm behind a membership-filter probe: ``probed``
+    carries ``__maybe_seen``; definite-new rows are kept as they are and
+    might-contain rows survive iff their key is absent from ``seen``.
+
+    ONE conditional anti-join, not the two-branch union
+    definite_new ∪ (maybe ANTI seen): the union referenced ``probed``
+    twice, and Spark has no operator-level CSE above the exchange, so
+    the ENTIRE cogroup probe (candidate shuffle + Arrow round trip +
+    filter compute) ran once per branch. A definite-new row matches no
+    seen row because its __maybe_seen conjunct is false, so the anti-join
+    keeps it: the row multiset is identical and the probe runs once. At
+    the 10^10 design point, definite-new rows pass through the anti-
+    join's exchange (one extra narrow shuffle) instead of a second full
+    probe. No distinct: anti-join output is invariant to right-side
+    multiplicity (see filter_unseen_exact)."""
+    seen_keys = seen.select(F.col(key).alias("__seen_key"))
+    return probed.join(
+        seen_keys, (F.col(key) == F.col("__seen_key")) & F.col("__maybe_seen"), "left_anti"
+    ).drop("__maybe_seen")
+
+
 def write_seen_bucketed(seen: DataFrame, table: str, buckets: int = 64, key: str = "url_hash") -> None:
     """Persist the seen set hash-bucketed (and sorted) by the key — the
     sandbox stand-in for Iceberg's bucket(url_hash) transform. A join or
@@ -309,7 +331,8 @@ def filter_unseen_bloom_segmented(
 
     definite_new  = candidates whose own segment says not-present
     maybe_seen    = the rest -> confirmed via exact anti-join vs seen
-    result        = definite_new UNION confirmed_new
+    result        = definite_new UNION confirmed_new, computed by one
+                    conditional anti-join (drop_confirmed_seen)
 
     ``segments`` is the persisted incremental table when the caller
     maintains one (the crawl plan does, per round, beside the seen
@@ -323,27 +346,4 @@ def filter_unseen_bloom_segmented(
     else:
         probe_nseg = None  # derive from the table's recorded geometry
     probed = probe_bloom_segmented(candidates, segments, key=key, nseg=probe_nseg)
-    # ONE conditional anti-join instead of the r8 two-branch union
-    # (definite_new ∪ (maybe ANTI seen)): the union referenced `probed`
-    # twice, and Spark has no operator-level CSE above the exchange —
-    # the ENTIRE cogroup probe (candidate shuffle + Arrow round trip +
-    # bloom compute) executed once per branch. Folding the branch into
-    # the anti-join condition (a definite-new row matches no seen row
-    # because its __maybe_seen conjunct is false, so anti keeps it; a
-    # maybe row survives iff its key is absent) keeps the identical row
-    # multiset while the probe runs exactly once. Cost shift at the
-    # 10^10 design point: definite-new rows now pass through the
-    # anti-join's exchange (one extra narrow shuffle) instead of
-    # through a second full probe (shuffle + Python) — strictly less
-    # work in both regimes.
-    # no distinct: anti-join output is invariant to right-side
-    # multiplicity (see filter_unseen_exact)
-    seen_keys = seen.select(F.col(key).alias("__seen_key"))
-    return (
-        probed.join(
-            seen_keys,
-            (F.col(key) == F.col("__seen_key")) & F.col("__maybe_seen"),
-            "left_anti",
-        )
-        .drop("__maybe_seen")
-    )
+    return drop_confirmed_seen(probed, seen, key)

@@ -11,10 +11,15 @@ Model: bulk-synchronous rounds. Each round
     candidates -> canonicalize -> dedupe -> unseen-filter -> robots ->
     politeness top-k per host -> fetch (Arrow batches) -> parse to spans
     -> commit {fetched, new_seen, robots_cache, host_state, seen-filter
-               segments, frontier} + _COMMIT marker
+               segments, frontier_next | frontier_add} + _COMMIT marker
 Crawl order, documents, lineage and the next round's candidates are not
 tables of their own: they are read-time projections of ``fetched``, the
 round's fetch_parse rows.
+Each round writes ONE frontier table: a full ``frontier_next`` snapshot,
+or, between snapshots when ``frontier_deltas`` is on, a ``frontier_add``
+delta whose removes are the round's fetched keys. Resume rebuilds the
+frontier from the latest snapshot plus the later deltas, whichever
+cadence wrote the run directory.
 The marker is written last via tmp+rename — the same
 data-before-release ordering the reference uses so bad data never
 propagates (README.md:88-97). A killed run resumes from the last round
@@ -29,10 +34,11 @@ url_hash).
 
 Scale notes (10^10 URLs): in production the per-round state tables are
 Iceberg — ``url_seen`` bucketed by url_hash (co-partitioned anti-join),
-frontier MERGE'd as deltas instead of snapshot-rewritten, lineage rows
-appended per snapshot. The sandbox uses parquet round directories with
-identical semantics; the plan shapes (anti-join, broadcast robots,
-two-phase top-k, mapInPandas fetch) are what carry to the cluster.
+frontier MERGE'd as deltas with periodic compaction (the frontier_deltas
+cadence), lineage rows appended per snapshot. The sandbox uses parquet
+round directories with identical semantics; the plan shapes (anti-join,
+broadcast robots, two-phase top-k, mapInPandas fetch) are what carry to
+the cluster.
 """
 
 from __future__ import annotations
@@ -69,11 +75,9 @@ FRONTIER_COLS = [
 
 # priority of URLs discovered as outlinks (seeds carry their own)
 DISCOVERED_PRIORITY = 5
-# AutoThrottle clamp floor (the DOWNLOAD_DELAY analog), ceiling and
-# target concurrency; see CrawlConfig.autothrottle
-AT_BASE_DELAY_MS = 500.0
-AT_MAX_DELAY_MS = 60_000.0
-AT_CONCURRENCY = 1.0
+# with frontier_deltas, every COMPACT_EVERY-th round writes a full
+# frontier snapshot, bounding the delta chain resume reads
+COMPACT_EVERY = 4
 
 SEEN_FILTERS = ("exact", "bloom", "cuckoo")
 
@@ -123,7 +127,8 @@ class CrawlConfig:
     # synth_latency_ms), not wall-clock, so scheduling stays
     # bit-identical at any parallelism (north-rule N-vs-4N invariant);
     # in production the same fold consumes measured latencies. The
-    # clamp and C are AT_BASE_DELAY_MS, AT_MAX_DELAY_MS, AT_CONCURRENCY.
+    # step, its clamp and C live in operators/frontier.py
+    # (autothrottle_step, AT_BASE_DELAY_MS, AT_MAX_DELAY_MS, AT_CONCURRENCY).
     autothrottle: bool = True
     # Scrapy separates AUTOTHROTTLE_START_DELAY (5s) from the floor: a
     # new host starts throttled and earns its budget back as it proves
@@ -145,13 +150,13 @@ class CrawlConfig:
     # the start level) one round later. The Python oracle mirrors this
     # exactly.
     at_start_delay_ms: float | None = 5000.0
-    # frontier persistence: False = full snapshot per round (simple,
-    # sandbox default); True = O(delta) writes per round (frontier_add;
-    # the removes are the round's fetched keys) with a full compaction
-    # snapshot every ``compact_every`` rounds — the Iceberg-MERGE-shaped
-    # scale path (PLANS.md shuffle inventory).
+    # frontier snapshot cadence: False = a full ``frontier_next``
+    # snapshot every round (sandbox default); True = a snapshot every
+    # COMPACT_EVERY rounds and an O(delta) ``frontier_add`` on the rest
+    # (the removes are the round's fetched keys) — the Iceberg-MERGE-
+    # shaped scale path (PLANS.md shuffle inventory). Either way a round
+    # writes one frontier table, and resume reads both layouts.
     frontier_deltas: bool = False
-    compact_every: int = 4
     # injectable fetch body (operators/fetch.py contract): None = the
     # deterministic synthetic corpus; operators/http_fetch.HttpFetcher
     # (or a proxy wrapper) puts real sockets behind the SAME plan. If
@@ -467,24 +472,17 @@ class CrawlRun:
             F.lit(r) + F.ceil(F.col("ra_s") / F.lit(float(cfg.round_seconds))),
         ).otherwise(F.lit(None))
         # AutoThrottle fold: seed with the host's previous adapted delay
-        # (base for new hosts), fold this round's signed latencies in
-        # crawl order; hosts not fetched this round keep their delay.
-        base_d = F.lit(AT_BASE_DELAY_MS)
-        max_d = F.lit(AT_MAX_DELAY_MS)
+        # (the start delay for new hosts), fold this round's signed
+        # latencies in crawl order; hosts not fetched this round keep
+        # their delay.
         start_d = F.lit(float(
             cfg.at_start_delay_ms if cfg.at_start_delay_ms is not None
-            else AT_BASE_DELAY_MS
+            else FR.AT_BASE_DELAY_MS
         ))
         prev_at = F.coalesce(F.col("at_delay_ms"), start_d)
-
-        def _at_fold(acc, x):
-            tgt = F.abs(x) / F.lit(AT_CONCURRENCY)
-            nd = F.least(F.greatest(tgt, (acc + tgt) / 2, base_d), max_d)
-            return F.when(x >= 0, nd).otherwise(F.greatest(acc, nd))
-
         new_at = (
             F.when(F.col("lat_hist").isNull(), prev_at).otherwise(
-                F.aggregate(F.col("lat_hist"), prev_at, _at_fold)
+                F.aggregate(F.col("lat_hist"), prev_at, FR.autothrottle_step)
             )
             if cfg.autothrottle
             else prev_at
@@ -551,17 +549,16 @@ class CrawlRun:
                 nseg=cfg.bloom_segments, expected=cfg.bloom_expected,
             )
             writes.append((new_segments.coalesce(8), seg_table))
-        if cfg.frontier_deltas:
-            # O(delta) persistence: what entered the frontier this round
-            # (what left it is this round's fetched keys); periodic
-            # compaction bounds the reconstruction chain
-            writes.append(
-                (allowed.select(*FRONTIER_COLS).withColumn("round", F.lit(r)), "frontier_add")
-            )
-            if (r + 1) % cfg.compact_every == 0:
-                writes.append((frontier_next, "frontier_compact"))
-        else:
-            writes.append((frontier_next, "frontier_next"))
+        # one frontier table: the full snapshot, or what entered the
+        # frontier this round (what left it is this round's fetched keys)
+        writes.append(
+            (frontier_next, "frontier_next")
+            if not cfg.frontier_deltas or (r + 1) % COMPACT_EVERY == 0
+            else (allowed.select(*FRONTIER_COLS).withColumn("round", F.lit(r)), "frontier_add")
+        )
+        # a killed attempt at this round may have left tables the writes
+        # below do not replace (a frontier table of the other kind, say)
+        shutil.rmtree(self._rdir(r), ignore_errors=True)
         from concurrent.futures import ThreadPoolExecutor
 
         with ThreadPoolExecutor(max_workers=min(8, len(writes))) as ex:
@@ -591,27 +588,23 @@ class CrawlRun:
 
     # ---------- state reconstruction (resume) ----------
     def _frontier_through(self, r: int) -> DataFrame:
-        """Frontier state after round r. Snapshot mode reads the round's
-        snapshot; delta mode reconstructs lazily from the latest
-        compaction + the later rounds' adds, less their fetched keys — no
-        materialized rewrite of the full frontier ever happens. An added
-        row is dropped by a fetch in its own round or later, not by an
-        earlier one: under recrawl TTL a fetched key is queued again."""
-        if not self.cfg.frontier_deltas:
-            return self._read(r, "frontier_next")
-        base_round = None
-        for i in range(r, -1, -1):
-            if os.path.isdir(os.path.join(self._rdir(i), "frontier_compact")):
-                base_round = i
-                break
-        base = (
-            self._read(base_round, "frontier_compact")
-            if base_round is not None
-            else self._empty_frontier()
+        """Frontier state after round r: the latest ``frontier_next``
+        snapshot at or before r, plus the later rounds' adds, less their
+        fetched keys — rebuilt lazily, with no materialized rewrite of
+        the full frontier. An added row is dropped by a fetch in its own
+        round or later, not by an earlier one: under recrawl TTL a
+        fetched key is queued again."""
+        base_round = next(
+            (i for i in range(r, -1, -1)
+             if os.path.isdir(os.path.join(self._rdir(i), "frontier_next"))),
+            -1,
         )
         if base_round == r:
-            return base
-        lo = (base_round + 1) if base_round is not None else 0
+            return self._read(r, "frontier_next")
+        base = (
+            self._read(base_round, "frontier_next") if base_round >= 0 else self._empty_frontier()
+        )
+        lo = base_round + 1
         adds = self.spark.read.parquet(
             *[os.path.join(self._rdir(i), "frontier_add") for i in range(lo, r + 1)]
         )
@@ -619,7 +612,7 @@ class CrawlRun:
             F.max("round").alias("removed_round")
         )
         return (
-            base.withColumn("round", F.lit(lo - 1)).unionByName(adds)
+            base.withColumn("round", F.lit(base_round)).unionByName(adds)
             .join(removed, "url_hash", "left")
             .filter(F.col("removed_round").isNull() | (F.col("round") > F.col("removed_round")))
             .select(*FRONTIER_COLS)

@@ -122,12 +122,10 @@ def crawl_autothrottle_budget(spark, sf_dir):
     folded over each host's round-ordered latency history as ONE
     row-local higher-order aggregate (no shuffle beyond the per-host
     regroup); the resulting delay yields the next round's fetch budget.
-    Deterministic synthetic latencies keep the oracle bit-exact; the
-    production loop would feed real per-round latencies into the same
-    fold (deliberately NOT wired into the e2e crawl here, whose
-    N-vs-4N signature invariant requires latency-independent
-    scheduling)."""
-    base, maxd, conc, round_ms = 500.0, 60000.0, 1.0, 10000
+    Deterministic synthetic latencies keep the oracle bit-exact. The
+    step is ``FR.autothrottle_step``, the same one the crawl plan folds
+    over each round's fetches into ``host_state``."""
+    round_ms = 10000
     docs = t(spark, sf_dir, "documents")
     h = F.regexp_replace("source", "src", "").cast("int")
     g = (
@@ -142,13 +140,7 @@ def crawl_autothrottle_budget(spark, sf_dir):
             F.array_sort(F.collect_list(F.struct("r", "x"))), lambda s: s.getField("x")
         ).alias("xs")
     )
-
-    def _fold(acc, x):
-        tgt = F.abs(x) / F.lit(conc)
-        nd = F.least(F.greatest(tgt, (acc + tgt) / 2, F.lit(base)), F.lit(maxd))
-        return F.when(x >= 0, nd).otherwise(F.greatest(acc, nd))
-
-    delay = F.aggregate("xs", F.lit(base), _fold)
+    delay = F.aggregate("xs", F.lit(FR.AT_BASE_DELAY_MS), FR.autothrottle_step)
     return per.select(
         "source",
         F.size("xs").cast("int").alias("n_rounds"),

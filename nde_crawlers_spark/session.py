@@ -68,9 +68,3 @@ def get_spark(
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
     return b.getOrCreate()
-
-
-def stop_spark() -> None:
-    s = SparkSession.getActiveSession()
-    if s is not None:
-        s.stop()

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import os
+import shutil
 import subprocess
 import sys
 import tempfile
@@ -15,6 +16,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from nde_crawlers_spark.operators import seen as SN
+from nde_crawlers_spark.plans import crawl as CR
 from nde_crawlers_spark.plans.crawl import CrawlConfig, CrawlRun
 from nde_crawlers_spark.plans.oracle import crawl_oracle
 from nde_crawlers_spark.sources.synthetic import make_seeds
@@ -86,19 +88,17 @@ def _check_against_oracle(run: CrawlRun, oracle):
 
 def _check_round_layout(run: CrawlRun):
     """Each committed round holds one data table, ``fetched``, beside the
-    state resume needs; crawl order, documents and lineage are read-time
-    projections of it, and lineage's totals agree with the crawl order."""
+    state resume needs, and exactly one frontier table: ``frontier_next``
+    on snapshot rounds, ``frontier_add`` on the others. Crawl order,
+    documents and lineage are read-time projections of ``fetched``, and
+    lineage's totals agree with the crawl order."""
     cfg = run.cfg
     for r in run.committed_rounds():
-        if not cfg.frontier_deltas:
-            frontier = {"frontier_next"}
-        elif (r + 1) % cfg.compact_every == 0:
-            frontier = {"frontier_add", "frontier_compact"}
-        else:
-            frontier = {"frontier_add"}
+        snapshot = not cfg.frontier_deltas or (r + 1) % CR.COMPACT_EVERY == 0
         assert set(os.listdir(os.path.join(run.run_dir, f"round={r:04d}"))) == {
             "_COMMIT", "fetched", "new_seen", "robots_cache", "host_state", "bloom_segments",
-        } | frontier
+            "frontier_next" if snapshot else "frontier_add",
+        }
     assert run.documents().columns == ["doc_id", "canonical_url", "spans", "round"]
     assert run.lineage().columns == [
         "partition_id", "host_bucket", "urls_fetched", "ok", "bytes", "wall_ms", "attempts",
@@ -165,13 +165,21 @@ def test_crawl_bloom_segments_equal_full_rebuild(spark, default_run, oracle):
     assert committed == rebuilt
 
 
-def test_crawl_resume_replays_exactly(spark, oracle):
-    """Kill after round 0 (simulated by max_rounds=1), resume to the full
-    horizon: identical invariants to an uninterrupted run — the
-    insert_last_updated / tmp+rename resume protocol analog."""
-    d = tempfile.mkdtemp(prefix="crawl_r_")
+def _round0_copy(run: CrawlRun, prefix: str) -> str:
+    """A new run dir holding only ``run``'s committed round 0: what a run
+    killed after round 0 leaves (a round's tables do not depend on
+    max_rounds)."""
+    d = tempfile.mkdtemp(prefix=prefix)
+    shutil.copytree(os.path.join(run.run_dir, "round=0000"), os.path.join(d, "round=0000"))
+    return d
+
+
+def test_crawl_resume_replays_exactly(spark, default_run, oracle):
+    """Kill after round 0 (a copy of the default crawl's round 0), resume
+    to the full horizon: identical invariants to an uninterrupted run —
+    the insert_last_updated / tmp+rename resume protocol analog."""
+    d = _round0_copy(default_run, "crawl_r_")
     run1 = CrawlRun(spark, d, CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=1))
-    run1.run(seeds=_seed_df(spark))
     assert run1.committed_rounds() == [0]
     run2 = CrawlRun(spark, d, CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=ROUNDS))
     run2.run(resume=True)
@@ -179,14 +187,12 @@ def test_crawl_resume_replays_exactly(spark, oracle):
     _check_against_oracle(run2, oracle)
 
 
-def test_resume_overwrites_uncommitted_partial_round(spark, oracle):
+def test_resume_overwrites_uncommitted_partial_round(spark, default_run, oracle):
     """A crash mid-round leaves data files without the _COMMIT marker;
     resume must ignore and cleanly overwrite them (the
     delete-on-failure/invalidated-run analog,
     ncbi_geo_crawler/files/ndjson.py:17-23)."""
-    d = tempfile.mkdtemp(prefix="crawl_x_")
-    run1 = CrawlRun(spark, d, CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=1))
-    run1.run(seeds=_seed_df(spark))
+    d = _round0_copy(default_run, "crawl_x_")
     # fabricate a partial, uncommitted round 1: stale garbage data, no
     # marker, in the table every accessor reads
     partial = os.path.join(d, "round=0001")
@@ -200,24 +206,55 @@ def test_resume_overwrites_uncommitted_partial_round(spark, oracle):
     _check_against_oracle(run2, oracle)
 
 
-def test_crawl_frontier_delta_mode_matches_oracle(spark, oracle):
-    """O(delta) frontier persistence (frontier_add, the fetched keys as
-    removes, periodic compaction) must be indistinguishable from
-    snapshot mode — including resume across the compaction boundary."""
+def test_crawl_frontier_delta_mode_matches_oracle(spark, default_run, oracle, monkeypatch):
+    """O(delta) frontier persistence (a snapshot every COMPACT_EVERY
+    rounds, frontier_add on the others, the fetched keys as removes)
+    must be indistinguishable from snapshot mode — including resume
+    across a snapshot round and after a failed frontier write — and the
+    run dir must read the same under either frontier_deltas value."""
+    monkeypatch.setattr(CR, "COMPACT_EVERY", 2)
     d = tempfile.mkdtemp(prefix="crawl_d_")
-    cfg = CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=2,
-                      frontier_deltas=True, compact_every=2)
-    run1 = CrawlRun(spark, d, cfg)
-    run1.run(seeds=_seed_df(spark))
-    # resume past the round-1 compaction snapshot
-    cfg3 = CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=ROUNDS,
-                       frontier_deltas=True, compact_every=2)
-    run2 = CrawlRun(spark, d, cfg3)
-    run2.run(resume=True)
-    _check_against_oracle(run2, oracle)
-    _check_round_layout(run2)
-    assert os.path.isdir(os.path.join(d, "round=0001", "frontier_compact"))
-    assert not os.path.isdir(os.path.join(d, "round=0000", "frontier_next"))
+
+    def cfg(max_rounds: int, deltas: bool = True) -> CrawlConfig:
+        return CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=max_rounds,
+                           frontier_deltas=deltas)
+
+    CrawlRun(spark, d, cfg(2)).run(seeds=_seed_df(spark))
+    # round 1 is a snapshot round: the full frontier and no delta
+    assert os.path.isdir(os.path.join(d, "round=0001", "frontier_next"))
+    assert not os.path.isdir(os.path.join(d, "round=0001", "frontier_add"))
+
+    # fault injection: the resumed run fails on its round-2 frontier
+    # write, so round 2 must stay uncommitted
+    failing = CrawlRun(spark, d, cfg(ROUNDS))
+    write = failing._write
+
+    def _write(df, r, name):
+        if r == 2 and name.startswith("frontier_"):
+            raise RuntimeError("injected frontier write failure")
+        write(df, r, name)
+
+    monkeypatch.setattr(failing, "_write", _write)
+    with pytest.raises(RuntimeError, match="injected"):
+        failing.run(resume=True)
+    assert failing.committed_rounds() == [0, 1]
+    assert not os.path.exists(os.path.join(d, "round=0002", "_COMMIT"))
+    # a stale snapshot an earlier attempt left in the uncommitted round
+    # must not shadow the delta the rerun writes there
+    shutil.copytree(os.path.join(d, "round=0001", "frontier_next"),
+                    os.path.join(d, "round=0002", "frontier_next"))
+
+    run = CrawlRun(spark, d, cfg(ROUNDS))
+    run.run(resume=True)
+    _check_against_oracle(run, oracle)
+    _check_round_layout(run)
+    # reads only: a snapshot-mode run reads the delta-written dir, and
+    # every round's frontier equals the snapshot crawl's frontier_next
+    snap = CrawlRun(spark, d, cfg(ROUNDS, deltas=False))
+    for r in run.committed_rounds():
+        rows = sorted(tuple(x) for x in run._frontier_through(r).collect())
+        assert sorted(tuple(x) for x in snap._frontier_through(r).collect()) == rows
+        assert sorted(tuple(x) for x in default_run._read(r, "frontier_next").collect()) == rows
 
 
 def test_crawl_order_independent_of_partitioning(spark, oracle):
@@ -541,7 +578,7 @@ def test_crawl_recrawl_ttl_in_loop(spark):
         ["url", "priority"],
     )
     results = {}
-    for mode, extra in (("snapshot", {}), ("delta", {"frontier_deltas": True, "compact_every": 2})):
+    for mode, extra in (("snapshot", {}), ("delta", {"frontier_deltas": True})):
         d = tempfile.mkdtemp(prefix=f"crawl_ttl_{mode}_")
         cfg = CrawlConfig(
             num_hosts=HOSTS, round_seconds=2, max_rounds=ROUNDS_TTL,

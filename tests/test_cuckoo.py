@@ -201,3 +201,23 @@ def test_guarded_delete_repairs_forced_fp_bucket_collision(spark):
     # into the exact confirm, never block)
     exact_new = CK.filter_unseen_cuckoo_segmented(one(iN, iL), live, segments=good)
     assert {r["url_hash"] for r in exact_new.collect()} == {u(iN)}
+
+
+def test_membership_filters_probe_once(spark):
+    """Each prefiltered unseen filter runs its cogroup probe ONCE: the
+    definite-new and might-contain rows leave through one conditional
+    anti-join, not a union that references the probe twice (Spark does
+    not share a subplan between two branches of one plan)."""
+    from nde_crawlers_spark.operators import cuckoo as CK
+    from nde_crawlers_spark.operators import seen as SN
+
+    def key(df):
+        return df.select(F.sha2(F.col("id").cast("string"), 256).alias("url_hash"))
+
+    cand, seen = key(spark.range(0, 200)), key(spark.range(0, 200, 2))
+    for df in (
+        SN.filter_unseen_bloom_segmented(cand, seen, nseg=8, expected=1000),
+        CK.filter_unseen_cuckoo_segmented(cand, seen, nseg=8, capacity=1000),
+    ):
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert plan.count("FlatMapCoGroupsInPandas") == 1, plan

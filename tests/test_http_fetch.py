@@ -30,10 +30,9 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
 
+from nde_crawlers_spark.operators.frontier import AT_BASE_DELAY_MS, AT_MAX_DELAY_MS
 from nde_crawlers_spark.operators.http_fetch import HttpFetcher, LoopbackProxyFetcher
-from nde_crawlers_spark.plans.crawl import (
-    AT_BASE_DELAY_MS, AT_MAX_DELAY_MS, CrawlConfig, CrawlRun,
-)
+from nde_crawlers_spark.plans.crawl import CrawlConfig, CrawlRun
 from nde_crawlers_spark.sources.synthetic import (
     _status_draw,
     make_seeds,

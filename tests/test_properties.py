@@ -149,8 +149,8 @@ def test_autothrottle_fold_properties(obs, init):
 
 
 def test_autothrottle_fold_spark_matches_python(spark):
-    """BIT-equality of the live Spark fold (the exact F.aggregate
-    expression plans/crawl.py builds over host_state) against the
+    """BIT-equality of the live Spark fold (FR.autothrottle_step, the
+    F.aggregate step plans/crawl.py folds into host_state) against the
     Python oracle's fold over 200 deterministic pseudo-random latency
     histories — the cross-engine arithmetic claim behind the N-vs-4N
     crawl-signature equality with autothrottle ON."""
@@ -158,9 +158,10 @@ def test_autothrottle_fold_spark_matches_python(spark):
 
     from pyspark.sql import functions as F
 
+    from nde_crawlers_spark.operators import frontier as FR
     from nde_crawlers_spark.streaming.politeness import at_fold
 
-    base, maxd, conc = 500.0, 60_000.0, 1.0
+    base, maxd, conc = FR.AT_BASE_DELAY_MS, FR.AT_MAX_DELAY_MS, FR.AT_CONCURRENCY
 
     def h(i, j):
         return int.from_bytes(hashlib.md5(f"{i}:{j}".encode()).digest()[:4], "big")
@@ -175,16 +176,10 @@ def test_autothrottle_fold_spark_matches_python(spark):
         init = 500.0 + (h(i, 999) % 2000)
         rows.append((i, xs, init))
     df = spark.createDataFrame(rows, "i int, xs array<double>, init double")
-
-    def _at_fold_col(acc, x):
-        tgt = F.abs(x) / F.lit(conc)
-        nd = F.least(F.greatest(tgt, (acc + tgt) / 2, F.lit(base)), F.lit(maxd))
-        return F.when(x >= 0, nd).otherwise(F.greatest(acc, nd))
-
     got = {
         r["i"]: r["out"]
         for r in df.select(
-            "i", F.aggregate("xs", F.col("init"), _at_fold_col).alias("out")
+            "i", F.aggregate("xs", F.col("init"), FR.autothrottle_step).alias("out")
         ).collect()
     }
     for i, xs, init in rows:
