@@ -353,238 +353,242 @@ class CrawlRun:
 
         cand = self._prepare_candidates(candidates_raw)
         robots = self._update_robots(robots, cand).cache()
+        unseen = frontier_all = fetched = ttl_deleted_segments = None
+        try:
+            # TTL expiry (cfg.recrawl_ttl_rounds): restrict to the ACTIVE
+            # seen set before any seen-dependent step. ``seen`` is always
+            # the FULL reconstruction (_seen_through), so filtering by
+            # horizon here — rather than mutating persisted state — keeps
+            # expiry idempotent across resume at any parallelism. A key
+            # re-fetched after expiry re-enters new_seen with the current
+            # round, so only its newest row survives the horizon filter.
+            expired_new = None
+            if cfg.recrawl_ttl_rounds is not None:
+                horizon = r - cfg.recrawl_ttl_rounds
+                if horizon >= 0:
+                    # rows hitting the horizon EXACTLY this round drive the
+                    # segment delete below (earlier rows were deleted by
+                    # earlier rounds; committed segments persist post-delete)
+                    expired_new = seen.filter(F.col("first_seen_round") == F.lit(horizon))
+                    seen = seen.filter(F.col("first_seen_round") > F.lit(horizon))
 
-        # TTL expiry (cfg.recrawl_ttl_rounds): restrict to the ACTIVE
-        # seen set before any seen-dependent step. ``seen`` is always
-        # the FULL reconstruction (_seen_through), so filtering by
-        # horizon here — rather than mutating persisted state — keeps
-        # expiry idempotent across resume at any parallelism. A key
-        # re-fetched after expiry re-enters new_seen with the current
-        # round, so only its newest row survives the horizon filter.
-        expired_new = None
-        if cfg.recrawl_ttl_rounds is not None:
-            horizon = r - cfg.recrawl_ttl_rounds
-            if horizon >= 0:
-                # rows hitting the horizon EXACTLY this round drive the
-                # segment delete below (earlier rows were deleted by
-                # earlier rounds; committed segments persist post-delete)
-                expired_new = seen.filter(F.col("first_seen_round") == F.lit(horizon))
-                seen = seen.filter(F.col("first_seen_round") > F.lit(horizon))
+            # unseen filter: candidates never enqueued before. With a
+            # membership filter, candidates are probed against the PREVIOUS
+            # round's persisted segment table (each candidate against its own
+            # segment only); definite-new rows skip the anti-join entirely,
+            # might-contain rows are confirmed exactly — identical output
+            # set either way, at any parallelism.
+            mode = cfg.seen_filter
+            seg_table = None if mode == "exact" else f"{mode}_segments"
+            prev_segments = None
+            if seg_table and r > 0 and os.path.isdir(
+                os.path.join(self._rdir(r - 1), seg_table)
+            ):
+                prev_segments = self._read(r - 1, seg_table)
+            if mode == "bloom":
+                unseen = SN.filter_unseen_bloom_segmented(
+                    cand, seen, segments=prev_segments, nseg=cfg.bloom_segments,
+                    expected=cfg.bloom_expected,
+                )
+                next_segments = SN.next_bloom_segments
+            elif mode == "cuckoo":
+                if prev_segments is not None and expired_new is not None:
+                    # evict this round's newly-expired fingerprints BEFORE the
+                    # probe, under the live-key guard (live = the active seen
+                    # set — the complete post-delete membership). Cached: the
+                    # post-delete table feeds both the probe and the next
+                    # table below, and the guarded delete is the expensive step.
+                    prev_segments = ttl_deleted_segments = CK.delete_from_cuckoo_segments(
+                        prev_segments, expired_new.select("url_hash"),
+                        live=seen.select("url_hash"),
+                        rebuild_counter=self.cuckoo_rebuilds,
+                    ).cache()
+                unseen = CK.filter_unseen_cuckoo_segmented(
+                    cand, seen, segments=prev_segments, nseg=cfg.bloom_segments,
+                    capacity=cfg.bloom_expected,
+                )
+                next_segments = CK.next_cuckoo_segments
+            else:
+                unseen = SN.filter_unseen_exact(cand, seen)
+            unseen = unseen.cache()
+            new_seen = unseen.select("url_hash").withColumn("first_seen_round", F.lit(r))
 
-        # unseen filter: candidates never enqueued before. With a
-        # membership filter, candidates are probed against the PREVIOUS
-        # round's persisted segment table (each candidate against its own
-        # segment only); definite-new rows skip the anti-join entirely,
-        # might-contain rows are confirmed exactly — identical output
-        # set either way, at any parallelism.
-        mode = cfg.seen_filter
-        seg_table = None if mode == "exact" else f"{mode}_segments"
-        prev_segments = None
-        if seg_table and r > 0 and os.path.isdir(
-            os.path.join(self._rdir(r - 1), seg_table)
-        ):
-            prev_segments = self._read(r - 1, seg_table)
-        ttl_deleted_segments = None
-        if mode == "bloom":
-            unseen = SN.filter_unseen_bloom_segmented(
-                cand, seen, segments=prev_segments, nseg=cfg.bloom_segments,
-                expected=cfg.bloom_expected,
-            )
-            next_segments = SN.next_bloom_segments
-        elif mode == "cuckoo":
-            if prev_segments is not None and expired_new is not None:
-                # evict this round's newly-expired fingerprints BEFORE the
-                # probe, under the live-key guard (live = the active seen
-                # set — the complete post-delete membership). Cached: the
-                # post-delete table feeds both the probe and the next
-                # table below, and the guarded delete is the expensive step.
-                prev_segments = ttl_deleted_segments = CK.delete_from_cuckoo_segments(
-                    prev_segments, expired_new.select("url_hash"),
-                    live=seen.select("url_hash"),
-                    rebuild_counter=self.cuckoo_rebuilds,
-                ).cache()
-            unseen = CK.filter_unseen_cuckoo_segmented(
-                cand, seen, segments=prev_segments, nseg=cfg.bloom_segments,
-                capacity=cfg.bloom_expected,
-            )
-            next_segments = CK.next_cuckoo_segments
-        else:
-            unseen = SN.filter_unseen_exact(cand, seen)
-        unseen = unseen.cache()
-        new_seen = unseen.select("url_hash").withColumn("first_seen_round", F.lit(r))
+            allowed = FR.robots_filter(unseen, robots)
+            if cfg.recrawl_ttl_rounds is not None:
+                # a key that expired while still queued reads as unseen when
+                # rediscovered: queueing it again would fetch it twice in one
+                # round and break the unique url_hash the counts below rely on
+                allowed = allowed.join(frontier.select("url_hash"), "url_hash", "left_anti")
+            frontier_all = frontier.unionByName(allowed.select(*FRONTIER_COLS)).cache()
 
-        allowed = FR.robots_filter(unseen, robots)
-        if cfg.recrawl_ttl_rounds is not None:
-            # a key that expired while still queued reads as unseen when
-            # rediscovered: queueing it again would fetch it twice in one
-            # round and break the unique url_hash the counts below rely on
-            allowed = allowed.join(frontier.select("url_hash"), "url_hash", "left_anti")
-        frontier_all = frontier.unionByName(allowed.select(*FRONTIER_COLS)).cache()
-
-        # Retry-After feedback: the prior round's host_state carries
-        # next_allowed_round for hosts that 429'd — their budget is 0
-        # until the cooldown passes (rows stay in the frontier)
-        prev_state = self._read(r - 1, "host_state") if r > 0 else self._empty_host_state()
-        budgeted = FR.with_host_budget(
-            frontier_all, robots, cfg.round_seconds,
-            host_state=(
-                prev_state if cfg.autothrottle else prev_state.drop("at_delay_ms")
-            ),
-            current_round=r,
-        )
-        selected = FR.topk_per_host(budgeted, salt_factor=cfg.salt_factor).drop("host_budget")
-
-        # fused fetch+parse: bodies never cross the JVM<->Python boundary
-        fetched = fetch_parse(selected, cfg.num_hosts, cfg.max_attempts,
-                              fetcher=cfg.fetcher).cache()
-
-        frontier_next = frontier_all.join(
-            fetched.select("url_hash"), "url_hash", "left_anti"
-        ).select(*FRONTIER_COLS)
-
-        # host_state (FIXTURES F6): cumulative per-host politeness ledger —
-        # fetch counts, bytes, and the Retry-After cooldown: a host whose
-        # round ended with a (retry-exhausted) 429 is barred for
-        # ceil(max_retry_after / round_seconds) rounds. READ back by
-        # with_host_budget at the top of the next round — the feedback
-        # loop the round-1 audit found missing.
-        # signed latency history in crawl order (priority, seq, url_hash):
-        # positive for 200s, negative marks a failed fetch (the fold may
-        # only raise the delay on those) — the AutoThrottle input
-        signed_lat = F.when(
-            F.col("status") == 200, F.col("latency_ms").cast("double")
-        ).otherwise(-F.col("latency_ms").cast("double"))
-        spent = fetched.groupBy("host").agg(
-            F.count("*").alias("fetched_round"),
-            F.sum("bytes").alias("bytes_round"),
-            F.max(
-                F.when(F.col("status") == 429, F.col("retry_after_s")).otherwise(0)
-            ).alias("ra_s"),
-            F.transform(
-                F.array_sort(
-                    F.collect_list(F.struct("priority", "seq", "url_hash", signed_lat.alias("x")))
+            # Retry-After feedback: the prior round's host_state carries
+            # next_allowed_round for hosts that 429'd — their budget is 0
+            # until the cooldown passes (rows stay in the frontier)
+            prev_state = self._read(r - 1, "host_state") if r > 0 else self._empty_host_state()
+            budgeted = FR.with_host_budget(
+                frontier_all, robots, cfg.round_seconds,
+                host_state=(
+                    prev_state if cfg.autothrottle else prev_state.drop("at_delay_ms")
                 ),
-                lambda s: s.getField("x"),
-            ).alias("lat_hist"),
-        )
-        new_nar = F.when(
-            F.col("ra_s") > 0,
-            F.lit(r) + F.ceil(F.col("ra_s") / F.lit(float(cfg.round_seconds))),
-        ).otherwise(F.lit(None))
-        # AutoThrottle fold: seed with the host's previous adapted delay
-        # (the start delay for new hosts), fold this round's signed
-        # latencies in crawl order; hosts not fetched this round keep
-        # their delay.
-        start_d = F.lit(float(
-            cfg.at_start_delay_ms if cfg.at_start_delay_ms is not None
-            else FR.AT_BASE_DELAY_MS
-        ))
-        prev_at = F.coalesce(F.col("at_delay_ms"), start_d)
-        new_at = (
-            F.when(F.col("lat_hist").isNull(), prev_at).otherwise(
-                F.aggregate(F.col("lat_hist"), prev_at, FR.autothrottle_step)
+                current_round=r,
             )
-            if cfg.autothrottle
-            else prev_at
-        )
-        host_state = (
-            prev_state.join(spent, "host", "full")
-            .select(
-                "host",
-                (F.coalesce(F.col("fetched_total"), F.lit(0))
-                 + F.coalesce(F.col("fetched_round"), F.lit(0))).alias("fetched_total"),
-                (F.coalesce(F.col("bytes_total"), F.lit(0))
-                 + F.coalesce(F.col("bytes_round"), F.lit(0))).alias("bytes_total"),
-                F.greatest(
-                    F.coalesce(F.col("next_allowed_round"), F.lit(0)),
-                    F.coalesce(new_nar, F.lit(0)),
-                ).cast("int").alias("next_allowed_round"),
-                new_at.alias("at_delay_ms"),
+            selected = FR.topk_per_host(budgeted, salt_factor=cfg.salt_factor).drop("host_budget")
+
+            # fused fetch+parse: bodies never cross the JVM<->Python boundary
+            fetched = fetch_parse(selected, cfg.num_hosts, cfg.max_attempts,
+                                  fetcher=cfg.fetcher).cache()
+
+            frontier_next = frontier_all.join(
+                fetched.select("url_hash"), "url_hash", "left_anti"
+            ).select(*FRONTIER_COLS)
+
+            # host_state (FIXTURES F6): cumulative per-host politeness ledger —
+            # fetch counts, bytes, and the Retry-After cooldown: a host whose
+            # round ended with a (retry-exhausted) 429 is barred for
+            # ceil(max_retry_after / round_seconds) rounds. READ back by
+            # with_host_budget at the top of the next round — the feedback
+            # loop the round-1 audit found missing.
+            # signed latency history in crawl order (priority, seq, url_hash):
+            # positive for 200s, negative marks a failed fetch (the fold may
+            # only raise the delay on those) — the AutoThrottle input
+            signed_lat = F.when(
+                F.col("status") == 200, F.col("latency_ms").cast("double")
+            ).otherwise(-F.col("latency_ms").cast("double"))
+            spent = fetched.groupBy("host").agg(
+                F.count("*").alias("fetched_round"),
+                F.sum("bytes").alias("bytes_round"),
+                F.max(
+                    F.when(F.col("status") == 429, F.col("retry_after_s")).otherwise(0)
+                ).alias("ra_s"),
+                F.transform(
+                    F.array_sort(
+                        F.collect_list(
+                            F.struct("priority", "seq", "url_hash", signed_lat.alias("x"))
+                        )
+                    ),
+                    lambda s: s.getField("x"),
+                ).alias("lat_hist"),
             )
-        )
-
-        # round stats FIRST: the aggregation materializes the cached
-        # fetch result (and its cached parents) exactly once, so the
-        # parallel write jobs below all hit warm caches instead of racing
-        # to fill them. Never a parquet re-read or a frontier
-        # reconstruction (each would be an extra full Spark job; at
-        # sandbox scale job latency dominates round wall time).
-        # frontier_next = frontier_all minus fetched, and both sides have
-        # unique url_hash (dedupe_candidates, the seen invariant and, under
-        # TTL, the anti-join against the queue), so its count is exact
-        # arithmetic on counts already in hand.
-        fstats = fetched.agg(
-            F.count("*").alias("sel"),
-            F.sum(F.when(F.col("status") == 200, 1).otherwise(0)).alias("docs"),
-            F.sum(F.size("outlinks")).alias("out"),
-        ).first()
-        n_unseen = unseen.count()
-        n_frontier = frontier_all.count()
-
-        # ---- commit: data first, marker last ----
-        # The round's tables are INDEPENDENT outputs of already-cached
-        # frames, so their write jobs run CONCURRENTLY (Spark's scheduler
-        # interleaves jobs; each small job alone cannot fill the
-        # executor). The marker goes last, only after every write returned.
-        writes: list[tuple[DataFrame, str]] = [
-            # the fetch partition is taken here, on the cached frame the
-            # fetch ran in, so lineage() can group by it at read time
-            (fetched.withColumn("round", F.lit(r))
-             .withColumn("partition_id", F.spark_partition_id()), "fetched"),
-            (new_seen, "new_seen"),
-            # host-bounded state tables: coalesce to a few files (a 10^6-
-            # host table is still small; corpus-scale tables above keep
-            # their natural partitioning)
-            (robots.coalesce(8), "robots_cache"),
-            (host_state.coalesce(8), "host_state"),
-        ]
-        if seg_table:
-            # incremental maintenance: the previous table plus this
-            # round's delta, or a rebuild when the geometry changed or the
-            # committed keys outgrew it (next_bloom_segments /
-            # next_cuckoo_segments) — committed with the round, so a
-            # resumed run picks up exactly the filter matching its seen set
-            new_segments = next_segments(
-                prev_segments, new_seen, seen, seen_total=self._seen_total + n_unseen,
-                nseg=cfg.bloom_segments, expected=cfg.bloom_expected,
+            new_nar = F.when(
+                F.col("ra_s") > 0,
+                F.lit(r) + F.ceil(F.col("ra_s") / F.lit(float(cfg.round_seconds))),
+            ).otherwise(F.lit(None))
+            # AutoThrottle fold: seed with the host's previous adapted delay
+            # (the start delay for new hosts), fold this round's signed
+            # latencies in crawl order; hosts not fetched this round keep
+            # their delay.
+            start_d = F.lit(float(
+                cfg.at_start_delay_ms if cfg.at_start_delay_ms is not None
+                else FR.AT_BASE_DELAY_MS
+            ))
+            prev_at = F.coalesce(F.col("at_delay_ms"), start_d)
+            new_at = (
+                F.when(F.col("lat_hist").isNull(), prev_at).otherwise(
+                    F.aggregate(F.col("lat_hist"), prev_at, FR.autothrottle_step)
+                )
+                if cfg.autothrottle
+                else prev_at
             )
-            writes.append((new_segments.coalesce(8), seg_table))
-        # one frontier table: the full snapshot, or what entered the
-        # frontier this round (what left it is this round's fetched keys)
-        writes.append(
-            (frontier_next, "frontier_next")
-            if not cfg.frontier_deltas or (r + 1) % COMPACT_EVERY == 0
-            else (allowed.select(*FRONTIER_COLS).withColumn("round", F.lit(r)), "frontier_add")
-        )
-        # a killed attempt at this round may have left tables the writes
-        # below do not replace (a frontier table of the other kind, say)
-        shutil.rmtree(self._rdir(r), ignore_errors=True)
-        from concurrent.futures import ThreadPoolExecutor
+            host_state = (
+                prev_state.join(spent, "host", "full")
+                .select(
+                    "host",
+                    (F.coalesce(F.col("fetched_total"), F.lit(0))
+                     + F.coalesce(F.col("fetched_round"), F.lit(0))).alias("fetched_total"),
+                    (F.coalesce(F.col("bytes_total"), F.lit(0))
+                     + F.coalesce(F.col("bytes_round"), F.lit(0))).alias("bytes_total"),
+                    F.greatest(
+                        F.coalesce(F.col("next_allowed_round"), F.lit(0)),
+                        F.coalesce(new_nar, F.lit(0)),
+                    ).cast("int").alias("next_allowed_round"),
+                    new_at.alias("at_delay_ms"),
+                )
+            )
 
-        with ThreadPoolExecutor(max_workers=min(8, len(writes))) as ex:
-            futures = [ex.submit(self._write, df, r, name) for df, name in writes]
-            for f in futures:
-                f.result()  # propagate the first failure -> no marker
+            # round stats FIRST: the aggregation materializes the cached
+            # fetch result (and its cached parents) exactly once, so the
+            # parallel write jobs below all hit warm caches instead of racing
+            # to fill them. Never a parquet re-read or a frontier
+            # reconstruction (each would be an extra full Spark job; at
+            # sandbox scale job latency dominates round wall time).
+            # frontier_next = frontier_all minus fetched, and both sides have
+            # unique url_hash (dedupe_candidates, the seen invariant and, under
+            # TTL, the anti-join against the queue), so its count is exact
+            # arithmetic on counts already in hand.
+            fstats = fetched.agg(
+                F.count("*").alias("sel"),
+                F.sum(F.when(F.col("status") == 200, 1).otherwise(0)).alias("docs"),
+                F.sum(F.size("outlinks")).alias("out"),
+            ).first()
+            n_unseen = unseen.count()
+            n_frontier = frontier_all.count()
 
-        meta = {
-            "round": r,
-            "selected": fstats["sel"],
-            "documents": int(fstats["docs"] or 0),
-            "new_seen": n_unseen,
-            "frontier_next": n_frontier - fstats["sel"],
-            "outlinks": int(fstats["out"] or 0),
-            "wall_s": round(time.monotonic() - t0, 3),
-        }
-        if cfg.recrawl_ttl_rounds is not None:
-            # cumulative guarded-delete rebuild count as of this commit
-            meta["cuckoo_rebuilds_total"] = self.cuckoo_rebuilds.value
-        self._commit(r, meta)
-        self._seen_total += n_unseen
-        for df in (robots, frontier_all, fetched, unseen):
-            df.unpersist()
-        if ttl_deleted_segments is not None:
-            ttl_deleted_segments.unpersist()
-        return meta
+            # ---- commit: data first, marker last ----
+            # The round's tables are INDEPENDENT outputs of already-cached
+            # frames, so their write jobs run CONCURRENTLY (Spark's scheduler
+            # interleaves jobs; each small job alone cannot fill the
+            # executor). The marker goes last, only after every write returned.
+            writes: list[tuple[DataFrame, str]] = [
+                # the fetch partition is taken here, on the cached frame the
+                # fetch ran in, so lineage() can group by it at read time
+                (fetched.withColumn("round", F.lit(r))
+                 .withColumn("partition_id", F.spark_partition_id()), "fetched"),
+                (new_seen, "new_seen"),
+                # host-bounded state tables: coalesce to a few files (a 10^6-
+                # host table is still small; corpus-scale tables above keep
+                # their natural partitioning)
+                (robots.coalesce(8), "robots_cache"),
+                (host_state.coalesce(8), "host_state"),
+            ]
+            if seg_table:
+                # incremental maintenance: the previous table plus this
+                # round's delta, or a rebuild when the geometry changed or the
+                # committed keys outgrew it (next_bloom_segments /
+                # next_cuckoo_segments) — committed with the round, so a
+                # resumed run picks up exactly the filter matching its seen set
+                new_segments = next_segments(
+                    prev_segments, new_seen, seen, seen_total=self._seen_total + n_unseen,
+                    nseg=cfg.bloom_segments, expected=cfg.bloom_expected,
+                )
+                writes.append((new_segments.coalesce(8), seg_table))
+            # one frontier table: the full snapshot, or what entered the
+            # frontier this round (what left it is this round's fetched keys)
+            writes.append(
+                (frontier_next, "frontier_next")
+                if not cfg.frontier_deltas or (r + 1) % COMPACT_EVERY == 0
+                else (allowed.select(*FRONTIER_COLS).withColumn("round", F.lit(r)), "frontier_add")
+            )
+            # a killed attempt at this round may have left tables the writes
+            # below do not replace (a frontier table of the other kind, say)
+            shutil.rmtree(self._rdir(r), ignore_errors=True)
+            from concurrent.futures import ThreadPoolExecutor
+
+            with ThreadPoolExecutor(max_workers=min(8, len(writes))) as ex:
+                futures = [ex.submit(self._write, df, r, name) for df, name in writes]
+                for f in futures:
+                    f.result()  # propagate the first failure -> no marker
+
+            meta = {
+                "round": r,
+                "selected": fstats["sel"],
+                "documents": int(fstats["docs"] or 0),
+                "new_seen": n_unseen,
+                "frontier_next": n_frontier - fstats["sel"],
+                "outlinks": int(fstats["out"] or 0),
+                "wall_s": round(time.monotonic() - t0, 3),
+            }
+            if cfg.recrawl_ttl_rounds is not None:
+                # cumulative guarded-delete rebuild count as of this commit
+                meta["cuckoo_rebuilds_total"] = self.cuckoo_rebuilds.value
+            self._commit(r, meta)
+            self._seen_total += n_unseen
+            return meta
+        finally:
+            # success or not, the round releases its caches: a failed
+            # write or commit must not leave them in the session
+            for df in (robots, frontier_all, fetched, unseen, ttl_deleted_segments):
+                if df is not None:
+                    df.unpersist()
 
     # ---------- state reconstruction (resume) ----------
     def _frontier_through(self, r: int) -> DataFrame:

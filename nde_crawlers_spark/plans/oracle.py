@@ -70,6 +70,20 @@ def path_of(canon: str) -> str:
     return pathq.split("?")[0] or "/"
 
 
+def at_fold(xs: list[float], acc: float, base: float, maxd: float, conc: float) -> float:
+    """The Scrapy AutoThrottle recurrence over signed latencies (the
+    same fold the batch plan runs in plans/crawl.py host_state):
+    target = |latency|/C; next = clamp(max(target, (delay + target)/2),
+    base, max) — including Scrapy's max(target, mean) step, so one very
+    slow response raises the delay to its full target. A negative value
+    marks a failed fetch, which may only RAISE the delay."""
+    for x in xs:
+        tgt = abs(x) / conc
+        nd = min(max(tgt, (acc + tgt) / 2, base), maxd)
+        acc = nd if x >= 0 else max(acc, nd)
+    return acc
+
+
 @dataclass
 class OracleResult:
     order: list = field(default_factory=list)       # [(round, priority, seq, url_hash)]
@@ -184,12 +198,10 @@ def crawl_oracle(
         if autothrottle:
             start = at_start_delay_ms if at_start_delay_ms is not None else at_base_delay_ms
             for host, xs in lat_hist.items():
-                acc = at_delay.get(host, start)
-                for x in xs:
-                    tgt = abs(x) / at_concurrency
-                    nd = min(max(tgt, (acc + tgt) / 2, at_base_delay_ms), at_max_delay_ms)
-                    acc = nd if x >= 0 else max(acc, nd)
-                at_delay[host] = acc
+                at_delay[host] = at_fold(
+                    xs, at_delay.get(host, start), at_base_delay_ms, at_max_delay_ms,
+                    at_concurrency,
+                )
 
         res.rounds.append(
             {"round": r, "selected": len(selected), "documents": n_docs,

@@ -86,7 +86,7 @@ class StreamingCrawl:
         # with idempotent per-batch OVERWRITE like documents/deferred —
         # a crash-replayed batch rewrites the same rows, never appends
         # duplicates); the next batch's scheduler folds them into the
-        # per-host adapted delay (politeness.py::at_fold). Feedback can
+        # per-host adapted delay (plans/oracle.py::at_fold). Feedback can
         # only nudge PACING, never the seen/docs invariants, which stay
         # exactly-once via the strictly-earlier-batch discipline.
         # Default OFF so the non-adaptive schedule tests stay bit-stable.

@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..plans.oracle import at_fold
+
 # Version of the per-host state row layout. Spark's state store REJECTS
 # a resumed query whose state schema differs from the checkpoint's
 # (at_delay_ms was added in v2 — a v1 checkpoint fails the
@@ -115,20 +117,6 @@ def bucket_schedule(
         if tmax > last_refill:
             last_refill = tmax
     return decisions, toks, float(tokens), float(last_refill), int(emitted)
-
-
-def at_fold(xs: list[float], acc: float, base: float, maxd: float, conc: float) -> float:
-    """The Scrapy AutoThrottle recurrence over signed latencies (the
-    same fold the batch plan runs in plans/crawl.py host_state):
-    target = |latency|/C; next = clamp(max(target, (delay + target)/2),
-    base, max) — including Scrapy's max(target, mean) step, so one very
-    slow response raises the delay to its full target. A negative value
-    marks a failed fetch, which may only RAISE the delay."""
-    for x in xs:
-        tgt = abs(x) / conc
-        nd = min(max(tgt, (acc + tgt) / 2, base), maxd)
-        acc = nd if x >= 0 else max(acc, nd)
-    return acc
 
 
 def schedule_with_state(

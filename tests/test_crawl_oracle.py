@@ -206,6 +206,38 @@ def test_resume_overwrites_uncommitted_partial_round(spark, default_run, oracle)
     _check_against_oracle(run2, oracle)
 
 
+def test_crawl_job_entry_point_matches_oracle(spark, oracle, capsys):
+    """jobs/crawl_job.py, the spark-submit entry point, run in-process
+    on the oracle scenario: a fresh one-round run, then --resume to two
+    rounds, crawls the oracle's rounds 0-1, and its summary line sums
+    the committed round metas."""
+    from jobs import crawl_job
+
+    # main() calls get_spark, which reapplies its settings to this
+    # session; put back the two that differ from the test session's
+    level = spark._jvm.org.apache.logging.log4j.LogManager.getRootLogger().getLevel().toString()
+    partitions = spark.conf.get("spark.sql.shuffle.partitions")
+    d = tempfile.mkdtemp(prefix="crawl_job_")
+    args = ["--run-dir", d, "--seeds", str(N_SEEDS), "--hosts", str(N_HOSTS),
+            "--round-seconds", "2"]
+    try:
+        assert crawl_job.main(args + ["--rounds", "1"]) == 0
+        assert crawl_job.main(args + ["--resume", "--rounds", "2"]) == 0
+    finally:
+        spark.sparkContext.setLogLevel(level)
+        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+
+    run = CrawlRun(spark, d, CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=2))
+    assert run.committed_rounds() == [0, 1]
+    order, _, _ = _invariants(run)
+    assert order == sorted(o for o in oracle.order if o[0] < 2)
+    metas = [run._meta(r) for r in run.committed_rounds()]
+    assert summary["rounds"] == len(metas)
+    assert summary["documents"] == sum(m["documents"] for m in metas)
+    assert summary["seen"] == sum(m["new_seen"] for m in metas)
+
+
 def test_crawl_frontier_delta_mode_matches_oracle(spark, default_run, oracle, monkeypatch):
     """O(delta) frontier persistence (a snapshot every COMPACT_EVERY
     rounds, frontier_add on the others, the fetched keys as removes)
@@ -255,6 +287,76 @@ def test_crawl_frontier_delta_mode_matches_oracle(spark, default_run, oracle, mo
         rows = sorted(tuple(x) for x in run._frontier_through(r).collect())
         assert sorted(tuple(x) for x in snap._frontier_through(r).collect()) == rows
         assert sorted(tuple(x) for x in default_run._read(r, "frontier_next").collect()) == rows
+
+
+def _round_rows(run: CrawlRun, r: int) -> dict:
+    """Every table of committed round ``r`` as sorted JSON rows, less
+    the two columns that vary between runs (fetch wall time and the
+    Spark partition a URL was fetched in)."""
+    out = {}
+    for name in sorted(os.listdir(run._rdir(r))):
+        if name == "_COMMIT":
+            continue
+        df = run._read(r, name).drop("fetch_wall_ms", "partition_id")
+        out[name] = sorted(
+            json.dumps(row.asDict(recursive=True), sort_keys=True, default=repr)
+            for row in df.collect()
+        )
+    return out
+
+
+@pytest.fixture(scope="module")
+def default_round1(default_run):
+    meta = default_run._meta(1)
+    meta.pop("wall_s")
+    return _round_rows(default_run, 1), meta
+
+
+@pytest.mark.parametrize("fault", ["fetched", "new_seen", "robots_cache", "host_state",
+                                   "bloom_segments", "frontier_next", "_commit"])
+def test_round_fault_at_every_write_resumes_exactly(spark, default_run, default_round1, fault,
+                                                    monkeypatch):
+    """A round is a transaction: a failure at any one of its writes, or
+    between the last write and the _COMMIT rename, leaves the round
+    uncommitted and its caches released, and a resume writes the round
+    exactly as the uninterrupted crawl did."""
+    d = _round0_copy(default_run, "crawl_f_")
+    cfg = CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=2)
+    failing = CrawlRun(spark, d, cfg)
+    if fault == "_commit":
+        commit = failing._commit
+
+        def _commit(r, meta):
+            if r == 1:
+                raise RuntimeError("injected commit failure")
+            commit(r, meta)
+
+        monkeypatch.setattr(failing, "_commit", _commit)
+    else:
+        write = failing._write
+
+        def _write(df, r, name):
+            if r == 1 and name == fault:
+                raise RuntimeError(f"injected {name} write failure")
+            write(df, r, name)
+
+        monkeypatch.setattr(failing, "_write", _write)
+
+    persistent = spark.sparkContext._jsc.getPersistentRDDs
+    before = persistent().size()
+    with pytest.raises(RuntimeError, match="injected"):
+        failing.run(resume=True)
+    assert not os.path.exists(os.path.join(d, "round=0001", "_COMMIT"))
+    assert persistent().size() == before, "the failed round left its caches persisted"
+
+    run = CrawlRun(spark, d, cfg)
+    run.run(resume=True)
+    assert run.committed_rounds() == [0, 1]
+    rows, meta = default_round1
+    assert _round_rows(run, 1) == rows
+    got = run._meta(1)
+    got.pop("wall_s")
+    assert got == meta
 
 
 def test_crawl_order_independent_of_partitioning(spark, oracle):

@@ -94,15 +94,22 @@ class _CorpusHandler(BaseHTTPRequestHandler):
 # start fresh per test — the corpus replays per-attempt status draws,
 # so a counter advanced by another test's fetch of the same URL would
 # shift this test's retry sequences
-def corpus_server():
+def corpus():
+    """The running corpus server; ``counts`` maps each logical page URL
+    to the number of requests it has served."""
     srv = ThreadingHTTPServer(("127.0.0.1", 0), _CorpusHandler)
     srv.counts = defaultdict(int)
     srv.lock = threading.Lock()
     srv.num_hosts = N_HOSTS
     t = threading.Thread(target=srv.serve_forever, daemon=True)
     t.start()
-    yield f"http://127.0.0.1:{srv.server_address[1]}"
+    yield srv
     srv.shutdown()
+
+
+@pytest.fixture()
+def corpus_server(corpus):
+    return f"http://127.0.0.1:{corpus.server_address[1]}"
 
 
 def test_http_fetcher_matches_synth_contract(corpus_server):
@@ -128,10 +135,12 @@ def test_http_robots_bytes(corpus_server):
         assert fetcher.robots_txt(host) == render_robots_txt(host)
 
 
-def test_crawl_run_over_real_sockets(spark, corpus_server):
+def test_crawl_run_over_real_sockets(spark, corpus, corpus_server):
     """2 crawl rounds through CrawlRun with the HTTP fetcher: crawl
     order, seen set, and span sequences byte-identical to the
-    in-process corpus run (AutoThrottle OFF — see module docstring)."""
+    in-process corpus run (AutoThrottle OFF — see module docstring).
+    Every selected page is requested exactly its recorded ``attempts``
+    times and never again: nothing recomputes a round's fetch."""
     seeds = make_seeds(60, N_HOSTS)
     seed_df = spark.createDataFrame(
         [(s["url"], s["priority"]) for s in seeds], ["url", "priority"])
@@ -147,10 +156,15 @@ def test_crawl_run_over_real_sockets(spark, corpus_server):
         seen = {r["url_hash"] for r in run.seen().collect()}
         docs = {r["doc_id"]: [tuple(s) for s in r["spans"]]
                 for r in run.documents().collect()}
-        return order, seen, docs
+        return order, seen, docs, run
 
-    http = _drive(LoopbackProxyFetcher(corpus_server, max_attempts=3))
-    synth = _drive(None)
+    *http, run = _drive(LoopbackProxyFetcher(corpus_server, max_attempts=3))
+    attempts = {
+        r["canonical_url"]: r["attempts"]
+        for r in run._fetched(run.committed_rounds()).select("canonical_url", "attempts").collect()
+    }
+    assert dict(corpus.counts) == attempts, "a page was requested other than its attempts times"
+    *synth, _ = _drive(None)
     assert http[0] == synth[0], "crawl order diverged over real sockets"
     assert http[1] == synth[1], "seen set diverged"
     assert http[2] == synth[2], "span sequences diverged"

@@ -131,11 +131,11 @@ def test_jsonld_page_parses_via_htmlparser():
 )
 def test_autothrottle_fold_properties(obs, init):
     """Laws of the AutoThrottle recurrence shared by the batch fold
-    (plans/crawl.py), the streaming fold (politeness.py::at_fold) and
-    the Python oracle: result stays in [base, max], failed fetches can
+    (plans/crawl.py) and its Python reference (plans/oracle.py::at_fold,
+    which the crawl oracle runs): result stays in [base, max], failed fetches can
     only raise the delay, and the fold is sensitive only to the
     latency SEQUENCE (deterministic)."""
-    from nde_crawlers_spark.streaming.politeness import at_fold
+    from nde_crawlers_spark.plans.oracle import at_fold
 
     base, maxd, conc = 500.0, 60_000.0, 1.0
     xs = [float(lat) if ok else -float(lat) for lat, ok in obs]
@@ -159,7 +159,7 @@ def test_autothrottle_fold_spark_matches_python(spark):
     from pyspark.sql import functions as F
 
     from nde_crawlers_spark.operators import frontier as FR
-    from nde_crawlers_spark.streaming.politeness import at_fold
+    from nde_crawlers_spark.plans.oracle import at_fold
 
     base, maxd, conc = FR.AT_BASE_DELAY_MS, FR.AT_MAX_DELAY_MS, FR.AT_CONCURRENCY
 
@@ -195,7 +195,7 @@ def test_autothrottle_single_slow_response_reaches_target(lat, init):
     never just halfway — the upstream behavior the r5 fold missed. And
     a single response can never push the delay ABOVE clamp(max(target,
     mean))."""
-    from nde_crawlers_spark.streaming.politeness import at_fold
+    from nde_crawlers_spark.plans.oracle import at_fold
 
     base, maxd, conc = 500.0, 60_000.0, 1.0
     out = at_fold([lat], init, base, maxd, conc)

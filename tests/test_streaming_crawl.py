@@ -366,7 +366,7 @@ def test_streaming_crawl_dedup_composed_equals_batch(spark):
 
 
 def test_streaming_autothrottle_throttles_slow_hosts(spark):
-    """Streaming AutoThrottle (politeness.py::at_fold + the feedback/
+    """Streaming AutoThrottle (plans/oracle.py::at_fold + the feedback/
     directory): drain 1 fetches and re-emits its observed latencies as
     feedback rows; drain 2's scheduler folds them into per-host adapted
     delays, so a systematically SLOW host (synth_latency_ms host bias)
