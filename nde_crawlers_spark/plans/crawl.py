@@ -10,8 +10,10 @@ tmp+rename atomic NDJSON commit, zenodo/files/ndjson.py:50-72).
 Model: bulk-synchronous rounds. Each round
     candidates -> canonicalize -> dedupe -> unseen-filter -> robots ->
     politeness top-k per host -> fetch (Arrow batches) -> parse to spans
-    -> commit {fetched, new_seen, robots_cache, host_state, seen-filter
-               segments, frontier_next | frontier_add} + _COMMIT marker
+    -> commit the ROUND_TABLES + _COMMIT marker
+``ROUND_TABLES`` is the one list of a round's tables and their schemas.
+Every read is schema'd from it, so round -1 reads as the empty state: a
+fresh run, a resume and the next round all start from round r-1's state.
 Crawl order, documents, lineage and the next round's candidates are not
 tables of their own: they are read-time projections of ``fetched``, the
 round's fetch_parse rows.
@@ -59,19 +61,41 @@ from ..functions import urls as U
 from ..operators import cuckoo as CK
 from ..operators import frontier as FR
 from ..operators import seen as SN
-from ..operators.fetch import fetch_parse
+from ..operators.fetch import FUSED_SCHEMA, fetch_parse
 
-ROBOTS_SCHEMA = T.StructType(
-    [
-        T.StructField("host", T.StringType()),
-        T.StructField("disallow_prefixes", T.ArrayType(T.StringType())),
-        T.StructField("crawl_delay_ms", T.IntegerType()),
-    ]
+
+def _struct(*fields: T.StructField | tuple[str, T.DataType]) -> T.StructType:
+    """Fields and (name, type) pairs, all nullable, as parquet reads them."""
+    return T.StructType([f if isinstance(f, T.StructField) else T.StructField(*f) for f in fields])
+
+
+_FRONTIER = _struct(
+    ("url_hash", T.StringType()), ("priority", T.IntegerType()), ("seq", T.LongType()),
+    ("url", T.StringType()), ("canonical_url", T.StringType()), ("host", T.StringType()),
+    ("host_bucket", T.IntegerType()), ("path", T.StringType()),
 )
 
-FRONTIER_COLS = [
-    "url_hash", "priority", "seq", "url", "canonical_url", "host", "host_bucket", "path",
-]
+# a committed round's tables, each with the schema its write produces
+ROUND_TABLES: dict[str, T.StructType] = {
+    "fetched": _struct(*FUSED_SCHEMA, ("round", T.IntegerType()),
+                       ("partition_id", T.IntegerType())),
+    "new_seen": _struct(("url_hash", T.StringType()), ("first_seen_round", T.IntegerType())),
+    "robots_cache": _struct(
+        ("host", T.StringType()), ("disallow_prefixes", T.ArrayType(T.StringType())),
+        ("crawl_delay_ms", T.IntegerType()),
+    ),
+    "host_state": _struct(
+        ("host", T.StringType()), ("fetched_total", T.LongType()), ("bytes_total", T.LongType()),
+        ("next_allowed_round", T.IntegerType()), ("at_delay_ms", T.DoubleType()),
+    ),
+    # the seen filter's segments (seen_filter "bloom" or "cuckoo")
+    "bloom_segments": SN.SEGMENT_SCHEMA,
+    "cuckoo_segments": CK.CUCKOO_SEGMENT_SCHEMA,
+    # one frontier table a round: the snapshot, or the round's adds
+    "frontier_next": _FRONTIER,
+    "frontier_add": _struct(*_FRONTIER, ("round", T.IntegerType())),
+}
+FRONTIER_COLS = ROUND_TABLES["frontier_next"].fieldNames()
 
 # priority of URLs discovered as outlinks (seeds carry their own)
 DISCOVERED_PRIORITY = 5
@@ -300,8 +324,13 @@ class CrawlRun:
     def _write(self, df: DataFrame, r: int, name: str) -> None:
         df.write.mode("overwrite").parquet(os.path.join(self._rdir(r), name))
 
-    def _read(self, r: int, name: str) -> DataFrame:
-        return self.spark.read.parquet(os.path.join(self._rdir(r), name))
+    def _read(self, name: str, rounds: Iterable[int]) -> DataFrame:
+        """Table ``name`` of ``rounds``, read with its declared schema.
+        A round before 0 has no tables, so over no round or round -1 this
+        is the empty table: the state before the first round."""
+        return self.spark.read.schema(ROUND_TABLES[name]).parquet(
+            *[os.path.join(self._rdir(i), name) for i in rounds if i >= 0]
+        )
 
     # ---------- candidate preparation ----------
     def _prepare_candidates(self, raw: DataFrame) -> DataFrame:
@@ -336,7 +365,7 @@ class CrawlRun:
                     rows.append((h, r["disallow_prefixes"], r["crawl_delay_ms"]))
                 yield pd.DataFrame(rows, columns=["host", "disallow_prefixes", "crawl_delay_ms"])
 
-        fetched = new_hosts.mapInPandas(_fetch_robots, schema=ROBOTS_SCHEMA)
+        fetched = new_hosts.mapInPandas(_fetch_robots, schema=ROUND_TABLES["robots_cache"])
         return robots.unionByName(fetched)
 
     # ---------- the round ----------
@@ -384,7 +413,7 @@ class CrawlRun:
             if seg_table and r > 0 and os.path.isdir(
                 os.path.join(self._rdir(r - 1), seg_table)
             ):
-                prev_segments = self._read(r - 1, seg_table)
+                prev_segments = self._read(seg_table, [r - 1])
             if mode == "bloom":
                 unseen = SN.filter_unseen_bloom_segmented(
                     cand, seen, segments=prev_segments, nseg=cfg.bloom_segments,
@@ -424,7 +453,7 @@ class CrawlRun:
             # Retry-After feedback: the prior round's host_state carries
             # next_allowed_round for hosts that 429'd — their budget is 0
             # until the cooldown passes (rows stay in the frontier)
-            prev_state = self._read(r - 1, "host_state") if r > 0 else self._empty_host_state()
+            prev_state = self._read("host_state", [r - 1])
             budgeted = FR.with_host_budget(
                 frontier_all, robots, cfg.round_seconds,
                 host_state=(
@@ -590,7 +619,7 @@ class CrawlRun:
                 if df is not None:
                     df.unpersist()
 
-    # ---------- state reconstruction (resume) ----------
+    # ---------- state after a round (round -1: the empty state) ----------
     def _frontier_through(self, r: int) -> DataFrame:
         """Frontier state after round r: the latest ``frontier_next``
         snapshot at or before r, plus the later rounds' adds, less their
@@ -603,18 +632,14 @@ class CrawlRun:
              if os.path.isdir(os.path.join(self._rdir(i), "frontier_next"))),
             -1,
         )
+        base = self._read("frontier_next", [base_round])
         if base_round == r:
-            return self._read(r, "frontier_next")
-        base = (
-            self._read(base_round, "frontier_next") if base_round >= 0 else self._empty_frontier()
-        )
-        lo = base_round + 1
-        adds = self.spark.read.parquet(
-            *[os.path.join(self._rdir(i), "frontier_add") for i in range(lo, r + 1)]
-        )
-        removed = self._fetched(range(lo, r + 1)).groupBy("url_hash").agg(
+            return base
+        later = range(base_round + 1, r + 1)
+        removed = self._read("fetched", later).groupBy("url_hash").agg(
             F.max("round").alias("removed_round")
         )
+        adds = self._read("frontier_add", later)
         return (
             base.withColumn("round", F.lit(base_round)).unionByName(adds)
             .join(removed, "url_hash", "left")
@@ -623,30 +648,7 @@ class CrawlRun:
         )
 
     def _seen_through(self, r: int) -> DataFrame:
-        paths = [os.path.join(self._rdir(i), "new_seen") for i in range(r + 1)]
-        return self.spark.read.parquet(*paths)
-
-    def _empty_seen(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [], "url_hash string, first_seen_round int"
-        )
-
-    def _empty_frontier(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [],
-            "url_hash string, priority int, seq long, url string, canonical_url string,"
-            " host string, host_bucket int, path string",
-        )
-
-    def _empty_robots(self) -> DataFrame:
-        return self.spark.createDataFrame([], ROBOTS_SCHEMA)
-
-    def _empty_host_state(self) -> DataFrame:
-        return self.spark.createDataFrame(
-            [],
-            "host string, fetched_total long, bytes_total long, "
-            "next_allowed_round int, at_delay_ms double",
-        )
+        return self._read("new_seen", range(r + 1))
 
     # ---------- driver ----------
     def run(self, seeds: DataFrame | None = None, resume: bool = False) -> list[dict]:
@@ -666,53 +668,39 @@ class CrawlRun:
             for d in os.listdir(self.run_dir):
                 if d.startswith("round="):
                     shutil.rmtree(os.path.join(self.run_dir, d))
-        metas: list[dict] = []
+        if not done and seeds is None:
+            raise ValueError("seeds required for a fresh run")
         # cumulative committed seen-key count — drives adaptive bloom
         # sizing (a count from meta JSON, never a Spark count() job)
         self._seen_total = sum(self._meta(i)["new_seen"] for i in done)
-        if done:
-            last = done[-1]
-            start = last + 1
-            frontier = self._frontier_through(last)
-            seen = self._seen_through(last)
-            robots = self._read(last, "robots_cache")
-            candidates = self._outlinks(last)
-        else:
-            if seeds is None:
-                raise ValueError("seeds required for a fresh run")
-            start = 0
-            frontier = self._empty_frontier()
-            seen = self._empty_seen()
-            robots = self._empty_robots()
-            candidates = seeds.select("url", F.col("priority").cast("int"))
-
-        for r in range(start, self.cfg.max_rounds):
-            meta = self._run_round(r, candidates, frontier, seen, robots)
+        metas: list[dict] = []
+        for r in range(done[-1] + 1 if done else 0, self.cfg.max_rounds):
+            # the state after round r - 1; round -1's is the empty state
+            candidates = self._outlinks(r - 1) if r > 0 else seeds.select(
+                "url", F.col("priority").cast("int")
+            )
+            meta = self._run_round(
+                r, candidates, self._frontier_through(r - 1), self._seen_through(r - 1),
+                self._read("robots_cache", [r - 1]),
+            )
             metas.append(meta)
             if meta["frontier_next"] == 0 and meta["outlinks"] == 0:
                 break
-            frontier = self._frontier_through(r)
-            seen = self._seen_through(r)
-            robots = self._read(r, "robots_cache")
-            candidates = self._outlinks(r)
         return metas
 
     # ---------- result accessors ----------
     # crawl order, documents, lineage and outlinks are projections of the
     # committed rounds' ``fetched`` tables
-    def _fetched(self, rounds: Iterable[int]) -> DataFrame:
-        return self.spark.read.parquet(*[os.path.join(self._rdir(i), "fetched") for i in rounds])
-
     def _outlinks(self, r: int) -> DataFrame:
         """Round r's discovered URLs: the next round's candidates."""
-        return self._read(r, "fetched").select(
+        return self._read("fetched", [r]).select(
             F.explode("outlinks").alias("url"), F.lit(DISCOVERED_PRIORITY).alias("priority")
         )
 
     def crawl_order(self) -> DataFrame:
         """Fetched URLs in canonical crawl order (round, priority, seq,
         url_hash) — the north-rule ordering invariant."""
-        return self._fetched(self.committed_rounds()).select(
+        return self._read("fetched", self.committed_rounds()).select(
             "url_hash", "canonical_url", "host", "priority", "seq", "status", "attempts",
             "bytes", "round",
         ).orderBy("round", "priority", "seq", "url_hash")
@@ -721,7 +709,7 @@ class CrawlRun:
         """1->N fan-out of the 200s: the dataset doc (doc_id = url_hash)
         plus one doc per embedded sample (doc_id = url_hash#role) — the
         SRA study -> dataset + samples shape (ncbi_sra.py:381+)."""
-        ok = self._fetched(self.committed_rounds()).filter(F.col("status") == 200)
+        ok = self._read("fetched", self.committed_rounds()).filter(F.col("status") == 200)
         samples = ok.select("url_hash", "canonical_url", "round", F.explode("subdocs").alias("sd"))
         return ok.select(
             F.col("url_hash").alias("doc_id"), "canonical_url", "spans", "round"
@@ -731,13 +719,12 @@ class CrawlRun:
         ))
 
     def seen(self) -> DataFrame:
-        rounds = self.committed_rounds()
-        return self._seen_through(rounds[-1]) if rounds else self._empty_seen()
+        return self._read("new_seen", self.committed_rounds())
 
     def lineage(self) -> DataFrame:
         """Per (round, fetch partition, host bucket) fetch counters."""
         return (
-            self._fetched(self.committed_rounds())
+            self._read("fetched", self.committed_rounds())
             .groupBy("partition_id", "host_bucket", "round")
             .agg(
                 F.count("*").alias("urls_fetched"),
@@ -752,5 +739,4 @@ class CrawlRun:
 
     def host_state(self) -> DataFrame:
         """Cumulative per-host politeness ledger as of the last round."""
-        rounds = self.committed_rounds()
-        return self._read(rounds[-1], "host_state")
+        return self._read("host_state", self.committed_rounds()[-1:])

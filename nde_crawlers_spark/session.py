@@ -20,12 +20,15 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    """Build (or get) a SparkSession.
+    """Build a SparkSession, or return the live one unchanged.
 
     ``cores=None`` uses ``local[*]``; tests pass explicit core counts to
     check N-vs-4N determinism (tests/test_crawl_oracle.py runs the same
-    crawl at local[16] and local[1]).
+    crawl at local[16] and local[1]). A live session keeps its settings.
     """
+    active = SparkSession.getActiveSession()
+    if active is not None:
+        return active
     cpus = cores if cores is not None else os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = f"local[{cpus}]"
     shuffle = shuffle_partitions if shuffle_partitions is not None else (

@@ -87,18 +87,26 @@ def _check_against_oracle(run: CrawlRun, oracle):
 
 
 def _check_round_layout(run: CrawlRun):
-    """Each committed round holds one data table, ``fetched``, beside the
+    """Each committed round of a bloom-filtered crawl holds the tables
+    ``CR.ROUND_TABLES`` declares: one data table, ``fetched``, beside the
     state resume needs, and exactly one frontier table: ``frontier_next``
-    on snapshot rounds, ``frontier_add`` on the others. Crawl order,
-    documents and lineage are read-time projections of ``fetched``, and
-    lineage's totals agree with the crawl order."""
+    on snapshot rounds, ``frontier_add`` on the others. Each table's
+    parquet footer schema is its declared schema, so a write that drifts
+    from it fails here rather than being cast or null-filled by the
+    schema'd reads. Crawl order, documents and lineage are read-time
+    projections of ``fetched``, and lineage's totals agree with the
+    crawl order."""
     cfg = run.cfg
     for r in run.committed_rounds():
         snapshot = not cfg.frontier_deltas or (r + 1) % CR.COMPACT_EVERY == 0
-        assert set(os.listdir(os.path.join(run.run_dir, f"round={r:04d}"))) == {
-            "_COMMIT", "fetched", "new_seen", "robots_cache", "host_state", "bloom_segments",
-            "frontier_next" if snapshot else "frontier_add",
+        rdir = os.path.join(run.run_dir, f"round={r:04d}")
+        assert set(os.listdir(rdir)) == {"_COMMIT", *CR.ROUND_TABLES} - {
+            "cuckoo_segments", "frontier_add" if snapshot else "frontier_next",
         }
+        for name in os.listdir(rdir):
+            if name != "_COMMIT":
+                schema = run.spark.read.parquet(os.path.join(rdir, name)).schema
+                assert schema == CR.ROUND_TABLES[name], (r, name, schema.simpleString())
     assert run.documents().columns == ["doc_id", "canonical_url", "spans", "round"]
     assert run.lineage().columns == [
         "partition_id", "host_bucket", "urls_fetched", "ok", "bytes", "wall_ms", "attempts",
@@ -107,6 +115,24 @@ def _check_round_layout(run: CrawlRun):
     lineage = run.lineage().agg(F.sum("urls_fetched"), F.sum("bytes")).first()
     order = run.crawl_order().agg(F.count("*"), F.sum("bytes")).first()
     assert tuple(lineage) == tuple(order)
+
+
+def test_accessors_without_committed_rounds(spark):
+    """A run directory with no committed round reads as the empty crawl:
+    every accessor returns an empty frame with its usual columns."""
+    run = CrawlRun(spark, tempfile.mkdtemp(prefix="crawl_e_"))
+    for df, columns in (
+        (run.crawl_order(), ["url_hash", "canonical_url", "host", "priority", "seq", "status",
+                             "attempts", "bytes", "round"]),
+        (run.documents(), ["doc_id", "canonical_url", "spans", "round"]),
+        (run.lineage(), ["partition_id", "host_bucket", "urls_fetched", "ok", "bytes",
+                         "wall_ms", "attempts", "round"]),
+        (run.seen(), ["url_hash", "first_seen_round"]),
+        (run.host_state(), ["host", "fetched_total", "bytes_total", "next_allowed_round",
+                            "at_delay_ms"]),
+    ):
+        assert df.columns == columns
+        assert df.count() == 0
 
 
 def test_crawl_config_rejects_unknown_seen_filter():
@@ -213,8 +239,9 @@ def test_crawl_job_entry_point_matches_oracle(spark, oracle, capsys):
     the committed round metas."""
     from jobs import crawl_job
 
-    # main() calls get_spark, which reapplies its settings to this
-    # session; put back the two that differ from the test session's
+    # main() takes the live session as it is (get_spark leaves its
+    # settings alone) but sets the log level to WARN on purpose; put
+    # that back
     level = spark._jvm.org.apache.logging.log4j.LogManager.getRootLogger().getLevel().toString()
     partitions = spark.conf.get("spark.sql.shuffle.partitions")
     d = tempfile.mkdtemp(prefix="crawl_job_")
@@ -225,7 +252,7 @@ def test_crawl_job_entry_point_matches_oracle(spark, oracle, capsys):
         assert crawl_job.main(args + ["--resume", "--rounds", "2"]) == 0
     finally:
         spark.sparkContext.setLogLevel(level)
-        spark.conf.set("spark.sql.shuffle.partitions", partitions)
+    assert spark.conf.get("spark.sql.shuffle.partitions") == partitions
     summary = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
 
     run = CrawlRun(spark, d, CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=2))
@@ -286,7 +313,7 @@ def test_crawl_frontier_delta_mode_matches_oracle(spark, default_run, oracle, mo
     for r in run.committed_rounds():
         rows = sorted(tuple(x) for x in run._frontier_through(r).collect())
         assert sorted(tuple(x) for x in snap._frontier_through(r).collect()) == rows
-        assert sorted(tuple(x) for x in default_run._read(r, "frontier_next").collect()) == rows
+        assert sorted(tuple(x) for x in default_run._read("frontier_next", [r]).collect()) == rows
 
 
 def _round_rows(run: CrawlRun, r: int) -> dict:
@@ -297,7 +324,7 @@ def _round_rows(run: CrawlRun, r: int) -> dict:
     for name in sorted(os.listdir(run._rdir(r))):
         if name == "_COMMIT":
             continue
-        df = run._read(r, name).drop("fetch_wall_ms", "partition_id")
+        df = run._read(name, [r]).drop("fetch_wall_ms", "partition_id")
         out[name] = sorted(
             json.dumps(row.asDict(recursive=True), sort_keys=True, default=repr)
             for row in df.collect()
@@ -627,6 +654,8 @@ def test_crawl_cuckoo_seen_filter_matches_oracle(spark, oracle):
     _check_against_oracle(run, oracle)
     last = run.committed_rounds()[-1]
     segs = spark.read.parquet(os.path.join(d, f"round={last:04d}", "cuckoo_segments"))
+    # written as declared: the footer schema is the one the reads assume
+    assert segs.schema == CR.ROUND_TABLES["cuckoo_segments"]
     assert CK.cuckoo_segments_sizing(segs)[0] == 8
     probed = CK.probe_cuckoo_segmented(run.seen().select("url_hash"), segs)
     assert probed.filter(~F.col("__maybe_seen")).count() == 0

@@ -161,7 +161,8 @@ def test_crawl_run_over_real_sockets(spark, corpus, corpus_server):
     *http, run = _drive(LoopbackProxyFetcher(corpus_server, max_attempts=3))
     attempts = {
         r["canonical_url"]: r["attempts"]
-        for r in run._fetched(run.committed_rounds()).select("canonical_url", "attempts").collect()
+        for r in run._read("fetched", run.committed_rounds())
+        .select("canonical_url", "attempts").collect()
     }
     assert dict(corpus.counts) == attempts, "a page was requested other than its attempts times"
     *synth, _ = _drive(None)
