@@ -15,8 +15,9 @@ with the standard partial-cuckoo-hashing layout:
 
 so membership needs only (fingerprint, one bucket index) — and eviction
 relocation never re-reads the key. Same integration points as the bloom:
-build over the seen delta per partition (Arrow batches), OR... cuckoo
-tables merge by re-inserting fingerprints; probe via broadcast bytes.
+per-segment tables built executor-side (applyInPandas), maintained by
+inserting each round's delta into its own segment in place of the
+bloom's OR, and probed by cogrouping candidates with their segment.
 
 False positives (~2^-16 per slot probed) are confirmed by the exact
 anti-join, exactly like the bloom path — a false positive can cost a
@@ -34,6 +35,16 @@ _EMPTY = 0  # fingerprints are 1..65535; 0 marks an empty slot
 _HEADROOM = 1.25
 
 
+def cuckoo_nbuckets(capacity: int, slots: int) -> int:
+    """Bucket count of a filter sized for ``capacity`` keys: the least
+    power of two (so the XOR partner stays in range) giving at least
+    ``capacity * _HEADROOM`` slots."""
+    nb = 1
+    while nb * slots < capacity * _HEADROOM:
+        nb <<= 1
+    return nb
+
+
 def _hash64(arr: np.ndarray, seed: int) -> np.ndarray:
     """Cheap splitmix-style 64-bit mix, vectorized (uint64 in/out)."""
     x = arr.astype(np.uint64) + np.uint64(seed * 0x9E3779B97F4A7C15 & (2**64 - 1))
@@ -47,12 +58,9 @@ def _hash64(arr: np.ndarray, seed: int) -> np.ndarray:
 
 class CuckooFilter:
     def __init__(self, capacity: int, slots_per_bucket: int = 4):
-        nb = 1
-        while nb * slots_per_bucket < capacity * _HEADROOM:
-            nb <<= 1  # power of two so XOR partner stays in range
-        self.nbuckets = nb
+        self.nbuckets = cuckoo_nbuckets(capacity, slots_per_bucket)
         self.slots = slots_per_bucket
-        self.table = np.zeros((nb, slots_per_bucket), dtype=np.uint16)
+        self.table = np.zeros((self.nbuckets, slots_per_bucket), dtype=np.uint16)
         self.count = 0
         self.max_kicks = 500
         # victim stash (standard cuckoo design): when an eviction walk
@@ -168,21 +176,27 @@ class CuckooFilter:
         cf.count = int((cf.table != _EMPTY).sum()) + len(cf.stash)
         return cf
 
+    @classmethod
+    def empty(cls, nbuckets: int, slots: int) -> "CuckooFilter":
+        """A filter holding no key, at the given geometry."""
+        return cls.from_bytes(bytes(nbuckets * slots * 2), nbuckets, slots)
+
 
 # --------------------- segmented (partitioned) cuckoo ---------------------
 #
 # The north rule names a "partitioned cuckoo/bloom URL-seen filter". The
 # bloom side lives as per-bucket segments (operators/seen.py); this is
 # the same partitioned layout for the cuckoo filter — one serialized
-# filter per url_hash segment, built/maintained/probled executor-side
+# filter per url_hash segment, built/maintained/probed executor-side
 # with applyInPandas/cogroup, never a driver-resident table — plus the
 # capability blooms lack: DELETE. When a URL's cache TTL expires
 # (EXPIRE, figshare_oai-pmh/files/sql_database.py:75) its fingerprint is
 # evicted from ITS OWN segment only and the URL becomes fetchable again;
 # the bloom path would rebuild the full filter. Geometry (nseg,
-# nbuckets, slots) is persisted per row exactly like the bloom segments
-# (probes route by the TABLE's recorded nseg — same false-negative
-# hazard, same fix).
+# nbuckets, slots) is recorded per row and in the round meta exactly
+# like the bloom segments: ``next_cuckoo_segments`` chooses it on the
+# driver, and probes, inserts and deletes take the recorded nseg as an
+# argument (same false-negative hazard, same fix).
 
 import pandas as pd  # noqa: E402
 from pyspark.sql import DataFrame  # noqa: E402
@@ -210,131 +224,127 @@ def _u64(series) -> "np.ndarray":
     return series.values.astype("int64").view("uint64")
 
 
+def _hashed(keys: DataFrame, key: str, nseg: int) -> DataFrame:
+    """Each key's segment id and filter hash: the cogroup side of every
+    segment build, insert and delete."""
+    return keys.select(
+        segment_of(F.col(key), nseg).alias("__seg"), _key_hash(F.col(key)).alias("__h")
+    )
+
+
+def _segment_row(seg: int, nseg: int, cf: CuckooFilter) -> pd.DataFrame:
+    return pd.DataFrame({
+        "seg": [seg], "nseg": [nseg], "nbuckets": [cf.nbuckets], "slots": [cf.slots],
+        "blob": [cf.to_bytes()],
+    })
+
+
+def _no_row() -> pd.DataFrame:
+    return pd.DataFrame(columns=CUCKOO_SEGMENT_SCHEMA.fieldNames())
+
+
+def cuckoo_geometry(capacity: int, nseg: int, slots: int = 4) -> dict:
+    """The geometry ``{"nseg", "nbuckets", "slots"}`` of a segment table
+    built for ``capacity`` keys in TOTAL: each segment's filter is sized
+    for capacity/nseg keys, floored at 64."""
+    per_seg = max(capacity // max(nseg, 1), 64)
+    return {"nseg": nseg, "nbuckets": cuckoo_nbuckets(per_seg, slots), "slots": slots}
+
+
 def build_cuckoo_segments(
     seen: DataFrame, key: str = "url_hash", nseg: int = 64,
     capacity: int = 1_000_000, slots: int = 4,
 ) -> DataFrame:
-    """Per-segment cuckoo filters over the seen keys: one shuffle on the
-    segment key, one serialized filter per group, zero driver state.
-    ``capacity`` is the TOTAL design point (per-segment = capacity/nseg,
-    floored at 64)."""
-    per_seg = max(capacity // max(nseg, 1), 64)
+    """Per-segment cuckoo filters over the seen keys, at
+    ``cuckoo_geometry(capacity, nseg, slots)``: one shuffle on the
+    segment key, one serialized filter per group, zero driver state."""
+    nbuckets = cuckoo_geometry(capacity, nseg, slots)["nbuckets"]
 
     def _build(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) == 0:
-            return pd.DataFrame(columns=["seg", "nseg", "nbuckets", "slots", "blob"])
-        cf = CuckooFilter(per_seg, slots_per_bucket=slots)
+            return _no_row()
+        cf = CuckooFilter.empty(nbuckets, slots)
         cf.insert_hashes(_u64(pdf["__h"]))
-        return pd.DataFrame({
-            "seg": [int(pdf["__seg"].iloc[0])], "nseg": [nseg],
-            "nbuckets": [cf.nbuckets], "slots": [cf.slots],
-            "blob": [cf.to_bytes()],
-        })
+        return _segment_row(int(pdf["__seg"].iloc[0]), nseg, cf)
 
-    hashed = seen.select(
-        segment_of(F.col(key), nseg).alias("__seg"), _key_hash(F.col(key)).alias("__h")
+    return (
+        _hashed(seen, key, nseg).groupBy("__seg")
+        .applyInPandas(_build, schema=CUCKOO_SEGMENT_SCHEMA)
     )
-    return hashed.groupBy("__seg").applyInPandas(_build, schema=CUCKOO_SEGMENT_SCHEMA)
 
 
-def cuckoo_segments_sizing(segments: DataFrame) -> tuple[int, int, int] | None:
-    """(nseg, nbuckets, slots) recorded in the persisted table, None if
-    empty — the self-describing-geometry reader (bloom-segment twin)."""
-    row = segments.select("nseg", "nbuckets", "slots").first()
-    if row is None:
-        return None
-    return int(row["nseg"]), int(row["nbuckets"]), int(row["slots"])
-
-
-def _apply_keys_to_segments(
-    segments: DataFrame, keys: DataFrame, key: str, op: str,
-    per_seg_capacity: int, slots: int,
+def insert_into_cuckoo_segments(
+    segments: DataFrame, delta: DataFrame, nseg: int, nbuckets: int, slots: int,
+    key: str = "url_hash",
 ) -> DataFrame:
-    """Cogroup each segment with its own keys and insert/delete them —
-    the incremental-maintenance step. A key group with no segment row
-    creates a fresh filter on insert (and is a no-op on delete)."""
-    sizing = cuckoo_segments_sizing(segments)
-    nseg = sizing[0] if sizing is not None else 64
+    """Cogroup each segment with its own delta keys and insert them —
+    the incremental-maintenance step. ``nseg``, ``nbuckets`` and
+    ``slots`` are the table's geometry; a key group with no segment row
+    starts an empty filter at that geometry."""
 
     def _merge(kdf: pd.DataFrame, sdf: pd.DataFrame) -> pd.DataFrame:
-        if len(sdf) == 0 and (op == "delete" or len(kdf) == 0):
-            return pd.DataFrame(columns=["seg", "nseg", "nbuckets", "slots", "blob"])
+        if len(sdf) == 0 and len(kdf) == 0:
+            return _no_row()
         if len(sdf) == 0:
-            cf = CuckooFilter(per_seg_capacity, slots_per_bucket=slots)
-            seg = int(kdf["__seg"].iloc[0])
-            ns = nseg
+            cf, seg = CuckooFilter.empty(nbuckets, slots), int(kdf["__seg"].iloc[0])
         else:
             cf = CuckooFilter.from_bytes(
                 sdf["blob"].iloc[0], int(sdf["nbuckets"].iloc[0]), int(sdf["slots"].iloc[0])
             )
             seg = int(sdf["seg"].iloc[0])
-            ns = int(sdf["nseg"].iloc[0])
         if len(kdf):
-            if op == "insert":
-                cf.insert_hashes(_u64(kdf["__h"]))
-            else:
-                cf.delete_hashes(_u64(kdf["__h"]))
-        return pd.DataFrame({
-            "seg": [seg], "nseg": [ns], "nbuckets": [cf.nbuckets],
-            "slots": [cf.slots], "blob": [cf.to_bytes()],
-        })
+            cf.insert_hashes(_u64(kdf["__h"]))
+        return _segment_row(seg, nseg, cf)
 
-    hashed = keys.select(
-        segment_of(F.col(key), nseg).alias("__seg"), _key_hash(F.col(key)).alias("__h")
-    )
     return (
-        hashed.groupBy("__seg")
+        _hashed(delta, key, nseg).groupBy("__seg")
         .cogroup(segments.groupBy("seg"))
         .applyInPandas(_merge, schema=CUCKOO_SEGMENT_SCHEMA)
     )
 
 
-def insert_into_cuckoo_segments(
-    segments: DataFrame, delta: DataFrame, key: str = "url_hash",
-    per_seg_capacity: int = 15_625, slots: int = 4,
-) -> DataFrame:
-    return _apply_keys_to_segments(segments, delta, key, "insert", per_seg_capacity, slots)
-
-
 def next_cuckoo_segments(
-    prev: DataFrame | None,
+    prev: tuple[DataFrame, dict] | None,
     new_seen: DataFrame,
     seen: DataFrame,
     seen_total: int,
     nseg: int,
     expected: int,
     key: str = "url_hash",
-) -> DataFrame:
-    """The segment table to commit with a round, cuckoo form of
+) -> tuple[DataFrame, dict]:
+    """The segment table to commit with a round and its geometry
+    ``{"nseg", "nbuckets", "slots"}``, cuckoo form of
     ``seen.next_bloom_segments``: insert the delta ``new_seen`` into
-    ``prev`` (the previous round's table), each key into its own
-    segment. The table is instead REBUILT from ``seen`` plus
-    ``new_seen``, for the larger of ``expected`` and 2x ``seen_total``
-    keys, when there is no previous table or it is empty, its recorded
-    segment count differs from ``nseg``, or ``seen_total`` (the
-    committed key count) passes 80% of its design capacity — past that,
-    eviction walks degrade and spill to the stash."""
-    sizing = cuckoo_segments_sizing(prev) if prev is not None else None
-    if sizing is not None:
-        p_nseg, nbuckets, slots = sizing
-        cap_total = int(nbuckets * slots * p_nseg / _HEADROOM)
-        if p_nseg == nseg and seen_total <= 0.8 * cap_total:
+    ``prev`` (the previous round's table with its geometry), each key
+    into its own segment. The table is instead REBUILT from ``seen``
+    plus ``new_seen``, for the larger of ``expected`` and 2x
+    ``seen_total`` keys, when there is no previous table, its segment
+    count differs from ``nseg``, or ``seen_total`` (the committed key
+    count) passes 80% of its design capacity — past that, eviction
+    walks degrade and spill to the stash. The geometry is chosen here,
+    on the driver: building the plan runs no Spark action."""
+    if prev is not None:
+        table, geometry = prev
+        cap_total = int(geometry["nbuckets"] * geometry["slots"] * geometry["nseg"] / _HEADROOM)
+        if geometry["nseg"] == nseg and seen_total <= 0.8 * cap_total:
             return insert_into_cuckoo_segments(
-                prev, new_seen.select(key), key=key,
-                per_seg_capacity=max(int(nbuckets * slots / _HEADROOM), 64), slots=slots,
-            )
-    return build_cuckoo_segments(
+                table, new_seen.select(key), key=key, **geometry
+            ), geometry
+    capacity = max(expected, 2 * seen_total)
+    table = build_cuckoo_segments(
         seen.select(key).unionByName(new_seen.select(key)), key=key, nseg=nseg,
-        capacity=max(expected, 2 * seen_total),
+        capacity=capacity,
     )
+    return table, cuckoo_geometry(capacity, nseg)
 
 
 def delete_from_cuckoo_segments(
-    segments: DataFrame, expired: DataFrame, key: str = "url_hash",
+    segments: DataFrame, expired: DataFrame, nseg: int, key: str = "url_hash",
     live: DataFrame | None = None, rebuild_counter=None,
 ) -> DataFrame:
     """TTL recrawl: evict the expired keys' fingerprints from their own
     segments — those URLs read as definitely-unseen again, no rebuild.
+    ``nseg`` is the table's segment count.
 
     Deletion hazard and its GUARD: cuckoo deletion removes the first
     slot matching (fingerprint, bucket-pair), and two keys colliding on
@@ -355,25 +365,19 @@ def delete_from_cuckoo_segments(
     per segment that had to rebuild — observability for soak runs; task
     retries/speculation can overcount, so it is reporting-grade, not an
     exactness input."""
-    if live is None:
-        return _apply_keys_to_segments(segments, expired, key, "delete", 64, 4)
-    sizing = cuckoo_segments_sizing(segments)
-    nseg = sizing[0] if sizing is not None else 64
 
     def _tag(df: DataFrame, is_live: int) -> DataFrame:
-        return df.select(
-            segment_of(F.col(key), nseg).alias("__seg"),
-            _key_hash(F.col(key)).alias("__h"),
-            F.lit(is_live).alias("__live"),
-        )
+        return _hashed(df, key, nseg).withColumn("__live", F.lit(is_live))
 
-    keys = _tag(expired, 0).unionByName(_tag(live, 1))
+    keys = _tag(expired, 0)
+    if live is not None:
+        keys = keys.unionByName(_tag(live, 1))
 
     def _merge(kdf: pd.DataFrame, sdf: pd.DataFrame) -> pd.DataFrame:
         if len(sdf) == 0:
             # no filter for this segment: delete is a no-op, and there
             # is no membership state for live keys to lose
-            return pd.DataFrame(columns=["seg", "nseg", "nbuckets", "slots", "blob"])
+            return _no_row()
         cf = CuckooFilter.from_bytes(
             sdf["blob"].iloc[0], int(sdf["nbuckets"].iloc[0]), int(sdf["slots"].iloc[0])
         )
@@ -387,18 +391,11 @@ def delete_from_cuckoo_segments(
                 # a (fingerprint, bucket) collision evicted a live key:
                 # rebuild this segment from its live set, preserving the
                 # recorded geometry (per-row geometry keeps probes exact)
-                fresh = CuckooFilter.__new__(CuckooFilter)
-                fresh.nbuckets, fresh.slots = cf.nbuckets, cf.slots
-                fresh.table = np.zeros((cf.nbuckets, cf.slots), dtype=np.uint16)
-                fresh.count, fresh.max_kicks, fresh.stash = 0, 500, []
-                fresh.insert_hashes(lh)
-                cf = fresh
+                cf = CuckooFilter.empty(cf.nbuckets, cf.slots)
+                cf.insert_hashes(lh)
                 if rebuild_counter is not None:
                     rebuild_counter.add(1)
-        return pd.DataFrame({
-            "seg": [int(sdf["seg"].iloc[0])], "nseg": [int(sdf["nseg"].iloc[0])],
-            "nbuckets": [cf.nbuckets], "slots": [cf.slots], "blob": [cf.to_bytes()],
-        })
+        return _segment_row(int(sdf["seg"].iloc[0]), nseg, cf)
 
     return (
         keys.groupBy("__seg")
@@ -408,15 +405,12 @@ def delete_from_cuckoo_segments(
 
 
 def probe_cuckoo_segmented(
-    candidates: DataFrame, segments: DataFrame, key: str = "url_hash",
-    nseg: int | None = None,
+    candidates: DataFrame, segments: DataFrame, nseg: int, key: str = "url_hash",
 ) -> DataFrame:
     """Add ``__maybe_seen`` by probing each candidate against ITS OWN
-    segment (cogroup). Routing uses the TABLE's recorded nseg unless the
-    caller just built an un-persisted table and passes it explicitly."""
-    if nseg is None:
-        sizing = cuckoo_segments_sizing(segments)
-        nseg = sizing[0] if sizing is not None else 64
+    segment (cogroup). ``nseg`` must be the segment count the table was
+    built with (the crawl reads it from the round meta): any other
+    routing produces false negatives."""
     keep = [f.name for f in candidates.schema.fields]
     out_schema = T.StructType(
         candidates.schema.fields + [T.StructField("__maybe_seen", T.BooleanType())]
@@ -449,10 +443,9 @@ def probe_cuckoo_segmented(
 def filter_unseen_cuckoo_segmented(
     candidates: DataFrame,
     active_seen: DataFrame,
-    segments: DataFrame | None = None,
+    segments: DataFrame,
+    nseg: int,
     key: str = "url_hash",
-    nseg: int = 64,
-    capacity: int = 1_000_000,
 ) -> DataFrame:
     """Cuckoo-prefiltered unseen filter, exact semantics (bloom twin):
     definite-new rows are kept, might-contain rows are confirmed against
@@ -460,11 +453,7 @@ def filter_unseen_cuckoo_segmented(
     the filter may legitimately contain nothing for an expired key, and
     a stale might-contain is caught by the exact join). Both run in the
     one conditional anti-join of ``seen.drop_confirmed_seen``, so the
-    probe runs once."""
-    if segments is None:
-        segments = build_cuckoo_segments(active_seen, key=key, nseg=nseg, capacity=capacity)
-        probe_nseg: int | None = nseg
-    else:
-        probe_nseg = None
-    probed = probe_cuckoo_segmented(candidates, segments, key=key, nseg=probe_nseg)
+    probe runs once. ``segments`` is a table built with ``nseg``
+    segments over (a superset of) ``active_seen``."""
+    probed = probe_cuckoo_segmented(candidates, segments, nseg, key=key)
     return drop_confirmed_seen(probed, active_seen, key)

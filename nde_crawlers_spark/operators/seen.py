@@ -138,13 +138,16 @@ def write_seen_bucketed(seen: DataFrame, table: str, buckets: int = 64, key: str
 # around the join entirely. The crawl's default seen_filter is "bloom"
 # because its per-round candidates << seen-total matches that regime.
 
-# `nseg` (the segment-count the table was built with) is PERSISTED in
-# every row: probe routing hashes key -> segment with it, so a probe
-# against a table built under a different segment count would silently
+# `nseg` (the segment count the table was built with) is recorded in
+# every row, beside the bit-array geometry: probe routing hashes key ->
+# segment with it, so a probe routed by any other count would silently
 # produce FALSE NEGATIVES (candidates hashed to the wrong segment skip
-# the exact confirm). Recording it makes the table self-describing —
-# probes route by the TABLE's nseg, and resume paths detect a config
-# change and rebuild (plans/crawl.py) instead of mis-probing.
+# the exact confirm). The geometry is decided on the driver when
+# ``next_bloom_segments`` chooses the table, and the crawl records it in
+# the round meta (plans/crawl.py), which commits after the table: later
+# steps take it as an argument, so sizing costs no Spark action, and a
+# resume under a changed segment count probes with the recorded count
+# and rebuilds.
 SEGMENT_SCHEMA = T.StructType([
     T.StructField("seg", T.IntegerType()),
     T.StructField("nseg", T.IntegerType()),
@@ -152,17 +155,6 @@ SEGMENT_SCHEMA = T.StructType([
     T.StructField("nhashes", T.IntegerType()),
     T.StructField("bits", T.BinaryType()),
 ])
-
-
-def segments_sizing(segments: DataFrame) -> tuple[int, int, int] | None:
-    """The (nseg, nbits, nhashes) a persisted segment table was built
-    with — read from one row (single tiny driver action). ``None`` when
-    the table is empty (callers must then rebuild from the full seen
-    set)."""
-    row = segments.select("nseg", "nbits", "nhashes").first()
-    if row is None:
-        return None
-    return int(row["nseg"]), int(row["nbits"]), int(row["nhashes"])
 
 
 def segment_of(col: F.Column, nseg: int) -> F.Column:
@@ -238,39 +230,44 @@ def or_bloom_segments(a: DataFrame, b: DataFrame) -> DataFrame:
 
 
 def next_bloom_segments(
-    prev: DataFrame | None,
+    prev: tuple[DataFrame, dict] | None,
     new_seen: DataFrame,
     seen: DataFrame,
     seen_total: int,
     nseg: int,
     expected: int,
     key: str = "url_hash",
-) -> DataFrame:
-    """The segment table to commit with a round: ``prev`` (the previous
-    round's table) OR the segments of ``new_seen``, the round's delta —
-    so a resumed run picks up exactly the filter state matching its seen
-    set. The table is instead REBUILT from ``seen`` plus ``new_seen``
-    when (a) there is no previous table or it is empty, (b) its recorded
-    segment count differs from ``nseg`` (OR-ing would mis-route keys),
-    or (c) ``seen_total``, the committed key count, has outgrown its bit
-    arrays (fpp would blow past budget). Rebuilds size for 2x the
-    current count, so growth triggers amortized-O(1) doubling rebuilds,
-    never a per-round resize."""
+) -> tuple[DataFrame, dict]:
+    """The segment table to commit with a round, and its geometry
+    ``{"nseg", "nbits", "nhashes"}``. ``prev`` is the previous round's
+    table with its geometry; the new table is ``prev`` OR the segments
+    of ``new_seen``, the round's delta — so a resumed run picks up
+    exactly the filter state matching its seen set. The table is instead
+    REBUILT from ``seen`` plus ``new_seen`` when (a) there is no previous
+    table, (b) its segment count differs from ``nseg`` (OR-ing would
+    mis-route keys), or (c) ``seen_total``, the committed key count, has
+    outgrown its bit arrays (fpp would blow past budget). Rebuilds size
+    for 2x the current count, so growth triggers amortized-O(1) doubling
+    rebuilds, never a per-round resize. The geometry is chosen here, on
+    the driver: building the plan runs no Spark action."""
     need_nbits, _ = _seg_params(max(expected, seen_total), nseg, BLOOM_FPP)
-    sizing = segments_sizing(prev) if prev is not None else None
-    if sizing is not None and sizing[0] == nseg and sizing[1] >= need_nbits:
-        # the delta carries the persisted table's exact geometry
-        delta = build_bloom_segments(new_seen, key=key, nseg=nseg, sizing=sizing[1:])
-        return or_bloom_segments(prev, delta)
-    return build_bloom_segments(
+    if prev is not None:
+        table, geometry = prev
+        if geometry["nseg"] == nseg and geometry["nbits"] >= need_nbits:
+            # the delta carries the previous table's exact geometry
+            sizing = (geometry["nbits"], geometry["nhashes"])
+            delta = build_bloom_segments(new_seen, key=key, nseg=nseg, sizing=sizing)
+            return or_bloom_segments(table, delta), geometry
+    nbits, nhashes = _seg_params(max(expected, 2 * seen_total), nseg, BLOOM_FPP)
+    table = build_bloom_segments(
         seen.select(key).unionByName(new_seen.select(key)), key=key, nseg=nseg,
-        expected=max(expected, 2 * seen_total),
+        sizing=(nbits, nhashes),
     )
+    return table, {"nseg": nseg, "nbits": nbits, "nhashes": nhashes}
 
 
 def probe_bloom_segmented(
-    candidates: DataFrame, segments: DataFrame, key: str = "url_hash",
-    nseg: int | None = None,
+    candidates: DataFrame, segments: DataFrame, nseg: int, key: str = "url_hash",
 ) -> DataFrame:
     """Add ``__maybe_seen`` by probing each candidate against ITS OWN
     segment only: candidates and segments are co-grouped on the segment
@@ -278,15 +275,10 @@ def probe_bloom_segmented(
     candidates — never the whole filter. A candidate whose segment has
     no row is definitely unseen.
 
-    ``nseg`` defaults to the SEGMENT TABLE's own recorded segment count
-    (``segments_sizing``) — routing with any other value would hash
-    candidates into the wrong segment and produce false negatives, so
-    passing it explicitly is only for freshly-built, un-persisted
-    tables whose geometry the caller just chose."""
-    if nseg is None:
-        sizing = segments_sizing(segments)
-        # empty table -> any routing yields "no segment row" = not seen
-        nseg = sizing[0] if sizing is not None else 64
+    ``nseg`` must be the segment count the table was built with (the
+    crawl reads it from the round meta that records the table's
+    geometry): routing with any other value would hash candidates into
+    the wrong segment and produce false negatives."""
     out_schema = T.StructType(
         candidates.schema.fields + [T.StructField("__maybe_seen", T.BooleanType())]
     )
@@ -321,11 +313,9 @@ def probe_bloom_segmented(
 def filter_unseen_bloom_segmented(
     candidates: DataFrame,
     seen: DataFrame,
-    segments: DataFrame | None = None,
+    segments: DataFrame,
+    nseg: int,
     key: str = "url_hash",
-    nseg: int = 64,
-    expected: int = 1_000_000,
-    fpp: float = BLOOM_FPP,
 ) -> DataFrame:
     """Segmented-bloom-prefiltered unseen filter — exact semantics:
 
@@ -334,16 +324,10 @@ def filter_unseen_bloom_segmented(
     result        = definite_new UNION confirmed_new, computed by one
                     conditional anti-join (drop_confirmed_seen)
 
-    ``segments`` is the persisted incremental table when the caller
-    maintains one (the crawl plan does, per round, beside the seen
-    table); built from ``seen`` on the fly otherwise. A persisted table
-    is probed with ITS OWN recorded segment count (self-describing
-    schema), never the caller's — a config change between build and
-    probe therefore cannot mis-route candidates."""
-    if segments is None:
-        segments = build_bloom_segments(seen, key=key, nseg=nseg, expected=expected, fpp=fpp)
-        probe_nseg: int | None = nseg
-    else:
-        probe_nseg = None  # derive from the table's recorded geometry
-    probed = probe_bloom_segmented(candidates, segments, key=key, nseg=probe_nseg)
+    ``segments`` is a bloom table over (a superset of) ``seen`` built
+    with ``nseg`` segments — the crawl passes the previous round's
+    committed table and the segment count its meta records. With no
+    such table the result is ``filter_unseen_exact``'s, which is what
+    a caller runs instead."""
+    probed = probe_bloom_segmented(candidates, segments, nseg, key=key)
     return drop_confirmed_seen(probed, seen, key)

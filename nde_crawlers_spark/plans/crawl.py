@@ -22,6 +22,15 @@ or, between snapshots when ``frontier_deltas`` is on, a ``frontier_add``
 delta whose removes are the round's fetched keys. Resume rebuilds the
 frontier from the latest snapshot plus the later deltas, whichever
 cadence wrote the run directory.
+The meta records the geometry of the round's seen-filter segment table
+under the table's name (``{"nseg", "nbits", "nhashes"}`` for
+``bloom_segments``, ``{"nseg", "nbuckets", "slots"}`` for
+``cuckoo_segments``). Round r decides from round r-1's meta alone: with
+the key it probes that table and extends, deletes from or rebuilds it
+at the recorded geometry; without it (round 0, a filter switched on at
+resume) it takes the exact anti-join and builds the table afresh.
+Sizing costs no Spark action, and a resume never routes a probe by a
+changed segment count.
 The marker is written last via tmp+rename — the same
 data-before-release ordering the reference uses so bad data never
 propagates (README.md:88-97). A killed run resumes from the last round
@@ -317,7 +326,10 @@ class CrawlRun:
         os.rename(tmp, self._marker(r))
 
     def _meta(self, r: int) -> dict:
-        """A committed round's meta (the _COMMIT marker's JSON body)."""
+        """A committed round's meta (the _COMMIT marker's JSON body);
+        round -1's, the empty state's, is empty."""
+        if r < 0:
+            return {}
         with open(self._marker(r)) as f:
             return json.load(f)
 
@@ -401,44 +413,37 @@ class CrawlRun:
                     expired_new = seen.filter(F.col("first_seen_round") == F.lit(horizon))
                     seen = seen.filter(F.col("first_seen_round") > F.lit(horizon))
 
-            # unseen filter: candidates never enqueued before. With a
-            # membership filter, candidates are probed against the PREVIOUS
-            # round's persisted segment table (each candidate against its own
-            # segment only); definite-new rows skip the anti-join entirely,
-            # might-contain rows are confirmed exactly — identical output
-            # set either way, at any parallelism.
+            # unseen filter: candidates never enqueued before. When round
+            # r-1's meta records a segment table, candidates are probed
+            # against it (each against its own segment, routed by the
+            # recorded nseg); definite-new rows skip the anti-join entirely,
+            # might-contain rows are confirmed exactly. Otherwise the exact
+            # anti-join runs alone. Identical output set either way.
             mode = cfg.seen_filter
             seg_table = None if mode == "exact" else f"{mode}_segments"
-            prev_segments = None
-            if seg_table and r > 0 and os.path.isdir(
-                os.path.join(self._rdir(r - 1), seg_table)
-            ):
-                prev_segments = self._read(seg_table, [r - 1])
-            if mode == "bloom":
-                unseen = SN.filter_unseen_bloom_segmented(
-                    cand, seen, segments=prev_segments, nseg=cfg.bloom_segments,
-                    expected=cfg.bloom_expected,
-                )
-                next_segments = SN.next_bloom_segments
-            elif mode == "cuckoo":
-                if prev_segments is not None and expired_new is not None:
-                    # evict this round's newly-expired fingerprints BEFORE the
-                    # probe, under the live-key guard (live = the active seen
-                    # set — the complete post-delete membership). Cached: the
-                    # post-delete table feeds both the probe and the next
-                    # table below, and the guarded delete is the expensive step.
-                    prev_segments = ttl_deleted_segments = CK.delete_from_cuckoo_segments(
-                        prev_segments, expired_new.select("url_hash"),
-                        live=seen.select("url_hash"),
-                        rebuild_counter=self.cuckoo_rebuilds,
-                    ).cache()
-                unseen = CK.filter_unseen_cuckoo_segmented(
-                    cand, seen, segments=prev_segments, nseg=cfg.bloom_segments,
-                    capacity=cfg.bloom_expected,
-                )
-                next_segments = CK.next_cuckoo_segments
-            else:
+            prev_geometry = self._meta(r - 1).get(seg_table) if seg_table else None
+            prev = None  # the previous filter: (table, geometry)
+            if prev_geometry is None:
                 unseen = SN.filter_unseen_exact(cand, seen)
+            else:
+                segments, nseg = self._read(seg_table, [r - 1]), prev_geometry["nseg"]
+                if mode == "bloom":
+                    unseen = SN.filter_unseen_bloom_segmented(cand, seen, segments, nseg)
+                else:
+                    if expired_new is not None:
+                        # evict this round's newly-expired fingerprints BEFORE
+                        # the probe, under the live-key guard (live = the active
+                        # seen set — the complete post-delete membership).
+                        # Cached: the post-delete table feeds both the probe and
+                        # the next table below, and the guarded delete is the
+                        # expensive step.
+                        segments = ttl_deleted_segments = CK.delete_from_cuckoo_segments(
+                            segments, expired_new.select("url_hash"), nseg,
+                            live=seen.select("url_hash"),
+                            rebuild_counter=self.cuckoo_rebuilds,
+                        ).cache()
+                    unseen = CK.filter_unseen_cuckoo_segmented(cand, seen, segments, nseg)
+                prev = (segments, prev_geometry)
             unseen = unseen.cache()
             new_seen = unseen.select("url_hash").withColumn("first_seen_round", F.lit(r))
 
@@ -571,12 +576,16 @@ class CrawlRun:
             ]
             if seg_table:
                 # incremental maintenance: the previous table plus this
-                # round's delta, or a rebuild when the geometry changed or the
-                # committed keys outgrew it (next_bloom_segments /
-                # next_cuckoo_segments) — committed with the round, so a
+                # round's delta, or a rebuild when there is none, the
+                # geometry changed or the committed keys outgrew it
+                # (next_bloom_segments / next_cuckoo_segments) — committed
+                # with the round and its geometry recorded in the meta, so a
                 # resumed run picks up exactly the filter matching its seen set
-                new_segments = next_segments(
-                    prev_segments, new_seen, seen, seen_total=self._seen_total + n_unseen,
+                next_segments = (
+                    SN.next_bloom_segments if mode == "bloom" else CK.next_cuckoo_segments
+                )
+                new_segments, geometry = next_segments(
+                    prev, new_seen, seen, seen_total=self._seen_total + n_unseen,
                     nseg=cfg.bloom_segments, expected=cfg.bloom_expected,
                 )
                 writes.append((new_segments.coalesce(8), seg_table))
@@ -606,6 +615,9 @@ class CrawlRun:
                 "outlinks": int(fstats["out"] or 0),
                 "wall_s": round(time.monotonic() - t0, 3),
             }
+            if seg_table:
+                # the committed filter's geometry, read by the next round
+                meta[seg_table] = geometry
             if cfg.recrawl_ttl_rounds is not None:
                 # cumulative guarded-delete rebuild count as of this commit
                 meta["cuckoo_rebuilds_total"] = self.cuckoo_rebuilds.value

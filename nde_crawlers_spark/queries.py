@@ -277,8 +277,8 @@ def crawl_recrawl_ttl(spark, sf_dir):
     expired = seen.filter(F.col("first_seen_round") < 5).select("url_hash")
     active = seen.filter(F.col("first_seen_round") >= 5).select("url_hash")
     segs = CK.build_cuckoo_segments(seen.select("url_hash"), nseg=16, capacity=4096)
-    segs = CK.delete_from_cuckoo_segments(segs, expired, live=active)
-    return CK.filter_unseen_cuckoo_segmented(fr, active, segments=segs).select(
+    segs = CK.delete_from_cuckoo_segments(segs, expired, nseg=16, live=active)
+    return CK.filter_unseen_cuckoo_segmented(fr, active, segs, nseg=16).select(
         "doc_id", "url_hash", "host"
     )
 

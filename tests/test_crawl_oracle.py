@@ -86,6 +86,16 @@ def _check_against_oracle(run: CrawlRun, oracle):
         assert {s[0] for s in spans} <= {"title", "description", "author", "date", "keyword", "media"}
 
 
+def _check_segment_geometry(run: CrawlRun, seg_table: str):
+    """Each committed round's meta records the geometry of its
+    ``seg_table``, and every row of that table carries exactly those
+    values: the geometry the next round routes by is the one written."""
+    for r in run.committed_rounds():
+        geometry = run._meta(r)[seg_table]
+        rows = run._read(seg_table, [r]).select(*geometry).distinct().collect()
+        assert [row.asDict() for row in rows] == [geometry], (r, rows, geometry)
+
+
 def _check_round_layout(run: CrawlRun):
     """Each committed round of a bloom-filtered crawl holds the tables
     ``CR.ROUND_TABLES`` declares: one data table, ``fetched``, beside the
@@ -93,10 +103,12 @@ def _check_round_layout(run: CrawlRun):
     on snapshot rounds, ``frontier_add`` on the others. Each table's
     parquet footer schema is its declared schema, so a write that drifts
     from it fails here rather than being cast or null-filled by the
-    schema'd reads. Crawl order, documents and lineage are read-time
-    projections of ``fetched``, and lineage's totals agree with the
-    crawl order."""
+    schema'd reads. Each round's meta records the bloom table's geometry
+    as its rows carry it. Crawl order, documents and lineage are
+    read-time projections of ``fetched``, and lineage's totals agree
+    with the crawl order."""
     cfg = run.cfg
+    _check_segment_geometry(run, "bloom_segments")
     for r in run.committed_rounds():
         snapshot = not cfg.frontier_deltas or (r + 1) % CR.COMPACT_EVERY == 0
         rdir = os.path.join(run.run_dir, f"round={r:04d}")
@@ -211,6 +223,47 @@ def test_crawl_resume_replays_exactly(spark, default_run, oracle):
     run2.run(resume=True)
     assert run2.committed_rounds() == list(range(ROUNDS))
     _check_against_oracle(run2, oracle)
+
+
+def test_resume_from_meta_without_geometry_rebuilds(spark, default_run, oracle, monkeypatch):
+    """A round-0 meta that records no bloom geometry (as a run directory
+    written before the meta carried it) resumes the way round 0 starts:
+    round 1 takes the exact anti-join with no probe and rebuilds its
+    table from the seen set at the geometry its own meta records, and
+    round 2 probes that table. The crawl stays oracle-exact."""
+    d = _round0_copy(default_run, "crawl_g_")
+    marker = os.path.join(d, "round=0000", "_COMMIT")
+    with open(marker) as f:
+        meta = json.load(f)
+    del meta["bloom_segments"]
+    with open(marker, "w") as f:
+        json.dump(meta, f)
+
+    cfg = CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=ROUNDS)
+    run = CrawlRun(spark, d, cfg)
+    probe, probed_in = SN.probe_bloom_segmented, []
+
+    def counted(*args, **kwargs):
+        probed_in.append(run.committed_rounds()[-1] + 1)  # the round running
+        return probe(*args, **kwargs)
+
+    monkeypatch.setattr(SN, "probe_bloom_segmented", counted)
+    run.run(resume=True)
+    _check_against_oracle(run, oracle)
+    assert probed_in.count(1) == 0 and probed_in.count(2) == 1, probed_in
+
+    geometry = run._meta(1)["bloom_segments"]
+    committed = {
+        r["seg"]: tuple(r) for r in run._read("bloom_segments", [1]).collect()
+    }
+    rebuilt = {
+        r["seg"]: tuple(r)
+        for r in SN.build_bloom_segments(
+            run.seen().filter(F.col("first_seen_round") <= 1).select("url_hash"),
+            nseg=geometry["nseg"], sizing=(geometry["nbits"], geometry["nhashes"]),
+        ).collect()
+    }
+    assert committed == rebuilt
 
 
 def test_resume_overwrites_uncommitted_partial_round(spark, default_run, oracle):
@@ -528,10 +581,11 @@ def test_crawl_bloom_adapts_to_seen_growth(spark, oracle):
     total = 0
     for r in rounds:
         with open(os.path.join(d, f"round={r:04d}", "_COMMIT")) as f:
-            total += json.load(f)["new_seen"]
+            meta = json.load(f)
+        total += meta["new_seen"]
         totals.append(total)
-        segs = spark.read.parquet(os.path.join(d, f"round={r:04d}", "bloom_segments"))
-        sizes.append(SN.segments_sizing(segs))
+        geometry = meta["bloom_segments"]
+        sizes.append((geometry["nseg"], geometry["nbits"], geometry["nhashes"]))
     # growth actually triggered at least one resize rebuild
     assert sizes[-1][1] > sizes[0][1], f"no adaptive rebuild happened: {sizes}"
     # every committed geometry satisfies the fpp budget for its own
@@ -576,7 +630,7 @@ def test_crawl_bloom_nseg_change_on_resume_rebuilds(spark, oracle):
     _check_against_oracle(run2, oracle)
     last = run2.committed_rounds()[-1]
     segs = spark.read.parquet(os.path.join(d, f"round={last:04d}", "bloom_segments"))
-    assert SN.segments_sizing(segs)[0] == 4
+    assert {r["nseg"] for r in segs.select("nseg").collect()} == {4}
 
 
 def test_autothrottle_fast_host_budget_grows_from_start_delay(spark):
@@ -656,8 +710,10 @@ def test_crawl_cuckoo_seen_filter_matches_oracle(spark, oracle):
     segs = spark.read.parquet(os.path.join(d, f"round={last:04d}", "cuckoo_segments"))
     # written as declared: the footer schema is the one the reads assume
     assert segs.schema == CR.ROUND_TABLES["cuckoo_segments"]
-    assert CK.cuckoo_segments_sizing(segs)[0] == 8
-    probed = CK.probe_cuckoo_segmented(run.seen().select("url_hash"), segs)
+    _check_segment_geometry(run, "cuckoo_segments")
+    nseg = run._meta(last)["cuckoo_segments"]["nseg"]
+    assert nseg == 8
+    probed = CK.probe_cuckoo_segmented(run.seen().select("url_hash"), segs, nseg)
     assert probed.filter(~F.col("__maybe_seen")).count() == 0
     # and no bloom table was written in cuckoo mode
     assert not os.path.isdir(os.path.join(d, f"round={last:04d}", "bloom_segments"))
@@ -740,15 +796,17 @@ def test_crawl_recrawl_ttl_in_loop(spark):
         # deterministic probe outcome)
         last = run.committed_rounds()[-1]
         segs = spark.read.parquet(os.path.join(d, f"round={last:04d}", "cuckoo_segments"))
+        _check_segment_geometry(run, "cuckoo_segments")
+        nseg = run._meta(last)["cuckoo_segments"]["nseg"]
         newest = run.seen().groupBy("url_hash").agg(
             F.max("first_seen_round").alias("fsr"))
         horizon = last - TTL
         active = newest.filter(F.col("fsr") > horizon)
         expired = newest.filter(F.col("fsr") <= horizon)
         assert expired.count() > 0
-        probed_active = CK.probe_cuckoo_segmented(active.select("url_hash"), segs)
+        probed_active = CK.probe_cuckoo_segmented(active.select("url_hash"), segs, nseg)
         assert probed_active.filter(~F.col("__maybe_seen")).count() == 0
-        probed_exp = CK.probe_cuckoo_segmented(expired.select("url_hash"), segs)
+        probed_exp = CK.probe_cuckoo_segmented(expired.select("url_hash"), segs, nseg)
         assert probed_exp.filter(F.col("__maybe_seen")).count() == 0
         results[mode] = (
             sorted(order),

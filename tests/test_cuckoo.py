@@ -81,7 +81,7 @@ def test_segmented_cuckoo_build_probe_delete(spark):
     cand = spark.range(0, 600).select(F.sha2(F.col("id").cast("string"), 256).alias("url_hash"))
     seen = spark.range(0, 600, 2).select(F.sha2(F.col("id").cast("string"), 256).alias("url_hash"))
     segs = CK.build_cuckoo_segments(seen, nseg=8, capacity=1000)
-    assert CK.cuckoo_segments_sizing(segs)[0] == 8
+    assert {r["nseg"] for r in segs.select("nseg").collect()} == {8}
 
     # no false negatives: every seen key reads maybe-seen
     probed = CK.probe_cuckoo_segmented(seen, segs, nseg=8)
@@ -91,7 +91,7 @@ def test_segmented_cuckoo_build_probe_delete(spark):
     exact = {r["url_hash"] for r in filter_unseen_exact(cand, seen).collect()}
     got = {
         r["url_hash"]
-        for r in CK.filter_unseen_cuckoo_segmented(cand, seen, segments=segs).collect()
+        for r in CK.filter_unseen_cuckoo_segmented(cand, seen, segs, nseg=8).collect()
     }
     assert got == exact
 
@@ -101,12 +101,12 @@ def test_segmented_cuckoo_build_probe_delete(spark):
         F.sha2(F.col("id").cast("string"), 256).alias("url_hash")
     )
     active = seen.join(expired, "url_hash", "left_anti")
-    segs2 = CK.delete_from_cuckoo_segments(segs, expired)
+    segs2 = CK.delete_from_cuckoo_segments(segs, expired, nseg=8)
     p2 = CK.probe_cuckoo_segmented(active, segs2, nseg=8)
     assert p2.filter(~F.col("__maybe_seen")).count() == 0
     got2 = {
         r["url_hash"]
-        for r in CK.filter_unseen_cuckoo_segmented(cand, active, segments=segs2).collect()
+        for r in CK.filter_unseen_cuckoo_segmented(cand, active, segs2, nseg=8).collect()
     }
     exact2 = {r["url_hash"] for r in filter_unseen_exact(cand, active).collect()}
     assert got2 == exact2
@@ -116,24 +116,28 @@ def test_segmented_cuckoo_build_probe_delete(spark):
 
 def test_segmented_cuckoo_incremental_insert_and_persistence(spark, tmp_path):
     """Insert a delta into an EXISTING persisted segment table (the
-    per-round maintenance step) and probe through a parquet round-trip
-    with table-derived routing (no explicit nseg)."""
+    per-round maintenance step) and probe through a parquet round-trip,
+    routed by the segment count every row records."""
     from nde_crawlers_spark.operators import cuckoo as CK
 
     s1 = spark.range(0, 300).select(F.sha2(F.col("id").cast("string"), 256).alias("url_hash"))
     delta = spark.range(300, 500).select(F.sha2(F.col("id").cast("string"), 256).alias("url_hash"))
     segs = CK.build_cuckoo_segments(s1, nseg=4, capacity=800)
-    segs = CK.insert_into_cuckoo_segments(segs, delta, per_seg_capacity=200)
+    segs = CK.insert_into_cuckoo_segments(
+        segs, delta, nseg=4, nbuckets=CK.cuckoo_nbuckets(200, 4), slots=4
+    )
     path = str(tmp_path / "csegs")
     segs.write.parquet(path)
     back = spark.read.parquet(path)
     allk = s1.unionByName(delta)
-    probed = CK.probe_cuckoo_segmented(allk, back)  # routing from the table
+    (nseg,) = {r["nseg"] for r in back.select("nseg").collect()}
+    assert nseg == 4
+    probed = CK.probe_cuckoo_segmented(allk, back, nseg)
     assert probed.filter(~F.col("__maybe_seen")).count() == 0
     fresh = spark.range(10_000, 11_000).select(
         F.sha2(F.col("id").cast("string"), 256).alias("url_hash")
     )
-    fp = CK.probe_cuckoo_segmented(fresh, back).filter(F.col("__maybe_seen")).count()
+    fp = CK.probe_cuckoo_segmented(fresh, back, nseg).filter(F.col("__maybe_seen")).count()
     assert fp < 20  # ~2^-16 per slot probed, generous bound
 
 
@@ -191,15 +195,15 @@ def test_guarded_delete_repairs_forced_fp_bucket_collision(spark):
     assert probe_hits(segs, one(iL)) == {u(iL)}
     # unguarded: deleting N (same fp, same bucket, own copy absent)
     # evicts L's copy -> L falsely unseen
-    bad = CK.delete_from_cuckoo_segments(segs, one(iN)).cache()
+    bad = CK.delete_from_cuckoo_segments(segs, one(iN), nseg=1).cache()
     assert u(iL) not in probe_hits(bad, one(iL)), (
         "fixture no longer forces the collision — re-derive iL/iN")
     # guarded: the segment verifies its live keys and rebuilds
-    good = CK.delete_from_cuckoo_segments(segs, one(iN), live=live).cache()
+    good = CK.delete_from_cuckoo_segments(segs, one(iN), nseg=1, live=live).cache()
     assert probe_hits(good, live) == {u(iL)}, "live key lost after guarded delete"
     # the expired key stays recrawl-eligible (it can only false-positive
     # into the exact confirm, never block)
-    exact_new = CK.filter_unseen_cuckoo_segmented(one(iN, iL), live, segments=good)
+    exact_new = CK.filter_unseen_cuckoo_segmented(one(iN, iL), live, good, nseg=1)
     assert {r["url_hash"] for r in exact_new.collect()} == {u(iN)}
 
 
@@ -216,8 +220,57 @@ def test_membership_filters_probe_once(spark):
 
     cand, seen = key(spark.range(0, 200)), key(spark.range(0, 200, 2))
     for df in (
-        SN.filter_unseen_bloom_segmented(cand, seen, nseg=8, expected=1000),
-        CK.filter_unseen_cuckoo_segmented(cand, seen, nseg=8, capacity=1000),
+        SN.filter_unseen_bloom_segmented(
+            cand, seen, SN.build_bloom_segments(seen, nseg=8, expected=1000), nseg=8
+        ),
+        CK.filter_unseen_cuckoo_segmented(
+            cand, seen, CK.build_cuckoo_segments(seen, nseg=8, capacity=1000), nseg=8
+        ),
     ):
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert plan.count("FlatMapCoGroupsInPandas") == 1, plan
+
+
+def test_seen_filter_plans_issue_no_jobs(spark, tmp_path):
+    """The seen filters' plans take the segment tables' geometry as
+    arguments, so building them runs no Spark job: the next table (each
+    branch of both filters), the guarded delete and both prefiltered
+    unseen filters, over persisted tables."""
+    from nde_crawlers_spark.operators import cuckoo as CK
+    from nde_crawlers_spark.operators import seen as SN
+
+    def key(df):
+        return df.select(F.sha2(F.col("id").cast("string"), 256).alias("url_hash"))
+
+    seen, delta = key(spark.range(0, 300)), key(spark.range(300, 400))
+    cand, expired = key(spark.range(200, 500)), key(spark.range(0, 50))
+    live = key(spark.range(50, 300))
+
+    def persisted(name, table, schema):
+        path = str(tmp_path / name)
+        table.write.parquet(path)
+        return spark.read.schema(schema).parquet(path)
+
+    table, bloom_geo = SN.next_bloom_segments(None, seen, seen.limit(0), 0, 8, 1000)
+    bloom = persisted("bloom", table, SN.SEGMENT_SCHEMA)
+    table, cuckoo_geo = CK.next_cuckoo_segments(None, seen, seen.limit(0), 0, 8, 1000)
+    cuckoo = persisted("cuckoo", table, CK.CUCKOO_SEGMENT_SCHEMA)
+
+    tracker = spark.sparkContext.statusTracker()
+
+    def last_job():
+        return max(tracker.getJobIdsForGroup(None), default=-1)
+
+    before = last_job()
+    _, geo = SN.next_bloom_segments((bloom, bloom_geo), delta, seen, 400, 8, 1000)
+    assert geo is bloom_geo  # OR branch
+    _, geo = SN.next_bloom_segments((bloom, bloom_geo), delta, seen, 400, 4, 1000)
+    assert geo["nseg"] == 4  # rebuild branch
+    _, geo = CK.next_cuckoo_segments((cuckoo, cuckoo_geo), delta, seen, 400, 8, 1000)
+    assert geo is cuckoo_geo  # insert branch
+    _, geo = CK.next_cuckoo_segments((cuckoo, cuckoo_geo), delta, seen, 400, 4, 1000)
+    assert geo["nseg"] == 4  # rebuild branch
+    CK.delete_from_cuckoo_segments(cuckoo, expired, cuckoo_geo["nseg"], live=live)
+    SN.filter_unseen_bloom_segmented(cand, seen, bloom, bloom_geo["nseg"])
+    CK.filter_unseen_cuckoo_segmented(cand, live, cuckoo, cuckoo_geo["nseg"])
+    assert last_job() == before

@@ -19,9 +19,10 @@ def test_bloom_seen_filter_equals_exact(spark):
     cand = spark.range(0, 500).select(F.sha2(F.col("id").cast("string"), 256).alias("url_hash"))
     seen = spark.range(0, 500, 3).select(F.sha2(F.col("id").cast("string"), 256).alias("url_hash"))
     exact = {r["url_hash"] for r in SN.filter_unseen_exact(cand, seen).collect()}
+    segs = SN.build_bloom_segments(seen, nseg=64, expected=1000)
     bloom = {
         r["url_hash"]
-        for r in SN.filter_unseen_bloom_segmented(cand, seen, expected=1000).collect()
+        for r in SN.filter_unseen_bloom_segmented(cand, seen, segs, nseg=64).collect()
     }
     assert bloom == exact
     assert len(exact) == 500 - len(range(0, 500, 3))
@@ -47,24 +48,27 @@ def test_bloom_segments_build_and_probe(spark):
 
 
 def test_bloom_segments_self_describing_geometry(spark, tmp_path):
-    """The persisted table records its own (nseg, nbits, nhashes); a
-    probe with NO explicit nseg routes by the TABLE's geometry, so a
-    caller whose configured segment count has drifted cannot produce
-    bloom false negatives (the r4 resume bug class)."""
+    """The persisted table records its own (nseg, nbits, nhashes) in
+    every row; a probe routed by the recorded nseg has no false
+    negatives. The crawl records the same geometry in the round meta and
+    routes by it, so a caller whose configured segment count has drifted
+    cannot produce bloom false negatives (the r4 resume bug class, which
+    test_crawl_bloom_nseg_change_on_resume_rebuilds guards)."""
     seen = spark.range(300).select(F.sha2(F.col("id").cast("string"), 256).alias("url_hash"))
     path = str(tmp_path / "segs")
     SN.build_bloom_segments(seen, nseg=16, expected=300).write.parquet(path)
     segs = spark.read.parquet(path)
-    assert SN.segments_sizing(segs)[0] == 16
-    # no-arg probe: derives nseg=16 from the table -> zero false negatives
-    probed = SN.probe_bloom_segmented(seen, segs)
+    (nseg,) = {r["nseg"] for r in segs.select("nseg").collect()}
+    assert nseg == 16
+    # routed by the recorded nseg -> zero false negatives
+    probed = SN.probe_bloom_segmented(seen, segs, nseg)
     assert probed.filter(~F.col("__maybe_seen")).count() == 0
     # the full filter keeps exact semantics against a persisted table
     cand = spark.range(0, 600).select(F.sha2(F.col("id").cast("string"), 256).alias("url_hash"))
     exact = {r["url_hash"] for r in SN.filter_unseen_exact(cand, seen).collect()}
     got = {
         r["url_hash"]
-        for r in SN.filter_unseen_bloom_segmented(cand, seen, segments=segs).collect()
+        for r in SN.filter_unseen_bloom_segmented(cand, seen, segs, nseg).collect()
     }
     assert got == exact
     # OR-ing tables with mismatched geometry fails loudly, executor-side
@@ -82,14 +86,16 @@ def test_segmented_bloom_filter_equals_exact(spark):
         F.md5(F.col("id").cast("string")).alias("url_hash"), F.col("id")
     )
     exact = {r["url_hash"] for r in SN.filter_unseen_exact(cand, seen).collect()}
+    segs = SN.build_bloom_segments(seen, nseg=8, expected=1000)
     segd = {
         r["url_hash"]
-        for r in SN.filter_unseen_bloom_segmented(cand, seen, nseg=8, expected=1000).collect()
+        for r in SN.filter_unseen_bloom_segmented(cand, seen, segs, nseg=8).collect()
     }
     assert segd == exact and len(exact) == 400
     # empty seen: empty segment table -> everything definitely new
     empty = spark.createDataFrame([], "url_hash string")
-    assert SN.filter_unseen_bloom_segmented(cand, empty, nseg=8).count() == 650
+    esegs = SN.build_bloom_segments(empty, nseg=8)
+    assert SN.filter_unseen_bloom_segmented(cand, empty, esegs, nseg=8).count() == 650
 
 
 def test_segmented_bloom_incremental_or_equals_full_build(spark):

@@ -89,7 +89,8 @@ def test_seen_filter_single_pass_equals_exact(spark):
     got = sorted(
         (r["url_hash"], r["prio"])
         for r in SN.filter_unseen_bloom_segmented(
-            cand, seen, nseg=16, expected=5000).collect())
+            cand, seen, SN.build_bloom_segments(seen, nseg=16, expected=5000),
+            nseg=16).collect())
     want = sorted(
         (r["url_hash"], r["prio"])
         for r in cand.join(seen, "url_hash", "left_anti").collect())
