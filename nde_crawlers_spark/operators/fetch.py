@@ -114,16 +114,15 @@ def _partition(selected: DataFrame, colocate: bool, partitions: int | None) -> D
     return cols.repartition(partitions, F.col("url_hash"))
 
 
-def _default_fetcher(num_hosts: int, max_attempts: int) -> Callable[[str], dict]:
+def _default_fetcher(num_hosts: int) -> Callable[[str], dict]:
     def _f(url: str) -> dict:
-        return synth_fetch(url, num_hosts, max_attempts)
+        return synth_fetch(url, num_hosts)
     return _f
 
 
 def fetch_parse(
     selected: DataFrame,
     num_hosts: int,
-    max_attempts: int = 3,
     colocate: bool = True,
     partitions: int | None = None,
     fetcher: Callable[[str], dict] | None = None,
@@ -131,7 +130,7 @@ def fetch_parse(
     """FUSED fetch + parse: one Arrow stage, bodies never leave the
     Python worker; span/outlink list columns built from flat arrays.
     Failed fetches (status != 200) carry empty spans/outlinks."""
-    fetcher = fetcher or _default_fetcher(num_hosts, max_attempts)
+    fetcher = fetcher or _default_fetcher(num_hosts)
 
     def _run(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
         for b in batches:

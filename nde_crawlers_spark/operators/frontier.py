@@ -34,6 +34,23 @@ ORDER_COLS = ["priority", "seq", "url_hash"]
 AT_BASE_DELAY_MS = 500.0
 AT_MAX_DELAY_MS = 60_000.0
 AT_CONCURRENCY = 1.0
+# Scrapy separates AUTOTHROTTLE_START_DELAY (5s) from the floor: a new
+# host starts throttled and earns its budget back as it proves fast
+# (delay adapts DOWN toward the floor), while slow hosts stay
+# throttled. 5000.0 is the Scrapy default no reference crawler
+# overrides; AT_BASE_DELAY_MS here would start every host at the floor.
+#
+# Deliberate model difference, documented: Scrapy applies START_DELAY
+# from a slot's FIRST request; this round-based model applies it as the
+# SEED of the first latency fold (plans/crawl.py host_state), so a
+# host's first-round budget is still set by the robots/default floor and
+# the start delay binds from round 2. Rationale: Scrapy has no round
+# budgets to start from — mapping "slot created at 5s" onto "first-round
+# budget = floor(round/5s) = 1" would conflate the scheduler models; the
+# fold-seed form preserves Scrapy's observable property (a new host must
+# PROVE fast before its rate rises above the start level) one round
+# later. The Python oracle (plans/oracle.py) mirrors this exactly.
+AT_START_DELAY_MS = 5000.0
 
 
 def robots_filter(candidates: DataFrame, robots: DataFrame) -> DataFrame:

@@ -33,30 +33,30 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def taxonomy_closure(
-    taxonomy: DataFrame,
-    max_depth: int = 64,
-    checkpoint_every: int = 16,
-    probe_every: int = 4,
-) -> DataFrame:
+# ``taxonomy_closure``'s loop: MAX_DEPTH bounds it against cyclic input
+# (a safety bound, not a tuning knob; NCBI reaches ~40 ranks). Every
+# CHECKPOINT_EVERY levels the frontier and accumulated union are
+# ``localCheckpoint``-ed (eager), truncating the lineage so plan depth —
+# and Catalyst's per-level analysis cost — stays bounded. The emptiness
+# probe (a full Spark job each) fires only every PROBE_EVERY levels
+# (geometric probing): a 40-deep taxonomy costs ~10 driver round-trips
+# instead of 40. Overshoot levels past exhaustion join against an empty
+# frontier — empty steps union in nothing, and the final distinct is
+# unaffected.
+MAX_DEPTH = 64
+CHECKPOINT_EVERY = 16
+PROBE_EVERY = 4
+
+
+def taxonomy_closure(taxonomy: DataFrame) -> DataFrame:
     """(taxon, parent_taxon) -> ancestors-or-self closure
     (taxon, member, member_parent): every taxon in the lineage chain of
     ``taxon``, each with its own parent (NULL at the root).
 
     Iterates ONLY over the taxonomy table (small; cache-friendly); the
-    loop runs until the frontier empties or ``max_depth`` — a safety
-    bound against cyclic input, not a tuning knob. Two driver-cost
-    disciplines for deep chains (NCBI reaches ~40 ranks):
-
-    - every ``checkpoint_every`` levels the frontier and accumulated
-      union are ``localCheckpoint``-ed (eager), truncating the lineage so
-      plan depth — and Catalyst's per-level analysis cost — stays
-      bounded;
-    - the emptiness probe (a full Spark job each) fires only every
-      ``probe_every`` levels (geometric probing): a 40-deep taxonomy
-      costs ~10 driver round-trips instead of 40. Overshoot levels past
-      exhaustion join against an empty frontier — empty steps union in
-      nothing, and the final distinct is unaffected."""
+    loop runs until the frontier empties or ``MAX_DEPTH``, checkpointing
+    every ``CHECKPOINT_EVERY`` levels and probing for emptiness every
+    ``PROBE_EVERY``."""
     tax = taxonomy.select("taxon", "parent_taxon").cache()
     parents = tax.withColumnRenamed("taxon", "member").withColumnRenamed(
         "parent_taxon", "member_parent"
@@ -64,8 +64,7 @@ def taxonomy_closure(
     # level 0: every taxon is a member of its own lineage
     frontier = tax.select("taxon", F.col("taxon").alias("member"))
     closure = frontier
-    probe_every = max(1, probe_every)
-    for level in range(1, max_depth + 1):
+    for level in range(1, MAX_DEPTH + 1):
         step = (
             frontier.join(
                 tax.select(F.col("taxon").alias("member"), F.col("parent_taxon").alias("p")),
@@ -74,14 +73,14 @@ def taxonomy_closure(
             .filter(F.col("p").isNotNull() & (F.col("p") != F.col("member")))
             .select("taxon", F.col("p").alias("member"))
         )
-        if level % probe_every == 0 or level == max_depth:
+        if level % PROBE_EVERY == 0 or level == MAX_DEPTH:
             step = step.cache()
             if step.isEmpty():
                 step.unpersist()
                 break
         closure = closure.unionByName(step)
         frontier = step
-        if checkpoint_every and level % checkpoint_every == 0:
+        if level % CHECKPOINT_EVERY == 0:
             # cut the union/join lineage: plan depth resets to O(1)
             frontier = frontier.localCheckpoint(eager=True)
             closure = closure.localCheckpoint(eager=True)

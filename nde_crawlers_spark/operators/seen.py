@@ -45,6 +45,11 @@ from pyspark.sql import types as T
 
 # false-positive budget each bloom segment is sized for
 BLOOM_FPP = 0.01
+# the crawl's membership filter (bloom or cuckoo segments): its segment
+# count (10^10 design point: 4096) and its design capacity, the TOTAL
+# expected keys across segments
+FILTER_SEGMENTS = 64
+FILTER_CAPACITY = 1_000_000
 
 
 def _params(expected: int, fpp: float) -> tuple[int, int]:

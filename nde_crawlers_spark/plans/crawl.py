@@ -120,7 +120,6 @@ class CrawlConfig:
     num_hosts: int = 50
     round_seconds: int = 2          # politeness budget window per round
     max_rounds: int = 5
-    max_attempts: int = 3
     # the unseen filter: "exact" is the seen anti-join alone; "bloom"
     # and "cuckoo" front it with a partitioned membership filter — per-
     # url_hash-segment tables built executor-side, committed with each
@@ -129,8 +128,8 @@ class CrawlConfig:
     # filter). Bloom segments are append-only, OR-maintained
     # (operators/seen.py); cuckoo segments also support delete, the TTL-
     # recrawl path (operators/cuckoo.py). Both take their segment count
-    # and design capacity from bloom_segments / bloom_expected. Any
-    # other value raises ValueError.
+    # and design capacity from SN.FILTER_SEGMENTS / SN.FILTER_CAPACITY.
+    # Any other value raises ValueError.
     seen_filter: str = "bloom"
     # TTL recrawl inside the loop (figshare EXPIRE analog,
     # figshare_oai-pmh/files/sql_database.py:75): a key first seen in
@@ -143,9 +142,6 @@ class CrawlConfig:
     # reconstruction recomputes the identical active set at any
     # parallelism. None (default) = keys never expire.
     recrawl_ttl_rounds: int | None = None
-    bloom_segments: int = 64         # segment count (10^10 design point: 4096)
-    bloom_expected: int = 1_000_000  # TOTAL expected keys across segments
-    salt_factor: int = 8
     # AutoThrottle (every reference crawler ships AUTOTHROTTLE_ENABLED=
     # True, TARGET_CONCURRENCY=1.0 over DOWNLOAD_DELAY=0.5s — e.g.
     # bei_crawler/files/settings.py:2-5): each host's delay adapts to
@@ -160,29 +156,10 @@ class CrawlConfig:
     # synth_latency_ms), not wall-clock, so scheduling stays
     # bit-identical at any parallelism (north-rule N-vs-4N invariant);
     # in production the same fold consumes measured latencies. The
-    # step, its clamp and C live in operators/frontier.py
-    # (autothrottle_step, AT_BASE_DELAY_MS, AT_MAX_DELAY_MS, AT_CONCURRENCY).
+    # step, its clamp, C and a new host's start delay live in
+    # operators/frontier.py (autothrottle_step, AT_BASE_DELAY_MS,
+    # AT_MAX_DELAY_MS, AT_CONCURRENCY, AT_START_DELAY_MS).
     autothrottle: bool = True
-    # Scrapy separates AUTOTHROTTLE_START_DELAY (5s) from the floor: a
-    # new host starts throttled and earns its budget back as it proves
-    # fast (delay adapts DOWN toward the floor), while slow hosts stay
-    # throttled. 5000.0 is the Scrapy default no reference crawler
-    # overrides (r5 shipped None = start-at-floor for signature
-    # stability; r6 re-derived the oracle signatures instead).
-    # None = start at the floor.
-    #
-    # Deliberate model difference, documented: Scrapy applies
-    # START_DELAY from a slot's FIRST request; this round-based model
-    # applies it as the SEED of the first latency fold, so a host's
-    # first-round budget is still set by the robots/default floor and
-    # the start delay binds from round 2. Rationale: Scrapy has no
-    # round budgets to start from — mapping "slot created at 5s" onto
-    # "first-round budget = floor(round/5s) = 1" would conflate the
-    # scheduler models; the fold-seed form preserves Scrapy's observable
-    # property (a new host must PROVE fast before its rate rises above
-    # the start level) one round later. The Python oracle mirrors this
-    # exactly.
-    at_start_delay_ms: float | None = 5000.0
     # frontier snapshot cadence: False = a full ``frontier_next``
     # snapshot every round (sandbox default); True = a snapshot every
     # COMPACT_EVERY rounds and an O(delta) ``frontier_add`` on the rest
@@ -466,11 +443,10 @@ class CrawlRun:
                 ),
                 current_round=r,
             )
-            selected = FR.topk_per_host(budgeted, salt_factor=cfg.salt_factor).drop("host_budget")
+            selected = FR.topk_per_host(budgeted).drop("host_budget")
 
             # fused fetch+parse: bodies never cross the JVM<->Python boundary
-            fetched = fetch_parse(selected, cfg.num_hosts, cfg.max_attempts,
-                                  fetcher=cfg.fetcher).cache()
+            fetched = fetch_parse(selected, cfg.num_hosts, fetcher=cfg.fetcher).cache()
 
             frontier_next = frontier_all.join(
                 fetched.select("url_hash"), "url_hash", "left_anti"
@@ -511,11 +487,7 @@ class CrawlRun:
             # (the start delay for new hosts), fold this round's signed
             # latencies in crawl order; hosts not fetched this round keep
             # their delay.
-            start_d = F.lit(float(
-                cfg.at_start_delay_ms if cfg.at_start_delay_ms is not None
-                else FR.AT_BASE_DELAY_MS
-            ))
-            prev_at = F.coalesce(F.col("at_delay_ms"), start_d)
+            prev_at = F.coalesce(F.col("at_delay_ms"), F.lit(float(FR.AT_START_DELAY_MS)))
             new_at = (
                 F.when(F.col("lat_hist").isNull(), prev_at).otherwise(
                     F.aggregate(F.col("lat_hist"), prev_at, FR.autothrottle_step)
@@ -586,7 +558,7 @@ class CrawlRun:
                 )
                 new_segments, geometry = next_segments(
                     prev, new_seen, seen, seen_total=self._seen_total + n_unseen,
-                    nseg=cfg.bloom_segments, expected=cfg.bloom_expected,
+                    nseg=SN.FILTER_SEGMENTS, expected=SN.FILTER_CAPACITY,
                 )
                 writes.append((new_segments.coalesce(8), seg_table))
             # one frontier table: the full snapshot, or what entered the

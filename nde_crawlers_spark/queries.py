@@ -1202,6 +1202,76 @@ def enrich_explode_collect(spark, sf_dir):
     )
 
 
+def _hub_taxonomy(spark: SparkSession) -> DataFrame:
+    """The hub fixtures' deterministic taxonomy: taxa 1..200 with
+    parent(t) = max(t/7, 1), root 1 (no parent)."""
+    return spark.range(1, 201).select(
+        F.col("id").cast("int").alias("taxon"),
+        F.when(F.col("id") == 1, F.lit(None))
+        .otherwise(F.greatest(F.floor(F.col("id") / 7), F.lit(1)))
+        .cast("int")
+        .alias("parent_taxon"),
+    )
+
+
+def _species_lookup(spark: SparkSession) -> DataFrame:
+    """The PubTator species lookup: organism-0..23 standardize to
+    taxon-N, every third one classified as an infectious agent."""
+    return spark.range(0, 24).select(
+        F.concat(F.lit("organism-"), F.col("id").cast("string")).alias("name_lc"),
+        F.concat(F.lit("taxon-"), F.col("id").cast("string")).alias("std_name"),
+        F.concat(F.lit("tax:"), (2000 + F.col("id")).cast("string")).alias("std_identifier"),
+        F.when(F.col("id") % 3 == 0, F.lit("infectiousAgent")).otherwise(F.lit("host")).alias("classification"),
+    )
+
+
+def _species_columns(did):
+    """(species, infectiousAgent) entity arrays derived from the doc id:
+    lookup hits and misses, an agent-named raw species entry on every
+    fourth doc, and identifier collisions."""
+    n1, n2, n3 = did % 30, (did * 7) % 30, (did * 11) % 30
+
+    def ent(n, base):
+        return F.struct(
+            F.concat(F.lit("organism-"), n.cast("string")).alias("name"),
+            F.concat(F.lit("tax:"), (base + n).cast("string")).alias("identifier"),
+        )
+
+    s3 = F.struct(
+        F.concat(F.lit("taxon-"), n3.cast("string")).alias("name"),
+        F.concat(F.lit("tax:"), (3000 + n3).cast("string")).alias("identifier"),
+    )
+    empty = "array<struct<name:string,identifier:string>>"
+    species = F.concat(
+        F.array(ent(n1, 1000), ent(n2, 1000)),
+        F.when(did % 4 == 0, F.array(s3)).otherwise(F.array().cast(empty)),
+    )
+    return species, F.array(ent(n3, 1000))
+
+
+def _ner_entities(did) -> list[tuple]:
+    """Three (name, taxid) NER entities per doc: taxids over the hub
+    taxonomy, named ent-<taxid> except 'china' in position 1 of every
+    ninth doc."""
+    tids = [(1 + did % 200), (1 + (did * 3) % 200), (1 + (did * 11) % 200)]
+    return [
+        (
+            F.when((did % 9 == 0) & (F.lit(pos) == 1), F.lit("china"))
+            .otherwise(F.concat(F.lit("ent-"), tid.cast("string"))),
+            tid.cast("int"),
+        )
+        for pos, tid in enumerate(tids)
+    ]
+
+
+# the NER drop rules (utils/extract.py:23-59 ADVANCED_DROP_RULES shape)
+_NER_RULES = [
+    {"name": "china", "id": 3034371, "ignore_children": False},
+    {"name": "clade-3", "id": 3, "ignore_children": True},
+    {"name": "ent-50", "id": 50, "ignore_children": False},
+]
+
+
 def enrich_lineage_expand(spark, sf_dir):
     """J7's real payload (utils/lineage.py:140-307 + extract.py:332-360):
     a deterministic taxonomy tree (parent(t) = max(t/7, 1), root 1),
@@ -1211,14 +1281,7 @@ def enrich_lineage_expand(spark, sf_dir):
     proper ancestors of another taxid in the same doc."""
     from .operators import lineage as LN
 
-    tax = spark.range(1, 201).select(
-        F.col("id").cast("int").alias("taxon"),
-        F.when(F.col("id") == 1, F.lit(None))
-        .otherwise(F.greatest(F.floor(F.col("id") / 7), F.lit(1)))
-        .cast("int")
-        .alias("parent_taxon"),
-    )
-    closure = LN.taxonomy_closure(tax)
+    closure = LN.taxonomy_closure(_hub_taxonomy(spark))
     did = F.col("doc_id")
     d = t(spark, sf_dir, "documents").select(
         "doc_id",
@@ -1261,35 +1324,11 @@ def enrich_reclassify(spark, sf_dir):
     the converted-name filter), and identifier collisions (deduped)."""
     from .operators import standardize as SD
 
-    did = F.col("doc_id")
-    n1, n2, n3 = did % 30, (did * 7) % 30, (did * 11) % 30
-
-    def ent(n, base):
-        return F.struct(
-            F.concat(F.lit("organism-"), n.cast("string")).alias("name"),
-            F.concat(F.lit("tax:"), (base + n).cast("string")).alias("identifier"),
-        )
-
-    s3 = F.struct(
-        F.concat(F.lit("taxon-"), n3.cast("string")).alias("name"),
-        F.concat(F.lit("tax:"), (3000 + n3).cast("string")).alias("identifier"),
-    )
-    empty = "array<struct<name:string,identifier:string>>"
+    species, agents = _species_columns(F.col("doc_id"))
     docs = t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.concat(
-            F.array(ent(n1, 1000), ent(n2, 1000)),
-            F.when(did % 4 == 0, F.array(s3)).otherwise(F.array().cast(empty)),
-        ).alias("species"),
-        F.array(ent(n3, 1000)).alias("infectiousAgent"),
+        "doc_id", species.alias("species"), agents.alias("infectiousAgent"),
     )
-    lookup = spark.range(0, 24).select(
-        F.concat(F.lit("organism-"), F.col("id").cast("string")).alias("name_lc"),
-        F.concat(F.lit("taxon-"), F.col("id").cast("string")).alias("std_name"),
-        F.concat(F.lit("tax:"), (2000 + F.col("id")).cast("string")).alias("std_identifier"),
-        F.when(F.col("id") % 3 == 0, F.lit("infectiousAgent")).otherwise(F.lit("host")).alias("classification"),
-    )
-    out = SD.reclassify_species(docs, lookup)
+    out = SD.reclassify_species(docs, _species_lookup(spark))
     render = lambda c: F.array_join(  # noqa: E731
         F.transform(c, lambda x: F.concat(x.getField("name"), F.lit("|"), x.getField("identifier"))),
         ",",
@@ -1312,35 +1351,15 @@ def enrich_drop_rules(spark, sf_dir):
     from .operators import lineage as LN
     from .operators import standardize as SD
 
-    tax = spark.range(1, 201).select(
-        F.col("id").cast("int").alias("taxon"),
-        F.when(F.col("id") == 1, F.lit(None))
-        .otherwise(F.greatest(F.floor(F.col("id") / 7), F.lit(1)))
-        .cast("int")
-        .alias("parent_taxon"),
-    )
-    closure = LN.taxonomy_closure(tax)
-    did = F.col("doc_id")
-    tids = [(1 + did % 200), (1 + (did * 3) % 200), (1 + (did * 11) % 200)]
-    ents = []
-    for pos, tid in enumerate(tids):
-        name = (
-            F.when((did % 9 == 0) & (F.lit(pos) == 1), F.lit("china"))
-            .otherwise(F.concat(F.lit("ent-"), tid.cast("string")))
+    closure = LN.taxonomy_closure(_hub_taxonomy(spark))
+    ents = [
+        t(spark, sf_dir, "documents").select(
+            "doc_id", F.lit(pos).alias("pos"), name.alias("name"), taxid.alias("taxid"),
         )
-        ents.append(
-            t(spark, sf_dir, "documents").select(
-                "doc_id", F.lit(pos).alias("pos"),
-                name.alias("name"), tid.cast("int").alias("taxid"),
-            )
-        )
-    entities = ents[0].unionByName(ents[1]).unionByName(ents[2])
-    rules = [
-        {"name": "china", "id": 3034371, "ignore_children": False},
-        {"name": "clade-3", "id": 3, "ignore_children": True},
-        {"name": "ent-50", "id": 50, "ignore_children": False},
+        for pos, (name, taxid) in enumerate(_ner_entities(F.col("doc_id")))
     ]
-    kept = SD.apply_drop_rules(entities, rules, closure)
+    entities = ents[0].unionByName(ents[1]).unionByName(ents[2])
+    kept = SD.apply_drop_rules(entities, _NER_RULES, closure)
     return kept.groupBy("doc_id").agg(
         F.count("*").cast("int").alias("n_kept"),
         F.array_join(
@@ -1822,27 +1841,8 @@ def _uploader_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         (did % 6).cast("int") + 1,
     )
     aent = lambda n: F.struct(n.alias("name"), F.lit(None).cast("string").alias("identifier"))  # noqa: E731
-    n1, n2, n3 = did % 30, (did * 7) % 30, (did * 11) % 30
-
-    def sent(n, base):
-        return F.struct(
-            F.concat(F.lit("organism-"), n.cast("string")).alias("name"),
-            F.concat(F.lit("tax:"), (base + n).cast("string")).alias("identifier"),
-        )
-
-    s3 = F.struct(
-        F.concat(F.lit("taxon-"), n3.cast("string")).alias("name"),
-        F.concat(F.lit("tax:"), (3000 + n3).cast("string")).alias("identifier"),
-    )
-    empty_ent = "array<struct<name:string,identifier:string>>"
-    tids = [(1 + did % 200), (1 + (did * 3) % 200), (1 + (did * 11) % 200)]
-    ner_entries = []
-    for pos, tid in enumerate(tids):
-        name = (
-            F.when((did % 9 == 0) & (F.lit(pos) == 1), F.lit("china"))
-            .otherwise(F.concat(F.lit("ent-"), tid.cast("string")))
-        )
-        ner_entries.append(F.struct(name.alias("name"), tid.cast("int").alias("taxid")))
+    species, agents = _species_columns(did)
+    ner = _ner_entities(did)
     url = F.when(did % 23 == 0, F.lit(None).cast("string")).otherwise(
         F.concat(F.lit("https://"), real_source, F.lit(".example.org/rec/"), did.cast("string"))
     )
@@ -1867,13 +1867,11 @@ def _uploader_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
         )).alias("includedInDataCatalog"),
         doi.alias("doi"),
         F.array(aent(F.concat(F.lit("Author-"), (did % 40).cast("string"))), aent(a2name)).alias("author"),
-        F.concat(
-            F.array(sent(n1, 1000), sent(n2, 1000)),
-            F.when(did % 4 == 0, F.array(s3)).otherwise(F.array().cast(empty_ent)),
-        ).alias("species"),
-        F.array(sent(n3, 1000)).alias("infectiousAgent"),
-        F.array_distinct(F.array(tids[0].cast("int"), tids[1].cast("int"))).alias("taxids"),
-        F.array(*ner_entries).alias("ner"),
+        species.alias("species"),
+        agents.alias("infectiousAgent"),
+        F.array_distinct(F.array(ner[0][1], ner[1][1])).alias("taxids"),
+        F.array(*[F.struct(name.alias("name"), taxid.alias("taxid")) for name, taxid in ner])
+        .alias("ner"),
         F.when(did % 5 == 0, F.lit(None).cast("string"))
         .otherwise(F.concat(F.lit("grant:"), ((did * 3) % 89).cast("string"))).alias("funding_id"),
         # (did*13+1) flips parity vs did%500, so EVERY pmid-family source
@@ -1919,28 +1917,10 @@ def _uploader_lookups(spark: SparkSession):
         del _UPLOADER_LOOKUP_CACHE[key]
     from .operators import lineage as LN
 
-    species_lookup = spark.range(0, 24).select(
-        F.concat(F.lit("organism-"), F.col("id").cast("string")).alias("name_lc"),
-        F.concat(F.lit("taxon-"), F.col("id").cast("string")).alias("std_name"),
-        F.concat(F.lit("tax:"), (2000 + F.col("id")).cast("string")).alias("std_identifier"),
-        F.when(F.col("id") % 3 == 0, F.lit("infectiousAgent")).otherwise(F.lit("host")).alias("classification"),
-    )
-    tax = spark.range(1, 201).select(
-        F.col("id").cast("int").alias("taxon"),
-        F.when(F.col("id") == 1, F.lit(None))
-        .otherwise(F.greatest(F.floor(F.col("id") / 7), F.lit(1)))
-        .cast("int")
-        .alias("parent_taxon"),
-    )
     # the closure is a bounded dim consumed by TWO registry stages
     # (lineage + drop rules) and by both the registry and pipeline
     # queries — cache it so the iterative build runs once per session
-    closure = LN.taxonomy_closure(tax).cache()
-    ner_rules = [
-        {"name": "china", "id": 3034371, "ignore_children": False},
-        {"name": "clade-3", "id": 3, "ignore_children": True},
-        {"name": "ent-50", "id": 50, "ignore_children": False},
-    ]
+    closure = LN.taxonomy_closure(_hub_taxonomy(spark)).cache()
     funding_lookup = spark.range(0, 89).select(
         F.concat(F.lit("grant:"), F.col("id").cast("string")).alias("funding_id"),
         F.concat(F.lit("funder-"), (F.col("id") % 7).cast("string")).alias("funder_name"),
@@ -1980,9 +1960,9 @@ def _uploader_lookups(spark: SparkSession):
         )
     )
     lookups = {
-        "species_lookup": species_lookup,
+        "species_lookup": _species_lookup(spark),
         "closure": closure,
-        "ner_rules": ner_rules,
+        "ner_rules": _NER_RULES,
         "funding_lookup": funding_lookup,
         "pmid_lookup": pmid_lookup,
         "mt_lookup": mt_lookup,

@@ -64,7 +64,6 @@ class UploaderSpec:
     sequence; the boolean flags are what ``run_uploader`` dispatches on
     (stage kinds touch disjoint columns, so kind-wise dispatch preserves
     the per-source chain semantics)."""
-    family: str = "default"
     promote_doi: bool = False            # zenodo-style doi -> _id
     placeholder_fields: tuple[str, ...] = ()  # wrapper drop_placeholder_terms
     reclassify: bool = False             # pubtator species/agent standardization
@@ -191,7 +190,6 @@ def _spec(name: str, wrapped: bool, chain: str) -> UploaderSpec:
         # own load_data inherit the wrapped base, nde.py:119-127); the
         # `wrapped` param is kept so a hypothetical bare uploader still
         # round-trips through the spec builder.
-        family=("bare" if not wrapped else "zenodo" if name == "zenodo" else "standard"),
         promote_doi=(name == "zenodo"),
         placeholder_fields=("author",) if wrapped else (),
         reclassify="recl" in s,
@@ -210,7 +208,6 @@ def _spec(name: str, wrapped: bool, chain: str) -> UploaderSpec:
 UPLOADERS: dict[str, UploaderSpec] = {
     name: _spec(name, wrapped, chain) for name, (wrapped, chain) in _CHAINS.items()
 }
-DEFAULT_SPEC = UploaderSpec()
 
 # The oracle fixtures carry 20 synthetic sources (src0..src19 in the
 # documents table); they are mapped 1:1 onto these 20 REAL uploader
@@ -460,11 +457,9 @@ def run_uploader(
             ).otherwise(F.col(c)),
         )
 
+    # an unregistered source gets the default chain, which casefolds
     folds = _family(reg, lambda sp: sp.casefold_id)
-    if DEFAULT_SPEC.casefold_id:
-        unknown_is_folded = ~_in_family(source_col, sorted(reg)) | _in_family(source_col, folds)
-    else:
-        unknown_is_folded = _in_family(source_col, folds)
+    unknown_is_folded = ~_in_family(source_col, sorted(reg)) | _in_family(source_col, folds)
     out = out.withColumn(
         "_id", F.when(unknown_is_folded, W.casefold_id(F.col("_id"))).otherwise(F.col("_id"))
     )

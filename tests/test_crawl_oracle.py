@@ -5,6 +5,7 @@ partitioning configurations."""
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import shutil
@@ -15,11 +16,12 @@ import tempfile
 import pytest
 from pyspark.sql import functions as F
 
+from nde_crawlers_spark.operators import frontier as FR
 from nde_crawlers_spark.operators import seen as SN
 from nde_crawlers_spark.plans import crawl as CR
 from nde_crawlers_spark.plans.crawl import CrawlConfig, CrawlRun
 from nde_crawlers_spark.plans.oracle import crawl_oracle
-from nde_crawlers_spark.sources.synthetic import make_seeds
+from nde_crawlers_spark.sources.synthetic import make_seeds, synth_fetch
 
 N_SEEDS, N_HOSTS, ROUNDS = 80, 10, 3
 
@@ -31,7 +33,8 @@ def oracle():
 
 @pytest.fixture(scope="module")
 def one_core_crawl(tmp_path_factory):
-    """The oracle scenario crawled by a separate local[1] process. It
+    """The oracle scenario crawled by a separate local[1] process,
+    through a failed round-1 write and a resume. It
     starts with the module's first test and runs alongside the others;
     test_crawl_at_one_core_matches_oracle waits for it."""
     d = tmp_path_factory.mktemp("local1")
@@ -197,7 +200,7 @@ def test_crawl_bloom_segments_equal_full_rebuild(spark, default_run, oracle):
     rebuilt = {
         r["seg"]: (r["bits"], r["nbits"], r["nhashes"])
         for r in SN.build_bloom_segments(
-            run.seen().select("url_hash"), nseg=cfg.bloom_segments, expected=cfg.bloom_expected,
+            run.seen().select("url_hash"), nseg=SN.FILTER_SEGMENTS, expected=SN.FILTER_CAPACITY,
         ).collect()
     }
     assert committed == rebuilt
@@ -439,18 +442,18 @@ def test_round_fault_at_every_write_resumes_exactly(spark, default_run, default_
     assert got == meta
 
 
-def test_crawl_order_independent_of_partitioning(spark, oracle):
+def test_crawl_order_independent_of_partitioning(spark, oracle, monkeypatch):
     """Same crawl at a different shuffle-partition count, salt factor and
     bloom prefilter: byte-identical ordering/seen/docs — the in-session
     proxy for N-vs-4N executor determinism (the two-process local[1]
     run is test_crawl_at_one_core_matches_oracle)."""
+    monkeypatch.setattr(FR, "topk_per_host", functools.partial(FR.topk_per_host, salt_factor=3))
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
         spark.conf.set("spark.sql.shuffle.partitions", "5")
         run = CrawlRun(
             spark, tempfile.mkdtemp(prefix="crawl_p_"),
-            CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=ROUNDS,
-                        salt_factor=3),
+            CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=ROUNDS),
         )
         run.run(seeds=_seed_df(spark))
         _check_against_oracle(run, oracle)
@@ -474,7 +477,8 @@ def test_retry_after_cooldown_matches_oracle(spark):
 
     run = CrawlRun(
         spark, tempfile.mkdtemp(prefix="crawl_ra_"),
-        CrawlConfig(num_hosts=10, round_seconds=4, max_rounds=6, max_attempts=1),
+        CrawlConfig(num_hosts=10, round_seconds=4, max_rounds=6,
+                    fetcher=lambda u: synth_fetch(u, 10, max_attempts=1)),
     )
     run.run(seeds=spark.createDataFrame(
         [(s["url"], s["priority"]) for s in seeds], ["url", "priority"]))
@@ -489,7 +493,7 @@ def test_retry_after_cooldown_matches_oracle(spark):
     assert hs.filter(hs.next_allowed_round > 0).count() > 0
 
 
-def test_autothrottle_adapts_budgets(spark):
+def test_autothrottle_adapts_budgets(spark, monkeypatch):
     """AutoThrottle wired into the LIVE scheduler (r4 task 1): after a
     crawl, systematically slow hosts (synth_latency_ms host bias) carry
     a larger adapted delay than fast hosts, and feeding the committed
@@ -498,7 +502,6 @@ def test_autothrottle_adapts_budgets(spark):
     host with a real crawl-delay keeps its budget unchanged. The crawl
     itself stays oracle-exact with autothrottle ON (the latencies are
     corpus data, not wall-clock)."""
-    from nde_crawlers_spark.operators import frontier as FR
     from nde_crawlers_spark.sources.synthetic import _frac, robots_rules
 
     n_hosts, n_seeds = 20, 160
@@ -512,8 +515,8 @@ def test_autothrottle_adapts_budgets(spark):
     orc = crawl_oracle(seeds, n_hosts, round_seconds=2, max_rounds=2,
                        at_start_delay_ms=None)
     d = tempfile.mkdtemp(prefix="crawl_at_")
-    cfg = CrawlConfig(num_hosts=n_hosts, round_seconds=2, max_rounds=2,
-                      at_start_delay_ms=None)
+    monkeypatch.setattr(FR, "AT_START_DELAY_MS", FR.AT_BASE_DELAY_MS)
+    cfg = CrawlConfig(num_hosts=n_hosts, round_seconds=2, max_rounds=2)
     assert cfg.autothrottle  # autothrottle is the shipped default
     run = CrawlRun(spark, d, cfg)
     run.run(seeds=spark.createDataFrame(
@@ -558,9 +561,9 @@ def test_autothrottle_adapts_budgets(spark):
             assert with_at[h] == plain[h], f"fast host {h} budget changed"
 
 
-def test_crawl_bloom_adapts_to_seen_growth(spark, oracle):
+def test_crawl_bloom_adapts_to_seen_growth(spark, oracle, monkeypatch):
     """Adaptive segment sizing: with a deliberately-undersized
-    ``bloom_expected``, the committed key count outgrows the persisted
+    ``SN.FILTER_CAPACITY``, the committed key count outgrows the persisted
     bit arrays mid-crawl and the round commit REBUILDS (larger nbits,
     2x-headroom sizing) instead of OR-ing into a saturating filter. The
     final table must still equal a from-scratch build at the adaptive
@@ -570,8 +573,9 @@ def test_crawl_bloom_adapts_to_seen_growth(spark, oracle):
     # nseg=2 keeps per-segment counts above _seg_params' 64-key floor,
     # so the growing seen set genuinely outgrows the round-0 sizing and
     # the fpp budget forces a resize rebuild mid-crawl.
-    cfg = CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=ROUNDS,
-                      bloom_expected=32, bloom_segments=2)
+    monkeypatch.setattr(SN, "FILTER_CAPACITY", 32)
+    monkeypatch.setattr(SN, "FILTER_SEGMENTS", 2)
+    cfg = CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=ROUNDS)
     run = CrawlRun(spark, d, cfg)
     run.run(seeds=_seed_df(spark))
     _check_against_oracle(run, oracle)
@@ -591,7 +595,7 @@ def test_crawl_bloom_adapts_to_seen_growth(spark, oracle):
     # every committed geometry satisfies the fpp budget for its own
     # committed key count (the adaptive guarantee)
     for (nseg, nbits, _k), tot in zip(sizes, totals):
-        need_nbits, _ = SN._seg_params(max(cfg.bloom_expected, tot), nseg, SN.BLOOM_FPP)
+        need_nbits, _ = SN._seg_params(max(SN.FILTER_CAPACITY, tot), nseg, SN.BLOOM_FPP)
         assert nbits >= need_nbits, (nbits, need_nbits, tot)
     # final table == full rebuild at the adaptive size it was born with
     last = rounds[-1]
@@ -604,27 +608,27 @@ def test_crawl_bloom_adapts_to_seen_growth(spark, oracle):
     rebuilt = {
         r["seg"]: (r["bits"], r["nseg"], r["nbits"], r["nhashes"])
         for r in SN.build_bloom_segments(
-            run.seen().select("url_hash"), nseg=cfg.bloom_segments,
+            run.seen().select("url_hash"), nseg=SN.FILTER_SEGMENTS,
             sizing=(sizes[-1][1], sizes[-1][2]),
         ).collect()
     }
     assert committed == rebuilt
 
 
-def test_crawl_bloom_nseg_change_on_resume_rebuilds(spark, oracle):
+def test_crawl_bloom_nseg_change_on_resume_rebuilds(spark, oracle, monkeypatch):
     """The r4 ADVICE resume hazard: a resume under a DIFFERENT
-    bloom_segments must not probe the old table with new-config routing
+    SN.FILTER_SEGMENTS must not probe the old table with new-config routing
     (bloom false negatives -> re-enqueued seen URLs). The persisted
     geometry makes probes route by the table's own nseg, and the next
     commit rebuilds under the new config — crawl stays oracle-exact
     and the final table carries the new segment count."""
     d = tempfile.mkdtemp(prefix="crawl_nseg_")
-    cfg1 = CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=1,
-                       bloom_segments=16)
+    monkeypatch.setattr(SN, "FILTER_SEGMENTS", 16)
+    cfg1 = CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=1)
     CrawlRun(spark, d, cfg1).run(seeds=_seed_df(spark))
 
-    cfg2 = CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=ROUNDS,
-                       bloom_segments=4)
+    monkeypatch.setattr(SN, "FILTER_SEGMENTS", 4)
+    cfg2 = CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=ROUNDS)
     run2 = CrawlRun(spark, d, cfg2)
     run2.run(resume=True)
     _check_against_oracle(run2, oracle)
@@ -640,16 +644,14 @@ def test_autothrottle_fast_host_budget_grows_from_start_delay(spark):
     its with_host_budget output GROWS back to the politeness budget —
     while a slow host stays pinned near 1. The crawl remains
     oracle-exact with the same start parameter."""
-    from nde_crawlers_spark.operators import frontier as FR
     from nde_crawlers_spark.sources.synthetic import robots_rules
 
     n_hosts, n_seeds = 20, 240
     seeds = make_seeds(n_seeds, n_hosts)
     orc = crawl_oracle(seeds, n_hosts, round_seconds=2, max_rounds=2,
-                       at_start_delay_ms=5000.0)
+                       at_start_delay_ms=FR.AT_START_DELAY_MS)
     d = tempfile.mkdtemp(prefix="crawl_sd_")
-    cfg = CrawlConfig(num_hosts=n_hosts, round_seconds=2, max_rounds=2,
-                      at_start_delay_ms=5000.0)
+    cfg = CrawlConfig(num_hosts=n_hosts, round_seconds=2, max_rounds=2)
     run = CrawlRun(spark, d, cfg)
     run.run(seeds=spark.createDataFrame(
         [(s["url"], s["priority"]) for s in seeds], ["url", "priority"]))
@@ -690,7 +692,7 @@ def test_autothrottle_fast_host_budget_grows_from_start_delay(spark):
         assert at[h] > 1000.0, (h, at[h])
 
 
-def test_crawl_cuckoo_seen_filter_matches_oracle(spark, oracle):
+def test_crawl_cuckoo_seen_filter_matches_oracle(spark, oracle, monkeypatch):
     """The crawl's membership prefilter is pluggable (north rule:
     'partitioned cuckoo/bloom URL-seen filter'): with
     seen_filter='cuckoo' the rounds maintain per-segment cuckoo tables
@@ -701,8 +703,10 @@ def test_crawl_cuckoo_seen_filter_matches_oracle(spark, oracle):
     from nde_crawlers_spark.operators import cuckoo as CK
 
     d = tempfile.mkdtemp(prefix="crawl_ck_")
+    monkeypatch.setattr(SN, "FILTER_SEGMENTS", 8)
+    monkeypatch.setattr(SN, "FILTER_CAPACITY", 4096)
     cfg = CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=ROUNDS,
-                      seen_filter="cuckoo", bloom_segments=8, bloom_expected=4096)
+                      seen_filter="cuckoo")
     run = CrawlRun(spark, d, cfg)
     run.run(seeds=_seed_df(spark))
     _check_against_oracle(run, oracle)
@@ -719,7 +723,7 @@ def test_crawl_cuckoo_seen_filter_matches_oracle(spark, oracle):
     assert not os.path.isdir(os.path.join(d, f"round={last:04d}", "bloom_segments"))
 
 
-def test_crawl_recrawl_ttl_in_loop(spark):
+def test_crawl_recrawl_ttl_in_loop(spark, monkeypatch):
     """TTL recrawl INSIDE the crawl loop (cfg.recrawl_ttl_rounds, the
     figshare EXPIRE analog): keys seen >= ttl rounds ago leave the
     active seen set and their fingerprints are evicted from the
@@ -764,13 +768,14 @@ def test_crawl_recrawl_ttl_in_loop(spark):
         [(f"https://h{i % HOSTS}.example.org/records/{i}", 0) for i in range(4)],
         ["url", "priority"],
     )
+    monkeypatch.setattr(SN, "FILTER_SEGMENTS", 4)
+    monkeypatch.setattr(SN, "FILTER_CAPACITY", 2048)
     results = {}
     for mode, extra in (("snapshot", {}), ("delta", {"frontier_deltas": True})):
         d = tempfile.mkdtemp(prefix=f"crawl_ttl_{mode}_")
         cfg = CrawlConfig(
             num_hosts=HOSTS, round_seconds=2, max_rounds=ROUNDS_TTL,
-            seen_filter="cuckoo", bloom_segments=4, bloom_expected=2048,
-            recrawl_ttl_rounds=TTL, autothrottle=False,
+            seen_filter="cuckoo", recrawl_ttl_rounds=TTL, autothrottle=False,
             fetcher=RingFetcher(), **extra,
         )
         run = CrawlRun(spark, d, cfg)
@@ -879,30 +884,56 @@ def test_ttl_requeue_never_fetches_twice(spark):
 
 
 def _crawl_invariants_at(cores: int, out_path: str) -> None:
-    """Run the oracle scenario in a new session on ``cores`` cores and
-    write its order, seen set and docs to ``out_path`` as JSON."""
+    """Run the oracle scenario in a new session on ``cores`` cores,
+    interrupted: round 0, then a resume whose round-1 ``fetched`` write
+    fails, then a resume to the full horizon by a fresh run. Write the
+    order, seen set and docs, and whether the failed round committed,
+    to ``out_path`` as JSON."""
     from nde_crawlers_spark.session import get_spark
 
     spark = get_spark(app_name="nde-tests-cores", cores=cores)
     spark.sparkContext.setLogLevel("ERROR")
-    run = CrawlRun(
-        spark, tempfile.mkdtemp(prefix="crawl_c_"),
-        CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=ROUNDS),
-    )
-    run.run(seeds=_seed_df(spark))
+    d = tempfile.mkdtemp(prefix="crawl_c_")
+
+    def cfg(max_rounds: int) -> CrawlConfig:
+        return CrawlConfig(num_hosts=N_HOSTS, round_seconds=2, max_rounds=max_rounds)
+
+    CrawlRun(spark, d, cfg(1)).run(seeds=_seed_df(spark))
+    failing = CrawlRun(spark, d, cfg(ROUNDS))
+    write = failing._write
+
+    def _write(df, r, name):
+        if r == 1 and name == "fetched":
+            raise RuntimeError("injected fetched write failure")
+        write(df, r, name)
+
+    failing._write = _write
+    try:
+        failing.run(resume=True)
+    except RuntimeError as e:
+        if "injected" not in str(e):
+            raise
+    failed_round_committed = os.path.exists(os.path.join(d, "round=0001", "_COMMIT"))
+
+    run = CrawlRun(spark, d, cfg(ROUNDS))
+    run.run(resume=True)
     order, seen, docs = _invariants(run)
     with open(out_path, "w") as f:
-        json.dump({"order": order, "seen": sorted(seen), "docs": docs}, f)
+        json.dump({"order": order, "seen": sorted(seen), "docs": docs,
+                   "failed_round_committed": failed_round_committed}, f)
     spark.stop()
 
 
 def test_crawl_at_one_core_matches_oracle(oracle, one_core_crawl):
     """N-vs-4N determinism across processes: the oracle scenario in a
-    separate local[1] session (one shuffle partition) gives the oracle's
-    order, seen set and docs, which the local[16] runs above also give."""
+    separate local[1] session (one shuffle partition), resumed after a
+    failed round-1 write that left the round uncommitted, gives the
+    oracle's order, seen set and docs, which the local[16] runs above
+    also give."""
     proc, out, log = one_core_crawl
     assert proc.wait(timeout=900) == 0, log.read_text()[-4000:]
     got = json.loads(out.read_text())
+    assert not got["failed_round_committed"]
     assert [tuple(o) for o in got["order"]] == sorted(oracle.order)
     assert set(got["seen"]) == oracle.seen
     assert {k: [tuple(s) for s in v] for k, v in got["docs"].items()} == {

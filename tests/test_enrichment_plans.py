@@ -204,7 +204,6 @@ def test_uploader_plan_scans_independent_of_sources(spark):
     doubled = dict(UPLOADERS)
     for i in range(60):  # +60 synthetic sources across every stage kind
         doubled[f"extra{i}"] = UploaderSpec(
-            family="mixed",
             promote_doi=(i % 3 == 0),
             placeholder_fields=("author",) if i % 3 == 1 else (),
             reclassify=(i % 5 == 0),

@@ -487,7 +487,7 @@ def test_taxonomy_closure_depth50_checkpointed(spark):
     tax = spark.createDataFrame(
         [(1, None)] + [(i, i - 1) for i in range(2, 51)], "taxon int, parent_taxon int"
     )
-    closure = taxonomy_closure(tax, checkpoint_every=16)
+    closure = taxonomy_closure(tax)
     rows = closure.collect()
     # taxon 50's lineage = itself + 49 ancestors
     fifty = [r for r in rows if r["taxon"] == 50]
