@@ -208,9 +208,11 @@ def incremental_minhash_pairs(
 
 
 def simhash16_agg(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, simhash) via explode -> groupBy bit-vote aggregation —
-    semantically identical to functions/text.py::simhash16 but codegen'd
-    (see minhash_signatures_agg for why). Docs with no tokens get 0."""
+    """(id, simhash), one row per distinct id, via outer explode ->
+    groupBy bit-vote aggregation — semantically identical to
+    functions/text.py::simhash16 but codegen'd (see
+    minhash_signatures_agg for why). A doc with no tokens explodes to
+    one NULL token, which votes -1 on every bit: simhash 0."""
     # md5 projected ONCE per token before the groupBy: aggregate-side
     # subexpression elimination is version-dependent, and 16 md5 calls
     # per token is the difference between hash-bound and scan-bound.
@@ -220,7 +222,7 @@ def simhash16_agg(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
     # bit 4*(8-d) (resp. 4*(16-d)) of the half, the identical boolean.
     ex = spread(docs).select(
         F.col(id_col).alias("id"),
-        F.explode(TX.tokens(F.col(text_col))).alias("t"),
+        F.explode_outer(TX.tokens(F.col(text_col))).alias("t"),
     ).select("id", F.md5("t").alias("h")).select(
         "id",
         F.expr("cast(conv(substring(h, 1, 8), 16, 10) as bigint)").alias("h1"),
@@ -242,11 +244,7 @@ def simhash16_agg(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
     sh = " + ".join(
         f"(case when v{b} > 0 then {1 << b} else 0 end)" for b in range(16)
     )
-    sig = agg.select("id", F.expr(f"cast(0 + {sh} as int) as simhash"))
-    ids = docs.select(F.col(id_col).alias("id"))
-    return ids.join(sig, "id", "left").select(
-        "id", F.coalesce(F.col("simhash"), F.lit(0)).alias("simhash")
-    )
+    return agg.select("id", F.expr(f"cast(0 + {sh} as int) as simhash"))
 
 
 SIMHASH64_BITS = 63  # bits 0..62: stays positive in signed int64, so the
@@ -254,9 +252,10 @@ SIMHASH64_BITS = 63  # bits 0..62: stays positive in signed int64, so the
 
 
 def simhash64_agg(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, simhash) with a 63-bit fingerprint: bit b of token t is bit
-    (b%4) of md5 hex digit (b//4 + 1); document bit = sign of the vote
-    sum. Same explode->aggregate shape as simhash16_agg."""
+    """(id, simhash) with a 63-bit fingerprint, one row per distinct id:
+    bit b of token t is bit (b%4) of md5 hex digit (b//4 + 1); document
+    bit = sign of the vote sum. Same outer explode->aggregate shape as
+    simhash16_agg, so a doc with no tokens gets 0."""
     # hash-once discipline: md5(t) is projected before the groupBy so the
     # 63 vote aggregates share one hash per token instead of evaluating
     # md5 63 times (round-1 bench: this was the hottest headline query).
@@ -267,7 +266,7 @@ def simhash64_agg(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
     # string ops per token per bit.
     ex = spread(docs).select(
         F.col(id_col).alias("id"),
-        F.explode(TX.tokens(F.col(text_col))).alias("t"),
+        F.explode_outer(TX.tokens(F.col(text_col))).alias("t"),
     ).select("id", F.md5("t").alias("h")).select(
         "id",
         F.expr("cast(conv(substring(h, 1, 8), 16, 10) as bigint)").alias("h1"),
@@ -291,11 +290,7 @@ def simhash64_agg(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
         f"else cast(0 as bigint) end)"
         for b in range(SIMHASH64_BITS)
     )
-    sig = agg.select("id", F.expr(f"cast(0 as bigint) + {sh}").alias("simhash"))
-    ids = docs.select(F.col(id_col).alias("id"))
-    return ids.join(sig, "id", "left").select(
-        "id", F.coalesce(F.col("simhash"), F.lit(0).cast("long")).alias("simhash")
-    )
+    return agg.select("id", F.expr(f"cast(0 as bigint) + {sh}").alias("simhash"))
 
 
 def simhash64_hamming_pairs(

@@ -54,20 +54,27 @@ AT_START_DELAY_MS = 5000.0
 
 
 def robots_filter(candidates: DataFrame, robots: DataFrame) -> DataFrame:
-    """Drop URLs whose path starts with a disallowed prefix for its host.
+    """Drop URLs that robots.txt disallows for their host, by
+    operators/robots.py::is_allowed's rule: the longest matching prefix
+    wins, and Allow wins a tie.
 
-    ``robots(host, disallow_prefixes, crawl_delay_ms)`` is small (one row
-    per host) -> broadcast join, mirroring the reference's broadcast of
-    lookup dicts to pool workers (utils/pubtator.py:947-951). Hosts with
-    no robots row are allowed (reference defaults open unless disallowed).
+    ``robots(host, disallow_prefixes, allow_prefixes, crawl_delay_ms)``
+    is small (one row per host) -> broadcast join, mirroring the
+    reference's broadcast of lookup dicts to pool workers
+    (utils/pubtator.py:947-951). Hosts with no robots row are allowed
+    (reference defaults open unless disallowed), and a NULL prefix array
+    reads as empty.
     """
-    r = F.broadcast(robots.select("host", "disallow_prefixes"))
+    r = F.broadcast(robots.select("host", "disallow_prefixes", "allow_prefixes"))
     joined = candidates.join(r, on="host", how="left")
-    disallowed = F.exists(
-        F.coalesce(F.col("disallow_prefixes"), F.array().cast("array<string>")),
-        lambda p: F.col("path").startswith(p),
-    )
-    return joined.filter(~disallowed).drop("disallow_prefixes")
+
+    def longest(prefixes: str) -> Column:
+        # -1 when no prefix matches, also for a NULL array
+        hits = F.filter(F.col(prefixes), lambda p: F.col("path").startswith(p))
+        return F.coalesce(F.array_max(F.transform(hits, F.length)), F.lit(-1))
+
+    allowed = longest("allow_prefixes") >= longest("disallow_prefixes")
+    return joined.filter(allowed).drop("disallow_prefixes", "allow_prefixes")
 
 
 def with_host_budget(
@@ -142,7 +149,6 @@ def topk_per_host(
     df: DataFrame,
     k_col: str = "host_budget",
     salt_factor: int = 8,
-    skew_threshold: int = 100_000,
 ) -> DataFrame:
     """Deterministic top-k per host by (priority, seq, url_hash).
 

@@ -15,10 +15,10 @@ Spark-first shape — the key scale decision is WHERE the iteration runs:
   handful of self-joins materialize the ancestors-or-self relation
   (taxon, member, member_parent) once. Cost is independent of corpus
   size.
-- ``expand_lineage`` is then ONE broadcast join from the exploded
-  (doc, taxid) pairs to the closure, a regroup, and a sorted-distinct
-  collect into ``_meta.lineage``. One shuffle on doc id, no per-doc
-  recursion anywhere near the data.
+- ``expand_lineage`` is then ONE broadcast left join from the outer-
+  exploded (doc, taxid) pairs to the closure, a regroup, and a
+  sorted-distinct collect into ``_meta.lineage``. One shuffle on doc id,
+  no join back, no per-doc recursion anywhere near the data.
 - ``ancestor_removal`` reuses the same closure: an entry is dropped iff
   it is a PROPER ancestor of another entry in the same record — one
   join + one anti-join, both on (doc, taxid).
@@ -95,32 +95,23 @@ def expand_lineage(
     taxids_col: str = "taxids",
     id_col: str = "doc_id",
 ) -> DataFrame:
-    """Annotate docs with ``_meta_lineage``: the sorted-distinct union of
-    lineage entries (taxon, parent_taxon) over every taxid the doc
-    carries (lineage.py:234-252 _annotate_record). Docs whose taxids hit
-    nothing in the taxonomy get an empty array.
+    """-> (id, ``_meta_lineage``): the sorted-distinct union of lineage
+    entries (taxon, parent_taxon) over every taxid the doc carries
+    (lineage.py:234-252 _annotate_record), one row per distinct id. Docs
+    whose taxids hit nothing in the taxonomy get an empty array.
 
-    Plan: explode -> broadcast join to the closure -> regroup on doc id.
+    Plan: outer explode -> broadcast left join to the closure -> regroup
+    on doc id; a doc with no hit keeps its row and collects nothing.
     """
     ex = docs.select(F.col(id_col), F.explode_outer(taxids_col).alias("taxon"))
-    hits = ex.join(F.broadcast(closure), "taxon")
-    entries = (
-        hits.select(
-            id_col,
-            F.struct(
-                F.col("member").alias("taxon"),
-                F.col("member_parent").alias("parent_taxon"),
-            ).alias("e"),
-        )
-        .groupBy(id_col)
-        .agg(F.array_sort(F.array_distinct(F.collect_list("e"))).alias("_meta_lineage"))
+    hits = ex.join(F.broadcast(closure), "taxon", "left")
+    e = F.struct(
+        F.col("member").alias("taxon"), F.col("member_parent").alias("parent_taxon")
     )
-    return docs.join(entries, id_col, "left").withColumn(
-        "_meta_lineage",
-        F.coalesce(
-            F.col("_meta_lineage"),
-            F.array().cast("array<struct<taxon:int,parent_taxon:int>>"),
-        ),
+    return hits.groupBy(id_col).agg(
+        F.array_sort(
+            F.array_distinct(F.collect_list(F.when(F.col("member").isNotNull(), e)))
+        ).alias("_meta_lineage")
     )
 
 

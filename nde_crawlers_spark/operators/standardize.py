@@ -20,13 +20,15 @@ misclassified entries between the two fields
 5. each side is deduplicated by identifier keeping the FIRST occurrence
    in combined order (pubtator.py:865-875).
 
-Spark shape: one posexplode per side -> ONE broadcast join against the
-lookup (it is the reference's in-memory dict, megabytes at most) -> ONE
-groupBy(doc id) collecting the standardized entries -> the re-split,
+Spark shape: one outer posexplode per side -> ONE broadcast join against
+the lookup (it is the reference's in-memory dict, megabytes at most) ->
+ONE groupBy(doc id) collecting the standardized entries -> the re-split,
 converted-name filter, and keep-first identifier dedup as ROW-LOCAL
 array expressions (per-doc entry lists are a handful of elements — the
-reference processes them as in-memory Python lists for the same reason)
--> one join back. Two shuffles total, both on doc id; no Python UDFs.
+reference processes them as in-memory Python lists for the same reason).
+The outer explode keeps a row for a doc with no entries, so the groupBy
+already yields every doc: one shuffle total, on doc id; no join back,
+no Python UDFs.
 (The round-2 form ran the converted-name filter as an anti-join and the
 keep-first dedup as a window — four more corpus shuffles for work that
 is per-document and tiny.)
@@ -83,18 +85,17 @@ def reclassify_species(
 ) -> DataFrame:
     """-> (id, species: array<struct<name,identifier>>, infectiousAgent:
     array<struct<name,identifier>>) after standardization, reclassification,
-    converted-name filtering, and keep-first identifier dedup. Entry
+    converted-name filtering, and keep-first identifier dedup: one row per
+    distinct id, with empty arrays for a doc without entries. Entry
     order within each output array is combined-list order."""
     def side(col: str, tag: int) -> DataFrame:
-        return (
-            docs.select(F.col(id_col), F.posexplode_outer(col).alias("pos", "e"))
-            .filter(F.col("e").isNotNull())
-            .select(
-                id_col,
-                (F.lit(tag * 100000) + F.col("pos")).alias("pos"),
-                F.col("e.name").alias("orig_name"),
-                F.col("e.identifier").alias("orig_ident"),
-            )
+        # pos is NULL on the outer row of a doc without entries and on a
+        # NULL entry: neither is collected, but the doc keeps its row
+        return docs.select(F.col(id_col), F.posexplode_outer(col).alias("pos", "e")).select(
+            id_col,
+            F.when(F.col("e").isNotNull(), F.lit(tag * 100000) + F.col("pos")).alias("pos"),
+            F.col("e.name").alias("orig_name"),
+            F.col("e.identifier").alias("orig_ident"),
         )
 
     comb = side(species_col, 0).unionByName(side(agent_col, 1))
@@ -126,7 +127,10 @@ def reclassify_species(
     per_doc = std.groupBy(id_col).agg(
         F.array_sort(
             F.collect_list(
-                F.struct("pos", "orig_name", "name", "identifier", "classification")
+                F.when(
+                    F.col("pos").isNotNull(),
+                    F.struct("pos", "orig_name", "name", "identifier", "classification"),
+                )
             )
         ).alias("__es")
     )
@@ -172,15 +176,8 @@ def reclassify_species(
             ),
         )
 
-    empty = "array<struct<name:string,identifier:string>>"
-    ids = docs.select(id_col)
-    out = per_doc.select(
+    return per_doc.select(
         id_col,
         rendered(species_all).alias(species_col),
         rendered(agents_all).alias(agent_col),
-    )
-    return ids.join(out, id_col, "left").select(
-        id_col,
-        F.coalesce(F.col(species_col), F.array().cast(empty)).alias(species_col),
-        F.coalesce(F.col(agent_col), F.array().cast(empty)).alias(agent_col),
     )

@@ -8,10 +8,12 @@ Implementation note: the semantic definitions live in functions/text.py
 as pure higher-order column expressions (and are mirrored 1:1 by the
 DuckDB oracle). Spark's higher-order lambdas are interpreted (no
 whole-stage codegen), which measured 10-50x slower at corpus scale, so
-the operators here compute the token-level parts through ONE
-explode -> groupBy aggregation (codegen'd, map-side combined) and join
-the per-doc stats back. Outputs are bit-identical to the column-kernel
-forms — verified by the oracle parity suite.
+the operators here compute the token-level parts through ONE outer
+explode -> groupBy aggregation (codegen'd, map-side combined), which
+yields one stats row per doc; only an operator that also needs row-local
+columns (analyze's text, quality_filter's docs) joins the stats to them.
+Outputs are bit-identical to the column-kernel forms — verified by the
+oracle parity suite.
 
 Reference analogs: HTML-strip + casefold + size-gate single pass
 (utils/utils.py:352-403), completeness scoring (utils/utils.py:265-349),
@@ -28,24 +30,19 @@ from ..functions import text as TX
 
 def token_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
     """One exploded aggregation: per-doc token count, per-language
-    stopword hits, English stopword hits. Docs with zero tokens get
-    all-zero rows (left join + fill)."""
+    stopword hits, English stopword hits, one row per distinct id. The
+    explode is outer, so a doc with zero tokens keeps one NULL token,
+    which counts and hits nothing: an all-zero row."""
     from .dedup import spread
 
-    ex = spread(docs).select(F.col(id_col), F.explode(TX.tokens(F.col(text_col))).alias("t"))
-    aggs = [F.count("*").alias("n_tokens")]
+    ex = spread(docs).select(F.col(id_col), F.explode_outer(TX.tokens(F.col(text_col))).alias("t"))
+    aggs = [F.count("t").alias("n_tokens")]
     for lang in TX.LANG_ORDER:
         aggs.append(
             F.sum(F.when(F.col("t").isin(*TX.LANG_STOPWORDS[lang]), 1).otherwise(0)).alias(f"s_{lang}")
         )
     aggs.append(F.sum(F.when(F.col("t").isin(*TX.EN_STOPWORDS), 1).otherwise(0)).alias("sw_hits"))
-    stats = ex.groupBy(id_col).agg(*aggs)
-    zero_cols = ["n_tokens", *[f"s_{lg}" for lg in TX.LANG_ORDER], "sw_hits"]
-    return (
-        docs.select(F.col(id_col))
-        .join(stats, id_col, "left")
-        .select(F.col(id_col), *[F.coalesce(F.col(c), F.lit(0)).alias(c) for c in zero_cols])
-    )
+    return ex.groupBy(id_col).agg(*aggs)
 
 
 def _lang_pred_from_stats() -> Column:

@@ -91,7 +91,7 @@ ROUND_TABLES: dict[str, T.StructType] = {
     "new_seen": _struct(("url_hash", T.StringType()), ("first_seen_round", T.IntegerType())),
     "robots_cache": _struct(
         ("host", T.StringType()), ("disallow_prefixes", T.ArrayType(T.StringType())),
-        ("crawl_delay_ms", T.IntegerType()),
+        ("allow_prefixes", T.ArrayType(T.StringType())), ("crawl_delay_ms", T.IntegerType()),
     ),
     "host_state": _struct(
         ("host", T.StringType()), ("fetched_total", T.LongType()), ("bytes_total", T.LongType()),
@@ -351,8 +351,9 @@ class CrawlRun:
                 rows = []
                 for h in pdf["host"]:
                     r = parse_robots_txt(robots_body(h))
-                    rows.append((h, r["disallow_prefixes"], r["crawl_delay_ms"]))
-                yield pd.DataFrame(rows, columns=["host", "disallow_prefixes", "crawl_delay_ms"])
+                    rows.append((h, r["disallow_prefixes"], r["allow_prefixes"],
+                                 r["crawl_delay_ms"]))
+                yield pd.DataFrame(rows, columns=ROUND_TABLES["robots_cache"].fieldNames())
 
         fetched = new_hosts.mapInPandas(_fetch_robots, schema=ROUND_TABLES["robots_cache"])
         return robots.unionByName(fetched)

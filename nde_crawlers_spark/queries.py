@@ -96,6 +96,7 @@ def _derived_robots(frontier: DataFrame) -> DataFrame:
     return hosts.select(
         "host",
         F.when(rb < 4, F.array(F.lit("/private/"))).otherwise(F.array().cast("array<string>")).alias("disallow_prefixes"),
+        F.array().cast("array<string>").alias("allow_prefixes"),
         F.when(dl < 2, F.lit(0)).when(dl >= 14, F.lit(2000)).otherwise(F.lit(500)).cast("int").alias("crawl_delay_ms"),
     )
 

@@ -278,7 +278,9 @@ def run_uploader(
     # ---- operator stages: one subset + one join per stage KIND --------
     # Subsets are carved from the ORIGINAL frame (stage inputs are
     # original columns), so stage plans stay independent and the base is
-    # scanned 1 + #operator-stage-kinds times total.
+    # scanned 1 + #operator-stage-kinds times total. The reclassify,
+    # lineage and pmid stages return one row per family doc, so a NULL
+    # after their join-back marks a doc outside the family.
     rs = _family(reg, lambda sp: sp.reclassify)
     if rs and species_lookup is not None and {"species", "infectiousAgent"} <= set(docs.columns):
         sub = docs.filter(_in_family(source_col, rs)).select(
@@ -289,13 +291,11 @@ def run_uploader(
             F.col("species").alias("__r_species"),
             F.col("infectiousAgent").alias("__r_agents"),
         )
-        in_f = _in_family(source_col, rs)
         out = (
             out.join(red, id_col, "left")
-            .withColumn("species", F.when(in_f, F.col("__r_species")).otherwise(F.col("species")))
+            .withColumn("species", F.coalesce(F.col("__r_species"), F.col("species")))
             .withColumn(
-                "infectiousAgent",
-                F.when(in_f, F.col("__r_agents")).otherwise(F.col("infectiousAgent")),
+                "infectiousAgent", F.coalesce(F.col("__r_agents"), F.col("infectiousAgent"))
             )
             .drop("__r_species", "__r_agents")
         )
@@ -308,12 +308,7 @@ def run_uploader(
         )
         out = (
             out.join(lin, id_col, "left")
-            .withColumn(
-                "_meta_lineage",
-                F.when(_in_family(source_col, ls), F.col("__lin")).otherwise(
-                    F.array().cast(_LIN_SQL)
-                ),
-            )
+            .withColumn("_meta_lineage", F.coalesce(F.col("__lin"), F.array().cast(_LIN_SQL)))
             .drop("__lin")
         )
 
@@ -390,14 +385,9 @@ def run_uploader(
             .groupBy(id_col)
             .agg(F.array_sort(F.collect_list("citation")).alias("__cit"))
         )
-        in_f = _in_family(source_col, ps)
         out = (
             out.join(per, id_col, "left")
-            .withColumn(
-                "citations",
-                F.when(in_f, F.coalesce(F.col("__cit"), F.array().cast("array<string>")))
-                .otherwise(F.array().cast("array<string>")),
-            )
+            .withColumn("citations", F.coalesce(F.col("__cit"), F.array().cast("array<string>")))
             .drop("__cit")
         )
 

@@ -178,6 +178,143 @@ def test_lineage_closure_iterates_taxonomy_not_corpus(spark):
     assert rows[12] == []  # unknown taxid -> empty lineage
 
 
+# Docs that leave a per-document aggregate with nothing to aggregate:
+# NULL and empty text, NULL and empty entity arrays (one holding a NULL
+# entry), NULL taxids, an unknown taxid and a NULL taxid element.
+_ENTITY = "array<struct<name:string,identifier:string>>"
+_EDGE_DOCS = [
+    (1, None, None, None, None),
+    (2, "", [], [], []),
+    (3, "   ", [("Homo sapiens", "9606")], None, [999]),
+    (4, "The cat and the dog sat", [None, ("sars-cov-2", "x")], [], [3]),
+    (5, "el gato y el perro", None, [("Unknown bug", "u1")], [None, 2]),
+]
+
+
+def _edge_frames(spark):
+    docs = spark.createDataFrame(
+        _EDGE_DOCS,
+        f"doc_id long, text string, species {_ENTITY}, infectiousAgent {_ENTITY}, "
+        "taxids array<int>",
+    )
+    lookup = spark.createDataFrame(
+        [("homo sapiens", "Homo sapiens", "taxon-9606", "host"),
+         ("sars-cov-2", "SARS-CoV-2", "taxon-2697049", "infectiousAgent")],
+        "name_lc string, std_name string, std_identifier string, classification string",
+    )
+    # LN.taxonomy_closure of the chain 3 -> 2 -> 1, as a literal frame
+    closure = spark.createDataFrame(
+        [(1, 1, None), (2, 2, 1), (2, 1, None), (3, 3, 2), (3, 2, 1), (3, 1, None)],
+        "taxon int, member int, member_parent int",
+    )
+    return docs, lookup, closure
+
+
+def _per_doc_operators(spark):
+    """name -> (frame, id column) for the five per-document aggregates."""
+    from nde_crawlers_spark.operators import dedup as DD
+    from nde_crawlers_spark.operators import lineage as LN
+    from nde_crawlers_spark.operators import standardize as SD
+    from nde_crawlers_spark.operators import textops as TO
+
+    docs, lookup, closure = _edge_frames(spark)
+    return {
+        "reclassify_species": (
+            SD.reclassify_species(docs.select("doc_id", "species", "infectiousAgent"), lookup),
+            "doc_id",
+        ),
+        "expand_lineage": (
+            LN.expand_lineage(docs.select("doc_id", "taxids"), closure).select(
+                "doc_id", "_meta_lineage"
+            ),
+            "doc_id",
+        ),
+        "simhash16_agg": (DD.simhash16_agg(docs), "id"),
+        "simhash64_agg": (DD.simhash64_agg(docs), "id"),
+        "token_stats": (TO.token_stats(docs), "doc_id"),
+    }
+
+
+def _simhash(text: str | None, nbits: int) -> int:
+    """Python simhash: vote +1 on bit b of a token when bit (b % 4) of
+    hex digit (b // 4 + 1) of its md5 is set (16 bits: digit b + 1's
+    parity); the doc bit is set when its vote sum is positive."""
+    import hashlib
+
+    toks = [t for t in (text or "").lower().split() if t]
+    out = 0
+    for b in range(nbits):
+        digit, bit = (b, 0) if nbits == 16 else (b // 4, b % 4)
+        votes = sum(
+            1 if (int(hashlib.md5(t.encode()).hexdigest()[digit], 16) >> bit) & 1 else -1
+            for t in toks
+        )
+        out |= (votes > 0) << b
+    return out
+
+
+def test_per_doc_aggregates_cover_every_doc(spark):
+    """Each per-document aggregate returns exactly one row per input id,
+    also for docs with nothing to aggregate, and gives those docs the
+    empty value: empty entity and lineage arrays, simhash 0, all-zero
+    token stats."""
+    from nde_crawlers_spark.functions import text as TX
+
+    ops = _per_doc_operators(spark)
+    got = {}
+    for name, (df, id_col) in ops.items():
+        rows = df.collect()
+        assert sorted(r[id_col] for r in rows) == [1, 2, 3, 4, 5], name
+        got[name] = {r[id_col]: r for r in rows}
+
+    def entities(arr):
+        return [(e["name"], e["identifier"]) for e in arr]
+
+    rc = {i: (entities(r["species"]), entities(r["infectiousAgent"]))
+          for i, r in got["reclassify_species"].items()}
+    assert rc == {
+        1: ([], []),
+        2: ([], []),
+        3: ([("Homo sapiens", "taxon-9606")], []),
+        4: ([], [("SARS-CoV-2", "taxon-2697049")]),
+        5: ([], [("Unknown bug", "u1")]),
+    }
+    lin = {i: [(e["taxon"], e["parent_taxon"]) for e in r["_meta_lineage"]]
+           for i, r in got["expand_lineage"].items()}
+    assert lin == {1: [], 2: [], 3: [], 4: [(1, None), (2, 1), (3, 2)], 5: [(1, None), (2, 1)]}
+
+    texts = {d[0]: d[1] for d in _EDGE_DOCS}
+    for i, text in texts.items():
+        assert got["simhash16_agg"][i]["simhash"] == _simhash(text, 16), i
+        assert got["simhash64_agg"][i]["simhash"] == _simhash(text, 63), i
+        toks = (text or "").lower().split()
+        want = {"n_tokens": len(toks), "sw_hits": sum(t in TX.EN_STOPWORDS for t in toks)}
+        want.update({f"s_{lg}": sum(t in TX.LANG_STOPWORDS[lg] for t in toks)
+                     for lg in TX.LANG_ORDER})
+        assert got["token_stats"][i].asDict() == {"doc_id": i, **want}, i
+    assert got["simhash16_agg"][4]["simhash"] != 0 and got["token_stats"][5]["s_es"] > 0
+
+
+def test_per_doc_aggregates_never_join_on_id(spark):
+    """No per-document aggregate joins its result back onto its own
+    input: the groupBy on the id already yields every doc. The lineage
+    and reclassification plans keep exactly one join, the broadcast of
+    their lookup; the simhash and token-stats plans have none."""
+    import re
+
+    joins = re.compile(
+        r"(BroadcastHashJoin|SortMergeJoin|ShuffledHashJoin|BroadcastNestedLoopJoin"
+        r"|CartesianProduct)\b(.*)"
+    )
+    for name, (df, id_col) in _per_doc_operators(spark).items():
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        found = joins.findall(plan)
+        for kind, keys in found:
+            assert not re.search(rf"\b{id_col}#", keys), (name, kind, keys)
+        want = ["BroadcastHashJoin"] if name in ("expand_lineage", "reclassify_species") else []
+        assert [kind for kind, _ in found] == want, (name, plan)
+
+
 def test_uploader_plan_scans_independent_of_sources(spark):
     """The registry dispatch's scan count is bounded by the number of
     OPERATOR-STAGE KINDS (base + reclassify/lineage/drop-rule subsets),
@@ -217,9 +354,8 @@ def test_uploader_plan_scans_independent_of_sources(spark):
     assert n_scans(doubled) == base
     # The absolute count is a CONSTANT of the stage vocabulary (each
     # operator stage re-reads its subset a bounded number of times:
-    # reclassify = 2 posexplode sides + the ids frame, lineage = explode
-    # + join-back, drop rules = 1, pmid = explode + regroup), never a
-    # function of #sources.
+    # reclassify = 2 posexplode sides, lineage = 1 explode, drop rules =
+    # 1, pmid = 1 explode), never a function of #sources.
     assert base <= 14
 
 

@@ -73,3 +73,47 @@ def test_robots_render_parse_roundtrip():
         seen_shapes.add((bool(want["disallow_prefixes"]), want["crawl_delay_ms"]))
     # the corpus actually exercises all rule shapes
     assert len(seen_shapes) >= 4
+
+
+def test_crawl_robots_allow_overrides_disallow(spark, tmp_path):
+    """A robots.txt that closes a host but opens a subtree, read through
+    a fetcher's ``robots_txt``, keeps that subtree crawlable: the crawl's
+    robots cache keeps the Allow prefixes, and the frontier's robots
+    filter applies ``is_allowed``'s rule (longest match wins, Allow wins
+    a tie). A NULL prefix array, as read from a run dir written before
+    ``allow_prefixes`` existed, counts as empty."""
+    from nde_crawlers_spark.operators import frontier as FR
+    from nde_crawlers_spark.plans.crawl import CrawlConfig, CrawlRun
+
+    bodies = {
+        "a.org": "User-agent: *\nDisallow: /\nAllow: /public/\n",
+        "b.org": "User-agent: *\nDisallow: /same/\nAllow: /same/\nDisallow: /x/y/\nAllow: /x/\n",
+        "c.org": "",
+    }
+
+    def fetch(url):
+        raise AssertionError("only robots.txt is fetched here")
+
+    fetch.robots_txt = lambda host: bodies[host]
+    run = CrawlRun(spark, str(tmp_path), CrawlConfig(fetcher=fetch))
+    hosts = spark.createDataFrame([(h,) for h in bodies], "host string")
+    robots = run._update_robots(run._read("robots_cache", []), hosts)
+    rules = {r["host"]: (r["disallow_prefixes"], r["allow_prefixes"]) for r in robots.collect()}
+    assert rules == {
+        "a.org": (["/"], ["/public/"]),
+        "b.org": (["/same/", "/x/y/"], ["/same/", "/x/"]),
+        "c.org": ([], []),
+    }
+    # d.org predates allow_prefixes; e.org has no robots row at all
+    robots = robots.unionByName(spark.createDataFrame(
+        [("d.org", ["/private/"], None, 500)], robots.schema))
+    paths = ["/", "/public", "/public/a", "/same/a", "/x/a", "/x/y/a", "/private/a", "/open"]
+    cands = spark.createDataFrame(
+        [(h, p) for h in [*bodies, "d.org", "e.org"] for p in paths], "host string, path string")
+    kept = {(r["host"], r["path"]) for r in FR.robots_filter(cands, robots).collect()}
+    rules["d.org"], rules["e.org"] = (["/private/"], []), ([], [])
+    assert kept == {
+        (h, p) for h, (d, a) in rules.items() for p in paths if is_allowed(p, d, a)
+    }
+    assert ("a.org", "/public/a") in kept and ("a.org", "/open") not in kept
+    assert ("b.org", "/same/a") in kept and ("b.org", "/x/y/a") not in kept
