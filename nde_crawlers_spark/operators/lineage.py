@@ -15,13 +15,13 @@ Spark-first shape — the key scale decision is WHERE the iteration runs:
   handful of self-joins materialize the ancestors-or-self relation
   (taxon, member, member_parent) once. Cost is independent of corpus
   size.
-- ``expand_lineage`` is then ONE broadcast left join from the outer-
-  exploded (doc, taxid) pairs to the closure, a regroup, and a
-  sorted-distinct collect into ``_meta.lineage``. One shuffle on doc id,
-  no join back, no per-doc recursion anywhere near the data.
-- ``ancestor_removal`` reuses the same closure: an entry is dropped iff
-  it is a PROPER ancestor of another entry in the same record — one
-  join + one anti-join, both on (doc, taxid).
+- ``expand_lineage`` and ``ancestor_removal`` then read the COLLECTED
+  closure (it is a dim, like the reference's lineage_lookup dict,
+  utils/lineage.py:9,29-37) as a literal map: each is one column
+  expression per doc (``element_at`` per taxid), with no explode, join,
+  shuffle or per-doc recursion. ``_meta.lineage`` is the sorted-distinct
+  union of the doc's chains; an entry is removed iff it is a PROPER
+  ancestor of another entry in the same record.
 
 Root convention mirrors the reference: taxon 1 carries no parent_taxon
 (lineage.py:225-231).
@@ -29,8 +29,10 @@ Root convention mirrors the reference: taxon 1 carries no parent_taxon
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..functions.literals import literal
 
 
 # ``taxonomy_closure``'s loop: MAX_DEPTH bounds it against cyclic input
@@ -89,51 +91,44 @@ def taxonomy_closure(taxonomy: DataFrame) -> DataFrame:
     )
 
 
-def expand_lineage(
-    docs: DataFrame,
-    closure: DataFrame,
-    taxids_col: str = "taxids",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """-> (id, ``_meta_lineage``): the sorted-distinct union of lineage
-    entries (taxon, parent_taxon) over every taxid the doc carries
-    (lineage.py:234-252 _annotate_record), one row per distinct id. Docs
-    whose taxids hit nothing in the taxonomy get an empty array.
+LINEAGE_SQL = "array<struct<taxon:int,parent_taxon:int>>"
 
-    Plan: outer explode -> broadcast left join to the closure -> regroup
-    on doc id; a doc with no hit keeps its row and collects nothing.
-    """
-    ex = docs.select(F.col(id_col), F.explode_outer(taxids_col).alias("taxon"))
-    hits = ex.join(F.broadcast(closure), "taxon", "left")
-    e = F.struct(
-        F.col("member").alias("taxon"), F.col("member_parent").alias("parent_taxon")
-    )
-    return hits.groupBy(id_col).agg(
-        F.array_sort(
-            F.array_distinct(F.collect_list(F.when(F.col("member").isNotNull(), e)))
-        ).alias("_meta_lineage")
+
+def _chains(closure) -> dict[int, list]:
+    """taxon -> its (member, member_parent) closure rows."""
+    out: dict[int, list] = {}
+    for taxon, member, parent in closure:
+        out.setdefault(taxon, []).append((member, parent))
+    return out
+
+
+def _lookup_all(m: Column, taxids: Column) -> Column:
+    """The concatenated ``m`` arrays of every taxid (a miss adds none)."""
+    return F.flatten(
+        F.transform(
+            F.coalesce(taxids, F.array()),
+            lambda t: F.coalesce(F.element_at(m, t), F.array()),
+        )
     )
 
 
-def ancestor_removal(
-    docs: DataFrame,
-    closure: DataFrame,
-    taxids_col: str = "taxids",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """Per doc, drop taxids that are PROPER ancestors of another taxid in
-    the same doc (extract.py:332-360 filter_species_terms_for_ancestors):
-    'Homo sapiens' makes a bare 'Mammalia' entry redundant. Returns
-    (id, kept_taxids sorted)."""
-    ex = docs.select(F.col(id_col), F.explode_outer(taxids_col).alias("tid")).distinct()
-    # (doc, ancestor) pairs implied by each entry, excluding self
-    implied = (
-        ex.join(F.broadcast(closure), ex.tid == closure.taxon)
-        .filter(F.col("member") != F.col("taxon"))
-        .select(id_col, F.col("member").alias("tid"))
-        .distinct()
-    )
-    kept = ex.join(implied, [id_col, "tid"], "left_anti")
-    return kept.groupBy(id_col).agg(
-        F.array_sort(F.collect_list("tid")).alias("kept_taxids")
-    )
+def expand_lineage(taxids: Column, closure) -> Column:
+    """-> ``_meta.lineage``: the sorted-distinct union of lineage entries
+    (taxon, parent_taxon) over every taxid of an array<int>
+    (lineage.py:234-252 _annotate_record), given the collected closure
+    rows (taxon, member, member_parent). A NULL array, a NULL taxid and
+    a taxid outside the taxonomy add nothing."""
+    m = literal(_chains(closure), f"map<int,{LINEAGE_SQL}>")
+    return F.array_sort(F.array_distinct(_lookup_all(m, taxids)))
+
+
+def ancestor_removal(taxids: Column, closure) -> Column:
+    """The distinct taxids of an array<int>, sorted, less those that are
+    PROPER ancestors of another taxid in the same doc (extract.py:332-360
+    filter_species_terms_for_ancestors): 'Homo sapiens' makes a bare
+    'Mammalia' entry redundant. NULL taxids are dropped."""
+    proper = {t: [m for m, _ in rows if m != t] for t, rows in _chains(closure).items()}
+    m = literal(proper, "map<int,array<int>>")
+    ids = F.array_distinct(F.filter(F.coalesce(taxids, F.array()), lambda t: t.isNotNull()))
+    implied = _lookup_all(m, ids)
+    return F.array_sort(F.filter(ids, lambda t: ~F.array_contains(implied, t)))

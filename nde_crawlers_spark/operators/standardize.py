@@ -20,125 +20,111 @@ misclassified entries between the two fields
 5. each side is deduplicated by identifier keeping the FIRST occurrence
    in combined order (pubtator.py:865-875).
 
-Spark shape: one outer posexplode per side -> ONE broadcast join against
-the lookup (it is the reference's in-memory dict, megabytes at most) ->
-ONE groupBy(doc id) collecting the standardized entries -> the re-split,
-converted-name filter, and keep-first identifier dedup as ROW-LOCAL
+Spark shape: one column expression per document over a literal lookup
+map (the reference's in-memory dict, megabytes at most). Each entry is
+standardized by one ``element_at`` into the map, and the re-split,
+converted-name filter and keep-first identifier dedup are row-local
 array expressions (per-doc entry lists are a handful of elements — the
 reference processes them as in-memory Python lists for the same reason).
-The outer explode keeps a row for a doc with no entries, so the groupBy
-already yields every doc: one shuffle total, on doc id; no join back,
-no Python UDFs.
-(The round-2 form ran the converted-name filter as an anti-join and the
-keep-first dedup as a window — four more corpus shuffles for work that
-is per-document and tiny.)
+No explode, join, shuffle or Python UDF.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
-# lookup schema: name_lc, std_name, std_identifier, classification
+from ..functions.literals import literal
+
+# lookup: name_lc -> (std_name, std_identifier, classification), with
 #   classification in ('host', 'infectiousAgent')
+_LOOKUP_SQL = "map<string,struct<name:string,identifier:string,classification:string>>"
 
 
-def apply_drop_rules(
-    entities: DataFrame,
-    rules: list[dict],
-    closure: DataFrame | None = None,
-    id_col: str = "doc_id",
-) -> DataFrame:
+def _let(value: Column, body) -> Column:
+    """``body(value)`` with ``value`` evaluated once per row: Catalyst
+    shares no sub-expression inside a higher-order function's lambda."""
+    return F.element_at(F.transform(F.array(value), body), 1)
+
+
+def apply_drop_rules(ner: Column, rules: list[dict], closure=None) -> Column:
     """The EXTRACT-NER heuristic drop rules (utils/extract.py:23-59
-    ADVANCED_DROP_RULES): an entity row is dropped when its casefolded
-    name or its taxid matches a rule, and — for rules with
-    ``ignore_children`` — when its taxid is a DESCENDANT of the rule's
-    taxid ('omicron'/'other sequences': the whole subtree is suspect).
-    Descendant tests reuse the lineage closure (operators/lineage.py):
-    descendants of rule r = closure rows with member == r.id, taxon !=
-    r.id — one small broadcast anti-join, no per-row recursion.
+    ADVANCED_DROP_RULES) over an array<struct<name, taxid>>: an entity
+    is dropped when its casefolded name or its taxid matches a rule,
+    and — for rules with ``ignore_children`` — when its taxid is a
+    DESCENDANT of the rule's taxid ('omicron'/'other sequences': the
+    whole subtree is suspect). Descendants come from the collected
+    lineage closure (operators/lineage.py, rows of (taxon, member,
+    member_parent)): descendants of rule r = the taxon of each row with
+    member == r.id, taxon != r.id.
 
-    ``entities``: (id_col, ..., name, taxid). Returns surviving rows."""
-    names = [str(r["name"]).lower().strip() for r in rules]
-    ids = [int(r["id"]) for r in rules]
-    direct = F.lower(F.trim(F.col("name"))).isin(names) | F.col("taxid").isin(ids)
-    out = entities.filter(~direct)
-    child_roots = [int(r["id"]) for r in rules if r.get("ignore_children")]
-    if closure is not None and child_roots:
-        descendants = (
-            closure.filter(
-                F.col("member").isin(child_roots) & (F.col("member") != F.col("taxon"))
-            )
-            .select(F.col("taxon").alias("taxid"))
-            .distinct()
-        )
-        out = out.join(F.broadcast(descendants), "taxid", "left_anti")
-    return out
-
-
-def reclassify_species(
-    docs: DataFrame,
-    lookup: DataFrame,
-    species_col: str = "species",
-    agent_col: str = "infectiousAgent",
-    id_col: str = "doc_id",
-) -> DataFrame:
-    """-> (id, species: array<struct<name,identifier>>, infectiousAgent:
-    array<struct<name,identifier>>) after standardization, reclassification,
-    converted-name filtering, and keep-first identifier dedup: one row per
-    distinct id, with empty arrays for a doc without entries. Entry
-    order within each output array is combined-list order."""
-    def side(col: str, tag: int) -> DataFrame:
-        # pos is NULL on the outer row of a doc without entries and on a
-        # NULL entry: neither is collected, but the doc keeps its row
-        return docs.select(F.col(id_col), F.posexplode_outer(col).alias("pos", "e")).select(
-            id_col,
-            F.when(F.col("e").isNotNull(), F.lit(tag * 100000) + F.col("pos")).alias("pos"),
-            F.col("e.name").alias("orig_name"),
-            F.col("e.identifier").alias("orig_ident"),
-        )
-
-    comb = side(species_col, 0).unionByName(side(agent_col, 1))
-    lk = F.broadcast(lookup.select("name_lc", "std_name", "std_identifier", "classification"))
-    std = (
-        comb.join(lk, F.lower(F.trim(F.col("orig_name"))) == F.col("name_lc"), "left")
-        .select(
-            id_col, "pos", "orig_name",
-            F.coalesce(F.col("std_name"), F.col("orig_name")).alias("name"),
-            F.coalesce(F.col("std_identifier"), F.col("orig_ident")).alias("identifier"),
-            # unmatched entries pass through UNCHANGED, keeping their
-            # ORIGINAL side — modelling _apply_resolved_species
-            # (pubtator.py:1271-1276: entries with no resolved standard
-            # go back to the list they came from). NOTE the reference's
-            # OTHER path, process_document's re-split (pubtator.py:
-            # 877-880), instead sends classification-less items to the
-            # species side; this operator deliberately models the
-            # resolved-apply path, which is the one that preserves
-            # curated infectiousAgent entries. The pos encoding carries
-            # the side (tag*100000 + pos).
-            F.coalesce(
-                F.col("classification"),
-                F.when(F.col("pos") >= 100000, F.lit("infectiousAgent")).otherwise(F.lit("host")),
-            ).alias("classification"),
-        )
-    )
-    # ONE shuffle: every standardized entry of a doc into one sorted
-    # array (combined-list order via the side-encoded pos)
-    per_doc = std.groupBy(id_col).agg(
-        F.array_sort(
-            F.collect_list(
-                F.when(
-                    F.col("pos").isNotNull(),
-                    F.struct("pos", "orig_name", "name", "identifier", "classification"),
-                )
-            )
-        ).alias("__es")
+    -> the surviving entities in order; NULL for a NULL array. A match
+    is three-valued like SQL ``IN``, so an entity with a NULL name or
+    taxid is dropped."""
+    names = literal([str(r["name"]).lower().strip() for r in rules], "array<string>")
+    ids = literal([int(r["id"]) for r in rules], "array<int>")
+    roots = {int(r["id"]) for r in rules if r.get("ignore_children")}
+    below = literal(
+        sorted({row[0] for row in closure or () if row[1] in roots and row[1] != row[0]}),
+        "array<int>",
     )
 
+    def kept(e: Column) -> Column:
+        taxid = e.getField("taxid")
+        direct = F.array_contains(names, F.lower(F.trim(e.getField("name")))) | F.array_contains(
+            ids, taxid
+        )
+        return ~direct & ~F.array_contains(below, taxid)
+
+    return F.filter(ner, kept)
+
+
+def reclassify_species(species: Column, agents: Column, lookup: dict) -> Column:
+    """-> struct<species, infectiousAgent> (each an
+    array<struct<name,identifier>>) after standardization through
+    ``lookup`` (name_lc -> (std_name, std_identifier, classification)),
+    reclassification, converted-name filtering, and keep-first identifier
+    dedup. NULL arrays and NULL entries contribute nothing, so a doc
+    without entries gets empty arrays. Entry order within each output
+    array is combined-list order."""
+    std = literal(lookup, _LOOKUP_SQL)
+
+    def side(arr: Column, cls: str) -> Column:
+        return F.transform(
+            F.filter(F.coalesce(arr, F.array()), lambda e: e.isNotNull()),
+            lambda e: F.struct(
+                e.getField("name").alias("orig_name"),
+                e.getField("identifier").alias("orig_ident"),
+                F.lit(cls).alias("side"),
+                F.element_at(std, F.lower(F.trim(e.getField("name")))).alias("hit"),
+            ),
+        )
+
+    # unmatched entries pass through UNCHANGED, keeping their ORIGINAL
+    # side — modelling _apply_resolved_species (pubtator.py:1271-1276:
+    # entries with no resolved standard go back to the list they came
+    # from). NOTE the reference's OTHER path, process_document's re-split
+    # (pubtator.py:877-880), instead sends classification-less items to
+    # the species side; this operator deliberately models the
+    # resolved-apply path, which is the one that preserves curated
+    # infectiousAgent entries.
+    def standardized(e: Column) -> Column:
+        hit = e.getField("hit")
+        return F.struct(
+            e.getField("orig_name").alias("orig_name"),
+            F.coalesce(hit.getField("name"), e.getField("orig_name")).alias("name"),
+            F.coalesce(hit.getField("identifier"), e.getField("orig_ident")).alias("identifier"),
+            F.coalesce(hit.getField("classification"), e.getField("side")).alias("classification"),
+        )
+
+    combined = F.concat(side(species, "host"), side(agents, "infectiousAgent"))
+    return _let(F.transform(combined, standardized), _resplit)
+
+
+def _resplit(es: Column) -> Column:
     # row-local re-split + converted-name filter + keep-first dedup over
     # the tiny per-doc array (HOF interpretation cost is per element —
     # a handful per doc; the reference does exactly this in Python lists)
-    es = F.col("__es")
     agents_all = F.filter(es, lambda e: e.getField("classification") == F.lit("infectiousAgent"))
     conv_names = F.array_distinct(
         F.flatten(
@@ -157,7 +143,7 @@ def reclassify_species(
         & ~F.array_contains(conv_names, F.lower(F.trim(e.getField("name")))),
     )
 
-    def keep_first_by_identifier(arr: F.Column) -> F.Column:
+    def keep_first_by_identifier(arr: Column) -> Column:
         # element i survives iff no EARLIER element carries its identifier
         return F.filter(
             arr,
@@ -167,7 +153,7 @@ def reclassify_species(
             ),
         )
 
-    def rendered(arr: F.Column) -> F.Column:
+    def rendered(arr: Column) -> Column:
         return F.transform(
             keep_first_by_identifier(arr),
             lambda e: F.struct(
@@ -176,8 +162,7 @@ def reclassify_species(
             ),
         )
 
-    return per_doc.select(
-        id_col,
-        rendered(species_all).alias(species_col),
-        rendered(agents_all).alias(agent_col),
+    return F.struct(
+        rendered(species_all).alias("species"),
+        rendered(agents_all).alias("infectiousAgent"),
     )

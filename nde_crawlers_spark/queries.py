@@ -32,8 +32,14 @@ from .operators import similarity as SIM
 from .operators import textops as TO
 
 
+# declared table schemas: a declared read skips parquet's schema-
+# inference job (every scale factor and every hub dump shares these)
+_SCHEMAS = {"documents": "doc_id long, text string, lang string, source string, n_chars long"}
+
+
 def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    reader = spark.read.schema(_SCHEMAS[name]) if name in _SCHEMAS else spark.read
+    return reader.parquet(f"{sf_dir}/{name}.parquet")
 
 
 def dsum(col: F.Column, scale: int = 2) -> F.Column:
@@ -1215,15 +1221,29 @@ def _hub_taxonomy(spark: SparkSession) -> DataFrame:
     )
 
 
-def _species_lookup(spark: SparkSession) -> DataFrame:
-    """The PubTator species lookup: organism-0..23 standardize to
+_HUB_CLOSURE: tuple = ()
+
+
+def _hub_closure(spark: SparkSession) -> tuple:
+    """``LN.taxonomy_closure`` of ``_hub_taxonomy``, collected once per
+    process: rows (taxon, member, member_parent) of a pure formula, so
+    they hold for every session."""
+    global _HUB_CLOSURE
+    from .operators import lineage as LN
+
+    if not _HUB_CLOSURE:
+        _HUB_CLOSURE = tuple(LN.taxonomy_closure(_hub_taxonomy(spark)).collect())
+    return _HUB_CLOSURE
+
+
+def _species_lookup() -> dict:
+    """The PubTator species lookup, name_lc -> (std_name,
+    std_identifier, classification): organism-0..23 standardize to
     taxon-N, every third one classified as an infectious agent."""
-    return spark.range(0, 24).select(
-        F.concat(F.lit("organism-"), F.col("id").cast("string")).alias("name_lc"),
-        F.concat(F.lit("taxon-"), F.col("id").cast("string")).alias("std_name"),
-        F.concat(F.lit("tax:"), (2000 + F.col("id")).cast("string")).alias("std_identifier"),
-        F.when(F.col("id") % 3 == 0, F.lit("infectiousAgent")).otherwise(F.lit("host")).alias("classification"),
-    )
+    return {
+        f"organism-{i}": (f"taxon-{i}", f"tax:{2000 + i}", "host" if i % 3 else "infectiousAgent")
+        for i in range(24)
+    }
 
 
 def _species_columns(did):
@@ -1276,25 +1296,23 @@ _NER_RULES = [
 def enrich_lineage_expand(spark, sf_dir):
     """J7's real payload (utils/lineage.py:140-307 + extract.py:332-360):
     a deterministic taxonomy tree (parent(t) = max(t/7, 1), root 1),
-    closure computed by iterating the SMALL taxonomy table only, then one
-    broadcast join expands each doc's taxids into sorted-distinct
-    ``_meta.lineage`` entries; ancestor-removal drops taxids that are
-    proper ancestors of another taxid in the same doc."""
+    closure computed by iterating the SMALL taxonomy table only and
+    collected, then one literal-map lookup per taxid expands each doc's
+    taxids into sorted-distinct ``_meta.lineage`` entries;
+    ancestor-removal drops taxids that are proper ancestors of another
+    taxid in the same doc."""
     from .operators import lineage as LN
 
-    closure = LN.taxonomy_closure(_hub_taxonomy(spark))
+    closure = _hub_closure(spark)
     did = F.col("doc_id")
-    d = t(spark, sf_dir, "documents").select(
-        "doc_id",
-        F.array_distinct(
-            F.array(
-                (1 + did % 200).cast("int"), (1 + (did * 3) % 200).cast("int")
-            )
-        ).alias("taxids"),
+    taxids = F.array_distinct(
+        F.array((1 + did % 200).cast("int"), (1 + (did * 3) % 200).cast("int"))
     )
-    lin = LN.expand_lineage(d, closure)
-    kept = LN.ancestor_removal(d, closure)
-    return lin.join(kept, "doc_id").select(
+    return t(spark, sf_dir, "documents").select(
+        "doc_id",
+        LN.expand_lineage(taxids, closure).alias("_meta_lineage"),
+        LN.ancestor_removal(taxids, closure).alias("kept_taxids"),
+    ).select(
         "doc_id",
         F.size("_meta_lineage").alias("n_lineage"),
         F.array_join(
@@ -1316,7 +1334,7 @@ def enrich_lineage_expand(spark, sf_dir):
 
 def enrich_reclassify(spark, sf_dir):
     """J4's real payload (utils/pubtator.py:839-927): species +
-    infectiousAgent entries standardized through a broadcast lookup,
+    infectiousAgent entries standardized through a literal lookup map,
     re-split by classification (moving misclassified entries between the
     two fields), converted-name species filtered out, keep-first
     identifier dedup. The fixture exercises every branch: matched host,
@@ -1326,10 +1344,9 @@ def enrich_reclassify(spark, sf_dir):
     from .operators import standardize as SD
 
     species, agents = _species_columns(F.col("doc_id"))
-    docs = t(spark, sf_dir, "documents").select(
-        "doc_id", species.alias("species"), agents.alias("infectiousAgent"),
-    )
-    out = SD.reclassify_species(docs, _species_lookup(spark))
+    out = t(spark, sf_dir, "documents").select(
+        "doc_id", SD.reclassify_species(species, agents, _species_lookup()).alias("r")
+    ).select("doc_id", "r.*")
     render = lambda c: F.array_join(  # noqa: E731
         F.transform(c, lambda x: F.concat(x.getField("name"), F.lit("|"), x.getField("identifier"))),
         ",",
@@ -1347,25 +1364,24 @@ def enrich_drop_rules(spark, sf_dir):
     """J17's heuristic layer (utils/extract.py:23-59 ADVANCED_DROP_RULES):
     NER entities dropped by name match ('china' is a place), by taxid
     match, and — with ignore_children — by membership in a rule taxid's
-    subtree, computed via the lineage closure. Same deterministic
+    subtree, read off the collected lineage closure. Same deterministic
     taxonomy as enrich_lineage_expand."""
-    from .operators import lineage as LN
     from .operators import standardize as SD
 
-    closure = LN.taxonomy_closure(_hub_taxonomy(spark))
-    ents = [
-        t(spark, sf_dir, "documents").select(
-            "doc_id", F.lit(pos).alias("pos"), name.alias("name"), taxid.alias("taxid"),
-        )
-        for pos, (name, taxid) in enumerate(_ner_entities(F.col("doc_id")))
-    ]
-    entities = ents[0].unionByName(ents[1]).unionByName(ents[2])
-    kept = SD.apply_drop_rules(entities, _NER_RULES, closure)
-    return kept.groupBy("doc_id").agg(
-        F.count("*").cast("int").alias("n_kept"),
+    ner = F.array(*[
+        F.struct(name.alias("name"), taxid.alias("taxid"))
+        for name, taxid in _ner_entities(F.col("doc_id"))
+    ])
+    kept = SD.apply_drop_rules(ner, _NER_RULES, _hub_closure(spark))
+    # a doc whose entities all drop has no row
+    return t(spark, sf_dir, "documents").select("doc_id", kept.alias("kept")).filter(
+        F.size("kept") > 0
+    ).select(
+        "doc_id",
+        F.size("kept").alias("n_kept"),
         F.array_join(
             F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "name", "taxid"))),
+                "kept",
                 lambda s: F.concat(
                     s.getField("name"), F.lit("|"), s.getField("taxid").cast("string")
                 ),
@@ -1888,66 +1904,19 @@ def _uploader_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_UPLOADER_LOOKUP_CACHE: dict[str, tuple] = {}
+def _uploader_lookups(spark: SparkSession) -> dict:
+    """The registry's shared enrichment inputs as Python data, the
+    reference's in-memory memo dicts: the PubTator species lookup, the
+    taxonomy closure rows, the NER drop rules, and the funder, PMID
+    citation, measurement-technique and topic memos. Each is a pure
+    formula; only the closure runs Spark, once per process
+    (``_hub_closure``). The disambiguation CSV is the one DataFrame."""
+    from .uploaders import fixture_family
 
-
-def _uploader_lookups(spark: SparkSession):
-    """The registry's shared enrichment inputs: the PubTator species
-    lookup, the taxonomy closure, the NER drop rules, and the funder
-    memo table — all small broadcast-side dims. Memoized per session:
-    the lookups are input-independent, the taxonomy closure is an
-    iterative (driver-chatty) build, and re-creating it per query call
-    both costs ~1s of plan-build time AND leaks a fresh .cache() entry
-    each time. Keyed by applicationId (stable per live session, never
-    recycled the way id(spark) is after GC) and guarded by a weakref to
-    the session object itself: a hit whose session died returns cached
-    DataFrames bound to a dead JVM, so such entries are evicted."""
-    import weakref
-
-    # sweep dead-session entries first: applicationIds are unique per
-    # app, so a stopped session's key is never looked up again and a
-    # hit-only eviction would leak its entry for the process lifetime
-    for k in [k for k, (r, _) in _UPLOADER_LOOKUP_CACHE.items() if r() is None]:
-        del _UPLOADER_LOOKUP_CACHE[k]
-    key = spark.sparkContext.applicationId
-    hit = _UPLOADER_LOOKUP_CACHE.get(key)
-    if hit is not None:
-        ref, lookups = hit
-        if ref() is spark:
-            return lookups
-        del _UPLOADER_LOOKUP_CACHE[key]
-    from .operators import lineage as LN
-
-    # the closure is a bounded dim consumed by TWO registry stages
-    # (lineage + drop rules) and by both the registry and pipeline
-    # queries — cache it so the iterative build runs once per session
-    closure = LN.taxonomy_closure(_hub_taxonomy(spark)).cache()
-    funding_lookup = spark.range(0, 89).select(
-        F.concat(F.lit("grant:"), F.col("id").cast("string")).alias("funding_id"),
-        F.concat(F.lit("funder-"), (F.col("id") % 7).cast("string")).alias("funder_name"),
-    )
-    # PMID citation memo (even PMIDs resolve, odd ones miss — the
-    # pmid_helper cache-hit/miss split), the measurement-technique
-    # standardizer dim (every 5th technique unmapped), and the topic
-    # classifier modeled as a keyed lookup
-    pmid_lookup = spark.range(0, 500, 2).select(
-        F.concat(F.lit("pmid:"), F.col("id").cast("string")).alias("pmid"),
-        F.concat(F.lit("cite-"), (F.col("id") % 50).cast("string")).alias("citation"),
-    )
-    mt_lookup = spark.range(0, 37).filter(F.col("id") % 5 != 4).select(
-        F.concat(F.lit("tech-"), F.col("id").cast("string")).alias("technique"),
-        F.concat(F.lit("MT-"), (F.col("id") % 9).cast("string")).alias("technique_std"),
-    )
-    topic_lookup = spark.range(0, 12).select(
-        F.col("id").cast("int").alias("topic_key"),
-        F.concat(F.lit("topic-"), (F.col("id") % 5).cast("string")).alias("topic"),
-    )
     # add_disambiguating_description CSV analog (utils/
     # disambiguating_description.py:14-39): per-source rows keyed by
     # LOWERCASE _id. Every 4th record of each disamb-family source has
     # a curated summary; ids cover doc_id < 20000 (any sandbox SF).
-    from .uploaders import fixture_family
-
     disamb_lookup = (
         spark.range(0, 20000, 4)
         .select(
@@ -1960,18 +1929,19 @@ def _uploader_lookups(spark: SparkSession):
             F.concat(F.lit("disamb-"), (F.col("id") % 13).cast("string")).alias("disambiguatingDescription"),
         )
     )
-    lookups = {
-        "species_lookup": _species_lookup(spark),
-        "closure": closure,
+    # PMID citations: even PMIDs resolve, odd ones miss (the pmid_helper
+    # cache-hit/miss split); every 5th technique is unmapped; the topic
+    # classifier is modeled as a keyed lookup
+    return {
+        "species_lookup": _species_lookup(),
+        "closure": _hub_closure(spark),
         "ner_rules": _NER_RULES,
-        "funding_lookup": funding_lookup,
-        "pmid_lookup": pmid_lookup,
-        "mt_lookup": mt_lookup,
-        "topic_lookup": topic_lookup,
+        "funding_lookup": {f"grant:{i}": f"funder-{i % 7}" for i in range(89)},
+        "pmid_lookup": {f"pmid:{i}": f"cite-{i % 50}" for i in range(0, 500, 2)},
+        "mt_lookup": {f"tech-{i}": f"MT-{i % 9}" for i in range(37) if i % 5 != 4},
+        "topic_lookup": {i: f"topic-{i % 5}" for i in range(12)},
         "disamb_lookup": disamb_lookup,
     }
-    _UPLOADER_LOOKUP_CACHE[key] = (weakref.ref(spark), lookups)
-    return lookups
 
 
 def uploader_registry(spark, sf_dir):
@@ -1984,9 +1954,9 @@ def uploader_registry(spark, sf_dir):
     sources run PubTator reclassification, process_descriptions sources
     run the NER drop rules, load_pmid_ctfd sources get citation
     enrichment, and the funding / measurement-technique / topic-category
-    lookups hit their families. Row-local stages are when()-dispatched
-    (one scan for all sources); each operator stage costs one subset +
-    one join regardless of #sources."""
+    lookups hit their families. Every stage is a when()-dispatched
+    column over literal lookups: one scan and one projection for all
+    sources, plus the disambiguation broadcast join."""
     from .uploaders import run_uploader
 
     docs = _uploader_fixture(spark, sf_dir)

@@ -22,18 +22,17 @@ pre-wrapper call sequence plus its wrapper decoration);
   entity lists (utils/utils.py:34-66).
 - every uploader ends in the wrapper's ``_id`` casefold (utils.py:394).
 
-Scale shape — the two dispatch classes:
-
-1. **Row-local stages** (doi promote, placeholder scrub, casefold) are
-   ``when(source IN family)`` column expressions — ONE scan and one
-   codegen'd projection regardless of how many sources the registry
-   holds. No filter-union, no per-source branch in the plan.
-2. **Operator stages** (reclassify, lineage, drop rules, funding) each
-   run ONCE over the subset of rows whose family opted in and join back
-   on the doc id — cost is one subset scan + one join per stage KIND
-   (bounded vocabulary, ~4), never per source. The funding lookup is a
-   broadcast join on the full frame (no subset scan at all), masked to
-   the family.
+Scale shape — ONE dispatch class: every stage is a
+``when(source IN family)`` column expression, and all of them form ONE
+projection over the dump: one scan and one codegen'd pass regardless of
+how many sources the registry holds. No subset, explode, regroup or
+join-back, and no per-source branch in the plan. The reference runs
+each stage per record against in-memory memo dicts (funder_cache, the
+PubTator lookup, lineage_lookup — utils/funding_helper.py:18-29,
+utils/lineage.py:9,29-37); here those dicts are literal maps read with
+``element_at``, so a lookup is row-local too. Only the disambiguation
+CSV (thousands of rows, keyed by (source, lowercase _id)) stays a
+broadcast join.
 
 Adding a source is adding a dict entry; the physical plan's scan count
 does not change (tests/test_enrichment_plans.py::test_uploader_plan_scans).
@@ -46,14 +45,13 @@ from dataclasses import dataclass
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .functions.literals import literal
 from .operators import lineage as LN
 from .operators import nde_schema as NS
 from .operators import standardize as SD
 from .operators import wrapper as W
 
-_ENTITY_SQL = "array<struct<name:string,identifier:string>>"
 _NER_SQL = "array<struct<name:string,taxid:int>>"
-_LIN_SQL = "array<struct<taxon:int,parent_taxon:int>>"
 
 
 @dataclass(frozen=True)
@@ -252,16 +250,15 @@ def run_uploader(
     docs: DataFrame,
     registry: dict[str, UploaderSpec] | None = None,
     *,
-    species_lookup: DataFrame | None = None,
-    closure: DataFrame | None = None,
+    species_lookup: dict | None = None,
+    closure: tuple | None = None,
     ner_rules: list[dict] | None = None,
-    funding_lookup: DataFrame | None = None,
-    pmid_lookup: DataFrame | None = None,
-    mt_lookup: DataFrame | None = None,
-    topic_lookup: DataFrame | None = None,
+    funding_lookup: dict | None = None,
+    pmid_lookup: dict | None = None,
+    mt_lookup: dict | None = None,
+    topic_lookup: dict | None = None,
     disamb_lookup: DataFrame | None = None,
     source_col: str = "source",
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Apply each source's registered chain to its rows — one lazy plan.
 
@@ -269,79 +266,26 @@ def run_uploader(
     registered family uses the stage: ``doi`` (array<string>) for doi
     promotion, entity columns for placeholder scrubbing,
     ``species``/``infectiousAgent`` for reclassification, ``taxids`` for
-    lineage, ``ner`` (array<struct<name,taxid>>) for drop rules, and
-    ``funding_id`` for the funder lookup. Unknown sources get the
-    default chain (casefold only)."""
+    lineage, ``ner`` (array<struct<name,taxid>>) for drop rules,
+    ``pmids`` for citations, and ``funding_id`` / ``technique`` /
+    ``topic_key`` for their lookups. The lookups are Python data:
+    ``species_lookup`` name_lc -> (std_name, std_identifier,
+    classification), ``closure`` the collected taxonomy closure rows
+    (taxon, member, member_parent), the other dicts key -> value; only
+    ``disamb_lookup`` is a DataFrame (source, _id_lc,
+    disambiguatingDescription). A stage whose lookup or input column is
+    missing is skipped. Unknown sources get the default chain (casefold
+    only)."""
     reg = registry if registry is not None else UPLOADERS
+    cols = set(docs.columns)
     out = docs
 
-    # ---- operator stages: one subset + one join per stage KIND --------
-    # Subsets are carved from the ORIGINAL frame (stage inputs are
-    # original columns), so stage plans stay independent and the base is
-    # scanned 1 + #operator-stage-kinds times total. The reclassify,
-    # lineage and pmid stages return one row per family doc, so a NULL
-    # after their join-back marks a doc outside the family.
-    rs = _family(reg, lambda sp: sp.reclassify)
-    if rs and species_lookup is not None and {"species", "infectiousAgent"} <= set(docs.columns):
-        sub = docs.filter(_in_family(source_col, rs)).select(
-            id_col, "species", "infectiousAgent"
-        )
-        red = SD.reclassify_species(sub, species_lookup).select(
-            id_col,
-            F.col("species").alias("__r_species"),
-            F.col("infectiousAgent").alias("__r_agents"),
-        )
-        out = (
-            out.join(red, id_col, "left")
-            .withColumn("species", F.coalesce(F.col("__r_species"), F.col("species")))
-            .withColumn(
-                "infectiousAgent", F.coalesce(F.col("__r_agents"), F.col("infectiousAgent"))
-            )
-            .drop("__r_species", "__r_agents")
-        )
+    def family(pred) -> F.Column | None:
+        names = _family(reg, pred)
+        return _in_family(source_col, names) if names else None
 
-    ls = _family(reg, lambda sp: sp.lineage)
-    if ls and closure is not None and "taxids" in docs.columns:
-        sub = docs.filter(_in_family(source_col, ls)).select(id_col, "taxids")
-        lin = LN.expand_lineage(sub, closure).select(
-            id_col, F.col("_meta_lineage").alias("__lin")
-        )
-        out = (
-            out.join(lin, id_col, "left")
-            .withColumn("_meta_lineage", F.coalesce(F.col("__lin"), F.array().cast(_LIN_SQL)))
-            .drop("__lin")
-        )
-
-    ds = _family(reg, lambda sp: sp.drop_rules)
-    if ds and ner_rules and "ner" in docs.columns:
-        sub = (
-            docs.filter(_in_family(source_col, ds))
-            .select(id_col, F.posexplode("ner").alias("pos", "e"))
-            .select(id_col, "pos", F.col("e.name").alias("name"), F.col("e.taxid").alias("taxid"))
-        )
-        kept = SD.apply_drop_rules(sub, ner_rules, closure, id_col=id_col)
-        regrouped = kept.groupBy(id_col).agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "name", "taxid"))),
-                lambda s: F.struct(
-                    s.getField("name").alias("name"), s.getField("taxid").alias("taxid")
-                ),
-            ).alias("__ner")
-        )
-        in_f = _in_family(source_col, ds)
-        out = (
-            out.join(regrouped, id_col, "left")
-            .withColumn(
-                "ner",
-                F.when(in_f, F.coalesce(F.col("__ner"), F.array().cast(_NER_SQL))).otherwise(
-                    F.col("ner")
-                ),
-            )
-            .drop("__ner")
-        )
-
-    xs = _family(reg, lambda sp: sp.disambiguate)
-    if xs and disamb_lookup is not None:
+    xs = family(lambda sp: sp.disambiguate)
+    if xs is not None and disamb_lookup is not None:
         # add_disambiguating_description (utils/disambiguating_
         # description.py:14-39): per-source CSV keyed by LOWERCASE _id
         # -> a broadcast lookup join on (source, lower(_id)) adding the
@@ -362,95 +306,77 @@ def run_uploader(
                 & (F.col(source_col) == F.col("__d_src")),
                 "left",
             )
-            .withColumn(
-                "disambiguatingDescription",
-                F.when(_in_family(source_col, xs), F.col("__d_desc")).otherwise(
-                    F.lit(None).cast("string")
-                ),
-            )
+            .withColumn("disambiguatingDescription", F.when(xs, F.col("__d_desc")))
             .drop("__d_src", "__d_id", "__d_desc")
         )
 
-    ps = _family(reg, lambda sp: sp.pmid)
-    if ps and pmid_lookup is not None and "pmids" in docs.columns:
-        # load_pmid_ctfd (utils/pmid_helper.py): explode the per-doc PMID
-        # array, broadcast-join the citation lookup, regroup sorted —
-        # the J1 shape, one subset + one regroup shuffle for ALL pmid
-        # sources together
-        sub = docs.filter(_in_family(source_col, ps)).select(
-            id_col, F.explode_outer("pmids").alias("pmid")
-        )
-        per = (
-            sub.join(F.broadcast(pmid_lookup), "pmid", "left")
-            .groupBy(id_col)
-            .agg(F.array_sort(F.collect_list("citation")).alias("__cit"))
-        )
-        out = (
-            out.join(per, id_col, "left")
-            .withColumn("citations", F.coalesce(F.col("__cit"), F.array().cast("array<string>")))
-            .drop("__cit")
+    # every other stage reads original columns: one projection
+    stage: dict[str, F.Column] = {}
+    rs = family(lambda sp: sp.reclassify)
+    if rs is not None and species_lookup is not None and {"species", "infectiousAgent"} <= cols:
+        rc = SD.reclassify_species(F.col("species"), F.col("infectiousAgent"), species_lookup)
+        stage["__rc"] = F.when(rs, rc)
+
+    ls = family(lambda sp: sp.lineage)
+    if ls is not None and closure is not None and "taxids" in cols:
+        stage["_meta_lineage"] = F.when(ls, LN.expand_lineage(F.col("taxids"), closure)).otherwise(
+            F.array().cast(LN.LINEAGE_SQL)
         )
 
-    fs = _family(reg, lambda sp: sp.funding)
-    if fs and funding_lookup is not None and "funding_id" in out.columns:
-        # broadcast join on the whole frame (no subset scan), masked to
-        # the family — the funder_cache hit path (utils/funding_helper.py)
-        out = out.join(F.broadcast(funding_lookup), on="funding_id", how="left").withColumn(
-            "funder_name",
-            F.when(_in_family(source_col, fs), F.col("funder_name")).otherwise(
-                F.lit(None).cast("string")
-            ),
+    ds = family(lambda sp: sp.drop_rules)
+    if ds is not None and ner_rules and "ner" in cols:
+        kept = SD.apply_drop_rules(F.col("ner"), ner_rules, closure)
+        stage["ner"] = F.when(ds, F.coalesce(kept, F.array().cast(_NER_SQL))).otherwise(F.col("ner"))
+
+    ps = family(lambda sp: sp.pmid)
+    if ps is not None and pmid_lookup is not None and "pmids" in cols:
+        # load_pmid_ctfd (utils/pmid_helper.py): each PMID's citation
+        # from the memo, misses skipped, sorted
+        m = literal(pmid_lookup, "map<string,string>")
+        cites = F.filter(
+            F.transform(F.coalesce(F.col("pmids"), F.array()), lambda p: F.element_at(m, p)),
+            lambda c: c.isNotNull(),
+        )
+        stage["citations"] = F.when(ps, F.array_sort(cites)).otherwise(
+            F.array().cast("array<string>")
         )
 
-    ms = _family(reg, lambda sp: sp.measurement_technique)
-    if ms and mt_lookup is not None and "technique" in out.columns:
-        # process_measurement_technique: scalar standardization via a
-        # broadcast dim on the whole frame, masked to the family (the
-        # funding-lookup shape — no subset scan)
-        out = out.join(F.broadcast(mt_lookup), on="technique", how="left").withColumn(
-            "technique_std",
-            F.when(_in_family(source_col, ms), F.col("technique_std")).otherwise(
-                F.lit(None).cast("string")
-            ),
-        )
+    # the scalar memo lookups (funder_cache, the measurement-technique
+    # standardizer, the topic classifier), masked to their families
+    for pred, lookup, key, name, ddl in (
+        (lambda sp: sp.funding, funding_lookup, "funding_id", "funder_name", "map<string,string>"),
+        (lambda sp: sp.measurement_technique, mt_lookup, "technique", "technique_std",
+         "map<string,string>"),
+        (lambda sp: sp.topic_category, topic_lookup, "topic_key", "topic", "map<int,string>"),
+    ):
+        fam = family(pred)
+        if fam is not None and lookup is not None and key in cols:
+            stage[name] = F.when(fam, F.element_at(literal(lookup, ddl), F.col(key)))
 
-    ts = _family(reg, lambda sp: sp.topic_category)
-    if ts and topic_lookup is not None and "topic_key" in out.columns:
-        # add_topic_category: the classifier output modeled as a
-        # broadcast keyed lookup, masked to the family
-        out = out.join(F.broadcast(topic_lookup), on="topic_key", how="left").withColumn(
-            "topic",
-            F.when(_in_family(source_col, ts), F.col("topic")).otherwise(
-                F.lit(None).cast("string")
-            ),
-        )
-
-    # ---- row-local stages: when() dispatch, zero extra scans ----------
-    dois = _family(reg, lambda sp: sp.promote_doi)
-    if dois and "doi" in out.columns:
+    dois = family(lambda sp: sp.promote_doi)
+    if dois is not None and "doi" in cols:
         new_id, new_doi = NS.promote_doi_id(F.col("_id"), F.col("doi"))
-        in_f = _in_family(source_col, dois)
-        out = out.withColumn("_id", F.when(in_f, new_id).otherwise(F.col("_id"))).withColumn(
-            "doi", F.when(in_f, new_doi).otherwise(F.col("doi"))
-        )
+        stage["_id"] = F.when(dois, new_id).otherwise(F.col("_id"))
+        stage["doi"] = F.when(dois, new_doi).otherwise(F.col("doi"))
 
     scrub: dict[str, list[str]] = {}
     for s, sp in reg.items():
         for c in sp.placeholder_fields:
-            if c in out.columns:  # stage inputs a source family may lack
+            if c in cols:  # stage inputs a source family may lack
                 scrub.setdefault(c, []).append(s)
     for c, srcs in sorted(scrub.items()):
-        out = out.withColumn(
-            c,
-            F.when(
-                _in_family(source_col, sorted(srcs)), W.placeholder_filter(F.col(c))
-            ).otherwise(F.col(c)),
-        )
+        stage[c] = F.when(
+            _in_family(source_col, sorted(srcs)), W.placeholder_filter(F.col(c))
+        ).otherwise(F.col(c))
 
     # an unregistered source gets the default chain, which casefolds
     folds = _family(reg, lambda sp: sp.casefold_id)
     unknown_is_folded = ~_in_family(source_col, sorted(reg)) | _in_family(source_col, folds)
-    out = out.withColumn(
-        "_id", F.when(unknown_is_folded, W.casefold_id(F.col("_id"))).otherwise(F.col("_id"))
-    )
-    return out
+    last = {"_id": F.when(unknown_is_folded, W.casefold_id(F.col("_id"))).otherwise(F.col("_id"))}
+    if "__rc" in stage:
+        # both sides read the one reclassified struct (a second projection
+        # keeps Catalyst from evaluating it per side)
+        last |= {
+            c: F.coalesce(F.col("__rc").getField(c), F.col(c)) for c in ("species", "infectiousAgent")
+        }
+    return out.withColumns(stage).withColumns(last).drop("__rc")
