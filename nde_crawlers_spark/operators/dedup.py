@@ -503,7 +503,7 @@ def dedup_clusters(
     Each propagation is one shuffle on the edge key + one
     min-aggregation on the node key — both map-side combined, skew
     handled by AQE. Plan lineage is truncated every ``checkpoint_every``
-    iterations (same driver discipline as lineage.taxonomy_closure);
+    iterations by a ``localCheckpoint``, so plan depth stays bounded;
     superseded label frames are unpersisted as soon as a probe has
     materialized their successor, so at most ~3 cached frames are live
     at any point. The RETURNED frame stays cached — the caller owns it

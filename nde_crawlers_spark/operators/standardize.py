@@ -53,8 +53,8 @@ def apply_drop_rules(ner: Column, rules: list[dict], closure=None) -> Column:
     is dropped when its casefolded name or its taxid matches a rule,
     and — for rules with ``ignore_children`` — when its taxid is a
     DESCENDANT of the rule's taxid ('omicron'/'other sequences': the
-    whole subtree is suspect). Descendants come from the collected
-    lineage closure (operators/lineage.py, rows of (taxon, member,
+    whole subtree is suspect). Descendants come from the lineage
+    closure (operators/lineage.py, rows of (taxon, member,
     member_parent)): descendants of rule r = the taxon of each row with
     member == r.id, taxon != r.id.
 

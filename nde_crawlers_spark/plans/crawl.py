@@ -69,6 +69,7 @@ from pyspark.sql import types as T
 from ..functions import urls as U
 from ..operators import cuckoo as CK
 from ..operators import frontier as FR
+from ..operators import robots as RB
 from ..operators import seen as SN
 from ..operators.fetch import FUSED_SCHEMA, fetch_parse
 
@@ -89,10 +90,7 @@ ROUND_TABLES: dict[str, T.StructType] = {
     "fetched": _struct(*FUSED_SCHEMA, ("round", T.IntegerType()),
                        ("partition_id", T.IntegerType())),
     "new_seen": _struct(("url_hash", T.StringType()), ("first_seen_round", T.IntegerType())),
-    "robots_cache": _struct(
-        ("host", T.StringType()), ("disallow_prefixes", T.ArrayType(T.StringType())),
-        ("allow_prefixes", T.ArrayType(T.StringType())), ("crawl_delay_ms", T.IntegerType()),
-    ),
+    "robots_cache": RB.ROBOTS_RULES_SCHEMA,
     "host_state": _struct(
         ("host", T.StringType()), ("fetched_total", T.LongType()), ("bytes_total", T.LongType()),
         ("next_allowed_round", T.IntegerType()), ("at_delay_ms", T.DoubleType()),
@@ -338,7 +336,6 @@ class CrawlRun:
         to the rules (the robots_cache incremental-table analog of the
         reference's HTTPCACHE, ncbi_geo_crawler/files/settings.py:31-35).
         """
-        from ..operators.robots import parse_robots_txt
         from ..sources.synthetic import render_robots_txt
 
         new_hosts = (
@@ -350,7 +347,7 @@ class CrawlRun:
             for pdf in batches:
                 rows = []
                 for h in pdf["host"]:
-                    r = parse_robots_txt(robots_body(h))
+                    r = RB.parse_robots_txt(robots_body(h))
                     rows.append((h, r["disallow_prefixes"], r["allow_prefixes"],
                                  r["crawl_delay_ms"]))
                 yield pd.DataFrame(rows, columns=ROUND_TABLES["robots_cache"].fieldNames())

@@ -1209,31 +1209,11 @@ def enrich_explode_collect(spark, sf_dir):
     )
 
 
-def _hub_taxonomy(spark: SparkSession) -> DataFrame:
-    """The hub fixtures' deterministic taxonomy: taxa 1..200 with
-    parent(t) = max(t/7, 1), root 1 (no parent)."""
-    return spark.range(1, 201).select(
-        F.col("id").cast("int").alias("taxon"),
-        F.when(F.col("id") == 1, F.lit(None))
-        .otherwise(F.greatest(F.floor(F.col("id") / 7), F.lit(1)))
-        .cast("int")
-        .alias("parent_taxon"),
-    )
-
-
-_HUB_CLOSURE: tuple = ()
-
-
-def _hub_closure(spark: SparkSession) -> tuple:
-    """``LN.taxonomy_closure`` of ``_hub_taxonomy``, collected once per
-    process: rows (taxon, member, member_parent) of a pure formula, so
-    they hold for every session."""
-    global _HUB_CLOSURE
-    from .operators import lineage as LN
-
-    if not _HUB_CLOSURE:
-        _HUB_CLOSURE = tuple(LN.taxonomy_closure(_hub_taxonomy(spark)).collect())
-    return _HUB_CLOSURE
+def _hub_taxonomy() -> list[tuple]:
+    """The hub fixtures' deterministic taxonomy as (taxon, parent_taxon)
+    pairs: taxa 1..200 with parent(t) = max(t // 7, 1), root 1 (no
+    parent)."""
+    return [(t, None if t == 1 else max(t // 7, 1)) for t in range(1, 201)]
 
 
 def _species_lookup() -> dict:
@@ -1295,15 +1275,15 @@ _NER_RULES = [
 
 def enrich_lineage_expand(spark, sf_dir):
     """J7's real payload (utils/lineage.py:140-307 + extract.py:332-360):
-    a deterministic taxonomy tree (parent(t) = max(t/7, 1), root 1),
-    closure computed by iterating the SMALL taxonomy table only and
-    collected, then one literal-map lookup per taxid expands each doc's
-    taxids into sorted-distinct ``_meta.lineage`` entries;
+    a deterministic taxonomy tree (parent(t) = max(t // 7, 1), root
+    1), its closure walked on the driver (no Spark job), then one
+    literal-map lookup per taxid expands each doc's taxids into
+    sorted-distinct ``_meta.lineage`` entries;
     ancestor-removal drops taxids that are proper ancestors of another
     taxid in the same doc."""
     from .operators import lineage as LN
 
-    closure = _hub_closure(spark)
+    closure = LN.taxonomy_closure(_hub_taxonomy())
     did = F.col("doc_id")
     taxids = F.array_distinct(
         F.array((1 + did % 200).cast("int"), (1 + (did * 3) % 200).cast("int"))
@@ -1364,15 +1344,16 @@ def enrich_drop_rules(spark, sf_dir):
     """J17's heuristic layer (utils/extract.py:23-59 ADVANCED_DROP_RULES):
     NER entities dropped by name match ('china' is a place), by taxid
     match, and — with ignore_children — by membership in a rule taxid's
-    subtree, read off the collected lineage closure. Same deterministic
+    subtree, read off the lineage closure. Same deterministic
     taxonomy as enrich_lineage_expand."""
+    from .operators import lineage as LN
     from .operators import standardize as SD
 
     ner = F.array(*[
         F.struct(name.alias("name"), taxid.alias("taxid"))
         for name, taxid in _ner_entities(F.col("doc_id"))
     ])
-    kept = SD.apply_drop_rules(ner, _NER_RULES, _hub_closure(spark))
+    kept = SD.apply_drop_rules(ner, _NER_RULES, LN.taxonomy_closure(_hub_taxonomy()))
     # a doc whose entities all drop has no row
     return t(spark, sf_dir, "documents").select("doc_id", kept.alias("kept")).filter(
         F.size("kept") > 0
@@ -1909,8 +1890,10 @@ def _uploader_lookups(spark: SparkSession) -> dict:
     reference's in-memory memo dicts: the PubTator species lookup, the
     taxonomy closure rows, the NER drop rules, and the funder, PMID
     citation, measurement-technique and topic memos. Each is a pure
-    formula; only the closure runs Spark, once per process
-    (``_hub_closure``). The disambiguation CSV is the one DataFrame."""
+    formula computed on the driver, the closure included, so building
+    them runs no Spark job. The disambiguation CSV is the one DataFrame
+    (a lazy plan)."""
+    from .operators import lineage as LN
     from .uploaders import fixture_family
 
     # add_disambiguating_description CSV analog (utils/
@@ -1934,7 +1917,7 @@ def _uploader_lookups(spark: SparkSession) -> dict:
     # classifier is modeled as a keyed lookup
     return {
         "species_lookup": _species_lookup(),
-        "closure": _hub_closure(spark),
+        "closure": LN.taxonomy_closure(_hub_taxonomy()),
         "ner_rules": _NER_RULES,
         "funding_lookup": {f"grant:{i}": f"funder-{i % 7}" for i in range(89)},
         "pmid_lookup": {f"pmid:{i}": f"cite-{i % 50}" for i in range(0, 500, 2)},

@@ -61,8 +61,8 @@ def get_spark(
         .config("spark.sql.files.maxPartitionBytes", "134217728")
         # Cap plan-string rendering (default ~2^31 bytes). AQE renders
         # explainString on every plan update; in ITERATIVE plans (the
-        # taxonomy-closure loop) nested InMemoryRelation/AQE nodes render
-        # exponentially — the plan OBJECT graph is a shared DAG (linear
+        # connected-components loop in dedup) nested InMemoryRelation/AQE
+        # nodes render exponentially — the plan OBJECT graph is a shared DAG (linear
         # memory), but tree-string generation expands it — and an
         # uncapped render OOMs the driver at ~30 levels. 1 MB keeps every
         # explain useful and bounds the render.

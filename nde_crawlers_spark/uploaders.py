@@ -270,8 +270,8 @@ def run_uploader(
     ``pmids`` for citations, and ``funding_id`` / ``technique`` /
     ``topic_key`` for their lookups. The lookups are Python data:
     ``species_lookup`` name_lc -> (std_name, std_identifier,
-    classification), ``closure`` the collected taxonomy closure rows
-    (taxon, member, member_parent), the other dicts key -> value; only
+    classification), ``closure`` the taxonomy closure rows (taxon,
+    member, member_parent), the other dicts key -> value; only
     ``disamb_lookup`` is a DataFrame (source, _id_lc,
     disambiguatingDescription). A stage whose lookup or input column is
     missing is skipped. Unknown sources get the default chain (casefold

@@ -156,19 +156,17 @@ def test_lineage_closure_iterates_taxonomy_not_corpus(spark):
     with no join and no exchange, regardless of chain length."""
     from nde_crawlers_spark.operators.lineage import expand_lineage, taxonomy_closure
 
-    tax = spark.createDataFrame(
-        [(1, None), (2, 1), (3, 2), (4, 3), (5, 4)], "taxon int, parent_taxon int"
-    )
+    tax = [(1, None), (2, 1), (3, 2), (4, 3), (5, 4)]
     closure = taxonomy_closure(tax)
     got = {
-        (r["taxon"], r["member"], r["member_parent"]) for r in closure.collect()
+        (r["taxon"], r["member"], r["member_parent"]) for r in closure
     }
     # taxon 5's lineage: itself plus every ancestor, each with its parent
     assert {(5, 5, 4), (5, 4, 3), (5, 3, 2), (5, 2, 1), (5, 1, None)} <= got
 
     docs = spark.createDataFrame([(10, [5]), (11, [3, 2]), (12, [999])],
                                  "doc_id long, taxids array<int>")
-    out = docs.select("doc_id", expand_lineage(F.col("taxids"), closure.collect()).alias("_meta_lineage"))
+    out = docs.select("doc_id", expand_lineage(F.col("taxids"), closure).alias("_meta_lineage"))
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert not re.search(r"Join|\bExchange\b", plan), plan
     rows = {r["doc_id"]: r["_meta_lineage"] for r in out.collect()}
@@ -488,6 +486,24 @@ def test_uploader_registry_enrichment_chains(spark):
     assert wf["_id"].startswith("workflowhub:rec:")
     out.unpersist()
 
+
+
+def test_hub_lookups_run_no_spark_job(spark):
+    """The hub lookups, taxonomy closure included, are built on the
+    driver: building them and the lineage query's plan runs no Spark job
+    and leaves nothing persisted (a cached closure input would leak one
+    RDD and ~19 jobs per cold session)."""
+    from nde_crawlers_spark.queries import _uploader_lookups, enrich_lineage_expand
+
+    tracker = spark.sparkContext.statusTracker()
+    last_job = lambda: max(tracker.getJobIdsForGroup(None), default=-1)  # noqa: E731
+    persisted = spark.sparkContext._jsc.getPersistentRDDs
+    jobs, cached = last_job(), persisted().size()
+    lookups = _uploader_lookups(spark)
+    enrich_lineage_expand(spark, SF001)
+    assert last_job() == jobs
+    assert persisted().size() == cached
+    assert len(lookups["closure"]) == 689
 
 def test_pipeline_e2e_no_extra_shuffles(spark):
     """The composed hub lifecycle (registry dispatch -> 1x1 key dedup ->

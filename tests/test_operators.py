@@ -479,25 +479,41 @@ def test_spread_non_file_input(spark):
 
 
 def test_taxonomy_closure_depth50_checkpointed(spark):
-    """A 50-deep parent chain: the closure is complete AND the plan depth
-    stays bounded (localCheckpoint every 16 levels truncates lineage, so
-    the final plan does not contain 50 stacked unions/joins)."""
+    """A 50-deep parent chain: the closure is complete."""
     from nde_crawlers_spark.operators.lineage import taxonomy_closure
 
-    tax = spark.createDataFrame(
-        [(1, None)] + [(i, i - 1) for i in range(2, 51)], "taxon int, parent_taxon int"
-    )
-    closure = taxonomy_closure(tax)
-    rows = closure.collect()
+    tax = [(1, None)] + [(i, i - 1) for i in range(2, 51)]
+    rows = taxonomy_closure(tax)
     # taxon 50's lineage = itself + 49 ancestors
     fifty = [r for r in rows if r["taxon"] == 50]
     assert len(fifty) == 50
     assert {r["member"] for r in fifty} == set(range(1, 51))
     # total closure size for a single chain: sum_{d=1..50} d
     assert len(rows) == 50 * 51 // 2
-    # plan lineage was truncated: far fewer Union nodes than levels
-    plan = closure._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("Union") < 20
+
+
+def test_taxonomy_closure_edge_inputs():
+    """The parent walk stops at a NULL parent, a self-parent and an
+    already visited member; a parent missing from the input is still a
+    member, with a NULL member_parent; chain depth is unbounded."""
+    from nde_crawlers_spark.operators.lineage import taxonomy_closure
+
+    closure = lambda edges: sorted(map(tuple, taxonomy_closure(edges)))  # noqa: E731
+    # NCBI's root is its own parent (1|1)
+    assert closure([(1, 1), (2, 1)]) == [(1, 1, 1), (2, 1, 1), (2, 2, 1)]
+    # 9 is nobody's row: a member of 5's lineage with no parent
+    assert closure([(5, 9)]) == [(5, 5, 9), (5, 9, None)]
+    # a 3-cycle terminates, each taxon reaching all three
+    assert closure([(1, 2), (2, 3), (3, 1)]) == [
+        (1, 1, 2), (1, 2, 3), (1, 3, 1),
+        (2, 1, 2), (2, 2, 3), (2, 3, 1),
+        (3, 1, 2), (3, 2, 3), (3, 3, 1),
+    ]
+    # a 100-deep chain: taxon d has d members, 5050 rows in all
+    rows = closure([(1, None)] + [(i, i - 1) for i in range(2, 101)])
+    assert len(rows) == 100 * 101 // 2
+    assert [m for t, m, _ in rows if t == 100] == list(range(1, 101))
+    assert (100, 1, None) in rows and (100, 99, 98) in rows
 
 
 def test_merge_directives_shuffle_fallback_same_output(spark):
