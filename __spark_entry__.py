@@ -275,7 +275,7 @@ def _uploader_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     run.run(seeds=spark.createDataFrame(
         [(s["url"], s["priority"]) for s in seeds], ["url", "priority"]))
     rec = spans_to_nde(run.documents())
-    # source = the crawled host, mapped onto REAL uploader specs (the
+    # source = the crawled host, mapped onto REAL uploader chains (the
     # reference maps one uploader per source repository): each host-i
     # dispatches the chain of the i-th real fixture source — every
     # host gets the wrapper tail (placeholder scrub + casefold; all 59
@@ -354,7 +354,7 @@ def _py_uploader_pipeline_sql() -> str:
       first-span-per-kind projections, always-array author/keyword/
       media collection, _id = lower('nde-spark:'||doc_id);
     - uploader-registry dispatch (uploaders.py::run_uploader): every
-      host maps onto a WRAPPED real uploader spec, so the row-local
+      host maps onto a WRAPPED real uploader chain, so the row-local
       wrapper tail — placeholder author scrub (utils/utils.py:34-66)
       + _id casefold (utils/utils.py:394) — applies to every row;
       operator stages (reclassify/lineage/ner/funding/...) skip because

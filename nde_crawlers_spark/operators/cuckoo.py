@@ -28,7 +28,6 @@ from __future__ import annotations
 
 import numpy as np
 
-_FP_BITS = 16
 _EMPTY = 0  # fingerprints are 1..65535; 0 marks an empty slot
 # table slots allocated per design-capacity key: a filter built for
 # ``capacity`` keys has at least ``capacity * _HEADROOM`` slots

@@ -46,7 +46,6 @@ from .parse import parse_record
 
 SPAN_FIELDS = [("kind", pa.string()), ("text", pa.string()),
                ("media_ref", pa.string()), ("offset", pa.int32())]
-PA_SPANS = pa.list_(pa.struct(SPAN_FIELDS))
 
 FUSED_SCHEMA = T.StructType(
     [

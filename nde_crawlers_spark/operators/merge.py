@@ -170,7 +170,8 @@ def apply_merge_directives(
         )
         .drop("__gain")
     )
-    losers = directives.select(F.col("drop_id").alias(id_col)).distinct()
+    # an anti-join ignores duplicates on its right side: no distinct
+    losers = directives.select(F.col("drop_id").alias(id_col))
     return merged.join(
         F.broadcast(losers) if broadcast_directives else losers, id_col, "left_anti"
     )

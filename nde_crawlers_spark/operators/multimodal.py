@@ -39,18 +39,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("media_ref", T.StringType()),
-        T.StructField("media_kind", T.StringType()),   # image | audio | video | other
-        T.StructField("payload", T.BinaryType()),       # opaque bytes
-        T.StructField("meta", T.StructType([
-            T.StructField("content_type", T.StringType()),
-            T.StructField("bytes", T.LongType()),
-        ])),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("media_ref", T.StringType()),

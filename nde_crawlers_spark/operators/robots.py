@@ -14,7 +14,7 @@ Disallow/Allow prefixes (Allow wins on longer match), Crawl-delay.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -104,15 +104,18 @@ def is_allowed(path: str, disallow: list[str], allow: list[str]) -> bool:
     return a >= d
 
 
-def parse_robots_bodies(bodies: DataFrame) -> DataFrame:
-    """(host, body) -> robots_cache rows, Arrow-batched."""
+def parse_robots_bodies(hosts: DataFrame, body_of: Callable[[str], str | None]) -> DataFrame:
+    """host -> robots_cache rows, Arrow-batched: each host's robots.txt
+    body is ``body_of(host)`` (the crawl passes its fetcher's
+    ``robots_txt``), parsed by ``parse_robots_txt``; a NULL body parses
+    as an empty file."""
 
     def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             rows = []
-            for host, body in zip(pdf["host"], pdf["body"]):
-                r = parse_robots_txt(body or "")
+            for host in pdf["host"]:
+                r = parse_robots_txt(body_of(host) or "")
                 rows.append((host, r["disallow_prefixes"], r["allow_prefixes"], r["crawl_delay_ms"]))
-            yield pd.DataFrame(rows, columns=["host", "disallow_prefixes", "allow_prefixes", "crawl_delay_ms"])
+            yield pd.DataFrame(rows, columns=ROBOTS_RULES_SCHEMA.fieldNames())
 
-    return bodies.select("host", "body").mapInPandas(_run, schema=ROBOTS_RULES_SCHEMA)
+    return hosts.select("host").mapInPandas(_run, schema=ROBOTS_RULES_SCHEMA)

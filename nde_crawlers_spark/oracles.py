@@ -172,12 +172,6 @@ COSINE_RAW = """CASE WHEN sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_produ
        THEN list_dot_product({a}, {b}) / (sqrt(list_dot_product({a}, {a})) * sqrt(list_dot_product({b}, {b})))
        ELSE 0.0 END"""
 
-SIGN_BUCKET = (
-    "("
-    + " + ".join(f"CASE WHEN {{v}}[{i + 1}] > 0 THEN {1 << i} ELSE 0 END" for i in range(8))
-    + ")"
-)
-
 
 def _hyperplane_bucket_sql(vexpr: str, bits: int = 8, dim: int = 64, seed: int = 42) -> str:
     """Mirror of functions/vectors.py::hyperplane_bucket: the SAME seeded
@@ -1402,19 +1396,20 @@ FROM p
 
 # mirror of queries.uploader_registry: the full registry dispatch — doi
 # promote (zenodo), wrapper placeholder scrub + lineage + casefold
-# (every wrapped source), PubTator reclassification, funder / citation /
-# measurement-technique / topic lookups, NER drop rules — with family
-# CTEs restricted to their sources and the same renderings. The family
-# IN-lists are GENERATED from the real registry
-# (uploaders.fixture_family), and the CTE chain is shared with
+# (every registered source), PubTator reclassification, funder /
+# citation / measurement-technique / topic lookups, NER drop rules —
+# with family CTEs restricted to their sources and the same renderings.
+# The family IN-lists are GENERATED from the real registry's stage
+# tokens (uploaders.fixture_family), and the CTE chain is shared with
 # nde_pipeline_e2e, so the Spark dispatch, the registry data, and both
-# oracles cannot drift.
+# oracles cannot drift. Every fixture source is registered, so the
+# wrapper tail's test is just "the row has a source".
 from .uploaders import FIXTURE_SOURCES  # noqa: E402
 from .uploaders import fixture_family  # noqa: E402
 
 
-def _IN(flag: str) -> str:
-    return "'" + "','".join(fixture_family(flag)) + "'"
+def _IN(stage: str) -> str:
+    return "'" + "','".join(fixture_family(stage)) + "'"
 
 
 _SRC_ARR = "[" + ",".join(f"'{s}'" for s in FIXTURE_SOURCES) + "]"
@@ -1469,13 +1464,13 @@ darch AS (
 ),
 -- standardize_data sources: PubTator reclassification
 entries AS (
-  SELECT doc_id, 0 AS pos, n1 AS n, 'o' AS kind FROM d WHERE source IN ({_IN("reclassify")})
+  SELECT doc_id, 0 AS pos, n1 AS n, 'o' AS kind FROM d WHERE source IN ({_IN("recl")})
   UNION ALL
-  SELECT doc_id, 1, n2, 'o' FROM d WHERE source IN ({_IN("reclassify")})
+  SELECT doc_id, 1, n2, 'o' FROM d WHERE source IN ({_IN("recl")})
   UNION ALL
-  SELECT doc_id, 2, n3, 't' FROM d WHERE source IN ({_IN("reclassify")}) AND doc_id % 4 = 0
+  SELECT doc_id, 2, n3, 't' FROM d WHERE source IN ({_IN("recl")}) AND doc_id % 4 = 0
   UNION ALL
-  SELECT doc_id, 100000, n3, 'o' FROM d WHERE source IN ({_IN("reclassify")})
+  SELECT doc_id, 100000, n3, 'o' FROM d WHERE source IN ({_IN("recl")})
 ),
 std AS (
   SELECT doc_id, pos,
@@ -1517,12 +1512,12 @@ agg_ AS (
   SELECT doc_id, string_agg(name || '|' || identifier, ',' ORDER BY pos) AS agents_csv
   FROM agd GROUP BY doc_id
 ),
--- wrapper lineage annotation (every wrapped source, utils.py:356)
+-- wrapper lineage annotation (every registered source, utils.py:356)
 lex AS (
   SELECT doc_id,
          unnest(list_distinct([CAST(1 + doc_id % 200 AS INTEGER),
                                CAST(1 + (doc_id * 3) % 200 AS INTEGER)])) AS taxon
-  FROM d WHERE source IN ({_IN("lineage")})
+  FROM d WHERE source IS NOT NULL
 ),
 lhits AS (SELECT DISTINCT e.doc_id, a.member FROM lex e JOIN anc a USING (taxon)),
 lentries AS (SELECT h.doc_id, h.member, t2.parent FROM lhits h JOIN tax t2 ON h.member = t2.taxon),
@@ -1536,16 +1531,16 @@ lin AS (
 ne AS (
   SELECT doc_id, 0 AS pos,
          'ent-' || CAST(1 + doc_id % 200 AS VARCHAR) AS name,
-         CAST(1 + doc_id % 200 AS INTEGER) AS taxid FROM d WHERE source IN ({_IN("drop_rules")})
+         CAST(1 + doc_id % 200 AS INTEGER) AS taxid FROM d WHERE source IN ({_IN("ner")})
   UNION ALL
   SELECT doc_id, 1,
          CASE WHEN doc_id % 9 = 0 THEN 'china'
               ELSE 'ent-' || CAST(1 + (doc_id * 3) % 200 AS VARCHAR) END,
-         CAST(1 + (doc_id * 3) % 200 AS INTEGER) FROM d WHERE source IN ({_IN("drop_rules")})
+         CAST(1 + (doc_id * 3) % 200 AS INTEGER) FROM d WHERE source IN ({_IN("ner")})
   UNION ALL
   SELECT doc_id, 2,
          'ent-' || CAST(1 + (doc_id * 11) % 200 AS VARCHAR),
-         CAST(1 + (doc_id * 11) % 200 AS INTEGER) FROM d WHERE source IN ({_IN("drop_rules")})
+         CAST(1 + (doc_id * 11) % 200 AS INTEGER) FROM d WHERE source IN ({_IN("ner")})
 ),
 desc3 AS (SELECT DISTINCT taxon AS taxid FROM anc WHERE member = 3 AND taxon != 3),
 nkept AS (
@@ -1562,14 +1557,14 @@ keptg AS (
 p AS (
   SELECT d.doc_id, d.source, d.funding_id, d.n1, d.n2, d.n3,
     d.type, d.url, d.access, d.archived, d.dup_key,
-    CASE WHEN d.source IN ({_IN("funding")}) AND d.funding_id IS NOT NULL
+    CASE WHEN d.source IN ({_IN("fund")}) AND d.funding_id IS NOT NULL
          THEN 'funder-' || CAST(((d.doc_id * 3) % 89) % 7 AS VARCHAR)
          ELSE NULL END AS funder_name,
-    CASE WHEN d.source IN ({_IN("promote_doi")}) AND len(doi) = 1 AND lower(doi[1]) != 'none'
+    CASE WHEN d.source IN ({_IN("doi")}) AND len(doi) = 1 AND lower(doi[1]) != 'none'
          THEN doi[1] ELSE _id END AS _id,
-    CASE WHEN d.source IN ({_IN("promote_doi")}) AND len(doi) = 1 AND lower(doi[1]) = 'none'
+    CASE WHEN d.source IN ({_IN("doi")}) AND len(doi) = 1 AND lower(doi[1]) = 'none'
          THEN CAST([] AS VARCHAR[]) ELSE doi END AS doi,
-    CASE WHEN d.source IN ({_IN("placeholder_fields")})
+    CASE WHEN d.source IS NOT NULL
          THEN list_filter(authors, a -> NOT list_contains(
               ['n/a','na','unknown','not applicable','none','null','other'],
               trim(lower(a))))
@@ -1580,23 +1575,23 @@ p AS (
 ORACLES["uploader_registry"] = """
 WITH RECURSIVE """ + _UPLOADER_CTES.format(prefix4=PREFIX4_KEY) + f"""
 SELECT p.doc_id, p.source,
-       CASE WHEN p.source IN ({_IN("casefold_id")}) THEN lower(p._id) ELSE p._id END AS _id,
+       CASE WHEN p.source IS NOT NULL THEN lower(p._id) ELSE p._id END AS _id,
        CAST(len(p.doi) AS INTEGER) AS n_doi,
        coalesce(array_to_string(p.doi, ','), '') AS doi_csv,
        coalesce(array_to_string(p.authors, ','), '') AS authors_csv,
-       CASE WHEN p.source IN ({_IN("reclassify")}) THEN coalesce(spg.species_csv, '')
+       CASE WHEN p.source IN ({_IN("recl")}) THEN coalesce(spg.species_csv, '')
             ELSE 'organism-' || CAST(p.n1 AS VARCHAR) || '|tax:' || CAST(1000 + p.n1 AS VARCHAR)
                  || ',organism-' || CAST(p.n2 AS VARCHAR) || '|tax:' || CAST(1000 + p.n2 AS VARCHAR)
                  || CASE WHEN p.doc_id % 4 = 0
                          THEN ',taxon-' || CAST(p.n3 AS VARCHAR) || '|tax:' || CAST(3000 + p.n3 AS VARCHAR)
                          ELSE '' END
        END AS species_csv,
-       CASE WHEN p.source IN ({_IN("reclassify")}) THEN coalesce(agg_.agents_csv, '')
+       CASE WHEN p.source IN ({_IN("recl")}) THEN coalesce(agg_.agents_csv, '')
             ELSE 'organism-' || CAST(p.n3 AS VARCHAR) || '|tax:' || CAST(1000 + p.n3 AS VARCHAR)
        END AS agents_csv,
-       CASE WHEN p.source IN ({_IN("lineage")}) THEN coalesce(lin.lineage_csv, '')
+       CASE WHEN p.source IS NOT NULL THEN coalesce(lin.lineage_csv, '')
             ELSE '' END AS lineage_csv,
-       CASE WHEN p.source IN ({_IN("drop_rules")}) THEN coalesce(keptg.ner_csv, '')
+       CASE WHEN p.source IN ({_IN("ner")}) THEN coalesce(keptg.ner_csv, '')
             ELSE 'ent-' || CAST(1 + p.doc_id % 200 AS VARCHAR) || '|' || CAST(1 + p.doc_id % 200 AS VARCHAR)
                  || ',' || (CASE WHEN p.doc_id % 9 = 0 THEN 'china'
                                  ELSE 'ent-' || CAST(1 + (p.doc_id * 3) % 200 AS VARCHAR) END)
@@ -1604,7 +1599,7 @@ SELECT p.doc_id, p.source,
                  || ',ent-' || CAST(1 + (p.doc_id * 11) % 200 AS VARCHAR)
                  || '|' || CAST(1 + (p.doc_id * 11) % 200 AS VARCHAR)
        END AS ner_csv,
-       CASE WHEN p.source IN ({_IN("funding")}) AND p.funding_id IS NOT NULL
+       CASE WHEN p.source IN ({_IN("fund")}) AND p.funding_id IS NOT NULL
             THEN 'funder-' || CAST(((p.doc_id * 3) % 89) % 7 AS VARCHAR)
             ELSE '' END AS funder,
        CASE WHEN p.source IN ({_IN("pmid")})
@@ -1614,13 +1609,13 @@ SELECT p.doc_id, p.source,
                                x -> x % 2 = 0),
                    x -> 'cite-' || CAST(x % 50 AS VARCHAR))), ','), '')
             ELSE '' END AS citations_csv,
-       CASE WHEN p.source IN ({_IN("measurement_technique")}) AND (p.doc_id % 37) % 5 != 4
+       CASE WHEN p.source IN ({_IN("mt")}) AND (p.doc_id % 37) % 5 != 4
             THEN 'MT-' || CAST((p.doc_id % 37) % 9 AS VARCHAR)
             ELSE '' END AS technique_std,
-       CASE WHEN p.source IN ({_IN("topic_category")})
+       CASE WHEN p.source IN ({_IN("topic")})
             THEN 'topic-' || CAST((p.doc_id % 12) % 5 AS VARCHAR)
             ELSE '' END AS topic,
-       CASE WHEN p.source IN ({_IN("disambiguate")}) AND p.doc_id % 4 = 0 AND p.doc_id < 20000
+       CASE WHEN p.source IN ({_IN("disamb")}) AND p.doc_id % 4 = 0 AND p.doc_id < 20000
             THEN 'disamb-' || CAST(p.doc_id % 13 AS VARCHAR)
             ELSE '' END AS disamb
 FROM p
@@ -1663,7 +1658,7 @@ v AS (
   FROM m
 )
 SELECT v.doc_id, v.source,
-       CASE WHEN v.source IN ({casefold}) THEN lower(v._id) ELSE v._id END AS _id, v.type,
+       CASE WHEN v.source IS NOT NULL THEN lower(v._id) ELSE v._id END AS _id, v.type,
        CAST(CASE WHEN gained AND NOT same_entry THEN 2 ELSE 1 END AS INTEGER) AS n_catalog,
        CASE WHEN gained AND NOT same_entry
             THEN array_to_string(list_sort([v.source || '@' || coalesce(v.archived, 'NULL'),
@@ -1676,7 +1671,7 @@ SELECT v.doc_id, v.source,
                          THEN ',taxon-' || CAST(v.n3 AS VARCHAR) || '|tax:' || CAST(3000 + v.n3 AS VARCHAR)
                          ELSE '' END
        END AS species_csv,
-       CASE WHEN v.source IN ({lineage}) THEN coalesce(lin.lineage_csv, '')
+       CASE WHEN v.source IS NOT NULL THEN coalesce(lin.lineage_csv, '')
             ELSE '' END AS lineage_csv,
        coalesce(v.funder_name, '') AS funder,
        round(0.6 * ((CASE WHEN v.type IS NOT NULL AND v.type != '' THEN 1 ELSE 0 END
@@ -1688,7 +1683,7 @@ FROM v
 LEFT JOIN spg ON v.doc_id = spg.doc_id
 LEFT JOIN lin ON v.doc_id = lin.doc_id
 WHERE v.violation IS NULL
-""".format(casefold=_IN("casefold_id"), recl=_IN("reclassify"), lineage=_IN("lineage"))
+""".format(recl=_IN("recl"))
 
 ORACLES["setops_union_by_name"] = """
 WITH u AS (

@@ -58,10 +58,9 @@ import json
 import os
 import shutil
 import time
-from collections.abc import Callable, Iterable, Iterator
+from collections.abc import Callable, Iterable
 from dataclasses import dataclass
 
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -342,18 +341,7 @@ class CrawlRun:
             candidates.select("host").distinct().join(robots, "host", "left_anti")
         )
         robots_body = getattr(self.cfg.fetcher, "robots_txt", None) or render_robots_txt
-
-        def _fetch_robots(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-            for pdf in batches:
-                rows = []
-                for h in pdf["host"]:
-                    r = RB.parse_robots_txt(robots_body(h))
-                    rows.append((h, r["disallow_prefixes"], r["allow_prefixes"],
-                                 r["crawl_delay_ms"]))
-                yield pd.DataFrame(rows, columns=ROUND_TABLES["robots_cache"].fieldNames())
-
-        fetched = new_hosts.mapInPandas(_fetch_robots, schema=ROUND_TABLES["robots_cache"])
-        return robots.unionByName(fetched)
+        return robots.unionByName(RB.parse_robots_bodies(new_hosts, robots_body))
 
     # ---------- the round ----------
     def _run_round(

@@ -1903,7 +1903,7 @@ def _uploader_lookups(spark: SparkSession) -> dict:
     disamb_lookup = (
         spark.range(0, 20000, 4)
         .select(
-            F.explode(F.array(*[F.lit(n) for n in fixture_family("disambiguate")])).alias("source"),
+            F.explode(F.array(*[F.lit(n) for n in fixture_family("disamb")])).alias("source"),
             F.col("id"),
         )
         .select(

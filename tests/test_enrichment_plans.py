@@ -324,7 +324,7 @@ def test_uploader_plan_scans_independent_of_sources(spark):
     import re
 
     from nde_crawlers_spark.queries import _uploader_fixture, _uploader_lookups
-    from nde_crawlers_spark.uploaders import UPLOADERS, UploaderSpec, run_uploader
+    from nde_crawlers_spark.uploaders import UPLOADERS, run_uploader
 
     docs = _uploader_fixture(spark, SF001)
     lookups = _uploader_lookups(spark)
@@ -338,16 +338,16 @@ def test_uploader_plan_scans_independent_of_sources(spark):
     base = n_scans(UPLOADERS)
     doubled = dict(UPLOADERS)
     for i in range(60):  # +60 synthetic sources across every stage kind
-        doubled[f"extra{i}"] = UploaderSpec(
-            promote_doi=(i % 3 == 0),
-            placeholder_fields=("author",) if i % 3 == 1 else (),
-            reclassify=(i % 5 == 0),
-            lineage=(i % 5 == 1),
-            drop_rules=(i % 5 == 2),
-            funding=(i % 5 == 3),
-            pmid=(i % 7 == 0),
-            measurement_technique=(i % 7 == 1),
-            topic_category=(i % 7 == 2),
+        doubled[f"extra{i}"] = frozenset(
+            stage for stage, on in (
+                ("doi", i % 3 == 0),
+                ("recl", i % 5 == 0),
+                ("ner", i % 5 == 2),
+                ("fund", i % 5 == 3),
+                ("pmid", i % 7 == 0),
+                ("mt", i % 7 == 1),
+                ("topic", i % 7 == 2),
+            ) if on
         )
     assert n_scans(doubled) == base
     assert base == 1
@@ -388,16 +388,14 @@ def test_run_uploader_edge_rows(spark):
     ``pmids``, a NULL entity, a NULL taxid, all-miss and duplicate
     PMIDs, NULL and unknown funding ids. An in-family row gets each
     stage's value, empty arrays where there is nothing to add; an
-    out-of-family row keeps its entities and gets no citations, lineage
-    or funder."""
+    out-of-family row keeps its entities and gets no citations or
+    funder. A registered source with an empty chain still gets the
+    wrapper tail (lineage, casefold); an unregistered one gets the
+    casefold only; a row with a NULL source keeps its ``_id``."""
     from nde_crawlers_spark.queries import _uploader_lookups
-    from nde_crawlers_spark.uploaders import UploaderSpec, run_uploader
+    from nde_crawlers_spark.uploaders import run_uploader
 
-    registry = {
-        "fam": UploaderSpec(reclassify=True, lineage=True, drop_rules=True, funding=True,
-                            pmid=True),
-        "other": UploaderSpec(),
-    }
+    registry = {"fam": frozenset({"recl", "ner", "fund", "pmid"}), "bare": frozenset()}
     species = [None, ("organism-3", "x")]
     rows = [
         (1, "fam", None, None, None, None, None, None),
@@ -407,6 +405,8 @@ def test_run_uploader_edge_rows(spark):
         (4, "fam", [("ent-50", 50), ("ent-9", 9)], ["pmid:2", "pmid:2", "pmid:0"], [60, 8],
          [("Foo", "f")], None, "grant:12"),
         (5, "other", _EDGE_NER, ["pmid:2"], [None, 8], species, None, "grant:3"),
+        (6, "bare", _EDGE_NER, ["pmid:2"], [None, 8], species, None, "grant:3"),
+        (7, None, _EDGE_NER, ["pmid:2"], [None, 8], species, None, "grant:3"),
     ]
     docs = spark.createDataFrame(
         [(f"ID:{r[0]}", *r) for r in rows],
@@ -415,23 +415,25 @@ def test_run_uploader_edge_rows(spark):
         f"infectiousAgent {_ENTITY}, funding_id string",
     )
     out = {r["doc_id"]: r for r in run_uploader(docs, registry, **_uploader_lookups(spark)).collect()}
-    assert sorted(out) == [1, 2, 3, 4, 5]
+    assert sorted(out) == [1, 2, 3, 4, 5, 6, 7]
 
     def ents(arr):
         return None if arr is None else [None if e is None else tuple(e) for e in arr]
 
     assert {i: ents(r["ner"]) for i, r in out.items()} == {
         1: [], 2: [], 3: [("ent-8", 8), ("ent-9", 9)], 4: [("ent-9", 9)], 5: _EDGE_NER,
+        6: _EDGE_NER, 7: _EDGE_NER,
     }
     assert {i: r["citations"] for i, r in out.items()} == {
-        1: [], 2: [], 3: [], 4: ["cite-0", "cite-2", "cite-2"], 5: [],
+        1: [], 2: [], 3: [], 4: ["cite-0", "cite-2", "cite-2"], 5: [], 6: [], 7: [],
     }
     # parent(t) = max(t / 7, 1): 8 -> 1 and 60 -> 8 -> 1
     assert {i: ents(r["_meta_lineage"]) for i, r in out.items()} == {
         1: [], 2: [], 3: [(1, None), (8, 1)], 4: [(1, None), (8, 1), (60, 8)], 5: [],
+        6: [(1, None), (8, 1)], 7: [],
     }
     assert {i: r["funder_name"] for i, r in out.items()} == {
-        1: None, 2: None, 3: "funder-3", 4: "funder-5", 5: None,
+        1: None, 2: None, 3: "funder-3", 4: "funder-5", 5: None, 6: None, 7: None,
     }
     assert {i: (ents(r["species"]), ents(r["infectiousAgent"])) for i, r in out.items()} == {
         1: ([], []),
@@ -439,8 +441,12 @@ def test_run_uploader_edge_rows(spark):
         3: ([("taxon-1", "tax:2001")], [("taxon-3", "tax:2003")]),
         4: ([("Foo", "f")], []),
         5: (species, None),
+        6: (species, None),
+        7: (species, None),
     }
-    assert {r["_id"] for r in out.values()} == {f"id:{i}" for i in out}
+    assert {i: r["_id"] for i, r in out.items()} == {
+        **{i: f"id:{i}" for i in range(1, 7)}, 7: "ID:7",
+    }
 
 
 def test_uploader_registry_enrichment_chains(spark):
@@ -612,7 +618,7 @@ def _parse_reference_chains():
 def test_registry_matches_reference_chains():
     """Every one of the 59 reference uploader classes
     (hub/dataload/sources/** — 58 dirs, ncbi_geo ships gse+gsm) resolves
-    to a spec whose stage set matches its load_data chain. The expected
+    to a stage-token set that matches its load_data chain. The expected
     table is DERIVED by parsing the reference uploader sources
     (``_parse_reference_chains``), so any registry drift — wrong stage
     order, a missed wrapper decoration, a phantom source — fails here.
@@ -625,33 +631,21 @@ def test_registry_matches_reference_chains():
     from nde_crawlers_spark.uploaders import _CHAINS, UPLOADERS
 
     expected = _parse_reference_chains()
-    assert _CHAINS == expected
+    assert _CHAINS == {name: chain for name, (_w, chain) in expected.items()}
     assert len(UPLOADERS) == 59
     # ALL 59 are wrapped: the six classes without their own load_data
     # (bioconductor, dockstore, gxa, sb_apps, veupath_collections,
     # workflowhub) inherit the base load_data, itself @nde_upload_wrapper
     assert sum(1 for _, (w, _c) in expected.items() if w) == 59
-    for name, (wrapped, chain) in expected.items():
-        sp = UPLOADERS[name]
-        s = set(chain.split())
-        # per-source pre-wrapper stage flags
-        assert sp.pmid == ("pmid" in s), name
-        assert sp.funding == ("fund" in s), name
-        assert sp.reclassify == ("recl" in s), name
-        assert sp.drop_rules == ("ner" in s), name
-        assert sp.measurement_technique == ("mt" in s), name
-        assert sp.topic_category == ("topic" in s), name
-        assert sp.disambiguate == ("disamb" in s), name
+    for name, (_wrapped, chain) in expected.items():
+        stages = UPLOADERS[name]
+        # per-source pre-wrapper stage tokens
+        assert stages - {"doi"} == set(chain.split()), name
         # add_disambiguating_description ships in exactly two chains
         # (immport/uploader.py:27, clinepidb/uploader.py:33)
-        assert sp.disambiguate == (name in ("immport", "clinepidb")), name
-        assert sp.stages == tuple(chain.split()), name
-        # wrapper tail (utils/utils.py:352-403) is all-or-nothing
-        assert sp.lineage == wrapped, name
-        assert sp.casefold_id == wrapped, name
-        assert (sp.placeholder_fields == ("author",)) == wrapped, name
+        assert ("disamb" in stages) == (name in ("immport", "clinepidb")), name
         # zenodo's sqlite version merge + DOI promotion
-        assert sp.promote_doi == (name == "zenodo"), name
+        assert ("doi" in stages) == (name == "zenodo"), name
 
 
 def test_prefix_scan_predicate_pushdown(spark):

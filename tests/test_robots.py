@@ -46,10 +46,9 @@ def test_allow_longest_match_wins():
 
 
 def test_parse_robots_bodies_batch(spark):
-    df = spark.createDataFrame(
-        [("h1.org", ROBOTS), ("h2.org", ""), ("h3.org", None)], "host string, body string"
-    )
-    rows = {r["host"]: r for r in parse_robots_bodies(df).collect()}
+    bodies = {"h1.org": ROBOTS, "h2.org": "", "h3.org": None}
+    df = spark.createDataFrame([(h,) for h in bodies], "host string")
+    rows = {r["host"]: r for r in parse_robots_bodies(df, bodies.get).collect()}
     assert rows["h1.org"]["crawl_delay_ms"] == 500
     assert rows["h2.org"]["disallow_prefixes"] == []
     assert rows["h3.org"]["crawl_delay_ms"] == 500
