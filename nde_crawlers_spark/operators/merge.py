@@ -12,8 +12,10 @@ Spark-first re-expressions of the reference's MongoDB merge pipeline:
                             key maps to exactly one doc on each side)
 
 All are window/groupBy compositions — no custom shuffle logic; Catalyst
-plans them as hash aggregations / sort-merge joins and AQE handles skewed
-keys (a viral DOI shared by thousands of records).
+plans them as hash aggregations and AQE handles skewed keys (a viral DOI
+shared by thousands of records). The 1x1 dedup is ONE aggregation over
+both sides, and ``apply_merge_directives`` ONE broadcast join of its
+role table onto the documents.
 """
 
 from __future__ import annotations
@@ -84,19 +86,34 @@ def key_dedup_1x1(
     """Cross-source key dedup with the reference's 1x1 guard: a key merges
     only when exactly one doc holds it on each side; ambiguous groups are
     skipped (and logged by count in the reference, builder.py:126-134).
-    Returns (key, keep_id, drop_id) — survivor from side_a, loser from b.
+    Returns (key, keep_id, drop_id, *other columns) — survivor from
+    side_a, loser from side_b; the sides' other columns (same names on
+    both) ride along as the LOSER's values, e.g. the catalog
+    ``apply_merge_directives`` gives its keeper.
+
+    One aggregation: the sides are unioned with a tag and grouped once by
+    key. NULL keys are dropped first (the reference never pairs them).
+    Precondition: ids are unique (the reference's ``_id``) and the sides
+    disjoint, so no id is both a keeper and a loser, or either twice.
     """
-    a1 = (
-        side_a.groupBy(key_col)
-        .agg(F.count("*").alias("na"), F.min(id_col).alias("keep_id"))
-        .filter(F.col("na") == 1)
+    in_b = F.col("__b")
+    carry = [c for c in side_a.columns if c not in (key_col, id_col)]
+    when_b = F.when(in_b, F.col(id_col))
+    return (
+        side_a.withColumn("__b", F.lit(False))
+        .unionByName(side_b.withColumn("__b", F.lit(True)))
+        .filter(F.col(key_col).isNotNull())
+        .groupBy(key_col)
+        .agg(
+            F.count_if(~in_b).alias("__na"),
+            F.count_if(in_b).alias("__nb"),
+            F.min(F.when(~in_b, F.col(id_col))).alias("keep_id"),
+            F.min(when_b).alias("drop_id"),
+            *[F.max_by(c, when_b).alias(c) for c in carry],
+        )
+        .filter((F.col("__na") == 1) & (F.col("__nb") == 1))
+        .drop("__na", "__nb")
     )
-    b1 = (
-        side_b.groupBy(key_col)
-        .agg(F.count("*").alias("nb"), F.min(id_col).alias("drop_id"))
-        .filter(F.col("nb") == 1)
-    )
-    return a1.join(b1, key_col).select(key_col, "keep_id", "drop_id")
 
 
 def apply_merge_directives(
@@ -105,54 +122,32 @@ def apply_merge_directives(
     id_col: str = "doc_id",
     catalog_col: str = "includedInDataCatalog",
     broadcast_directives: bool = True,
-    catalog_source: DataFrame | None = None,
 ) -> DataFrame:
-    """APPLY (keep_id, drop_id) merge directives to the documents table —
-    the half of the dedup the reference does in
+    """APPLY (keep_id, drop_id, loser's ``catalog_col``) merge directives
+    to the documents table — the half of the dedup the reference does in
     hub/databuild/builder.py:102-160,308-329: the winner's
-    ``includedInDataCatalog`` array absorbs each loser's entries
+    ``includedInDataCatalog`` array absorbs its loser's entries
     (distinct), and loser rows are deleted.
 
-    Plan shape: directives are usually tiny relative to docs (one row
-    per duplicate pair), so by default both the gain join and the loser
-    delete are broadcast joins against docs — one pass over the corpus,
-    no shuffle of the documents themselves. For a dedup WAVE whose
-    directive set exceeds broadcast limits (a 10^8-pair backfill), pass
-    ``broadcast_directives=False``: the same plan runs as shuffle joins
-    on the id key (Catalyst picks sort-merge/shuffled-hash, AQE splits
-    skew), identical output (tests/test_operators.py asserts both modes
-    byte-equal). Loser contributions are ordered by drop_id before
-    flattening, so the merged array is independent of partitioning."""
-    # When ``docs`` is itself an expensive composed plan (e.g. the full
-    # uploader-registry dispatch) and the catalog column is unchanged by
-    # that plan, the caller can pass the cheap upstream frame as
-    # ``catalog_source`` — the loser-catalog lookup then reads (id,
-    # catalog) from it instead of embedding the expensive plan a second
-    # time. Output is identical whenever catalog_source agrees with docs
-    # on (id_col, catalog_col).
-    cat_src = catalog_source if catalog_source is not None else docs
-    loser_cat = (
-        directives.join(
-            cat_src.select(F.col(id_col).alias("drop_id"), F.col(catalog_col).alias("__cat")),
-            "drop_id",
-        )
-        .groupBy("keep_id")
-        .agg(
-            F.flatten(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct(F.col("drop_id").alias("i"), F.col("__cat").alias("c")))
-                    ),
-                    lambda s: s.getField("c"),
-                )
-            ).alias("__gain")
-        )
+    Precondition (what ``key_dedup_1x1`` returns): no id appears twice
+    across keep_id and drop_id, so a keeper has one loser and the role
+    table below has one row per id. Plan shape: the directives become
+    that role table (keeper rows carry the gain, loser rows the drop
+    role), left-joined ONCE onto docs. Directives are usually tiny (one
+    row per duplicate pair), so by default the join broadcasts them: one
+    pass over the corpus, no shuffle of the documents. For a dedup WAVE
+    too big to broadcast (a 10^8-pair backfill), pass
+    ``broadcast_directives=False``: the same plan runs as a shuffle join
+    on the id key (AQE splits skew), identical output
+    (tests/test_operators.py asserts both modes equal)."""
+    # __role is the position in [keep_id, drop_id]: 0 keeper, 1 loser
+    roles = directives.select(
+        F.posexplode(F.array("keep_id", "drop_id")).alias("__role", id_col),
+        F.col(catalog_col).alias("__gain"),
     )
-    gains = loser_cat.withColumnRenamed("keep_id", id_col)
-    merged = (
-        docs.join(
-            F.broadcast(gains) if broadcast_directives else gains, id_col, "left"
-        )
+    return (
+        docs.join(F.broadcast(roles) if broadcast_directives else roles, id_col, "left")
+        .filter(~F.col("__role").eqNullSafe(1))
         .withColumn(
             catalog_col,
             F.when(
@@ -168,10 +163,5 @@ def apply_merge_directives(
                 ),
             ).otherwise(F.col(catalog_col)),
         )
-        .drop("__gain")
-    )
-    # an anti-join ignores duplicates on its right side: no distinct
-    losers = directives.select(F.col("drop_id").alias(id_col))
-    return merged.join(
-        F.broadcast(losers) if broadcast_directives else losers, id_col, "left_anti"
+        .drop("__role", "__gain")
     )

@@ -1117,7 +1117,7 @@ def merge_identifier_dedup(spark, sf_dir):
 
 
 def merge_key_dedup_1x1(spark, sf_dir):
-    docs = t(spark, sf_dir, "documents").withColumn("dup_key", DD.content_key(prefix_tokens=4))
+    docs = t(spark, sf_dir, "documents").select("doc_id", DD.content_key(prefix_tokens=4).alias("dup_key"))
     a = docs.filter(F.col("doc_id") % 2 == 0)
     b = docs.filter(F.col("doc_id") % 2 == 1)
     return MG.key_dedup_1x1(a, b, "dup_key")
@@ -1140,9 +1140,8 @@ def merge_apply_1x1(spark, sf_dir):
             )).alias("includedInDataCatalog"),
         )
     )
-    a = docs.filter(did % 2 == 0)
-    b = docs.filter(did % 2 == 1)
-    directives = MG.key_dedup_1x1(a, b, "dup_key").select("keep_id", "drop_id")
+    sides = docs.select("doc_id", "dup_key", "includedInDataCatalog")
+    directives = MG.key_dedup_1x1(sides.filter(did % 2 == 0), sides.filter(did % 2 == 1), "dup_key")
     out = MG.apply_merge_directives(docs, directives)
     return out.select(
         "doc_id", "source",
@@ -2004,19 +2003,14 @@ def nde_pipeline_e2e(spark, sf_dir):
     up = run_uploader(docs, **_uploader_lookups(spark))
 
     # dup_key (a row-local hash of `text`) and includedInDataCatalog are
-    # FIXTURE columns no registry stage touches, so the dedup sides and
-    # the loser-catalog lookup read the cheap pre-registry frame — the
-    # expensive composed dispatch is embedded ONCE (the main pass), not
-    # four times (builder.py reads the same source store for both sides)
-    keyed = docs.select("doc_id", DD.content_key(prefix_tokens=4).alias("dup_key"))
+    # FIXTURE columns no registry stage touches, so the dedup sides (and
+    # the loser catalogs riding on the directives) read the cheap
+    # pre-registry frame — the composed dispatch is embedded ONCE
+    # (builder.py reads the same source store for both sides)
     did = F.col("doc_id")
-    a = keyed.filter(did % 2 == 0).select("dup_key", "doc_id")
-    b = keyed.filter(did % 2 == 1).select("dup_key", "doc_id")
-    directives = MG.key_dedup_1x1(a, b, "dup_key").select("keep_id", "drop_id")
-    merged = MG.apply_merge_directives(
-        up, directives,
-        catalog_source=docs.select("doc_id", "includedInDataCatalog"),
-    )
+    keyed = docs.select("doc_id", DD.content_key(prefix_tokens=4).alias("dup_key"), "includedInDataCatalog")
+    directives = MG.key_dedup_1x1(keyed.filter(did % 2 == 0), keyed.filter(did % 2 == 1), "dup_key")
+    merged = MG.apply_merge_directives(up, directives)
 
     viol = NS.schema_violation_nde(
         F.col("type"), F.col("url"), F.col("conditionsOfAccess"),

@@ -124,15 +124,14 @@ def test_wrapper_operators(spark):
 
 def test_round2_plans_broadcast_and_anti_join(spark):
     """Physical-plan assertions for the round-2 scale fixes:
-    apply_merge_directives must broadcast both the gain join and the
-    loser delete (the documents table is never shuffled), and the
+    apply_merge_directives applies the merge as ONE broadcast join of
+    its role table (the documents table is never shuffled), and the
     ngram-jaccard stop-shingle cap must remove hot shingles via a
     broadcast anti-join."""
     from nde_crawlers_spark.queries import dedup_ngram_jaccard, merge_apply_1x1
 
     plan = merge_apply_1x1(spark, SF001)._jdf.queryExecution().executedPlan().toString()
-    assert plan.count("BroadcastHashJoin") >= 2
-    assert "LeftAnti, BuildRight" in plan or "LeftAnti" in plan
+    assert plan.count("BroadcastHashJoin") == 1
     # the big side (documents scan) is never exchanged by the merge apply
     # itself: every Exchange in this plan is a broadcast exchange or
     # belongs to the tiny directives aggregation, not a repartition of
@@ -515,10 +514,12 @@ def test_pipeline_e2e_no_extra_shuffles(spark):
     """The composed hub lifecycle (registry dispatch -> 1x1 key dedup ->
     directive application -> wrapper gate) stays ONE lazy plan whose
     shuffle count is bounded by the registry plan plus the merge stage's
-    own budget (two key-dedup aggregations, the gain join, the loser
-    anti-join) — composition must not multiply corpus shuffles. Catalyst
-    also PRUNES unused stage joins (the pipeline output omits `ner`, so
-    the drop-rules join disappears), which this guards too."""
+    own budget: one exchange for the key-dedup aggregation and no
+    sort-merge join (the role table is broadcast) — composition must not
+    multiply corpus shuffles. Catalyst also PRUNES unused stage joins
+    (the pipeline output omits `ner`, so the drop-rules join disappears),
+    which this guards too. Running the pipeline once takes at most 5
+    Spark jobs."""
     import re
 
     from nde_crawlers_spark.queries import QUERIES
@@ -537,8 +538,13 @@ def test_pipeline_e2e_no_extra_shuffles(spark):
 
     ex_reg, smj_reg = counts("uploader_registry")
     ex_pipe, smj_pipe = counts("nde_pipeline_e2e")
-    assert ex_pipe <= ex_reg + 6
-    assert smj_pipe <= smj_reg + 3
+    assert ex_pipe <= ex_reg + 1
+    assert smj_pipe <= smj_reg + 0
+
+    tracker = spark.sparkContext.statusTracker()
+    before = len(tracker.getJobIdsForGroup(None))
+    QUERIES["nde_pipeline_e2e"](spark, SF001).collect()
+    assert len(tracker.getJobIdsForGroup(None)) - before <= 5
 
 
 def _parse_reference_chains():

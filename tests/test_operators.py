@@ -458,11 +458,58 @@ def test_merge_directives_null_keeper_catalog(spark):
         ],
         "doc_id string, includedInDataCatalog array<struct<name:string,url:string,archivedAt:string>>",
     )
-    directives = spark.createDataFrame([("k", "l")], "keep_id string, drop_id string")
+    directives = spark.createDataFrame(
+        [("k", "l", [("src1", "u1", "u1")])],
+        "keep_id string, drop_id string, "
+        "includedInDataCatalog array<struct<name:string,url:string,archivedAt:string>>",
+    )
     out = {r["doc_id"]: r["includedInDataCatalog"]
            for r in apply_merge_directives(docs, directives).collect()}
     assert set(out) == {"k", "x"}                       # loser deleted
     assert [e["name"] for e in out["k"]] == ["src1"]    # gain kept, not NULLed
+
+
+def test_key_dedup_1x1_edge_rows(spark):
+    """The 1x1 guard and directive application on edge keys: a 1x1 key
+    merges; a 2x1 key, a one-sided key and a NULL key (on both sides)
+    are skipped; a NULL loser catalog leaves its keeper unchanged; a
+    NULL keeper catalog absorbs its loser's entries. No id is both a
+    keeper and a loser, or either twice, so one left join onto the docs
+    cannot duplicate a row."""
+    from nde_crawlers_spark.operators.merge import apply_merge_directives, key_dedup_1x1
+
+    cat = lambda *names: [(n, "u", "u") for n in names]  # noqa: E731
+    docs = spark.createDataFrame(
+        [
+            (2, "k1", cat("a2")), (3, "k1", cat("b3")),                      # 1x1
+            (4, "k2", cat("a4")), (6, "k2", cat("a6")), (5, "k2", cat("b5")),  # 2x1
+            (8, "k3", cat("a8")),                                            # a only
+            (10, None, cat("a10")), (13, None, cat("b13")),                  # NULL key
+            (12, "k5", cat("a12")), (15, "k5", None),                        # NULL loser catalog
+            (14, "k6", None), (17, "k6", cat("b17")),                        # NULL keeper catalog
+        ],
+        "doc_id long, dup_key string, "
+        "includedInDataCatalog array<struct<name:string,url:string,archivedAt:string>>",
+    )
+    directives = key_dedup_1x1(
+        docs.filter(F.col("doc_id") % 2 == 0), docs.filter(F.col("doc_id") % 2 == 1), "dup_key"
+    )
+    pairs = [(r["dup_key"], r["keep_id"], r["drop_id"]) for r in directives.collect()]
+    assert sorted(pairs) == [("k1", 2, 3), ("k5", 12, 15), ("k6", 14, 17)]
+    ids = [i for _, k, d in pairs for i in (k, d)]
+    assert len(ids) == len(set(ids))
+
+    out = {r["doc_id"]: r["includedInDataCatalog"]
+           for r in apply_merge_directives(docs, directives).collect()}
+    names = {i: None if c is None else [e["name"] for e in c] for i, c in out.items()}
+    assert names == {
+        2: ["a2", "b3"],
+        4: ["a4"], 5: ["b5"], 6: ["a6"],
+        8: ["a8"],
+        10: ["a10"], 13: ["b13"],
+        12: ["a12"],
+        14: ["b17"],
+    }
 
 
 def test_spread_non_file_input(spark):
@@ -539,7 +586,7 @@ def test_merge_directives_shuffle_fallback_same_output(spark):
     directives = key_dedup_1x1(
         docs.filter(F.col("doc_id") % 2 == 0), docs.filter(F.col("doc_id") % 2 == 1),
         "dup_key",
-    ).select("keep_id", "drop_id")
+    )
 
     def rendered(df):
         return sorted(
@@ -557,7 +604,7 @@ def test_merge_directives_shuffle_fallback_same_output(spark):
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
     bc_plan = bc._jdf.queryExecution().executedPlan().toString()
-    assert "BroadcastHashJoin" in bc_plan          # default: broadcast both joins
+    assert "BroadcastHashJoin" in bc_plan          # default: broadcast the role table
     assert "SortMergeJoin" in sh_plan              # fallback: shuffle join
     assert rendered(bc) == out_sh                  # identical output either way
     assert content_key is not None  # (import kept for plan-audit symmetry)
