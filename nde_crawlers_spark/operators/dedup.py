@@ -207,63 +207,20 @@ def incremental_minhash_pairs(
     return pairs, new_banded
 
 
-def simhash16_agg(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+def _simhash_agg(docs: DataFrame, id_col: str, text_col: str,
+                 positions: list[tuple[int, int]], result_type: str) -> DataFrame:
     """(id, simhash), one row per distinct id, via outer explode ->
-    groupBy bit-vote aggregation — semantically identical to
-    functions/text.py::simhash16 but codegen'd (see
-    minhash_signatures_agg for why). A doc with no tokens explodes to
+    groupBy bit-vote aggregation: fingerprint bit i is the sign of the
+    vote sum of bit ``bit`` of md5 hex digit ``digit`` (1-based), for
+    ``(digit, bit) = positions[i]``. A doc with no tokens explodes to
     one NULL token, which votes -1 on every bit: simhash 0."""
     # md5 projected ONCE per token before the groupBy: aggregate-side
-    # subexpression elimination is version-dependent, and 16 md5 calls
-    # per token is the difference between hash-bound and scan-bound.
-    # r9: the two 8-hex-digit halves are parsed to integers once per
-    # token, so each vote is a shift+mask on a bigint instead of a
-    # substring + set-membership string compare — digit d's parity is
-    # bit 4*(8-d) (resp. 4*(16-d)) of the half, the identical boolean.
-    ex = spread(docs).select(
-        F.col(id_col).alias("id"),
-        F.explode_outer(TX.tokens(F.col(text_col))).alias("t"),
-    ).select("id", F.md5("t").alias("h")).select(
-        "id",
-        F.expr("cast(conv(substring(h, 1, 8), 16, 10) as bigint)").alias("h1"),
-        F.expr("cast(conv(substring(h, 9, 8), 16, 10) as bigint)").alias("h2"),
-    )
-
-    def _bit(digit: int, bit: int) -> str:
-        half = "h1" if digit <= 8 else "h2"
-        shift = 4 * ((8 if digit <= 8 else 16) - digit) + bit
-        return f"((shiftright({half}, {shift}) & 1) = 1)"
-
-    votes = [
-        F.expr(f"sum(case when {_bit(b + 1, 0)} then 1 else -1 end) as v{b}")
-        for b in range(16)
-    ]
-    agg = ex.groupBy("id").agg(*votes)
-    # one JVM-parsed expression for the bit assembly (identical integer
-    # left fold; the py4j-composed when-chain cost ~100 driver calls)
-    sh = " + ".join(
-        f"(case when v{b} > 0 then {1 << b} else 0 end)" for b in range(16)
-    )
-    return agg.select("id", F.expr(f"cast(0 + {sh} as int) as simhash"))
-
-
-SIMHASH64_BITS = 63  # bits 0..62: stays positive in signed int64, so the
-#                      DuckDB oracle (which rejects 1<<63) mirrors exactly
-
-
-def simhash64_agg(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """(id, simhash) with a 63-bit fingerprint, one row per distinct id:
-    bit b of token t is bit (b%4) of md5 hex digit (b//4 + 1); document
-    bit = sign of the vote sum. Same outer explode->aggregate shape as
-    simhash16_agg, so a doc with no tokens gets 0."""
-    # hash-once discipline: md5(t) is projected before the groupBy so the
-    # 63 vote aggregates share one hash per token instead of evaluating
-    # md5 63 times (round-1 bench: this was the hottest headline query).
+    # subexpression elimination is version-dependent, and one md5 call
+    # per vote is the difference between hash-bound and scan-bound.
     # r9: the first 16 hex digits are parsed to two bigint halves once
-    # per token; each vote is then one shift+mask — bit (b%4) of hex
-    # digit (b//4 + 1) is bit 4*(8-d)+(b%4) of the half, the identical
-    # boolean the locate(substring)-per-vote form computed with two
-    # string ops per token per bit.
+    # per token, so each vote is a shift+mask on a bigint instead of a
+    # substring + string compare — bit b of hex digit d is bit
+    # 4*(8-d)+b of h1 (resp. 4*(16-d)+b of h2), the identical boolean.
     ex = spread(docs).select(
         F.col(id_col).alias("id"),
         F.explode_outer(TX.tokens(F.col(text_col))).alias("t"),
@@ -273,24 +230,44 @@ def simhash64_agg(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text
         F.expr("cast(conv(substring(h, 9, 8), 16, 10) as bigint)").alias("h2"),
     )
     votes = []
-    for b in range(SIMHASH64_BITS):
-        digit, bit = b // 4 + 1, b % 4
+    for i, (digit, bit) in enumerate(positions):
         half = "h1" if digit <= 8 else "h2"
         shift = 4 * ((8 if digit <= 8 else 16) - digit) + bit
         votes.append(F.expr(
             f"sum(case when ((shiftright({half}, {shift}) & 1) = 1) "
-            f"then 1 else -1 end) as v{b}"
+            f"then 1 else -1 end) as v{i}"
         ))
     agg = ex.groupBy("id").agg(*votes)
-    # one JVM-parsed expression for the 63-bit assembly — the identical
+    # one JVM-parsed expression for the bit assembly — the identical
     # exact-integer left fold the py4j when-chain built with ~400 driver
     # round trips (measured ~0.9 s of plan-BUILD per invocation)
     sh = " + ".join(
-        f"(case when v{b} > 0 then shiftleft(cast(1 as bigint), {b}) "
+        f"(case when v{i} > 0 then shiftleft(cast(1 as bigint), {i}) "
         f"else cast(0 as bigint) end)"
-        for b in range(SIMHASH64_BITS)
+        for i in range(len(positions))
     )
-    return agg.select("id", F.expr(f"cast(0 as bigint) + {sh}").alias("simhash"))
+    return agg.select(
+        "id", F.expr(f"cast(cast(0 as bigint) + {sh} as {result_type})").alias("simhash")
+    )
+
+
+def simhash16_agg(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """(id, simhash) with a 16-bit int fingerprint — semantically
+    identical to functions/text.py::simhash16 (bit b = parity of md5 hex
+    digit b+1) but codegen'd (see minhash_signatures_agg for why)."""
+    return _simhash_agg(docs, id_col, text_col, [(b + 1, 0) for b in range(16)], "int")
+
+
+SIMHASH64_BITS = 63  # bits 0..62: stays positive in signed int64, so the
+#                      DuckDB oracle (which rejects 1<<63) mirrors exactly
+
+
+def simhash64_agg(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
+    """(id, simhash) with a 63-bit bigint fingerprint: bit b of token t
+    is bit (b%4) of md5 hex digit (b//4 + 1); same shape as
+    simhash16_agg, so a doc with no tokens gets 0."""
+    positions = [(b // 4 + 1, b % 4) for b in range(SIMHASH64_BITS)]
+    return _simhash_agg(docs, id_col, text_col, positions, "bigint")
 
 
 def simhash64_hamming_pairs(

@@ -60,6 +60,16 @@ _EXT_KIND = {
 _PNG_W = _PNG_H = 16
 
 
+def _sha_stream(seed: bytes, n: int) -> bytes:
+    """The first ``n`` bytes of sha256(seed) || sha256(sha256(seed)) ||
+    ... — the deterministic pixel / PCM stream of the synthetic media."""
+    buf = bytearray()
+    while len(buf) < n:
+        seed = hashlib.sha256(seed).digest()
+        buf += seed
+    return bytes(buf[:n])
+
+
 @F.pandas_udf(T.BinaryType())
 def _synth_png(refs: pd.Series) -> pd.Series:
     """Deterministic 16x16 RGB PNG whose pixels are the sha256 stream of
@@ -69,13 +79,8 @@ def _synth_png(refs: pd.Series) -> pd.Series:
     from nde_crawlers_spark.functions.png import encode_png
 
     def one(ref: str) -> bytes:
-        need = _PNG_W * _PNG_H * 3
-        seed = hashlib.sha256(ref.encode()).digest()
-        buf = bytearray()
-        while len(buf) < need:
-            seed = hashlib.sha256(seed).digest()
-            buf += seed
-        return encode_png(_PNG_W, _PNG_H, bytes(buf[:need]), color_type=2, filter_type=4)
+        px = _sha_stream(hashlib.sha256(ref.encode()).digest(), _PNG_W * _PNG_H * 3)
+        return encode_png(_PNG_W, _PNG_H, px, color_type=2, filter_type=4)
 
     return refs.map(one)
 
@@ -89,13 +94,8 @@ def _synth_jpeg(refs: pd.Series) -> pd.Series:
     from nde_crawlers_spark.functions.jpeg import encode_jpeg
 
     def one(ref: str) -> bytes:
-        need = _PNG_W * _PNG_H * 3
-        seed = hashlib.sha256(ref.encode()).digest()
-        buf = bytearray()
-        while len(buf) < need:
-            seed = hashlib.sha256(seed).digest()
-            buf += seed
-        return encode_jpeg(_PNG_W, _PNG_H, bytes(buf[:need]), channels=3,
+        px = _sha_stream(hashlib.sha256(ref.encode()).digest(), _PNG_W * _PNG_H * 3)
+        return encode_jpeg(_PNG_W, _PNG_H, px, channels=3,
                            quality=90, subsampling="420")
 
     return refs.map(one)
@@ -115,14 +115,8 @@ def _synth_avi(refs: pd.Series) -> pd.Series:
         n = 2 + d[0] % 5
         frames = []
         for i in range(n):
-            need = _PNG_W * _PNG_H * 3
-            seed = hashlib.sha256(d + bytes([i])).digest()
-            buf = bytearray()
-            while len(buf) < need:
-                seed = hashlib.sha256(seed).digest()
-                buf += seed
-            frames.append(encode_jpeg(_PNG_W, _PNG_H, bytes(buf[:need]),
-                                      channels=3, quality=90))
+            px = _sha_stream(hashlib.sha256(d + bytes([i])).digest(), _PNG_W * _PNG_H * 3)
+            frames.append(encode_jpeg(_PNG_W, _PNG_H, px, channels=3, quality=90))
         return encode_avi_mjpeg(_PNG_W, _PNG_H, 4, frames)
 
     return refs.map(one)
@@ -161,13 +155,8 @@ def _synth_wav(refs: pd.Series) -> pd.Series:
     from nde_crawlers_spark.functions.wav import encode_wav
 
     def one(ref: str) -> bytes:
-        need = _WAV_FRAMES * 2
-        seed = hashlib.sha256(ref.encode()).digest()
-        buf = bytearray()
-        while len(buf) < need:
-            seed = hashlib.sha256(seed).digest()
-            buf += seed
-        samples = list(_struct.unpack(f"<{_WAV_FRAMES}h", bytes(buf[:need])))
+        pcm = _sha_stream(hashlib.sha256(ref.encode()).digest(), _WAV_FRAMES * 2)
+        samples = list(_struct.unpack(f"<{_WAV_FRAMES}h", pcm))
         return encode_wav(_WAV_RATE, 1, samples, sampwidth=2)
 
     return refs.map(one)

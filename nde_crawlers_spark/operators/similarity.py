@@ -29,37 +29,85 @@ from ..functions import vectors as V
 from .dedup import spread
 
 
-def _topk_per_query(scored: DataFrame, k: int) -> DataFrame:
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
+def _topk_per_query(scored: DataFrame, k: int, score: str = "cosine") -> DataFrame:
+    """Per-query top ``k`` by ``score``, ties broken by neighbor id:
+    ``cosine`` is a similarity and ranks high-first, PQ's ``adc`` is a
+    distance and ranks low-first."""
+    key = F.col(score).asc() if score == "adc" else F.col(score).desc()
+    w = Window.partitionBy("query_id").orderBy(key, F.col("neighbor_id").asc())
     return (
         scored.withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rank")
+        .select("query_id", "neighbor_id", score, "rank")
     )
 
 
-def _exact_rescore(
-    emb: DataFrame,
-    queries: DataFrame,
-    cand: DataFrame,
+def _codebook(emb: DataFrame, n: int | None, codebook, id_col: str, vec_col: str):
+    """``codebook`` when given, else the default: the corpus rows with
+    id < ``n`` as sorted [(id, vector)] — a pure function of the data,
+    so the DuckDB oracles rebuild it relationally (n rows, a bounded
+    driver-side codebook by design). With neither, there is no coarse
+    quantizer: a flat index, every row in one list."""
+    if codebook is not None or not n:
+        return codebook
+    return sorted(
+        (int(r[0]), [float(x) for x in r[1]])
+        for r in emb.filter(F.col(id_col) < n).select(id_col, vec_col).collect()
+    )
+
+
+def _list_ids(coarse, n: int, vec_col: str, dim: int) -> list:
+    """The coarse list-id column of a quantized index: none for a flat
+    index; else ``cid`` exploded over the row's ``n`` nearest coarse
+    centroids — an index row sits in its nearest list (n=1), a query
+    probes ``nprobe`` lists (one row each). The assignment is a
+    map-only Arrow batch against the broadcast codebook."""
+    if coarse is None:
+        return []
+    assign = V.nearest_centroids_pd(coarse, n, dim)
+    return [F.explode(assign(F.col(vec_col))).alias("cid")]
+
+
+def _probe_join(corpus: DataFrame, q: DataFrame, coarse) -> DataFrame:
+    """Candidate pairs of a quantized scan, self-matches excluded: the
+    broadcast queries meet every corpus row of a flat index, or — with
+    a coarse codebook — only the rows of their probed lists (an
+    equi-join on ``cid``: each index row carries exactly one list id,
+    so no pair appears twice)."""
+    q = F.broadcast(q)
+    pairs = corpus.crossJoin(q) if coarse is None else corpus.join(q, "cid")
+    return pairs.filter(F.col("neighbor_id") != F.col("query_id"))
+
+
+def _quantized_topk(
+    scored: DataFrame,
     k: int,
+    rescore: int,
+    emb: DataFrame | None,
+    queries: DataFrame,
     id_col: str,
     vec_col: str,
     dim: int,
+    score: str = "cosine",
 ) -> DataFrame:
-    """Exact-cosine re-rank of a candidate set — the production
-    rescoring step every quantized index ships with (FAISS re-ranking,
-    ES/Lucene rescore; the reference's ES int8_hnsw quantized search
-    re-scores the same way, hub/dataindex/embed.py:51-59). ``cand`` is
-    the quantized scan's top ``k*r`` (query_id, neighbor_id) rows —
-    small, so it broadcasts; the float corpus is equi-joined against it,
-    meaning the float column is read for Q*k*r rows only while the full
-    scan stays on the compressed representation. Scoring and ranking
-    reuse brute_force_topk's exact discipline (prenormed cosine,
-    round-6, neighbor-id tie-break), so the output is engine-stable."""
-    cand = F.broadcast(cand.select("query_id", "neighbor_id"))
+    """Top-k of a quantized scan, or with ``rescore=r > 0`` its top
+    ``k*r`` re-ranked by exact cosine — the production rescoring step
+    every quantized index ships with (FAISS re-ranking, ES/Lucene
+    rescore; the reference's ES int8_hnsw quantized search re-scores
+    the same way, hub/dataindex/embed.py:51-59). The candidate set is
+    small, so it broadcasts; the float corpus ``emb`` is equi-joined
+    against it, meaning the float column is read for Q*k*r rows only
+    while the full scan stays on the compressed representation. Scoring
+    and ranking reuse brute_force_topk's exact discipline (prenormed
+    cosine, round-6, neighbor-id tie-break), so the output is
+    engine-stable."""
+    if rescore <= 0:
+        return _topk_per_query(scored, k, score)
+    if emb is None:
+        raise ValueError("rescore needs the float corpus: pass emb=")
+    cand = F.broadcast(
+        _topk_per_query(scored, k * rescore, score).select("query_id", "neighbor_id")
+    )
     qv = F.broadcast(
         queries.select(
             F.col(id_col).alias("query_id"), F.col(vec_col).alias("qv"),
@@ -206,6 +254,7 @@ def ivf_topk(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     codebook: list[tuple[int, list[float]]] | None = None,
+    dim: int = 64,
 ) -> DataFrame:
     """IVF-style approximate top-k: vectors are assigned to their nearest
     centroid (inverted lists); a query scores only the lists of its
@@ -220,17 +269,14 @@ def ivf_topk(
     the corpus instead of all of it, and the assignment itself is a
     map-only Arrow batch (no codebook crossJoin row blowup, no per-row
     window shuffle)."""
-    cent_rows = codebook if codebook is not None else sorted(
-        (r[0], list(r[1]))
-        for r in emb.filter(F.col(id_col) < nlist).select(id_col, vec_col).collect()
-    )  # nlist rows — the broadcast codebook (driver-side by design)
+    cent_rows = _codebook(emb, nlist, codebook, id_col, vec_col)
 
     def _assign(df: DataFrame, n: int) -> DataFrame:
-        assign = V.nearest_centroids_pd(cent_rows, n)
+        assign = V.nearest_centroids_pd(cent_rows, n, dim)
         # norms computed ONCE per row and carried through, so the final
         # candidate join never recomputes them per pair
         return df.select(
-            "vid", "v", V.norm_pd()(F.col("v")).alias("vn"),
+            "vid", "v", V.norm_pd(dim)(F.col("v")).alias("vn"),
             F.explode(assign(F.col("v"))).alias("cid"),
         )
 
@@ -243,7 +289,7 @@ def ivf_topk(
         .filter(F.col("vid") != F.col("query_id"))
         .withColumn(
             "cosine",
-            F.round(V.cosine_prenormed("qv", "v", F.col("qn"), F.col("vn")), 6),
+            F.round(V.cosine_prenormed("qv", "v", F.col("qn"), F.col("vn"), dim), 6),
         )
         .select("query_id", F.col("vid").alias("neighbor_id"), "cosine")
         .distinct()  # a candidate may appear via both probes
@@ -300,13 +346,7 @@ def _fmt(x: float) -> str:
 
 def _pq_cents(emb, codebook, m, ksub, dsub, id_col, vec_col):
     """Resolve the PQ codebook to m x ksub x dsub centroid values."""
-    if codebook is None:
-        rows = sorted(
-            (int(r[0]), [float(x) for x in r[1]])
-            for r in emb.filter(F.col(id_col) < ksub).select(id_col, vec_col).collect()
-        )  # ksub rows — bounded driver-side codebook, exactly like ivf_topk
-        return [[rows[c][1][j * dsub:(j + 1) * dsub] for c in range(ksub)]
-                for j in range(m)]
+    codebook = _codebook(emb, ksub, codebook, id_col, vec_col)
     if isinstance(codebook[0], tuple):
         # [(cid, full-dim vector)] rows, sliced per subspace
         return [[codebook[c][1][j * dsub:(j + 1) * dsub] for c in range(ksub)]
@@ -344,6 +384,9 @@ def pq_adc_topk(
     dim: int = 64,
     codebook: list[tuple[int, list[float]]] | None = None,
     rescore: int = 0,
+    nlist: int | None = None,
+    nprobe: int = 2,
+    coarse_codebook: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
     """Product-quantization ADC top-k — the memory-bounded ANN scale
     path (IVF-PQ's compression half): each vector is encoded as ``m``
@@ -378,42 +421,77 @@ def pq_adc_topk(
     Output columns switch from (adc) to (cosine), matching sq8_topk's
     rescored contract.
 
+    ``nlist``/``coarse_codebook`` compose coarse inverted-list pruning
+    with the codes — IVF-PQ, the production big-ANN index shape (FAISS
+    IVFPQ): every code row carries its nearest coarse list id
+    (``ivf_topk``'s cosine assignment) and a query scores only the rows
+    of its ``nprobe`` nearest lists, an equi-join on the list id that
+    touches ~nprobe/nlist of the CODES table. The coarse codebook
+    defaults to the first ``nlist`` corpus rows; without either the
+    index is flat — one list holding every row.
+
     Reference analog: the dense-vector index the reference delegates to
     ES int8_hnsw (hub/dataindex/embed.py:51-59) — int8 scalar
     quantization there, product quantization here; both trade recall
     for a memory-bounded index, and both re-score."""
     dsub = dim // m
     cents = _pq_cents(emb, codebook, m, ksub, dsub, id_col, vec_col)
+    coarse = _codebook(emb, nlist, coarse_codebook, id_col, vec_col)
     darr = _pq_darr_builder(cents, dsub)
 
-    dbl = F.transform(F.col(vec_col), lambda x: x.cast("double"))
     corpus = pq_encode(spread(emb), m=m, ksub=ksub, id_col=id_col, vec_col=vec_col,
-                       dim=dim, codebook=cents).withColumnRenamed(
+                       dim=dim, codebook=cents, coarse=coarse).withColumnRenamed(
                            id_col, "neighbor_id")
 
-    qf = queries.select(F.col(id_col).alias("query_id"), dbl.alias("qv"))
+    dbl = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    qf = queries.select(
+        F.col(id_col).alias("query_id"), *_list_ids(coarse, nprobe, vec_col, dim),
+        dbl.alias("qv"),
+    )
     for j in range(m):
         qf = qf.withColumn(f"lut{j}", F.expr(darr(j, "qv")))
-    qf = F.broadcast(qf.drop("qv"))
 
     score = F.expr(" + ".join(f"element_at(lut{j}, code{j})" for j in range(m)))
     scored = (
-        corpus.crossJoin(qf)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
+        _probe_join(corpus, qf.drop("qv"), coarse)
         .withColumn("adc", F.round(score, 6))
         .select("query_id", "neighbor_id", "adc")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id").asc()
-    )
-    topk = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= (k * rescore if rescore > 0 else k))
-        .select("query_id", "neighbor_id", "adc", "rank")
-    )
-    if rescore <= 0:
-        return topk
-    return _exact_rescore(emb, queries, topk, k, id_col, vec_col, dim)
+    return _quantized_topk(scored, k, rescore, emb, queries, id_col, vec_col, dim,
+                           score="adc")
+
+
+def pq_encode(
+    emb: DataFrame,
+    m: int = 4,
+    ksub: int = 8,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    dim: int = 64,
+    codebook=None,
+    coarse: list[tuple[int, list[float]]] | None = None,
+) -> DataFrame:
+    """Materialize the PQ code table: (id, code0..code{m-1}) — the
+    encode-once half of the PQ lifecycle. In production this frame is
+    WRITTEN (bucketed by id) and every subsequent ADC query scans codes
+    instead of floats (~dim*4/m compression); ``pq_adc_topk`` builds
+    exactly this projection inline when not given one. Encode is a pure
+    codegen'd projection — sequential-fold subspace distances against
+    centroid literals, no Python, no shuffle. With a ``coarse``
+    codebook each row also carries its nearest list id ``cid`` (the
+    IVF-PQ index table)."""
+    dsub = dim // m
+    cents = _pq_cents(emb, codebook, m, ksub, dsub, id_col, vec_col)
+    darr = _pq_darr_builder(cents, dsub)
+    dbl = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    out = emb.select(F.col(id_col), *_list_ids(coarse, 1, vec_col, dim), dbl.alias("v"))
+    for j in range(m):
+        out = out.withColumn(
+            f"code{j}",
+            F.expr(f"cast(array_position({darr(j, 'v')},"
+                   f" array_min({darr(j, 'v')})) as int)"),
+        )
+    return out.drop("v")
 
 
 def pq_train(
@@ -501,90 +579,6 @@ def pq_train(
             for j in range(m)
         ]
     return cents
-
-
-def ivfpq_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    nlist: int = 8,
-    nprobe: int = 2,
-    m: int = 4,
-    ksub: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    coarse_codebook: list[tuple[int, list[float]]] | None = None,
-    pq_codebook=None,
-    rescore: int = 0,
-) -> DataFrame:
-    """IVF-PQ composed: coarse inverted-list pruning (ivf_topk's
-    cosine assignment) AND PQ compression (pq_adc_topk's subspace
-    codes) — the production big-ANN index shape (FAISS IVFPQ; the
-    reference's ES int8_hnsw trades the same recall for memory,
-    hub/dataindex/embed.py:51-59). A query touches ~nprobe/nlist of the
-    CODES table only: candidate generation is an equi-join on the
-    coarse list id (no crossJoin), scoring is m table lookups per
-    candidate, and the float corpus appears nowhere downstream of
-    encode. Both codebooks default to the first corpus rows (pure
-    function of the data — the DuckDB oracle reproduces them
-    relationally); pass kmeans_codebook / pq_train output for trained
-    variants with the identical plan shape.
-
-    ``rescore=r > 0`` re-ranks the quantized scan's top ``k*r`` per
-    query with exact float cosine (see pq_adc_topk — same contract,
-    output switches to a ``cosine`` column): the step FAISS IVFPQ and
-    the reference's ES int8_hnsw serving both apply, and without which
-    raw code-space recall is unusable (0.06-0.24 isotropic)."""
-    dsub = dim // m
-    coarse = coarse_codebook if coarse_codebook is not None else sorted(
-        (int(r[0]), [float(x) for x in r[1]])
-        for r in emb.filter(F.col(id_col) < nlist).select(id_col, vec_col).collect()
-    )
-    cents = _pq_cents(emb, pq_codebook, m, ksub, dsub, id_col, vec_col)
-    darr = _pq_darr_builder(cents, dsub)
-
-    dbl = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    assign1 = V.nearest_centroids_pd(coarse, 1)
-    corpus = spread(emb).select(
-        F.col(id_col).alias("neighbor_id"), dbl.alias("v"),
-        F.element_at(assign1(F.col(vec_col)), 1).alias("cid"),
-    )
-    for j in range(m):
-        corpus = corpus.withColumn(
-            f"code{j}",
-            F.expr(f"cast(array_position({darr(j, 'v')},"
-                   f" array_min({darr(j, 'v')})) as int)"),
-        )
-    corpus = corpus.drop("v")  # id + coarse list + m codes
-
-    assign_np = V.nearest_centroids_pd(coarse, nprobe)
-    qf = queries.select(
-        F.col(id_col).alias("query_id"), dbl.alias("qv"),
-        F.explode(assign_np(F.col(vec_col))).alias("cid"),
-    )
-    for j in range(m):
-        qf = qf.withColumn(f"lut{j}", F.expr(darr(j, "qv")))
-    qf = F.broadcast(qf.drop("qv"))
-
-    score = F.expr(" + ".join(f"element_at(lut{j}, code{j})" for j in range(m)))
-    scored = (
-        corpus.join(qf, "cid")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("adc", F.round(score, 6))
-        .select("query_id", "neighbor_id", "adc")
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("adc").asc(), F.col("neighbor_id").asc()
-    )
-    topk = (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= (k * rescore if rescore > 0 else k))
-        .select("query_id", "neighbor_id", "adc", "rank")
-    )
-    if rescore <= 0:
-        return topk
-    return _exact_rescore(emb, queries, topk, k, id_col, vec_col, dim)
 
 
 # ------------------------- int8 scalar quantization -----------------------
@@ -705,12 +699,29 @@ def _int_sum_fixed(a: str, dim: int):
     return F.expr(f"cast(0 as bigint) + {terms}")
 
 
+def _sq8_rows(df: DataFrame, cols: list, stats: tuple[float, float],
+              vec_col: str, dim: int) -> DataFrame:
+    """``cols`` of ``df`` plus each row's sq8 codes (array<int> in
+    [0,255]), their exact integer sum ``cs`` and squared norm ``nsq``
+    — one codegen'd projection."""
+    mn, s = stats
+    dbl = F.transform(F.col(vec_col), lambda x: x.cast("double"))
+    return (
+        df.select(*cols, dbl.alias("v"))
+        .withColumn("codes", F.expr(_sq8_codes_expr(mn, s, dim)))
+        .withColumn("cs", _int_sum_fixed("codes", dim))
+        .withColumn("nsq", _int_dot_fixed("codes", "codes", dim))
+        .drop("v")
+    )
+
+
 def sq8_encode(
     emb: DataFrame,
     stats: tuple[float, float] | None = None,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     dim: int = 64,
+    coarse: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
     """Materialize the int8-scalar-quantized corpus: (id, codes
     array<int> in [0,255], cs = exact integer code sum, nsq = exact
@@ -721,20 +732,19 @@ def sq8_encode(
     delegates to an ES ``int8_hnsw`` index (hub/dataindex/embed.py:
     51-59), whose int8 half is exactly this single-interval linear
     quantization with per-vector correction stats (Lucene
-    ScalarQuantizer)."""
+    ScalarQuantizer).
+
+    With a ``coarse`` codebook each row also carries its nearest list
+    id — the composed IVF+SQ8 table (id, cid, codes, cs, nsq), the
+    FAISS "IVF,SQ8" shape and the closest relational analog of the ES
+    index (coarse graph pruning there, coarse inverted lists here; int8
+    codes both). Appending a batch costs only that batch's projection
+    when both components are frozen (see the incremental contracts on
+    ``sq8_topk(stats=)`` and ``ivf_topk(codebook=)``)."""
     if stats is None:
         stats = sq8_stats(emb, id_col=id_col, vec_col=vec_col, dim=dim)
-    mn, s = stats
-    dbl = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    out = emb.select(F.col(id_col), dbl.alias("v")).withColumn(
-        "codes", F.expr(_sq8_codes_expr(mn, s, dim))
-    )
-    return out.select(
-        id_col,
-        "codes",
-        _int_sum_fixed("codes", dim).alias("cs"),
-        _int_dot_fixed("codes", "codes", dim).alias("nsq"),
-    )
+    cols = [F.col(id_col), *_list_ids(coarse, 1, vec_col, dim)]
+    return _sq8_rows(emb, cols, stats, vec_col, dim)
 
 
 def sq8_topk(
@@ -747,6 +757,9 @@ def sq8_topk(
     rescore: int = 0,
     clip_sigma: float | None = None,
     stats: tuple[float, float] | None = None,
+    nlist: int | None = None,
+    nprobe: int = 2,
+    coarse_codebook: list[tuple[int, list[float]]] | None = None,
 ) -> DataFrame:
     """int8 scalar-quantized cosine top-k — the direct analog of the
     reference's ES ``int8_hnsw`` quantization half
@@ -787,24 +800,32 @@ def sq8_topk(
     components outside the frozen interval clamp. With ``stats`` set,
     ``clip_sigma`` is ignored (the freeze already happened).
 
+    ``nlist``/``coarse_codebook`` compose coarse inverted-list pruning
+    with the codes — IVF+SQ8 (FAISS "IVF,SQ8"; the reference's ES
+    int8_hnsw trades recall for memory the same two ways): a query
+    scans ~nprobe/nlist of the codes instead of all of them, with the
+    same exact-integer scoring (quantization noise only, no PQ
+    subspace-argmin loss). The coarse codebook defaults to the first
+    ``nlist`` corpus rows and the stats to the corpus-wide interval —
+    both pure functions of the data, so the DuckDB oracle reproduces
+    them relationally; pass trained/frozen components for the
+    production variants with the identical plan. Without either the
+    index is flat: one list holding every row.
+
     Plan shape = brute_force_topk: broadcast encoded queries, map-only
-    integer scoring over the encoded corpus, one shuffle for the
-    per-query top-k (+ one broadcast join and a Q*k*r-row re-rank when
-    rescoring). Quantization stats are one 64-row aggregate."""
-    mn, s = stats if stats is not None else sq8_stats(
+    integer scoring over the encoded corpus (an equi-join on the coarse
+    list id when pruning), one shuffle for the per-query top-k (+ one
+    broadcast join and a Q*k*r-row re-rank when rescoring).
+    Quantization stats are one 64-row aggregate."""
+    coarse = _codebook(emb, nlist, coarse_codebook, id_col, vec_col)
+    st = stats if stats is not None else sq8_stats(
         emb, id_col=id_col, vec_col=vec_col, dim=dim, clip_sigma=clip_sigma
     )
-    # Exact reconstruction of the float dot product from integer code
-    # stats: with v_d = mn + s*c_d,  dot(a,b) = dim*mn^2
-    # + mn*s*(sum(a)+sum(b)) + s^2*dot(codes) — the per-vector sums and
-    # the code dot are EXACT bigints; the four scalar constants below
-    # are the only doubles, computed with the same IEEE op shapes the
-    # DuckDB mirror uses, so the score is engine-identical. This is why
-    # the interval is global (Lucene's shape): per-dim offsets would
-    # force per-dim float weights into the cross term.
-    codes = sq8_encode(spread(emb), (mn, s), id_col=id_col, vec_col=vec_col, dim=dim)
-    return sq8_serve_codes(codes, queries, (mn, s), k=k, id_col=id_col,
-                           vec_col=vec_col, dim=dim, rescore=rescore, emb=emb)
+    codes = sq8_encode(spread(emb), st, id_col=id_col, vec_col=vec_col, dim=dim,
+                       coarse=coarse)
+    return sq8_serve_codes(codes, queries, st, k=k, id_col=id_col, vec_col=vec_col,
+                           dim=dim, rescore=rescore, emb=emb, coarse=coarse,
+                           nprobe=nprobe)
 
 
 def sq8_serve_codes(
@@ -817,6 +838,8 @@ def sq8_serve_codes(
     dim: int = 64,
     rescore: int = 0,
     emb: DataFrame | None = None,
+    coarse: list[tuple[int, list[float]]] | None = None,
+    nprobe: int = 2,
 ) -> DataFrame:
     """Serve sq8 top-k from a PRE-ENCODED code table — the
     encode-once/serve-many half of the lifecycle split out of
@@ -830,7 +853,18 @@ def sq8_serve_codes(
     reconstruction weights below — serving with different stats than
     encode is meaningless). ``rescore=r`` needs the float corpus for
     the exact re-rank — pass ``emb``; floats are then read for Q*k*r
-    rows only (broadcast candidate equi-join)."""
+    rows only (broadcast candidate equi-join). ``coarse`` serves an
+    IVF+SQ8 table (``sq8_encode(coarse=)``, one ``cid`` per row) under
+    the same codebook: a query touches only the rows of its ``nprobe``
+    nearest lists."""
+    # Exact reconstruction of the float dot product from integer code
+    # stats: with v_d = mn + s*c_d,  dot(a,b) = dim*mn^2
+    # + mn*s*(sum(a)+sum(b)) + s^2*dot(codes) — the per-vector sums and
+    # the code dot are EXACT bigints; the four scalar constants below
+    # are the only doubles, computed with the same IEEE op shapes the
+    # DuckDB mirror uses, so the score is engine-identical. This is why
+    # the interval is global (Lucene's shape): per-dim offsets would
+    # force per-dim float weights into the cross term.
     mn, s = stats
     c0 = (float(dim) * mn) * mn  # dim * mn^2
     a1 = mn * s                  # offset-correction weight
@@ -842,17 +876,16 @@ def sq8_serve_codes(
             (F.lit(b2) * cs.cast("double")) + (F.lit(a2) * nsq.cast("double"))
         )
 
+    cid = [] if coarse is None else ["cid"]
     corpus = codes.select(
-        F.col(id_col).alias("neighbor_id"), F.col("codes").alias("cc"),
+        F.col(id_col).alias("neighbor_id"), *cid, F.col("codes").alias("cc"),
         F.col("cs").alias("ccs"),
         F.sqrt(_rn2(F.col("cs"), F.col("nsq"))).alias("cn"),
     )
-    q = F.broadcast(
-        sq8_encode(queries, (mn, s), id_col=id_col, vec_col=vec_col, dim=dim).select(
-            F.col(id_col).alias("query_id"), F.col("codes").alias("qc"),
-            F.col("cs").alias("qcs"),
-            F.sqrt(_rn2(F.col("cs"), F.col("nsq"))).alias("qn"),
-        )
+    qcols = [F.col(id_col).alias("query_id"), *_list_ids(coarse, nprobe, vec_col, dim)]
+    q = _sq8_rows(queries, qcols, stats, vec_col, dim).select(
+        "query_id", *cid, F.col("codes").alias("qc"), F.col("cs").alias("qcs"),
+        F.sqrt(_rn2(F.col("cs"), F.col("nsq"))).alias("qn"),
     )
     denom = F.col("qn") * F.col("cn")
     # per-pair integer dot: codegen'd unrolled expression at catalog
@@ -869,171 +902,14 @@ def sq8_serve_codes(
         + (F.lit(a2) * _int_dot_fixed("qc", "cc", dim).cast("double"))
     )
     scored = (
-        corpus.crossJoin(q)
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            F.round(
-                F.when(denom > 0, rdot / denom).otherwise(F.lit(0.0)),
-                6,
-            ),
-        )
-        .select("query_id", "neighbor_id", "cosine")
-    )
-    if rescore <= 0:
-        return _topk_per_query(scored, k)
-    if emb is None:
-        raise ValueError("rescore needs the float corpus: pass emb=")
-    cand = _topk_per_query(scored, k * rescore)
-    return _exact_rescore(emb, queries, cand, k, id_col, vec_col, dim)
-
-
-def ivfsq8_encode(
-    emb: DataFrame,
-    coarse: list[tuple[int, list[float]]],
-    stats: tuple[float, float],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-) -> DataFrame:
-    """Build the composed IVF+SQ8 index table (id, cid, codes, cs, nsq)
-    — the FAISS "IVF,SQ8" shape and the closest relational analog of
-    the reference's ES int8_hnsw index (hub/dataindex/embed.py:51-59:
-    coarse graph pruning there, coarse inverted lists here; int8 codes
-    both). ONE map-only projection: the coarse list id is the Arrow
-    batch argmax against the broadcast codebook (no crossJoin blowup),
-    the codes/stats are the same codegen'd expressions as
-    ``sq8_encode``. At 10^9 vectors this is the persisted index —
-    4x narrower than floats plus one int per row — and appending a
-    batch costs only that batch's projection (both components frozen:
-    see the incremental contracts on ``sq8_topk(stats=)`` and
-    ``ivf_topk(codebook=)``)."""
-    mn, s = stats
-    assign = V.nearest_centroids_pd(coarse, 1, dim)
-    dbl = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    out = emb.select(
-        F.col(id_col),
-        F.element_at(assign(F.col(vec_col)), 1).alias("cid"),
-        dbl.alias("v"),
-    ).withColumn("codes", F.expr(_sq8_codes_expr(mn, s, dim)))
-    return out.select(
-        id_col, "cid", "codes",
-        _int_sum_fixed("codes", dim).alias("cs"),
-        _int_dot_fixed("codes", "codes", dim).alias("nsq"),
-    )
-
-
-def ivfsq8_serve_codes(
-    index: DataFrame,
-    queries: DataFrame,
-    coarse: list[tuple[int, list[float]]],
-    stats: tuple[float, float],
-    k: int = 10,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    rescore: int = 0,
-    emb: DataFrame | None = None,
-) -> DataFrame:
-    """Serve the composed index: a query touches ~nprobe/nlist of the
-    CODE table only — candidate generation is an equi-join on the
-    coarse list id (every index row carries exactly one cid, so no
-    distinct is needed), scoring is the exact-integer sq8
-    reconstruction, and the float corpus appears nowhere except an
-    explicit ``rescore`` (pass ``emb``; floats read for Q*k*r rows).
-    ``coarse``/``stats`` must be the constants the index was encoded
-    with."""
-    mn, s = stats
-    c0 = (float(dim) * mn) * mn
-    a1 = mn * s
-    a2 = s * s
-    b2 = (2.0 * mn) * s
-
-    def _rn2(cs, nsq):
-        return F.lit(c0) + (
-            (F.lit(b2) * cs.cast("double")) + (F.lit(a2) * nsq.cast("double"))
-        )
-
-    corpus = index.select(
-        F.col(id_col).alias("neighbor_id"), "cid",
-        F.col("codes").alias("cc"), F.col("cs").alias("ccs"),
-        F.sqrt(_rn2(F.col("cs"), F.col("nsq"))).alias("cn"),
-    )
-    assign = V.nearest_centroids_pd(coarse, nprobe, dim)
-    dbl = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    qf = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            F.explode(assign(F.col(vec_col))).alias("cid"),
-            dbl.alias("v"),
-        )
-        .withColumn("qc", F.expr(_sq8_codes_expr(mn, s, dim)))
-        .withColumn("qcs", _int_sum_fixed("qc", dim))
-        .withColumn("qnsq", _int_dot_fixed("qc", "qc", dim))
-        .select(
-            "query_id", "cid", "qc", "qcs",
-            F.sqrt(_rn2(F.col("qcs"), F.col("qnsq"))).alias("qn"),
-        )
-    )
-    denom = F.col("qn") * F.col("cn")
-    rdot = F.lit(c0) + (
-        (F.lit(a1) * (F.col("qcs") + F.col("ccs")).cast("double"))
-        + (F.lit(a2) * _int_dot_fixed("qc", "cc", dim).cast("double"))
-    )
-    scored = (
-        corpus.join(F.broadcast(qf), "cid")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
+        _probe_join(corpus, q, coarse)
         .withColumn(
             "cosine",
             F.round(F.when(denom > 0, rdot / denom).otherwise(F.lit(0.0)), 6),
         )
         .select("query_id", "neighbor_id", "cosine")
     )
-    if rescore <= 0:
-        return _topk_per_query(scored, k)
-    if emb is None:
-        raise ValueError("rescore needs the float corpus: pass emb=")
-    cand = _topk_per_query(scored, k * rescore)
-    return _exact_rescore(emb, queries, cand, k, id_col, vec_col, dim)
-
-
-def ivfsq8_topk(
-    emb: DataFrame,
-    queries: DataFrame,
-    k: int = 10,
-    nlist: int = 8,
-    nprobe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    coarse_codebook: list[tuple[int, list[float]]] | None = None,
-    stats: tuple[float, float] | None = None,
-    rescore: int = 0,
-) -> DataFrame:
-    """IVF+SQ8 composed top-k — coarse inverted-list pruning AND int8
-    scalar quantization in one index (FAISS "IVF,SQ8"; the reference's
-    ES int8_hnsw trades recall for memory the same two ways,
-    hub/dataindex/embed.py:51-59). Against IVF-PQ this keeps sq8's
-    exact-integer reconstructed scoring (quantization noise only, no
-    subspace argmin loss); against plain sq8 it scans ~nprobe/nlist of
-    the codes instead of all of them. Defaults mirror the family
-    discipline: coarse codebook = first ``nlist`` corpus rows, stats =
-    corpus-wide interval — both pure functions of the data so the
-    DuckDB oracle reproduces them relationally; pass trained/frozen
-    components for the production variants with the identical plan."""
-    coarse = coarse_codebook if coarse_codebook is not None else sorted(
-        (int(r[0]), [float(x) for x in r[1]])
-        for r in emb.filter(F.col(id_col) < nlist).select(id_col, vec_col).collect()
-    )
-    st = stats if stats is not None else sq8_stats(
-        emb, id_col=id_col, vec_col=vec_col, dim=dim
-    )
-    index = ivfsq8_encode(spread(emb), coarse, st, id_col=id_col, vec_col=vec_col, dim=dim)
-    return ivfsq8_serve_codes(
-        index, queries, coarse, st, k=k, nprobe=nprobe, id_col=id_col,
-        vec_col=vec_col, dim=dim, rescore=rescore, emb=emb,
-    )
+    return _quantized_topk(scored, k, rescore, emb, queries, id_col, vec_col, dim)
 
 
 # 12 affine blocks lifting the 64-d embeddings table to the reference's
@@ -1113,33 +989,3 @@ def recall_at_k(truth: DataFrame, approx: DataFrame, k: int = 10) -> float:
     )
     return float(per_q.agg(F.avg(F.col("h") / F.lit(float(k)))).collect()[0][0])
 
-
-def pq_encode(
-    emb: DataFrame,
-    m: int = 4,
-    ksub: int = 8,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    codebook=None,
-) -> DataFrame:
-    """Materialize the PQ code table: (id, code0..code{m-1}) — the
-    encode-once half of the PQ lifecycle. In production this frame is
-    WRITTEN (bucketed by id) and every subsequent ADC query scans codes
-    instead of floats (~dim*4/m compression); ``pq_adc_topk``/
-    ``ivfpq_topk`` build exactly this projection inline when not given
-    one. Encode is a pure codegen'd projection — sequential-fold
-    subspace distances against centroid literals, no Python, no
-    shuffle."""
-    dsub = dim // m
-    cents = _pq_cents(emb, codebook, m, ksub, dsub, id_col, vec_col)
-    darr = _pq_darr_builder(cents, dsub)
-    dbl = F.transform(F.col(vec_col), lambda x: x.cast("double"))
-    out = emb.select(F.col(id_col), dbl.alias("v"))
-    for j in range(m):
-        out = out.withColumn(
-            f"code{j}",
-            F.expr(f"cast(array_position({darr(j, 'v')},"
-                   f" array_min({darr(j, 'v')})) as int)"),
-        )
-    return out.drop("v")

@@ -21,7 +21,9 @@ as pure column expressions over a documents DataFrame:
 - ``check_schema_gate``  <- required fields + enum assertions
                             (utils.py:103-137) as a valid/quarantine
                             split instead of hard asserts — bad rows are
-                            diagnosable, good rows flow on
+                            diagnosable, good rows flow on (the
+                            diagnosis column is
+                            nde_schema.schema_violation_nde)
 - ``size_gate``          <- drop rows whose serialized form exceeds the
                             16MB BSON analog (utils.py:395-401)
 
@@ -34,7 +36,6 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-ACCESS_ENUM = ["Open", "Restricted", "Closed", "Embargoed"]
 PLACEHOLDER_TERMS = ["n/a", "na", "unknown", "not applicable", "none", "null", "other"]
 
 
@@ -71,38 +72,6 @@ def placeholder_filter(entities: Column, name_field: str = "name") -> Column:
         entities,
         lambda e: ~F.array_contains(terms, F.trim(F.lower(e.getField(name_field)))),
     )
-
-
-def schema_violation(
-    type_col: Column,
-    url_col: Column,
-    access_col: Column,
-    creative_status_col: Column | None = None,
-) -> Column:
-    """First violated rule as a diagnosis string, NULL when valid —
-    the quarantine-side-output form of check_schema's asserts
-    (utils/utils.py:103-137). Pass ``creative_status_col`` to also
-    enforce the Sample-only creativeWorkStatus enum (utils.py:129-136);
-    the full nested-record gate (incl. includedInDataCatalog.archivedAt)
-    lives in operators/nde_schema.py::schema_violation_nde."""
-    from .nde_schema import CREATIVE_WORK_STATUS_ENUM
-
-    v = (
-        F.when(type_col.isNull() | (type_col == ""), F.lit("missing_type"))
-        .when(url_col.isNull() | (url_col == ""), F.lit("missing_url"))
-        .when(
-            access_col.isNotNull() & ~access_col.isin(*ACCESS_ENUM),
-            F.lit("invalid_conditions_of_access"),
-        )
-    )
-    if creative_status_col is not None:
-        v = v.when(
-            (type_col == "Sample")
-            & creative_status_col.isNotNull()
-            & ~creative_status_col.isin(*CREATIVE_WORK_STATUS_ENUM),
-            F.lit("invalid_creative_work_status"),
-        )
-    return v.otherwise(F.lit(None).cast("string"))
 
 
 def check_schema_gate(df: DataFrame, violation: Column) -> tuple[DataFrame, DataFrame]:

@@ -423,18 +423,18 @@ def ann_ivf_topk(spark, sf_dir):
 
 
 def ann_ivfpq_topk(spark, sf_dir):
-    """IVF-PQ composed (similarity.py::ivfpq_topk): coarse inverted
+    """IVF-PQ composed (similarity.py::pq_adc_topk(nlist=)): coarse inverted
     lists prune the candidate set to ~nprobe/nlist of the corpus AND
     PQ codes replace the float vectors in scoring — the FAISS-IVFPQ
     production shape as one equi-join plan."""
     emb = t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
-    return SIM.ivfpq_topk(emb, q, k=10, nlist=8, nprobe=2, m=4, ksub=8)
+    return SIM.pq_adc_topk(emb, q, k=10, m=4, ksub=8, nlist=8, nprobe=2)
 
 
 def ann_ivfpq_rescore_topk(spark, sf_dir):
     """IVF-PQ with the production exact-rescore step (similarity.py::
-    ivfpq_topk(rescore=4)): the quantized equi-join scan keeps top
+    pq_adc_topk(nlist=8, rescore=4)): the quantized equi-join scan keeps top
     k*4 per query, then ONLY those rows' float vectors are fetched
     (broadcast candidate join) for exact cosine re-ranking — the step
     FAISS IVFPQ ships with and the reference's ES int8_hnsw serving
@@ -443,8 +443,8 @@ def ann_ivfpq_rescore_topk(spark, sf_dir):
     Q*k*r rows, not N."""
     emb = t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
-    return SIM.ivfpq_topk(emb, q, k=10, nlist=8, nprobe=2, m=4, ksub=8,
-                          rescore=4)
+    return SIM.pq_adc_topk(emb, q, k=10, m=4, ksub=8, nlist=8, nprobe=2,
+                           rescore=4)
 
 
 def ann_ivf_trained_topk(spark, sf_dir):
@@ -542,7 +542,7 @@ def ann_ivf_incremental_topk(spark, sf_dir):
 
 
 def ann_ivfsq8_topk(spark, sf_dir):
-    """Composed IVF+SQ8 index (similarity.py::ivfsq8_topk — the FAISS
+    """Composed IVF+SQ8 index (similarity.py::sq8_topk(nlist=) — the FAISS
     "IVF,SQ8" shape): coarse inverted lists prune the candidate set to
     ~nprobe/nlist of the CODE table, and scoring is sq8's exact-integer
     reconstructed dot over int8 codes — the float corpus appears
@@ -552,7 +552,7 @@ def ann_ivfsq8_topk(spark, sf_dir):
     long-form code pipeline and must rank identically bit-for-bit."""
     emb = t(spark, sf_dir, "embeddings")
     q = emb.filter(F.col("vec_id") < 5)
-    return SIM.ivfsq8_topk(emb, q, k=10, nlist=8, nprobe=2)
+    return SIM.sq8_topk(emb, q, k=10, nlist=8, nprobe=2)
 
 
 def ann_ivfsq8_incremental_topk(spark, sf_dir):
@@ -570,8 +570,8 @@ def ann_ivfsq8_incremental_topk(spark, sf_dir):
     cb = SIM.kmeans_codebook(base, k=8, iters=2)
     st = SIM.sq8_stats(base)
     q = emb.filter(F.col("vec_id") < 5)
-    return SIM.ivfsq8_topk(emb, q, k=10, nlist=8, nprobe=2,
-                           coarse_codebook=cb, stats=st)
+    return SIM.sq8_topk(emb, q, k=10, nlist=8, nprobe=2,
+                        coarse_codebook=cb, stats=st)
 
 
 def ann_sq8_dim768_topk(spark, sf_dir):
@@ -1628,6 +1628,7 @@ def nde_wrapper_pass(spark, sf_dir):
     """The full upload-wrapper pass over derived NDE records: casefold ->
     add_date -> HTML strip -> completeness score -> schema gate (valid
     side)."""
+    from .operators import nde_schema as NS
     from .operators import textops as TO2
     from .operators import wrapper as W
 
@@ -1643,17 +1644,17 @@ def nde_wrapper_pass(spark, sf_dir):
         F.date_format(latest, "yyyy-MM-dd").alias("latest_date"),
         score.alias("score"),
         F.length(TO2.html_strip(F.col("description"))).alias("stripped_len"),
-        W.schema_violation(F.col("type"), F.col("url"), F.col("access")).alias("violation"),
+        NS.schema_violation_nde(F.col("type"), F.col("url"), F.col("access")).alias("violation"),
     )
     return out.filter(F.col("violation").isNull()).drop("violation")
 
 
 def nde_quarantine_counts(spark, sf_dir):
     """Quarantine side-output: count of rejected records per violation."""
-    from .operators import wrapper as W
+    from .operators import nde_schema as NS
 
     nde = _nde_docs(spark, sf_dir)
-    v = W.schema_violation(F.col("type"), F.col("url"), F.col("access"))
+    v = NS.schema_violation_nde(F.col("type"), F.col("url"), F.col("access"))
     return (
         nde.select(v.alias("violation"))
         .filter(F.col("violation").isNotNull())

@@ -18,6 +18,8 @@ quantization state):
          constants (out-of-interval components clamp to code 0/255 —
          standard SQ saturation for drifted data)
          -> append the (id, codes, cs, nsq) delta to the codes store
+            (sq8_encode; with nlist set, sq8_encode(coarse=) adds the
+            row's coarse list id cid)
       -> serve: sq8_serve_codes over the UNION of committed deltas —
          queries scan the 4x-narrower code table only; the float
          corpus is read solely by an explicit rescore.
@@ -60,8 +62,9 @@ class StreamingVectorIngest:
     "IVF,SQ8" maintenance loop): batch 0 ALSO Lloyd-trains N coarse
     centroids (similarity.kmeans_codebook — deterministic, so replay
     retrains identically) and freezes them next to the interval; every
-    delta row then carries its coarse list id, and ``serve`` prunes to
-    the query's ``nprobe`` lists before the integer scoring — the scan
+    delta row then carries its coarse list id (``sq8_encode(coarse=)``),
+    and ``serve`` prunes to the query's ``nprobe`` lists before the
+    integer scoring (``sq8_serve_codes(coarse=, nprobe=)``) — the scan
     touches ~nprobe/nlist of the code table instead of all of it."""
 
     def __init__(self, spark: SparkSession, root: str, dim: int = 64,
@@ -178,10 +181,8 @@ class StreamingVectorIngest:
             with open(tmp, "w") as f:
                 json.dump(frozen, f)
             os.replace(tmp, self._dir("stats.json"))
-        if self.nlist:
-            delta = SIM.ivfsq8_encode(vecs, self.coarse(), st, dim=self.dim)
-        else:
-            delta = SIM.sq8_encode(vecs, st, dim=self.dim)
+        coarse = self.coarse() if self.nlist else None
+        delta = SIM.sq8_encode(vecs, st, dim=self.dim, coarse=coarse)
         delta.write.mode("overwrite").parquet(
             self._dir(f"codes/batch={batch_id:06d}")
         )
@@ -196,12 +197,8 @@ class StreamingVectorIngest:
         st = self.stats()
         if st is None:
             raise ValueError("no batches ingested yet — stats not frozen")
-        if self.nlist:
-            return SIM.ivfsq8_serve_codes(
-                self.codes(), queries, self.coarse(), st, k=k,
-                nprobe=nprobe, dim=self.dim, rescore=rescore, emb=emb,
-            )
         return SIM.sq8_serve_codes(
-            self.codes(), queries, st, k=k, dim=self.dim,
-            rescore=rescore, emb=emb,
+            self.codes(), queries, st, k=k, dim=self.dim, rescore=rescore,
+            emb=emb, coarse=self.coarse() if self.nlist else None,
+            nprobe=nprobe,
         )

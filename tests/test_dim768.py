@@ -168,11 +168,29 @@ def test_ivfsq8_768_full_probe_equals_sq8(emb768):
     q = emb768.filter(F.col("vec_id") < NQ)
     got = sorted(
         tuple(r)
-        for r in S.ivfsq8_topk(emb768, q, k=K, nlist=4, nprobe=4,
-                               dim=DIM).collect()
+        for r in S.sq8_topk(emb768, q, k=K, nlist=4, nprobe=4,
+                            dim=DIM).collect()
     )
     want = sorted(
         tuple(r) for r in S.sq8_topk(emb768, q, k=K, dim=DIM).collect()
+    )
+    assert got == want
+
+
+def test_ivf_768_full_probe_equals_brute_force(emb768):
+    """The float IVF path serves at the reference dimension: with
+    nprobe == nlist every list is scanned, so ivf_topk must equal
+    brute_force_topk row-for-row at dim=768 — the coarse assignment,
+    the Arrow norms and the pair cosine all read every component, not
+    the first 64."""
+    q = emb768.filter(F.col("vec_id") < NQ)
+    got = sorted(
+        tuple(r)
+        for r in S.ivf_topk(emb768, q, k=K, nlist=4, nprobe=4,
+                            dim=DIM).collect()
+    )
+    want = sorted(
+        tuple(r) for r in S.brute_force_topk(emb768, q, k=K, dim=DIM).collect()
     )
     assert got == want
 

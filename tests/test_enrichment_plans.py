@@ -11,6 +11,7 @@ from datetime import datetime, timedelta
 import pytest
 from pyspark.sql import functions as F
 
+from nde_crawlers_spark.operators import nde_schema as NS
 from nde_crawlers_spark.operators import wrapper as W
 from nde_crawlers_spark.operators.embed import CACHE_SCHEMA, embed_with_cache, stub_embed
 from nde_crawlers_spark.plans.incremental import IncrementalHarvest
@@ -106,7 +107,7 @@ def test_wrapper_operators(spark):
         W.casefold_id(F.col("id")).alias("id"), "type", "url", "access",
         W.add_date(F.col("d1").cast("date"), F.col("d2").cast("date"), F.col("d3").cast("date")).alias("latest"),
         W.placeholder_filter(F.col("species")).alias("species"),
-        W.schema_violation(F.col("type"), F.col("url"), F.col("access")).alias("violation"),
+        NS.schema_violation_nde(F.col("type"), F.col("url"), F.col("access")).alias("violation"),
     )
     rows = {r["id"]: r for r in df.collect()}
     assert set(rows) == {"id:one", "id:two", "id:three"}

@@ -868,7 +868,7 @@ def test_ivfpq_composed_recall(spark):
     with garbage-free pruning the candidate count per query is bounded
     by the list size, the 10^9-scale property."""
     from nde_crawlers_spark.operators.similarity import (
-        ivfpq_topk, kmeans_codebook, pq_train,
+        kmeans_codebook, pq_adc_topk, pq_train,
     )
 
     dim, per = 64, 40
@@ -885,12 +885,28 @@ def test_ivfpq_composed_recall(spark):
     coarse = kmeans_codebook(emb, k=3, iters=3)
     pq = pq_train(emb, m=4, ksub=8, iters=3)
     q = emb.filter(F.col("vec_id").isin([5, 45, 85]))
-    got = ivfpq_topk(emb, q, k=5, nlist=3, nprobe=1, m=4, ksub=8,
-                     coarse_codebook=coarse, pq_codebook=pq).collect()
+    got = pq_adc_topk(emb, q, k=5, nlist=3, nprobe=1, m=4, ksub=8,
+                      coarse_codebook=coarse, codebook=pq).collect()
     assert len(got) == 15
     for r in got:
         assert r["neighbor_id"] // per == r["query_id"] // per, (
             r["query_id"], r["neighbor_id"])
+
+
+def test_ivfpq_full_probe_equals_pq_adc(spark):
+    """Completeness invariant of the PQ family: with nprobe == nlist
+    IVF-PQ scans every list, so it must equal flat PQ-ADC row-for-row
+    (the coarse lists only PRUNE — they must never change a score)."""
+    from nde_crawlers_spark.operators.similarity import pq_adc_topk
+
+    emb = spark.read.parquet(f"{SF01}/embeddings.parquet")
+    q = emb.filter(F.col("vec_id") < 5)
+    got = sorted(
+        tuple(r)
+        for r in pq_adc_topk(emb, q, k=10, m=4, ksub=8, nlist=8, nprobe=8).collect()
+    )
+    want = sorted(tuple(r) for r in pq_adc_topk(emb, q, k=10, m=4, ksub=8).collect())
+    assert got == want
 
 
 def test_ann_recall_floors_clustered(spark):
@@ -904,8 +920,8 @@ def test_ann_recall_floors_clustered(spark):
     (where recall ~= scan fraction is the theoretical floor) lives in
     test_ann_recall_floors_isotropic + BENCH/ann_recall.json."""
     from nde_crawlers_spark.operators.similarity import (
-        brute_force_topk, clustered_rows, ivf_topk, ivfpq_topk,
-        kmeans_codebook, pq_train, recall_at_k,
+        brute_force_topk, clustered_rows, ivf_topk, kmeans_codebook,
+        pq_adc_topk, pq_train, recall_at_k,
     )
 
     dim, per, ncl = 64, 30, 8
@@ -923,10 +939,10 @@ def test_ann_recall_floors_clustered(spark):
 
     r_ivf = recall_at_k(truth, ivf_topk(emb, q, k=10, nlist=8, nprobe=2, codebook=coarse))
     r_ivfpq_tr = recall_at_k(
-        truth, ivfpq_topk(emb, q, k=10, nlist=8, nprobe=2, m=8, ksub=8,
-                          coarse_codebook=coarse, pq_codebook=pq))
+        truth, pq_adc_topk(emb, q, k=10, nlist=8, nprobe=2, m=8, ksub=8,
+                           coarse_codebook=coarse, codebook=pq))
     r_ivfpq_def = recall_at_k(
-        truth, ivfpq_topk(emb, q, k=10, nlist=8, nprobe=2, m=8, ksub=8))
+        truth, pq_adc_topk(emb, q, k=10, nlist=8, nprobe=2, m=8, ksub=8))
     assert r_ivf >= 0.9, f"trained IVF recall@10 {r_ivf}"
     assert r_ivfpq_tr >= 0.8, f"trained IVF-PQ recall@10 {r_ivfpq_tr}"
     assert r_ivfpq_tr >= r_ivfpq_def - 1e-9, (r_ivfpq_tr, r_ivfpq_def)
@@ -935,11 +951,11 @@ def test_ann_recall_floors_clustered(spark):
     # rounding only, so with the trained coarse codebook recall must
     # track trained IVF's (>=0.9), strictly above the trained IVF-PQ
     # floor — the whole point of the composition
-    from nde_crawlers_spark.operators.similarity import ivfsq8_topk
+    from nde_crawlers_spark.operators.similarity import sq8_topk
 
     r_ivfsq8 = recall_at_k(
-        truth, ivfsq8_topk(emb, q, k=10, nlist=8, nprobe=2,
-                           coarse_codebook=coarse))
+        truth, sq8_topk(emb, q, k=10, nlist=8, nprobe=2,
+                        coarse_codebook=coarse))
     assert r_ivfsq8 >= 0.9, f"trained IVF+SQ8 recall@10 {r_ivfsq8}"
     assert r_ivfsq8 >= r_ivf - 0.05, (r_ivfsq8, r_ivf)
 

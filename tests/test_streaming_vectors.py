@@ -108,11 +108,11 @@ def test_stream_serve_rescored(spark, ingested):
 def test_stream_ivfsq8_equals_batch(spark, tmp_path):
     """nlist mode: the streamed composed index (frozen Lloyd coarse
     codebook + frozen interval, both trained on batch 0) must serve
-    identically to the batch ivfsq8_topk under the same frozen
+    identically to the batch sq8_topk(nlist=) under the same frozen
     components, and the stored deltas carry one coarse list id per
     row."""
     from nde_crawlers_spark.operators.similarity import (
-        ivfsq8_topk, kmeans_codebook, sq8_stats)
+        kmeans_codebook, sq8_stats, sq8_topk)
     from nde_crawlers_spark.streaming.vector_ingest import StreamingVectorIngest
 
     root = str(tmp_path / "ivf_ingest")
@@ -135,9 +135,9 @@ def test_stream_ivfsq8_equals_batch(spark, tmp_path):
     frozen_st = sq8_stats(base)
     want = sorted(
         tuple(r)
-        for r in ivfsq8_topk(emb, q, k=10, nlist=8, nprobe=2,
-                             coarse_codebook=frozen_cb,
-                             stats=frozen_st).collect()
+        for r in sq8_topk(emb, q, k=10, nlist=8, nprobe=2,
+                          coarse_codebook=frozen_cb,
+                          stats=frozen_st).collect()
     )
     assert got == want
     assert vi.coarse() == frozen_cb
@@ -153,12 +153,12 @@ def test_ivfsq8_full_probe_equals_sq8(spark):
     """Completeness invariant: with nprobe == nlist the composed index
     scans every list, so IVF+SQ8 must equal plain sq8 row-for-row (the
     coarse component only PRUNES — it must never change a score)."""
-    from nde_crawlers_spark.operators.similarity import ivfsq8_topk, sq8_topk
+    from nde_crawlers_spark.operators.similarity import sq8_topk
 
     emb = spark.read.parquet(f"{SF01}/embeddings.parquet")
     q = emb.filter(F.col("vec_id") < 5)
     got = sorted(
-        tuple(r) for r in ivfsq8_topk(emb, q, k=10, nlist=8, nprobe=8).collect()
+        tuple(r) for r in sq8_topk(emb, q, k=10, nlist=8, nprobe=8).collect()
     )
     want = sorted(tuple(r) for r in sq8_topk(emb, q, k=10).collect())
     assert got == want
