@@ -157,7 +157,7 @@ def apply_merge_directives(
                 # NULL and would silently drop them)
                 F.array_distinct(
                     F.concat(
-                        F.coalesce(F.col(catalog_col), F.array().cast(docs.schema[catalog_col].dataType)),
+                        F.coalesce(F.col(catalog_col), F.array()),
                         F.col("__gain"),
                     )
                 ),

@@ -268,7 +268,12 @@ def ivf_topk(
     point: at 10^9 vectors the candidate join touches ~nprobe/nlist of
     the corpus instead of all of it, and the assignment itself is a
     map-only Arrow batch (no codebook crossJoin row blowup, no per-row
-    window shuffle)."""
+    window shuffle).
+
+    Precondition: ``id_col`` is unique in ``emb`` and in ``queries``.
+    Then no (query, neighbor) pair can repeat in the candidate join,
+    so it needs no ``distinct``: every corpus row sits in exactly one
+    list, and a query's ``nprobe`` probed list ids are distinct."""
     cent_rows = _codebook(emb, nlist, codebook, id_col, vec_col)
 
     def _assign(df: DataFrame, n: int) -> DataFrame:
@@ -292,7 +297,6 @@ def ivf_topk(
             F.round(V.cosine_prenormed("qv", "v", F.col("qn"), F.col("vn"), dim), 6),
         )
         .select("query_id", F.col("vid").alias("neighbor_id"), "cosine")
-        .distinct()  # a candidate may appear via both probes
     )
     return _topk_per_query(scored, k)
 

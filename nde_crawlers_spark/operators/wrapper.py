@@ -36,6 +36,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..functions.literals import literal
+
 PLACEHOLDER_TERMS = ["n/a", "na", "unknown", "not applicable", "none", "null", "other"]
 
 
@@ -67,7 +69,7 @@ def completeness_score(required: list[Column], recommended: list[Column]) -> Col
 def placeholder_filter(entities: Column, name_field: str = "name") -> Column:
     """Drop entity structs whose name (casefolded/trimmed) is a
     placeholder term."""
-    terms = F.array(*[F.lit(t) for t in PLACEHOLDER_TERMS])
+    terms = literal(PLACEHOLDER_TERMS, "array<string>")
     return F.filter(
         entities,
         lambda e: ~F.array_contains(terms, F.trim(F.lower(e.getField(name_field)))),

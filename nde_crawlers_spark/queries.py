@@ -1225,43 +1225,42 @@ def _species_lookup() -> dict:
     }
 
 
-def _species_columns(did):
-    """(species, infectiousAgent) entity arrays derived from the doc id:
-    lookup hits and misses, an agent-named raw species entry on every
-    fourth doc, and identifier collisions."""
-    n1, n2, n3 = did % 30, (did * 7) % 30, (did * 11) % 30
+def _strs(values) -> str:
+    """A list of registry-style names as a SQL ``array(...)`` of strings."""
+    return "array(" + ", ".join(f"'{v}'" for v in values) + ")"
 
-    def ent(n, base):
-        return F.struct(
-            F.concat(F.lit("organism-"), n.cast("string")).alias("name"),
-            F.concat(F.lit("tax:"), (base + n).cast("string")).alias("identifier"),
+
+def _species_sql() -> tuple[str, str]:
+    """(species, infectiousAgent) entity arrays derived from ``doc_id``,
+    as SQL text: lookup hits and misses, an agent-named raw species
+    entry on every fourth doc, and identifier collisions."""
+    n1, n2, n3 = "doc_id % 30", "doc_id * 7 % 30", "doc_id * 11 % 30"
+
+    def ent(n, prefix, base):
+        return (
+            f"named_struct('name', concat('{prefix}-', CAST({n} AS STRING)), "
+            f"'identifier', concat('tax:', CAST({n} + {base} AS STRING)))"
         )
 
-    s3 = F.struct(
-        F.concat(F.lit("taxon-"), n3.cast("string")).alias("name"),
-        F.concat(F.lit("tax:"), (3000 + n3).cast("string")).alias("identifier"),
+    species = (
+        f"concat(array({ent(n1, 'organism', 1000)}, {ent(n2, 'organism', 1000)}), "
+        f"CASE WHEN doc_id % 4 = 0 THEN array({ent(n3, 'taxon', 3000)}) "
+        "ELSE CAST(array() AS array<struct<name:string,identifier:string>>) END)"
     )
-    empty = "array<struct<name:string,identifier:string>>"
-    species = F.concat(
-        F.array(ent(n1, 1000), ent(n2, 1000)),
-        F.when(did % 4 == 0, F.array(s3)).otherwise(F.array().cast(empty)),
-    )
-    return species, F.array(ent(n3, 1000))
+    return species, f"array({ent(n3, 'organism', 1000)})"
 
 
-def _ner_entities(did) -> list[tuple]:
-    """Three (name, taxid) NER entities per doc: taxids over the hub
-    taxonomy, named ent-<taxid> except 'china' in position 1 of every
-    ninth doc."""
-    tids = [(1 + did % 200), (1 + (did * 3) % 200), (1 + (did * 11) % 200)]
-    return [
-        (
-            F.when((did % 9 == 0) & (F.lit(pos) == 1), F.lit("china"))
-            .otherwise(F.concat(F.lit("ent-"), tid.cast("string"))),
-            tid.cast("int"),
-        )
-        for pos, tid in enumerate(tids)
-    ]
+def _ner_sql() -> tuple[str, str]:
+    """(ner, taxids) derived from ``doc_id``, as SQL text: three (name,
+    taxid) NER entities per doc with taxids over the hub taxonomy, named
+    ent-<taxid> except 'china' in position 1 of every ninth doc, and the
+    distinct taxids of the first two."""
+    tids = ["doc_id % 200 + 1", "doc_id * 3 % 200 + 1", "doc_id * 11 % 200 + 1"]
+    names = [f"concat('ent-', CAST({tid} AS STRING))" for tid in tids]
+    names[1] = f"CASE WHEN doc_id % 9 = 0 THEN 'china' ELSE {names[1]} END"
+    taxids = [f"CAST({tid} AS INT)" for tid in tids]
+    ents = ", ".join(f"named_struct('name', {n}, 'taxid', {t})" for n, t in zip(names, taxids))
+    return f"array({ents})", f"array_distinct(array({taxids[0]}, {taxids[1]}))"
 
 
 # the NER drop rules (utils/extract.py:23-59 ADVANCED_DROP_RULES shape)
@@ -1322,9 +1321,10 @@ def enrich_reclassify(spark, sf_dir):
     the converted-name filter), and identifier collisions (deduped)."""
     from .operators import standardize as SD
 
-    species, agents = _species_columns(F.col("doc_id"))
+    species, agents = _species_sql()
     out = t(spark, sf_dir, "documents").select(
-        "doc_id", SD.reclassify_species(species, agents, _species_lookup()).alias("r")
+        "doc_id",
+        SD.reclassify_species(F.expr(species), F.expr(agents), _species_lookup()).alias("r"),
     ).select("doc_id", "r.*")
     render = lambda c: F.array_join(  # noqa: E731
         F.transform(c, lambda x: F.concat(x.getField("name"), F.lit("|"), x.getField("identifier"))),
@@ -1348,11 +1348,8 @@ def enrich_drop_rules(spark, sf_dir):
     from .operators import lineage as LN
     from .operators import standardize as SD
 
-    ner = F.array(*[
-        F.struct(name.alias("name"), taxid.alias("taxid"))
-        for name, taxid in _ner_entities(F.col("doc_id"))
-    ])
-    kept = SD.apply_drop_rules(ner, _NER_RULES, LN.taxonomy_closure(_hub_taxonomy()))
+    ner, _ = _ner_sql()
+    kept = SD.apply_drop_rules(F.expr(ner), _NER_RULES, LN.taxonomy_closure(_hub_taxonomy()))
     # a doc whose entities all drop has no row
     return t(spark, sf_dir, "documents").select("doc_id", kept.alias("kept")).filter(
         F.size("kept") > 0
@@ -1820,68 +1817,61 @@ def _uploader_fixture(spark: SparkSession, sf_dir: str) -> DataFrame:
     registry queries dispatch on the real 59-entry registry."""
     from .uploaders import FIXTURE_SOURCES
 
-    did = F.col("doc_id")
-    real_source = F.element_at(
-        F.array(*[F.lit(s) for s in FIXTURE_SOURCES]),
-        (F.regexp_replace("source", "src", "").cast("int") % 20) + 1,
+    # one SQL parse per column: built from F.* calls, the same columns
+    # cost ~2.9k py4j round-trips of plan building
+    url = (
+        "CASE WHEN doc_id % 23 = 0 THEN CAST(NULL AS STRING) ELSE "
+        "concat('https://', source, '.example.org/rec/', CAST(doc_id AS STRING)) END"
     )
-    doi_one = F.concat(F.lit("10.5281/zen."), (did % 997).cast("string"))
-    doi = (
-        F.when(did % 7 == 0, F.array().cast("array<string>"))
-        .when(did % 7 == 1, F.array(F.lit("none")))
-        .when(did % 7 == 6, F.array(F.lit("NONE")))
-        .when(did % 7 == 5, F.array(doi_one, F.concat(F.lit("10.999/alt."), did.cast("string"))))
-        .otherwise(F.array(doi_one))
-    )
-    a2name = F.element_at(
-        F.array(F.lit("n/a"), F.lit("unknown"), F.lit("co-1"),
-                F.lit("co-2"), F.lit("none"), F.lit("co-3")),
-        (did % 6).cast("int") + 1,
-    )
-    aent = lambda n: F.struct(n.alias("name"), F.lit(None).cast("string").alias("identifier"))  # noqa: E731
-    species, agents = _species_columns(did)
-    ner = _ner_entities(did)
-    url = F.when(did % 23 == 0, F.lit(None).cast("string")).otherwise(
-        F.concat(F.lit("https://"), real_source, F.lit(".example.org/rec/"), did.cast("string"))
-    )
-    archived = F.when(did % 11 == 0, F.lit(None).cast("string")).otherwise(url)
-    typ = F.when(did % 17 == 0, F.lit(None).cast("string")).otherwise(
-        F.element_at(
-            F.array(F.lit("Dataset"), F.lit("ComputationalTool"),
-                    F.lit("ResourceCatalog"), F.lit("Dataset")),
-            (did % 4).cast("int") + 1,
+    doi_one = "concat('10.5281/zen.', CAST(doc_id % 997 AS STRING))"
+    author = "named_struct('name', {}, 'identifier', CAST(NULL AS STRING))"
+    species, agents = _species_sql()
+    ner, taxids = _ner_sql()
+    return (
+        t(spark, sf_dir, "documents")
+        .selectExpr(
+            "doc_id",
+            f"element_at({_strs(FIXTURE_SOURCES)}, "
+            "CAST(regexp_replace(source, 'src', '') AS INT) % 20 + 1) AS source",
+            "text",
         )
-    )
-    return t(spark, sf_dir, "documents").select(
-        "doc_id", real_source.alias("source"), "text",
-        F.concat(F.upper(real_source), F.lit(":REC:"), did.cast("string")).alias("_id"),
-        typ.alias("type"),
-        url.alias("url"),
-        F.element_at(
-            F.array(*[F.lit(x) for x in _NDE_ACCESS]), (did % 5).cast("int") + 1
-        ).alias("conditionsOfAccess"),
-        F.array(F.struct(
-            real_source.alias("name"), url.alias("url"), archived.alias("archivedAt"),
-        )).alias("includedInDataCatalog"),
-        doi.alias("doi"),
-        F.array(aent(F.concat(F.lit("Author-"), (did % 40).cast("string"))), aent(a2name)).alias("author"),
-        species.alias("species"),
-        agents.alias("infectiousAgent"),
-        F.array_distinct(F.array(ner[0][1], ner[1][1])).alias("taxids"),
-        F.array(*[F.struct(name.alias("name"), taxid.alias("taxid")) for name, taxid in ner])
-        .alias("ner"),
-        F.when(did % 5 == 0, F.lit(None).cast("string"))
-        .otherwise(F.concat(F.lit("grant:"), ((did * 3) % 89).cast("string"))).alias("funding_id"),
-        # (did*13+1) flips parity vs did%500, so EVERY pmid-family source
-        # exercises both the lookup-hit and lookup-miss paths (the even-
-        # only lookup would otherwise be all-hit or all-miss per source,
-        # since documents.source = src{doc_id % 20})
-        F.array_distinct(F.array(
-            F.concat(F.lit("pmid:"), (did % 500).cast("string")),
-            F.concat(F.lit("pmid:"), ((did * 13 + 1) % 500).cast("string")),
-        )).alias("pmids"),
-        F.concat(F.lit("tech-"), (did % 37).cast("string")).alias("technique"),
-        (did % 12).cast("int").alias("topic_key"),
+        .selectExpr(
+            "doc_id", "source", "text",
+            "concat(upper(source), ':REC:', CAST(doc_id AS STRING)) AS _id",
+            "CASE WHEN doc_id % 17 = 0 THEN CAST(NULL AS STRING) ELSE element_at("
+            + _strs(["Dataset", "ComputationalTool", "ResourceCatalog", "Dataset"])
+            + ", CAST(doc_id % 4 AS INT) + 1) END AS type",
+            f"{url} AS url",
+            f"element_at({_strs(_NDE_ACCESS)}, CAST(doc_id % 5 AS INT) + 1) AS conditionsOfAccess",
+            f"array(named_struct('name', source, 'url', {url}, 'archivedAt', "
+            f"CASE WHEN doc_id % 11 = 0 THEN CAST(NULL AS STRING) ELSE {url} END)) "
+            "AS includedInDataCatalog",
+            "CASE WHEN doc_id % 7 = 0 THEN CAST(array() AS array<string>) "
+            "WHEN doc_id % 7 = 1 THEN array('none') WHEN doc_id % 7 = 6 THEN array('NONE') "
+            f"WHEN doc_id % 7 = 5 THEN array({doi_one}, concat('10.999/alt.', CAST(doc_id AS STRING))) "
+            f"ELSE array({doi_one}) END AS doi",
+            "array("
+            + author.format("concat('Author-', CAST(doc_id % 40 AS STRING))") + ", "
+            + author.format(
+                f"element_at({_strs(['n/a', 'unknown', 'co-1', 'co-2', 'none', 'co-3'])}, "
+                "CAST(doc_id % 6 AS INT) + 1)"
+            )
+            + ") AS author",
+            f"{species} AS species",
+            f"{agents} AS infectiousAgent",
+            f"{taxids} AS taxids",
+            f"{ner} AS ner",
+            "CASE WHEN doc_id % 5 = 0 THEN CAST(NULL AS STRING) "
+            "ELSE concat('grant:', CAST(doc_id * 3 % 89 AS STRING)) END AS funding_id",
+            # (doc_id*13+1) flips parity vs doc_id%500, so EVERY pmid-family
+            # source exercises both the lookup-hit and lookup-miss paths
+            # (the even-only lookup would otherwise be all-hit or all-miss
+            # per source, since documents.source = src{doc_id % 20})
+            "array_distinct(array(concat('pmid:', CAST(doc_id % 500 AS STRING)), "
+            "concat('pmid:', CAST((doc_id * 13 + 1) % 500 AS STRING)))) AS pmids",
+            "concat('tech-', CAST(doc_id % 37 AS STRING)) AS technique",
+            "CAST(doc_id % 12 AS INT) AS topic_key",
+        )
     )
 
 
@@ -1902,14 +1892,11 @@ def _uploader_lookups(spark: SparkSession) -> dict:
     # a curated summary; ids cover doc_id < 20000 (any sandbox SF).
     disamb_lookup = (
         spark.range(0, 20000, 4)
-        .select(
-            F.explode(F.array(*[F.lit(n) for n in fixture_family("disamb")])).alias("source"),
-            F.col("id"),
-        )
-        .select(
+        .selectExpr(f"explode({_strs(fixture_family('disamb'))}) AS source", "id")
+        .selectExpr(
             "source",
-            F.concat(F.col("source"), F.lit(":rec:"), F.col("id").cast("string")).alias("_id_lc"),
-            F.concat(F.lit("disamb-"), (F.col("id") % 13).cast("string")).alias("disambiguatingDescription"),
+            "concat(source, ':rec:', CAST(id AS STRING)) AS _id_lc",
+            "concat('disamb-', CAST(id % 13 AS STRING)) AS disambiguatingDescription",
         )
     )
     # PMID citations: even PMIDs resolve, odd ones miss (the pmid_helper
@@ -2008,9 +1995,8 @@ def nde_pipeline_e2e(spark, sf_dir):
     # the loser catalogs riding on the directives) read the cheap
     # pre-registry frame — the composed dispatch is embedded ONCE
     # (builder.py reads the same source store for both sides)
-    did = F.col("doc_id")
     keyed = docs.select("doc_id", DD.content_key(prefix_tokens=4).alias("dup_key"), "includedInDataCatalog")
-    directives = MG.key_dedup_1x1(keyed.filter(did % 2 == 0), keyed.filter(did % 2 == 1), "dup_key")
+    directives = MG.key_dedup_1x1(keyed.filter("doc_id % 2 = 0"), keyed.filter("doc_id % 2 = 1"), "dup_key")
     merged = MG.apply_merge_directives(up, directives)
 
     viol = NS.schema_violation_nde(
@@ -2023,40 +2009,18 @@ def nde_pipeline_e2e(spark, sf_dir):
         required=[F.col("type"), F.col("url")],
         recommended=[F.col("funder_name"), F.col("funding_id")],
     )
-    rend = lambda c: F.array_join(  # noqa: E731
-        F.transform(c, lambda x: F.concat(x.getField("name"), F.lit("|"), x.getField("identifier"))),
-        ",",
-    )
-    return (
-        merged.withColumn("violation", viol)
-        .filter(F.col("violation").isNull())
-        .select(
+    return merged.filter(viol.isNull()).select(
+        *[F.expr(e) for e in (
             "doc_id", "source", "_id", "type",
-            F.size("includedInDataCatalog").alias("n_catalog"),
-            F.array_join(
-                F.array_sort(F.transform(
-                    "includedInDataCatalog",
-                    lambda x: F.concat(
-                        x.getField("name"), F.lit("@"),
-                        F.coalesce(x.getField("archivedAt"), F.lit("NULL")),
-                    ),
-                )),
-                ",",
-            ).alias("catalog_csv"),
-            rend("species").alias("species_csv"),
-            F.array_join(
-                F.transform(
-                    "_meta_lineage",
-                    lambda e: F.concat(
-                        e.getField("taxon").cast("string"), F.lit(">"),
-                        F.coalesce(e.getField("parent_taxon"), F.lit(0)).cast("string"),
-                    ),
-                ),
-                ",",
-            ).alias("lineage_csv"),
-            F.coalesce(F.col("funder_name"), F.lit("")).alias("funder"),
-            score.alias("score"),
-        )
+            "size(includedInDataCatalog) AS n_catalog",
+            "array_join(array_sort(transform(includedInDataCatalog, "
+            "x -> concat(x.name, '@', coalesce(x.archivedAt, 'NULL')))), ',') AS catalog_csv",
+            "array_join(transform(species, x -> concat(x.name, '|', x.identifier)), ',') AS species_csv",
+            "array_join(transform(_meta_lineage, e -> concat(CAST(e.taxon AS STRING), '>', "
+            "CAST(coalesce(e.parent_taxon, 0) AS STRING))), ',') AS lineage_csv",
+            "coalesce(funder_name, '') AS funder",
+        )],
+        score.alias("score"),
     )
 
 

@@ -67,6 +67,14 @@ def get_spark(
         # uncapped render OOMs the driver at ~30 levels. 1 MB keeps every
         # explain useful and bounds the render.
         .config("spark.sql.maxPlanStringLength", "1048576")
+        # PySpark's DataFrame call-site hook costs a conf read plus an
+        # origin set and clear (three py4j round-trips) on EVERY F.* and
+        # DataFrame call, and imports IPython on first use: it was half
+        # of the ~8.5k round-trips that building one hub dump's plan
+        # makes. The trade: an analysis or runtime error no longer names
+        # the Python line of the lazy DataFrame call that failed (the
+        # Python traceback of the action and the JVM message remain).
+        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -228,6 +228,8 @@ def run_uploader(
     reg = registry if registry is not None else UPLOADERS
     cols = set(docs.columns)
     out = docs
+    # every stage but the casefold reads original columns: one projection
+    stage: dict[str, F.Column] = {}
 
     def family(stage: str) -> F.Column | None:
         names = sorted(s for s, stages in reg.items() if stage in stages)
@@ -250,19 +252,13 @@ def run_uploader(
             F.col("_id_lc").alias("__d_id"),
             F.col("disambiguatingDescription").alias("__d_desc"),
         ))
-        out = (
-            out.join(
-                dl,
-                (F.lower(F.col("_id")) == F.col("__d_id"))
-                & (F.col("source") == F.col("__d_src")),
-                "left",
-            )
-            .withColumn("disambiguatingDescription", F.when(xs, F.col("__d_desc")))
-            .drop("__d_src", "__d_id", "__d_desc")
+        out = out.join(
+            dl,
+            (F.lower(F.col("_id")) == F.col("__d_id")) & (F.col("source") == F.col("__d_src")),
+            "left",
         )
+        stage["disambiguatingDescription"] = F.when(xs, F.col("__d_desc"))
 
-    # every other stage reads original columns: one projection
-    stage: dict[str, F.Column] = {}
     rs = family("recl")
     if rs is not None and species_lookup is not None and {"species", "infectiousAgent"} <= cols:
         rc = SD.reclassify_species(F.col("species"), F.col("infectiousAgent"), species_lookup)
@@ -325,4 +321,4 @@ def run_uploader(
         last |= {
             c: F.coalesce(F.col("__rc").getField(c), F.col(c)) for c in ("species", "infectiousAgent")
         }
-    return out.withColumns(stage).withColumns(last).drop("__rc")
+    return out.withColumns(stage).withColumns(last).drop("__rc", "__d_src", "__d_id", "__d_desc")

@@ -175,6 +175,23 @@ def test_lineage_closure_iterates_taxonomy_not_corpus(spark):
     assert rows[12] == []  # unknown taxid -> empty lineage
 
 
+def test_lineage_root_edge_rows(spark):
+    """A self-parent root (NCBI's ``1|1``: member 1 with parent 1) and a
+    parentless root (parent NULL) each expand to exactly the closure's
+    sorted (member, member_parent) pairs of the doc's taxids."""
+    from nde_crawlers_spark.operators.lineage import expand_lineage, taxonomy_closure
+
+    docs = spark.createDataFrame([(1, [1]), (2, [3]), (3, [2, 3, 1])], "doc_id long, taxids array<int>")
+    for root_parent in (1, None):
+        closure = taxonomy_closure([(1, root_parent), (2, 1), (3, 2)])
+        out = docs.select("doc_id", expand_lineage(F.col("taxids"), closure).alias("l"))
+        got = {r["doc_id"]: [tuple(e) for e in r["l"]] for r in out.collect()}
+        for doc_id, taxids in ((1, [1]), (2, [3]), (3, [2, 3, 1])):
+            want = sorted({(m, p) for t, m, p in closure if t in taxids})
+            assert got[doc_id] == want, (root_parent, doc_id)
+        assert got[1] == [(1, root_parent)]
+
+
 # Docs that leave a per-document aggregate with nothing to aggregate:
 # NULL and empty text, NULL and empty entity arrays (one holding a NULL
 # entry), NULL taxids, an unknown taxid and a NULL taxid element.
@@ -510,6 +527,36 @@ def test_hub_lookups_run_no_spark_job(spark):
     assert last_job() == jobs
     assert persisted().size() == cached
     assert len(lookups["closure"]) == 689
+
+
+def test_pipeline_plan_build_budget(spark, monkeypatch):
+    """Building the hub pipeline's DataFrame stays a cheap driver step:
+    at most 2,500 py4j round-trips from the building thread (~7.3k, and
+    ~8.5k with object releases, before the call-site hook went off and
+    the fixture became SQL text) and no Spark job. Object releases are
+    sent by py4j's finalizer thread at its own pace, for earlier work
+    too, so they are not counted."""
+    import threading
+
+    from py4j.java_gateway import GatewayClient
+
+    from nde_crawlers_spark.queries import QUERIES
+
+    tracker = spark.sparkContext.statusTracker()
+    last_job = lambda: max(tracker.getJobIdsForGroup(None), default=-1)  # noqa: E731
+    calls, send, me = [0], GatewayClient.send_command, threading.current_thread()
+
+    def counted(self, *args, **kwargs):
+        calls[0] += threading.current_thread() is me
+        return send(self, *args, **kwargs)
+
+    jobs = last_job()
+    monkeypatch.setattr(GatewayClient, "send_command", counted)
+    QUERIES["nde_pipeline_e2e"](spark, SF001)
+    monkeypatch.undo()
+    assert calls[0] <= 2500
+    assert last_job() == jobs
+
 
 def test_pipeline_e2e_no_extra_shuffles(spark):
     """The composed hub lifecycle (registry dispatch -> 1x1 key dedup ->

@@ -563,6 +563,41 @@ def test_taxonomy_closure_edge_inputs():
     assert (100, 1, None) in rows and (100, 99, 98) in rows
 
 
+def test_literal_edge_values(spark):
+    """literal() round-trips each value to the same Python value and to
+    exactly its DDL type, nullability included: empty and NULL-holding
+    containers, NULL atoms, negative and minimal integers of every
+    width, quote and backslash strings, and a nested struct-array map."""
+    from pyspark.sql import types as T
+
+    from nde_crawlers_spark.functions.literals import literal
+
+    cases = [
+        ([], "array<int>"),
+        ({}, "map<string,string>"),
+        ({7: []}, "map<int,array<int>>"),
+        (None, "int"),
+        (None, "array<string>"),
+        ([1, None, -3], "array<int>"),
+        ({"k": None}, "map<string,string>"),
+        (-5, "int"),
+        (-(2**31), "int"),
+        (-(2**40), "bigint"),
+        (-(2**63), "bigint"),
+        (-7, "smallint"),
+        (-128, "tinyint"),
+        (["it's", "a\\b", "\\'", "\\\\", "''"], "array<string>"),
+        ({1: [(2, None), (3, 4)], -1: [(5, -6)]}, "map<int,array<struct<taxon:int,parent_taxon:int>>>"),
+    ]
+    row = spark.range(1).select(
+        *[literal(v, ddl).alias(f"c{i}") for i, (v, ddl) in enumerate(cases)]
+    )
+    got = row.collect()[0]
+    for i, (v, ddl) in enumerate(cases):
+        assert row.schema[i].dataType == T.DataType.fromDDL(ddl), ddl
+        assert got[i] == v, (ddl, got[i])
+
+
 def test_merge_directives_shuffle_fallback_same_output(spark):
     """apply_merge_directives with broadcast_directives=False must plan
     WITHOUT broadcasting the directive side (the 10^8-pair dedup-wave
