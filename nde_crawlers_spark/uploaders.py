@@ -231,8 +231,8 @@ def run_uploader(
     # every stage but the casefold reads original columns: one projection
     stage: dict[str, F.Column] = {}
 
-    def family(stage: str) -> F.Column | None:
-        names = sorted(s for s, stages in reg.items() if stage in stages)
+    def family(token: str) -> F.Column | None:
+        names = sorted(s for s, stages in reg.items() if token in stages)
         return _in_family(names) if names else None
 
     wrapped = _in_family(sorted(reg)) if reg else None
