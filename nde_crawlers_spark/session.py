@@ -75,6 +75,15 @@ def get_spark(
         # the Python line of the lazy DataFrame call that failed (the
         # Python traceback of the action and the JVM message remain).
         .config("spark.python.sql.dataFrameDebugging.enabled", "false")
+        # lower()/upper() through the JVM's case mapping, not ICU's: the
+        # ICU path's first call in a JVM initialises a title-case break
+        # iterator, ~1.4 s that every cold crawl round and hub dump paid.
+        # lower and upper give the same strings (and match Python's
+        # str.lower/upper, the reference's); initcap, which nothing here
+        # calls, differs on ligatures. The trade: non-ASCII text follows
+        # the JVM's default locale (ASCII never does), so under a tr/az/lt
+        # locale its 'I' maps differently.
+        .config("spark.sql.icu.caseMappings.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)

@@ -598,6 +598,17 @@ def test_literal_edge_values(spark):
         assert got[i] == v, (ddl, got[i])
 
 
+def test_case_mapping_matches_python(spark):
+    """lower()/upper() under the session's JVM case mapping give Python's
+    str.lower()/str.upper() (the reference hub's) on non-ASCII text:
+    final sigma, dotted capital I, sharp s, ligatures, titlecase digraphs."""
+    texts = ["ΌΣΟΣ ΑΣ", "aΣb", "İstanbul", "Straße", "ẞ", "ﬃx", "ǅ", "ÀÉÎ", "ŉ", "Ꭰ"]
+    rows = spark.createDataFrame([(s,) for s in texts], "s string").select(
+        "s", F.lower("s").alias("lo"), F.upper("s").alias("up")
+    ).collect()
+    assert {r["s"]: (r["lo"], r["up"]) for r in rows} == {s: (s.lower(), s.upper()) for s in texts}
+
+
 def test_merge_directives_shuffle_fallback_same_output(spark):
     """apply_merge_directives with broadcast_directives=False must plan
     WITHOUT broadcasting the directive side (the 10^8-pair dedup-wave
